@@ -17,6 +17,9 @@ import org.apache.spark.sql.SparkSession
   *   3. 32-way CPU probes before/mid/after the bench are recorded in
   *      the artifact itself, so a throttle window is visible in the
   *      JSON rather than something a reader must infer from prose.
+  *
+  * A query that throws in any run gets no time: it is listed under
+  * `failed`, left out of `value`, and the main exits nonzero.
   */
 object Bench {
 
@@ -85,9 +88,7 @@ object Bench {
     def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame) = {
       drainListeners()
       val s0 = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val secs = (System.nanoTime() - t0) / 1e9
+      val secs = timed(name)(fn(spark, sfDir).count())
       drainListeners()
       (secs, shuffleBytes.get() - s0)
     }
@@ -97,22 +98,24 @@ object Bench {
     // lower the total) — every query gets the same min-of-2.
     val pass1 = SparkEntry.queries.map { case (name, fn) => name -> timeQuery(name, fn) }
     val pass2 = SparkEntry.queries.map { case (name, fn) => name -> timeQuery(name, fn) }
-    val minOf2 = pass1.map { case (name, r1) =>
-      val r2 = pass2(name)
-      name -> (if (r2._1 < r1._1) r2 else r1)
-    }
+    // A query that fails in ANY run has no time: it is listed under
+    // "failed" and stays out of the total.
+    def minRun(runs: Seq[(Option[Double], Long)]): Option[(Double, Long)] =
+      if (runs.exists(_._1.isEmpty)) None
+      else Some(runs.map { case (s, b) => (s.get, b) }.minBy(_._1))
+    val minOf2 = pass1.map { case (name, r1) => name -> minRun(Seq(r1, pass2(name))) }
     // One extra retry for anything STILL implausibly slow after two
     // passes (both passes can straddle one long throttle window).
-    val sortedSecs = minOf2.values.map(_._1).toSeq.sorted
+    val sortedSecs = minOf2.values.flatten.map(_._1).toSeq.sorted
     val median = if (sortedSecs.isEmpty) 0.0 else sortedSecs(sortedSecs.size / 2)
     val outlierNames = minOf2.collect {
-      case (name, (s, _)) if s > math.max(2.0, 8 * median) => name
+      case (name, Some((s, _))) if s > math.max(2.0, 8 * median) => name
     }.toSeq
-    val results = minOf2 ++ outlierNames.map { name =>
-      val best = minOf2(name)
-      val third = timeQuery(name, SparkEntry.queries(name))
-      name -> (if (third._1 < best._1) third else best)
+    val runs = minOf2 ++ outlierNames.map { name =>
+      name -> minRun(Seq(pass1(name), pass2(name), timeQuery(name, SparkEntry.queries(name))))
     }
+    val failed = runs.collect { case (name, None) => name }.toSeq.sorted
+    val results = runs.collect { case (name, Some(r)) => name -> r }
     val probeMid = cpuProbe()
     // Flagship pipeline throughput: N images through
     // read → shard → thread-pooled download → resize(256 border) →
@@ -127,6 +130,8 @@ object Bench {
     val (pipelineStats, pipelineStatsFull) =
       try {
         val server = new graft.util.HttpImageServer
+        // the runs' outputs (~114 MB) are deleted however the bench ends
+        val tmp = java.nio.file.Files.createTempDirectory("graft_bench_pipe")
         try {
           // 20k: large enough that JVM/scheduler startup stops
           // dominating — 2k measured ~420 img/s where steady state is
@@ -136,7 +141,6 @@ object Bench {
             val (w, h) = server.sizes(i % server.sizes.length)
             server.url(s"/allowed/${w}_$h.jpg")
           }
-          val tmp = java.nio.file.Files.createTempDirectory("graft_bench_pipe")
           val urlFile = tmp.resolve("urls.txt")
           java.nio.file.Files.write(urlFile, urls.mkString("\n").getBytes("UTF-8"))
           // Machine-independent accounting alongside the throttle-prone
@@ -247,7 +251,10 @@ object Bench {
           (s""","pipeline":${dummy._1},"pipeline_webdataset":${wds._1}""",
             s""","pipeline":${dummy._2},"pipeline_webdataset":${wds._2},""" +
               s""""pipeline_warmup":${attemptJson(warm, "batch")}""")
-        } finally server.stop()
+        } finally {
+          server.stop()
+          org.apache.hadoop.fs.FileUtil.fullyDelete(tmp.toFile)
+        }
       } catch { case e: Throwable =>
         val err = s""","pipeline":{"error":"${e.getClass.getSimpleName}"}"""
         (err, err)
@@ -284,6 +291,7 @@ object Bench {
     // invocation it is the literal last line), covering last-line,
     // tail-scan, and grep parsers.
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // FIXED small headline set (r14): the old prefix filter matched
     // ~85 queries and the compact line ran ~2,400 chars — the
     // driver's 2,000-char stdout tail cut its HEAD off, which is
@@ -304,7 +312,7 @@ object Bench {
       .mkString("{", ",", "}")
     val sfName = new java.io.File(sfDir).getName
     val compactFull =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"queries":$qsHead,"sf":"$sfName","detail":"BENCH_FULL.json",$probesCompact$pipelineStats}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"queries":$qsHead,"sf":"$sfName","detail":"BENCH_FULL.json",$probesCompact$pipelineStats}"""
     // hard guard on the tail budget: if the line ever outgrows
     // ~1,800 chars (2,000-char driver tail minus sbt's [success]
     // line), drop the per-query map rather than ship an unparseable
@@ -312,7 +320,7 @@ object Bench {
     val compact =
       if (compactFull.length <= 1800) compactFull
       else
-        s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"queries":{},"sf":"$sfName","detail":"BENCH_FULL.json",$probesCompact$pipelineStats}"""
+        s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"queries":{},"sf":"$sfName","detail":"BENCH_FULL.json",$probesCompact$pipelineStats}"""
     try {
       val qsAll = results.map { case (k, (secs, _)) => "\"" + k + "\":" + f3(secs) }
         .mkString("{", ",", "}")
@@ -320,11 +328,11 @@ object Bench {
         .mkString("{", ",", "}")
       // first-pass totals ride along so the retry policy's effect is
       // itself auditable (ADVICE r4: report both, not just the min)
-      val p1Total = pass1.values.map(_._1).sum
-      val p2Total = pass2.values.map(_._1).sum
+      val p1Total = pass1.values.flatMap(_._1).sum
+      val p2Total = pass2.values.flatMap(_._1).sum
       val retriedJson = outlierNames.map("\"" + _ + "\"").mkString("[", ",", "]")
       val full =
-        s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"pass1_total":${f3(p1Total)},"pass2_total":${f3(p2Total)},"queries":$qsAll,"shuffle_bytes":$sh,"extra_retried":$retriedJson,"sf":"$sfDir",$probesJson$pipelineStatsFull}"""
+        s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"pass1_total":${f3(p1Total)},"pass2_total":${f3(p2Total)},"queries":$qsAll,"shuffle_bytes":$sh,"extra_retried":$retriedJson,"sf":"$sfDir",$probesJson$pipelineStatsFull}"""
       val w = new java.io.PrintWriter("BENCH_FULL.json", "UTF-8")
       try w.println(full) finally w.close()
     } catch { case _: Throwable => } // detail file is best-effort; the line below is the contract
@@ -335,6 +343,22 @@ object Bench {
     Bench.lastCompact = compact
     Bench.hookOnce
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries FAILED: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Seconds `body` took, or None when it threw: a crashed query must
+    * never be timed as a fast one.
+    */
+  def timed(name: String)(body: => Any): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { body; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      None
+    }
   }
 
   @volatile private var lastCompact: String = ""

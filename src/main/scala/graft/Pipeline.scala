@@ -16,10 +16,11 @@ import graft.sources.UrlReader
   * SCAN → PROJECT/RENAME → SHARD(key) → [anti-join done shards] →
   * MAP(download, thread-pooled) → FILTER/tag (robots, hash-verify) →
   * MAP(blur?, resize) → EXTEND(status, dims, hash, exif) →
-  * SINK(files|tar|parquet|tfrecord|dummy) → AGG(stats).
+  * SINK(files|tar|parquet|tfrecord|dummy) + AGG(stats), one
+  * shard-local writer pass.
   *
-  * Spark plans and schedules the whole thing; there are no tmp shard
-  * files, no subjob batching, no custom distributor (R3–R7 are
+  * Spark plans and schedules the whole thing; there are no input
+  * shard files, no subjob batching, no custom distributor (R3–R7 are
   * subsumed by the scheduler — SURVEY §3.3 inversion note).
   */
 object Pipeline {
@@ -28,8 +29,7 @@ object Pipeline {
       metaFrame: DataFrame,
       count: Long, successes: Long,
       failedToDownload: Long, failedToResize: Long,
-      /** `observe()` metrics captured on the materializing write:
-        * n_rows, n_success, payload_bytes. Empty if no rows ran. */
+      /** The writer's counters: n_rows, n_success, payload_bytes. */
       observed: Map[String, Any] = Map.empty)
 
   /** Existing-output shard ids (L1 incremental / F6 anti-join input):
@@ -42,9 +42,10 @@ object Pipeline {
     // WRONG store and incremental mode silently re-downloads all.
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Nil
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.endsWith("_stats.json"))
-      .map(_.stripSuffix("_stats.json").toLong).toSeq
+    else fs.listStatus(p).map(_.getPath.getName).toSeq
+      .filter(_.endsWith("_stats.json")).map(_.stripSuffix("_stats.json"))
+      // a stray `run_stats.json` is not a shard marker
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
   }
 
   /** Full pipeline run. Returns the metadata frame (already written
@@ -58,8 +59,8 @@ object Pipeline {
 
     // L1 lifecycle (main.py:151-168)
     if (cfg.incrementalMode == "overwrite") fs.delete(new Path(outDir), true)
-    // Shards present BEFORE this run — excluded from this run's stats
-    // and (in incremental mode) from processing.
+    // Shards committed BEFORE this run: skipped in incremental mode,
+    // numbered after in extend mode.
     val preexisting = doneShardIds(spark, outDir)
     val done = cfg.incrementalMode match {
       case "incremental" => preexisting
@@ -135,7 +136,7 @@ object Pipeline {
       meta = meta.withColumn("exif",
         when(col("status") === "success", ExifExtractor.exifJsonUdf(col(Downloader.PayloadCol))))
 
-    // Final payload + caption + sidecar JSON for the sample sinks.
+    // Sidecar / per-sample metadata columns.
     val metaCols: Seq[String] =
       // P3: drop the verify-hash input column by its CANONICAL
       // (post-rename) name — i.e. the hash type; computeHashCol
@@ -145,116 +146,31 @@ object Pipeline {
             "original_width", "original_height") ++
         (if (cfg.extractExif) Seq("exif") else Nil) ++
         cfg.computeHashCol.toSeq).distinct.filterNot(_ == "key").prepended("key")
-    // observe(): free global counters riding the materializing write —
-    // the batch-engine analog of the reference's live stats stream
-    // (A6); no extra action, collected by the driver post-write.
-    val observation = new org.apache.spark.sql.Observation(s"graft_pipeline_$startTime")
-    val prepared = meta
-      .withColumn("_final_payload",
-        when(col("status") === "success", col("_resized_payload")))
-      .withColumn("_caption_out",
-        // cast: sinks getString() this column; the reference
-        // stringifies non-string captions (str(caption))
-        if (pending.columns.contains("caption")) col("caption").cast("string")
-        else lit(null).cast("string"))
-      .withColumn("_meta_json", to_json(struct(metaCols.map(col): _*)))
-      .observe(observation,
-        count(lit(1)).as("n_rows"),
-        sum(when(col("status") === "success", 1L).otherwise(0L)).as("n_success"),
-        sum(coalesce(octet_length(col("_final_payload")), lit(0))).as("payload_bytes"))
+    val prepared = meta.withColumn("_final_payload",
+      when(col("status") === "success", col("_resized_payload")))
 
-    // SINK dispatch (K1-K6) + parquet sidecar invariant.
-    //
-    // Exactly-once downloads by durable materialization, never by
-    // block-manager caching: a cached partition that gets evicted (or
-    // lost with an executor) would silently RE-DOWNLOAD on the next
-    // action, so two sinks could see different bytes for the same key.
-    // Instead the first write IS the materialization point:
-    //  - parquet/dummy: the sidecar parquet is written straight off the
-    //    pipeline (one pass); stats re-read the written sidecars.
-    //  - files/webdataset/tfrecord: the pipeline lands once in a
-    //    `_work_tmp` parquet checkpoint; sink, sidecar and stats all
-    //    read those identical bytes; the checkpoint is then deleted.
-    def sidecarOf(df: DataFrame) = df.select(
-      (metaCols.map(col) :+ col("shard_id")) ++
-        (if (cfg.outputFormat == "parquet")
-           Seq(col("_final_payload").as(cfg.payloadExt)) else Nil): _*)
-    val shardFromKey =
-      floor(col("key").cast("long") / math.pow(10, cfg.oomSamplesPerShard).toLong).cast("long")
-    def sidecarsExist: Boolean =
-      Option(fs.globStatus(new Path(s"$outDir/*.parquet"))).exists(_.nonEmpty)
-    def emptyStats: DataFrame = {
-      import spark.implicits._
-      Seq.empty[(Long, String, String)].toDF("shard_id", "status", "error_message")
-    }
+    // SINK + AGG (K1-K7, A1-A6): the shard writer is the only action,
+    // so every download runs exactly once, inside it. Nothing is
+    // cached: an evicted or lost cached partition would silently
+    // RE-DOWNLOAD on a second action. Each task commits its shards'
+    // samples, sidecar and `_stats.json` (written last, the resume
+    // marker) by temp name and rename, so a retried task replaces a
+    // failed attempt's files, and it returns one counts row per shard.
     progress.foreach(_.start())
-    val statsInput: DataFrame = try { cfg.outputFormat match {
-      case "parquet" | "dummy" =>
-        Sinks.writeMetaParquet(sidecarOf(prepared), outDir, cfg)
-        // Read-back includes prior runs' sidecars (incremental AND
-        // extend modes); restrict stats to THIS run's shards. An empty
-        // input writes no sidecars at all — nothing to read.
-        if (!sidecarsExist) emptyStats
-        else {
-          val readback = spark.read.parquet(s"$outDir/*.parquet")
-            .withColumn("shard_id", shardFromKey)
-            .select("shard_id", "status", "error_message")
-          if (preexisting.isEmpty) readback
-          else {
-            import spark.implicits._
-            readback.join(broadcast(preexisting.toDF("shard_id")), Seq("shard_id"), "left_anti")
-          }
-        }
-      case fmt =>
-        val ckpt = s"$outDir/_work_tmp"
-        // Checkpoint ONLY the columns downstream consumers read (sinks:
-        // key/payload/caption/meta-json/status; sidecar: metaCols;
-        // stats: shard_id/status/error_message). `prepared` still
-        // carries the raw `_payload` and `_resized_payload` — writing
-        // those too would roughly TRIPLE the image bytes through the
-        // checkpoint for nothing (hundreds of wasted TB at 100 TB).
-        val keepCols = (metaCols ++
-          Seq("shard_id", "_final_payload", "_caption_out", "_meta_json",
-              "status", "error_message")).distinct
-        prepared.select(keepCols.map(col): _*).write.mode("overwrite").parquet(ckpt)
-        val work = spark.read.parquet(ckpt)
-        fmt match {
-          case "files" => Sinks.writeFiles(work, outDir, cfg)
-          case "webdataset" => Sinks.writeWebdataset(work, outDir, cfg)
-          case "tfrecord" => Sinks.writeTfrecord(work, outDir, cfg, metaCols)
-        }
-        Sinks.writeMetaParquet(sidecarOf(work), outDir, cfg)
-        val stats = work.select("shard_id", "status", "error_message")
-        stats
-    // downloads only run during the materializing write above —
-    // everything after reads durable bytes. stop() in finally: a
-    // failed write must not leak the poller thread (it would keep
-    // emitting lines into the next run)
-    } } finally {
+    // stop() in finally: a failed write must not leak the poller
+    // thread (it would keep emitting lines into the next run)
+    val g = try Sinks.write(prepared, outDir, cfg, metaCols).foldLeft(Stats.Counts())(_ + _)
+    finally {
       progress.foreach(_.stop())
       urlCache.unpersist()
     }
-
-    // AGG: per-shard stats sidecars + global counters (A1-A7)
-    val statsDf = Stats.shardStats(statsInput).cache()
     val endTime = System.currentTimeMillis() / 1000.0
-    Stats.writeShardStats(statsDf, outDir, cfg.oomShardCount, startTime, endTime)
-    val g = Stats.globalStats(statsDf, startTime, endTime)
-    statsDf.unpersist()
-    if (cfg.outputFormat != "parquet" && cfg.outputFormat != "dummy")
-      fs.delete(new Path(s"$outDir/_work_tmp"), true)
-    // metaFrame reads the durable sidecars — acting on it later must
-    // never re-trigger downloads. Empty input → empty frame.
-    // getOrEmpty (bounded wait) instead of get: an all-shards-done
-    // incremental run may produce a zero-task write that never emits
-    // metrics, and a blocking get would park a thread forever — the
-    // old Future+Await workaround leaked exactly that thread per
-    // timed-out run.
-    val observed: Map[String, Any] =
-      try org.apache.spark.sql.graftbridge.ObservationBridge.getOrEmpty(observation)
-      catch { case scala.util.control.NonFatal(_) => Map.empty }
+    // metaFrame reads the durable sidecars (this and earlier runs') —
+    // acting on it later never re-triggers downloads. No sidecars →
+    // empty frame.
     val metaFrame =
-      if (sidecarsExist) spark.read.parquet(s"$outDir/*.parquet")
+      if (Option(fs.globStatus(new Path(s"$outDir/*.parquet"))).exists(_.nonEmpty))
+        spark.read.parquet(s"$outDir/*.parquet")
       else spark.emptyDataFrame
     // K8 wandb-parity: the authoritative post-run counters flow to the
     // structured metrics hook + optional JSON-lines file — the same
@@ -262,13 +178,13 @@ object Pipeline {
     val elapsed = math.max(endTime - startTime, 1e-9)
     graft.operators.MetricsSink.emit(
       graft.operators.MetricsEvent("final",
-        g.getLong(0), g.getLong(1), Some(g.getLong(2)), Some(g.getLong(3)),
-        g.getLong(0) / elapsed,
-        if (g.getLong(0) == 0) 0.0 else g.getLong(1).toDouble / g.getLong(0),
+        g.count, g.successes, Some(g.failedToDownload), Some(g.failedToResize),
+        g.count / elapsed,
+        if (g.count == 0) 0.0 else g.successes.toDouble / g.count,
         elapsed),
       cfg.metricsJsonlPath)
-    Result(metaFrame,
-      g.getLong(0), g.getLong(1), g.getLong(2), g.getLong(3), observed)
+    Result(metaFrame, g.count, g.successes, g.failedToDownload, g.failedToResize,
+      Map("n_rows" -> g.count, "n_success" -> g.successes, "payload_bytes" -> g.payloadBytes))
   }
 
   private def hashCol(payload: org.apache.spark.sql.Column, tpe: String) = tpe match {

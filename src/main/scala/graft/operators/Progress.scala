@@ -19,7 +19,7 @@ import org.apache.spark.util.LongAccumulator
   * a speculative or retried task bumps them again, so under failures
   * the line can over-count — it is live telemetry, exactly like the
   * reference's per-attempt counter. The exact post-job numbers come
-  * from the `observe()` metrics and the stats sidecars, never from
+  * from the shard writer's committed per-shard counts, never from
   * here.
   */
 class DownloadProgress(sc: SparkContext, intervalMs: Long = 5000,

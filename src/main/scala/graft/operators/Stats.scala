@@ -1,111 +1,70 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-/** Pipeline statistics (SURVEY §2.5 A1–A7).
+/** Pipeline statistics (SURVEY §2.5 A1–A7), counted by the shard
+  * writer ([[graft.sinks.Sinks]]) in the same loop that writes the
+  * shard's samples — the reference's per-shard `status_dict` loop.
   *
-  *  - [[shardStats]]: per-shard counters (A1) — one hash aggregate
-  *    with map-side partial aggregation; the error breakdown (A2/A3)
-  *    rides the same shuffle as a map column of the top error
-  *    messages.
-  *  - [[writeShardStats]]: `{shard:%05d}_stats.json` sidecars (K7/A5),
-  *    written from the (tiny) aggregated frame.
-  *  - [[globalStats]]: running totals + rates (A6) — a single
-  *    all-up aggregate of the per-shard frame.
+  *  - [[ShardStats]]: one shard's counters (A1) and status breakdown
+  *    (A2/A3), rendered as its `{shard:%05d}_stats.json` (K7/A5).
+  *  - [[Counts]]: the small per-shard row a writer task returns; the
+  *    driver sums them into the run's totals and rates (A6).
   *
   * The capped error counter (A2, `logger.py:13-43`) approximates
-  * heavy hitters by keeping the top half on overflow; at Spark scale
-  * the exact `groupBy(error).count` is already distributed, so we
-  * keep it exact and cap only the per-shard JSON breakdown at k=100
-  * entries (matching `most_common(100)`, logger.py:147-151).
+  * heavy hitters by keeping the top half on overflow; a shard holds
+  * at most `samplesPerShard` rows, so the per-shard map stays exact
+  * and only the JSON breakdown is capped at k=100 entries (matching
+  * `most_common(100)`, logger.py:147-151).
   */
 object Stats {
 
-  /** A1 + A2/A3: per-shard success/failure counters + top-k status map.
-    * Keys are error messages for failures and "success" for successes,
-    * mirroring `status_dict.increment(...)` at downloader.py:263,322.
-    */
-  def shardStats(df: DataFrame, topK: Int = 100): DataFrame = {
-    val errCounts = df
-      .withColumn("_k",
-        when(col("status") === "success", lit("success")).otherwise(col("error_message")))
-      .filter(col("_k").isNotNull)
-      .groupBy("shard_id", "_k").agg(count("*").as("n"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("shard_id").orderBy(col("n").desc, col("_k"))))
-      .filter(col("rk") <= topK)
-      .groupBy("shard_id")
-      .agg(map_from_entries(collect_list(struct(col("_k"), col("n")))).as("status_dict"))
-    df.groupBy("shard_id").agg(
-        count("*").as("count"),
-        sum(when(col("status") === "success", 1L).otherwise(0L)).as("successes"),
-        sum(when(col("status") === "failed_to_download", 1L).otherwise(0L)).as("failed_to_download"),
-        sum(when(col("status") === "failed_to_resize", 1L).otherwise(0L)).as("failed_to_resize"))
-      .join(errCounts, Seq("shard_id"), "left")
+  final case class Counts(count: Long = 0L, successes: Long = 0L,
+                          failedToDownload: Long = 0L, failedToResize: Long = 0L,
+                          payloadBytes: Long = 0L) {
+    def +(o: Counts): Counts = Counts(count + o.count, successes + o.successes,
+      failedToDownload + o.failedToDownload, failedToResize + o.failedToResize,
+      payloadBytes + o.payloadBytes)
   }
 
-  /** K7/A5: one `{shard:%05d}_stats.json` per shard, with the same
-    * field set as `write_stats` (logger.py:162-191). Duration fields
-    * are wall-clock of the whole job (Spark has no per-shard worker
-    * clock worth reporting — tasks interleave shards).
-    *
-    * Sidecars are written from EXECUTORS (`foreachPartition`), the
-    * same lifecycle as the per-sample sinks: at 100 TB (~10⁷ shards) a
-    * driver-side collect + serial create loop would be a multi-GB
-    * collect and hours of serial FS calls.
+  /** One shard's counters. `startTime` is when the shard's first
+    * sample reached the writer; `json` takes the commit time as the
+    * end, so duration/start/end are per shard as in `write_stats`.
     */
-  def writeShardStats(stats: DataFrame, outDir: String, oomShardCount: Int,
-                      startTime: Double, endTime: Double): Unit = {
-    val dir = outDir; val oom = oomShardCount
-    val (t0, t1) = (startTime, endTime)
-    // driver-captured session conf (spark.hadoop.* — object-store
-    // credentials, fs.defaultFS) shipped into the task closure: a bare
-    // executor-side `new Configuration()` would resolve the wrong
-    // filesystem on s3a/gcs
-    val sconf = new graft.util.SerializableHadoopConf(
-      stats.sparkSession.sessionState.newHadoopConf())
-    stats.select("shard_id", "count", "successes",
-        "failed_to_download", "failed_to_resize", "status_dict")
-      .foreachPartition { (rows: Iterator[Row]) =>
-        // non-cached instance: the checksum setters MUTATE the
-        // FileSystem object and the cached one is shared JVM-wide
-        // (same hazard Sinks.fs documents) — closed below
-        val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-          new Path(dir).toUri, sconf.value)
-        fs.setWriteChecksum(false); fs.setVerifyChecksum(false)
-        try rows.foreach { r =>
-          val shard = r.getLong(0)
-          val dict = Option(r.getAs[Map[String, Long]](5)).getOrElse(Map.empty)
-          // Full JSON escape — error messages are arbitrary exception text;
-          // a raw tab/CR would make the stats file unparseable.
-          import graft.util.JsonEscape.esc
-          val dictJson = dict.toSeq.sortBy { case (k, n) => (-n, k) }
-            .map { case (k, n) => "\"" + esc(k) + s"\": $n" }
-            .mkString("{", ", ", "}")
-          val json =
-            s"""{"count": ${r.getLong(1)}, "successes": ${r.getLong(2)},
-               | "failed_to_download": ${r.getLong(3)}, "failed_to_resize": ${r.getLong(4)},
-               | "duration": ${t1 - t0}, "start_time": $t0, "end_time": $t1,
-               | "status_dict": $dictJson}""".stripMargin.replace("\n", "")
-          val name = ("%0" + oom + "d").format(shard) + "_stats.json"
-          val o = fs.create(new Path(dir, name), true)
-          o.write(json.getBytes("UTF-8")); o.close()
-        } finally fs.close()
+  final class ShardStats(val startTime: Double) {
+    private var count, successes, failedToDownload, failedToResize, payloadBytes = 0L
+    private val statusDict = mutable.HashMap.empty[String, Long]
+
+    /** Keys are error messages for failures and "success" for
+      * successes, mirroring `status_dict.increment(...)` at
+      * downloader.py:263,322.
+      */
+    def add(status: String, error: String, bytes: Long): Unit = {
+      count += 1
+      status match {
+        case "success" => successes += 1; payloadBytes += bytes
+        case "failed_to_download" => failedToDownload += 1
+        case "failed_to_resize" => failedToResize += 1
+        case _ =>
       }
-  }
+      val k = if (status == "success") "success" else error
+      if (k != null) statusDict(k) = statusDict.getOrElse(k, 0L) + 1
+    }
 
-  /** A6: global running aggregate with derived rates. */
-  def globalStats(shardStats: DataFrame, startTime: Double, endTime: Double): Row = {
-    val agg = shardStats.agg(
-      coalesce(sum("count"), lit(0L)).as("count"),
-      coalesce(sum("successes"), lit(0L)).as("successes"),
-      coalesce(sum("failed_to_download"), lit(0L)).as("failed_to_download"),
-      coalesce(sum("failed_to_resize"), lit(0L)).as("failed_to_resize")).collect()(0)
-    val duration = math.max(endTime - startTime, 1e-9)
-    Row(agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3),
-      duration, agg.getLong(0) / duration, agg.getLong(1).toDouble / math.max(agg.getLong(0), 1))
+    def counts: Counts =
+      Counts(count, successes, failedToDownload, failedToResize, payloadBytes)
+
+    /** The `write_stats` field set (logger.py:162-191). Error messages
+      * are arbitrary exception text, hence the full JSON escape.
+      */
+    def json(endTime: Double): String = {
+      import graft.util.JsonEscape.esc
+      val dict = statusDict.toSeq.sortBy { case (k, n) => (-n, k) }.take(100)
+        .map { case (k, n) => "\"" + esc(k) + s"\": $n" }.mkString("{", ", ", "}")
+      s"""{"count": $count, "successes": $successes, """ +
+        s""""failed_to_download": $failedToDownload, "failed_to_resize": $failedToResize, """ +
+        s""""duration": ${endTime - startTime}, "start_time": $startTime, "end_time": $endTime, """ +
+        s""""status_dict": $dict}"""
+    }
   }
 }

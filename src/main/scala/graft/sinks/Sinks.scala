@@ -3,40 +3,56 @@ package graft.sinks
 import java.io.{BufferedOutputStream, OutputStream}
 import java.util.zip.CRC32C
 
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.graftbridge.OutputMetricsBridge
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.config.DownloadConfig
-import graft.functions.PipelineFunctions
+import graft.operators.Stats
 import graft.util.SerializableHadoopConf
 
-/** Output sinks (SURVEY §2.7) with exact per-shard file naming.
+/** Output sinks (SURVEY §2.7): one shard-local writer for every output
+  * format, and the pipeline's only download action.
   *
-  * All per-sample sinks follow the same scalable shape: the frame is
-  * hash-partitioned by `shard_id` (a shard never splits across tasks),
-  * sorted within partitions by (shard_id, key), and `foreachPartition`
-  * streams rows shard-by-shard into exactly one output object per
-  * shard (`{shard:%05d}.tar` / `.tfrecord` / a `{shard:%05d}/`
-  * directory) — one open file per task at a time, the reference's
-  * disk-friendly streaming property (README.md:354-357). I/O goes
-  * through the Hadoop FileSystem API, so any supported scheme
-  * (file://, hdfs://, s3a://) works — the S9 fsspec analog.
+  * `UrlReader` hash-partitions url rows by `shard_id`, and download
+  * and resize keep that partitioning, so a task always holds whole
+  * shards. A task streams its rows, in download-completion order (the
+  * reference's `imap_unordered`), into one open output set per shard
+  * it sees, in one loop as in writer.py:55-306:
+  *  - the samples: `{shard:%05d}.tar`, `.tfrecord` or a
+  *    `{shard:%05d}/` directory (none for parquet and dummy);
+  *  - the metadata sidecar `{shard:%05d}.parquet`, through Spark's own
+  *    parquet `OutputWriter`, so codec and schema match a DataFrame
+  *    write;
+  *  - the shard's stats, rendered as `{shard:%05d}_stats.json`.
   *
-  * Sink invariants (mirrored from the reference tests): a metadata
-  * parquet sidecar per shard with rows = input rows incl. failures;
-  * payloads written only for successes; tar/files/tfrecord named by
-  * zero-padded shard id.
+  * Exactly-once by commit order: every output is written under a
+  * hidden per-attempt temp name, and at task end each shard is
+  * renamed in the order samples, sidecar, stats. Names are fixed, so a
+  * retried attempt replaces a failed one's files, and the stats file,
+  * the incremental-resume marker, appears last. A failing attempt
+  * deletes its temp files.
+  *
+  * Sink invariants (mirrored from the reference tests): a sidecar row
+  * per input row incl. failures; payloads written only for successes;
+  * outputs named by zero-padded shard id. I/O goes through the Hadoop
+  * FileSystem API, so any supported scheme (file://, hdfs://, s3a://)
+  * works — the S9 fsspec analog.
   */
 object Sinks {
-
-  /** Columns every sink consumes; `metaJson` is prebuilt by the
-    * pipeline with `to_json(struct(metaCols))` so sinks never
-    * serialize rows themselves.
-    */
-  case class SinkInput(df: DataFrame, cfg: DownloadConfig)
 
   /** Non-cached FileSystem with checksum sidecars disabled
     * (LocalFileSystem otherwise writes a .crc sibling per created file
@@ -44,229 +60,205 @@ object Sinks {
     * `newInstance` instead of the cached `getFileSystem`: the
     * checksum setters MUTATE the FileSystem object, and the JVM-wide
     * cached instance is shared with every other write in the process
-    * (parquet sidecars, checkpoints), which would silently lose their
-    * .crc generation. Callers must `close()` the returned instance.
-    *
-    * `conf` is the driver's session Hadoop conf (spark.hadoop.* —
-    * object-store credentials, fs.defaultFS), shipped to executors
-    * via [[SerializableHadoopConf]]: a bare `new Configuration()`
-    * here would resolve the WRONG filesystem on s3a/gcs.
+    * (parquet sidecars), which would silently lose their .crc
+    * generation. Callers must `close()` the returned instance.
     */
-  private def fs(dir: String, conf: Configuration): (FileSystem, Path) = {
-    val p = new Path(dir)
-    val f = FileSystem.newInstance(p.toUri, conf)
+  private[sinks] def fs(dir: String, conf: Configuration): FileSystem = {
+    val f = FileSystem.newInstance(new Path(dir).toUri, conf)
     f.setWriteChecksum(false)
     f.setVerifyChecksum(false)
-    (f, p)
+    f
   }
 
-  /** Session conf captured on the driver, serializable into task
-    * closures. Call on the DRIVER (uses `df.sparkSession`).
+  /** Write the pipeline frame — `shard_id`, `key`, `status`,
+    * `error_message`, `_final_payload`, an optional `caption` and every
+    * `metaCols` column — and return this run's per-shard counts.
     */
-  private def sessionConf(df: DataFrame): SerializableHadoopConf =
-    new SerializableHadoopConf(df.sparkSession.sessionState.newHadoopConf())
-
-  /** Stream a partition's rows (sorted by shard_id) through a
-    * per-shard writer lifecycle: `onShardStart(shard)` →
-    * `onRow(row)`* → `onShardEnd()` per run of equal shard ids.
-    * Single pass, O(1) memory — never buffers a shard.
-    */
-  private def groupedByShard(rows: Iterator[Row], shardIdx: Int)(
-      onShardStart: Long => Unit, onRow: Row => Unit, onShardEnd: () => Unit): Unit = {
-    var current = Long.MinValue
-    var open = false
-    rows.foreach { r =>
-      val s = r.getLong(shardIdx)
-      if (!open || s != current) {
-        if (open) onShardEnd()
-        onShardStart(s); current = s; open = true
-      }
-      onRow(r)
-    }
-    if (open) onShardEnd()
+  def write(df: DataFrame, outDir: String, cfg: DownloadConfig,
+            metaCols: Seq[String]): Seq[Stats.Counts] = {
+    val (in, w) = writer(df, outDir, cfg, metaCols)
+    in.queryExecution.toRdd
+      .mapPartitions(rows => w.write(rows, TaskContext.get().taskAttemptId()))
+      .collect().toSeq
   }
 
-  private def shardStem(shard: Long, oom: Int): String =
-    ("%0" + oom + "d").format(shard)
-
-  private def prep(df: DataFrame): DataFrame =
-    df.repartition(col("shard_id")).sortWithinPartitions("shard_id", "key")
-
-  /** K1/K2: per-shard metadata parquet `{shard:%05d}.parquet`
-    * (payload column included by the parquet output format, K2).
-    * Implementation: native Spark parquet write partitioned by shard,
-    * then a rename pass to the exact reference naming that runs ON
-    * EXECUTORS — the driver does exactly one directory listing; the
-    * O(#shards) per-shard list + rename calls (each a full copy on an
-    * object store) are distributed, so ~10⁷ shards at 100 TB don't
-    * serialize through one thread.
+  /** The writer's input frame, whose column order is [[ShardWriter]]'s
+    * contract, and the writer. The session's Hadoop conf is captured
+    * here on the driver: a bare executor-side `new Configuration()`
+    * would resolve the wrong store on s3a/gcs.
     */
-  def writeMetaParquet(df: DataFrame, outDir: String, cfg: DownloadConfig): Unit = {
-    val tmp = outDir + "/_meta_tmp"
-    df.repartition(col("shard_id"))
-      .write.mode("overwrite").partitionBy("shard_id").parquet(tmp)
-    val sconf = sessionConf(df)
-    val (hfs, _) = fs(outDir, sconf.value)
-    try {
-    val shardDirs = hfs.listStatus(new Path(tmp)).filter(_.isDirectory).map { st =>
-      val name = st.getPath.getName // shard_id=N
-      (st.getPath.toString, name.substring(name.indexOf('=') + 1).toLong)
-    }.toSeq
-    val (dir, oom) = (outDir, cfg.oomShardCount)
-    val sc = df.sparkSession.sparkContext
-    val slices = math.max(1, math.min(shardDirs.length, sc.defaultParallelism * 4))
-    sc.parallelize(shardDirs, slices).foreachPartition { it =>
-      val efs = new Path(dir).getFileSystem(sconf.value)
-      it.foreach { case (src, shard) =>
-        val part = efs.listStatus(new Path(src)).map(_.getPath)
-          .find(_.getName.endsWith(".parquet"))
-        part.foreach { p =>
-          val dest = new Path(dir, shardStem(shard, oom) + ".parquet")
-          // Hadoop rename returns false if dest exists (e.g. a crashed
-          // prior attempt) — replace it, never keep stale data silently.
-          if (efs.exists(dest)) efs.delete(dest, false)
-          require(efs.rename(p, dest), s"rename $p -> $dest failed")
-        }
-      }
-    }
-    hfs.delete(new Path(tmp), true)
-    } finally hfs.close()
-  }
-
-  /** K3: webdataset tar — entries `{key}.jpg`, `{key}.txt`,
-    * `{key}.json` per successful sample, one `{shard:%05d}.tar` per
-    * shard (writer.py:94-135; layout per webdataset.github.io).
-    */
-  def writeWebdataset(df: DataFrame, outDir: String, cfg: DownloadConfig): Unit = {
-    val d = prep(df)
-    val si = d.schema.fieldIndex("shard_id"); val ki = d.schema.fieldIndex("key")
-    val pi = d.schema.fieldIndex("_final_payload"); val ci = d.schema.fieldIndex("_caption_out")
-    val mi = d.schema.fieldIndex("_meta_json"); val sti = d.schema.fieldIndex("status")
+  private[graft] def writer(df: DataFrame, outDir: String, cfg: DownloadConfig,
+                            metaCols: Seq[String]): (DataFrame, ShardWriter) = {
+    val fmt = cfg.outputFormat
     // reference save_caption semantics (writer.py:118-127): a caption
-    // COLUMN present means every sample gets a .txt entry — a NULL
-    // caption writes "" rather than dropping the member, keeping the
-    // per-sample field set uniform for webdataset loaders
-    val saveCaption = d.columns.contains("caption")
-    val (ext, oom, dir) = (cfg.payloadExt, cfg.oomShardCount, outDir)
-    val sconf = sessionConf(d)
-    d.foreachPartition { (rows: Iterator[Row]) =>
-      val (hfs, _) = fs(dir, sconf.value)
-      try {
-        var out: TarArchiveOutputStream = null
-        def entry(name: String, bytes: Array[Byte]): Unit = {
-          val e = new TarArchiveEntry(name)
-          e.setSize(bytes.length)
-          out.putArchiveEntry(e); out.write(bytes); out.closeArchiveEntry()
-        }
-        groupedByShard(rows, si)(
-          shard => {
-            out = new TarArchiveOutputStream(new BufferedOutputStream(
-              hfs.create(new Path(dir, shardStem(shard, oom) + ".tar"), true), 1 << 20))
-            out.setLongFileMode(TarArchiveOutputStream.LONGFILE_POSIX)
-          },
-          r => if (r.getString(sti) == "success" && !r.isNullAt(pi)) {
-            val key = r.getString(ki)
-            entry(s"$key.$ext", r.getAs[Array[Byte]](pi))
-            if (saveCaption)
-              entry(s"$key.txt",
-                (if (r.isNullAt(ci)) "" else r.getString(ci)).getBytes("UTF-8"))
-            entry(s"$key.json", r.getString(mi).getBytes("UTF-8"))
-          },
-          () => out.close())
-      } finally hfs.close()
-    }
+    // COLUMN present means every sample gets a caption — a NULL one
+    // writes "" — and non-string captions are stringified
+    val saveCaption = df.columns.contains("caption")
+    val sidecar = metaCols.map(col) ++
+      (if (fmt == "parquet") Seq(col("_final_payload").as(cfg.payloadExt)) else Nil)
+    val in = df.select(col("shard_id"), col("key"), col("status"), col("error_message"),
+      col("_final_payload"),
+      if (saveCaption) col("caption").cast("string") else lit(null).cast("string"),
+      if (fmt == "files" || fmt == "webdataset") to_json(struct(metaCols.map(col): _*))
+      else lit(null).cast("string"),
+      struct(sidecar: _*))
+    val sidecarSchema = in.schema.fields(7).dataType.asInstanceOf[StructType]
+    val job = Job.getInstance(df.sparkSession.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(df.sparkSession, job, Map.empty, sidecarSchema)
+    (in, new ShardWriter(outDir, cfg, saveCaption, sidecarSchema, factory,
+      new SerializableHadoopConf(job.getConfiguration)))
   }
+}
 
-  /** K4: one file triple per sample under `{shard:%05d}/`
-    * (writer.py:246-293).
+/** Executor side of [[Sinks.write]]: one task's rows into committed
+  * shards. Input columns: 0 shard_id, 1 key, 2 status, 3
+  * error_message, 4 payload, 5 caption, 6 metadata JSON, 7 sidecar row.
+  */
+private[graft] final class ShardWriter(
+    dir: String, cfg: DownloadConfig, saveCaption: Boolean, sidecarSchema: StructType,
+    sidecarFactory: OutputWriterFactory, conf: SerializableHadoopConf) extends Serializable {
+
+  @transient private lazy val toRow =
+    CatalystTypeConverters.createToScalaConverter(sidecarSchema)
+
+  /** Writes every row, then commits each shard seen and returns its
+    * counts; the bytes and rows written become the task's output
+    * metrics. On any failure this attempt's temp files are deleted.
     */
-  def writeFiles(df: DataFrame, outDir: String, cfg: DownloadConfig): Unit = {
-    val d = prep(df)
-    val si = d.schema.fieldIndex("shard_id"); val ki = d.schema.fieldIndex("key")
-    val pi = d.schema.fieldIndex("_final_payload"); val ci = d.schema.fieldIndex("_caption_out")
-    val mi = d.schema.fieldIndex("_meta_json"); val sti = d.schema.fieldIndex("status")
-    val saveCaption = d.columns.contains("caption") // see writeWebdataset
-    val (ext, oom, dir) = (cfg.payloadExt, cfg.oomShardCount, outDir)
-    val sconf = sessionConf(d)
-    d.foreachPartition { (rows: Iterator[Row]) =>
-      val (hfs, _) = fs(dir, sconf.value)
-      try {
-        var shardDir: Path = null
-        def put(name: String, bytes: Array[Byte]): Unit = {
-          val o = hfs.create(new Path(shardDir, name), true)
-          o.write(bytes); o.close()
-        }
-        groupedByShard(rows, si)(
-          shard => { shardDir = new Path(dir, shardStem(shard, oom)); hfs.mkdirs(shardDir) },
-          r => if (r.getString(sti) == "success" && !r.isNullAt(pi)) {
-            val key = r.getString(ki)
-            put(s"$key.$ext", r.getAs[Array[Byte]](pi))
-            if (saveCaption)
-              put(s"$key.txt",
-                (if (r.isNullAt(ci)) "" else r.getString(ci)).getBytes("UTF-8"))
-            put(s"$key.json", r.getString(mi).getBytes("UTF-8"))
-          },
-          () => ())
-      } finally hfs.close()
-    }
+  def write(rows: Iterator[InternalRow], attempt: Long): Iterator[Stats.Counts] = {
+    val reportOutput = OutputMetricsBridge.track()
+    val fs = Sinks.fs(dir, conf.value)
+    val ctx = new TaskAttemptContextImpl(conf.value, new TaskAttemptID())
+    val open = mutable.LinkedHashMap.empty[Long, OpenShard]
+    try {
+      rows.foreach { r =>
+        open.getOrElseUpdate(r.getLong(0), new OpenShard(fs, ctx, r.getLong(0), attempt)).add(r)
+      }
+      val counts = open.values.map(_.commit()).toList
+      reportOutput(counts.map(_.count).sum)
+      counts.iterator
+    } catch { case e: Throwable =>
+      open.values.foreach(_.abort())
+      throw e
+    } finally fs.close()
   }
 
-  /** K5: TFRecord of TF `Example` protos, one `{shard:%05d}.tfrecord`
-    * per shard (writer.py:138-243). Protobuf and the TFRecord framing
-    * (length + masked CRC32C) are encoded from scratch — see
-    * [[TfRecordCodec]] — so no TF dependency is needed.
-    *
-    * Feature layout matches the reference exactly (writer.py:186-243):
-    * the payload under the encode-format key, `key` as bytes, the
-    * caption under `"txt"` when a caption column is configured, and
-    * EVERY metadata column as its own TYPED feature — int-likes →
-    * int64_list, float/double → float_list, arrays → the list form of
-    * their element type, everything else (and any NULL, matching the
-    * reference's value-typed `_feature(None)` → `b""`) → bytes_list.
-    */
-  def writeTfrecord(df: DataFrame, outDir: String, cfg: DownloadConfig,
-                    metaCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.types._
-    val d = prep(df)
-    val si = d.schema.fieldIndex("shard_id"); val ki = d.schema.fieldIndex("key")
-    val pi = d.schema.fieldIndex("_final_payload"); val ci = d.schema.fieldIndex("_caption_out")
-    val sti = d.schema.fieldIndex("status")
-    // caption presence in the SCHEMA is the reference's save_caption
-    // flag: a present-but-NULL caption still writes txt = "".
-    val saveCaption = d.columns.contains("caption")
-    val metaFields: Seq[(String, Int, DataType)] =
-      metaCols.filterNot(_ == "key").map(c => (c, d.schema.fieldIndex(c), d.schema(c).dataType))
-    val (ext, oom, dir) = (cfg.payloadExt, cfg.oomShardCount, outDir)
-    val sconf = sessionConf(d)
-    d.foreachPartition { (rows: Iterator[Row]) =>
-      val (hfs, _) = fs(dir, sconf.value)
-      try {
-        var out: BufferedOutputStream = null
-        groupedByShard(rows, si)(
-          shard => out = new BufferedOutputStream(
-            hfs.create(new Path(dir, shardStem(shard, oom) + ".tfrecord"), true), 1 << 20),
-          r => if (r.getString(sti) == "success" && !r.isNullAt(pi)) {
-            val feats =
-              Seq("key" -> TfRecordCodec.bytesFeature(r.getString(ki).getBytes("UTF-8")),
-                  ext -> TfRecordCodec.bytesFeature(r.getAs[Array[Byte]](pi))) ++
-              (if (saveCaption)
-                 Seq("txt" -> TfRecordCodec.bytesFeature(
-                   (if (r.isNullAt(ci)) "" else r.getString(ci)).getBytes("UTF-8")))
-               else Nil) ++
-              metaFields.map { case (name, i, dt) => name -> TfRecordCodec.typedFeature(r, i, dt) }
-            TfRecordCodec.writeRecord(out, TfRecordCodec.example(feats))
-          },
-          () => out.close())
-      } finally hfs.close()
-    }
+  private def utf8(r: InternalRow, i: Int): Array[Byte] =
+    if (r.isNullAt(i)) Array.emptyByteArray else r.getUTF8String(i).getBytes
+
+  /** One shard's sample output, written under its temp name. */
+  private abstract class Samples(val paths: (Path, Path)) {
+    def add(r: InternalRow, payload: Array[Byte]): Unit
+    def close(): Unit
   }
 
-  // K6 (dummy/benchmark mode) is routed by Pipeline through
-  // writeMetaParquet rather than a pure no-op: the metadata sidecars
-  // are the stats source AND the incremental-resume marker, so even
-  // benchmark runs keep them (DEVIATIONS #10). There is deliberately
-  // no discard writer here — a dead `noop` method would only suggest
-  // a path that never executes.
+  private final class OpenShard(fs: FileSystem, ctx: TaskAttemptContextImpl,
+                                shard: Long, attempt: Long) {
+    private val stem = ("%0" + cfg.oomShardCount + "d").format(shard)
+    private val stats = new Stats.ShardStats(System.currentTimeMillis() / 1000.0)
+    /** (temp, final) paths; the temp name is hidden from readers. */
+    private def named(name: String) = (new Path(dir, s".$name.$attempt.tmp"), new Path(dir, name))
+    private val samples: Option[Samples] = cfg.outputFormat match {
+      case "webdataset" => Some(tar(named(s"$stem.tar")))
+      case "files" => Some(files(named(stem)))
+      case "tfrecord" => Some(tfrecord(named(s"$stem.tfrecord")))
+      case _ => None
+    }
+    private val sidecarPaths = named(s"$stem.parquet")
+    private val sidecar = sidecarFactory.newInstance(sidecarPaths._1.toString, sidecarSchema, ctx)
+    private val statsPaths = named(s"${stem}_stats.json")
+
+    def add(r: InternalRow): Unit = {
+      val status = r.getUTF8String(2).toString
+      val payload = if (status == "success" && !r.isNullAt(4)) r.getBinary(4) else null
+      stats.add(status, if (r.isNullAt(3)) null else r.getUTF8String(3).toString,
+        if (payload == null) 0L else payload.length)
+      if (payload != null) samples.foreach(_.add(r, payload))
+      sidecar.write(r.getStruct(7, sidecarSchema.length))
+    }
+
+    def commit(): Stats.Counts = {
+      samples.foreach(_.close())
+      sidecar.close()
+      samples.foreach(s => rename(s.paths))
+      rename(sidecarPaths)
+      val o = fs.create(statsPaths._1, true)
+      try o.write(stats.json(System.currentTimeMillis() / 1000.0).getBytes("UTF-8"))
+      finally o.close()
+      rename(statsPaths)
+      stats.counts
+    }
+
+    def abort(): Unit = {
+      def quietly(f: => Any): Unit = try f catch { case NonFatal(_) => }
+      samples.foreach(s => quietly(s.close()))
+      quietly(sidecar.close())
+      (samples.map(_.paths).toSeq ++ Seq(sidecarPaths, statsPaths))
+        .foreach(p => quietly(fs.delete(p._1, true)))
+    }
+
+    /** Hadoop rename returns false when the destination exists (an
+      * earlier run or attempt): replace it, never keep stale data.
+      */
+    private def rename(p: (Path, Path)): Unit = {
+      if (fs.exists(p._2)) fs.delete(p._2, true)
+      require(fs.rename(p._1, p._2), s"rename ${p._1} -> ${p._2} failed")
+    }
+
+    /** K3/K4: `{key}.{ext}`, `{key}.txt` (with a caption column) and
+      * `{key}.json` per success (writer.py:94-135, 246-293).
+      */
+    private def triple(r: InternalRow, payload: Array[Byte],
+                       put: (String, Array[Byte]) => Unit): Unit = {
+      val key = r.getUTF8String(1).toString
+      put(s"$key.${cfg.payloadExt}", payload)
+      if (saveCaption) put(s"$key.txt", utf8(r, 5))
+      put(s"$key.json", utf8(r, 6))
+    }
+
+    /** K3: webdataset tar (layout per webdataset.github.io). */
+    private def tar(p: (Path, Path)): Samples = new Samples(p) {
+      private val out = new TarArchiveOutputStream(
+        new BufferedOutputStream(fs.create(p._1, true), 1 << 20))
+      out.setLongFileMode(TarArchiveOutputStream.LONGFILE_POSIX)
+      def add(r: InternalRow, payload: Array[Byte]): Unit = triple(r, payload, { (name, bytes) =>
+        val e = new TarArchiveEntry(name)
+        e.setSize(bytes.length)
+        out.putArchiveEntry(e); out.write(bytes); out.closeArchiveEntry()
+      })
+      def close(): Unit = out.close()
+    }
+
+    /** K4: one file triple per sample under `{shard:%05d}/`. */
+    private def files(p: (Path, Path)): Samples = new Samples(p) {
+      fs.mkdirs(p._1)
+      def add(r: InternalRow, payload: Array[Byte]): Unit = triple(r, payload, { (name, bytes) =>
+        val o = fs.create(new Path(p._1, name), true)
+        try o.write(bytes) finally o.close()
+      })
+      def close(): Unit = ()
+    }
+
+    /** K5: TFRecord of TF `Example` protos (writer.py:138-243): the
+      * payload under the encode-format key, `key` as bytes, the caption
+      * under `"txt"` when a caption column exists, and every metadata
+      * column as its own typed feature (see [[TfRecordCodec.typedFeature]]).
+      */
+    private def tfrecord(p: (Path, Path)): Samples = new Samples(p) {
+      private val out = new BufferedOutputStream(fs.create(p._1, true), 1 << 20)
+      private val metaFields = sidecarSchema.fields.zipWithIndex.filter(_._1.name != "key")
+      def add(r: InternalRow, payload: Array[Byte]): Unit = {
+        val meta = toRow(r.getStruct(7, sidecarSchema.length)).asInstanceOf[Row]
+        val feats =
+          Seq("key" -> TfRecordCodec.bytesFeature(utf8(r, 1)),
+              cfg.payloadExt -> TfRecordCodec.bytesFeature(payload)) ++
+          (if (saveCaption) Seq("txt" -> TfRecordCodec.bytesFeature(utf8(r, 5))) else Nil) ++
+          metaFields.map { case (f, i) => f.name -> TfRecordCodec.typedFeature(meta, i, f.dataType) }
+        TfRecordCodec.writeRecord(out, TfRecordCodec.example(feats))
+      }
+      def close(): Unit = out.close()
+    }
+  }
 }
 
 /** Hand-rolled TF `Example` protobuf + TFRecord framing (T15/K5).

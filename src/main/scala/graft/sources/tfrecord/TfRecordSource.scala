@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.util.SerializableHadoopConf
 
 /** TFRecord `Example` files as a READABLE Spark source — the
-  * DataSourceV2 counterpart of [[graft.sinks.Sinks.writeTfrecord]]
+  * DataSourceV2 counterpart of tfrecord output of [[graft.sinks.Sinks]]
   * (K5): `spark.read.format("tfrecord").load(dir)` reads back what
   * the sink wrote, so tfrecord output is no longer write-only.
   * Framing and protobuf wire format per the same public specs the

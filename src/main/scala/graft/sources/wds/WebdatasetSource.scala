@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.util.SerializableHadoopConf
 
 /** Webdataset (tar-of-samples) as a READABLE Spark source — the
-  * DataSourceV2 counterpart of [[graft.sinks.Sinks.writeWebdataset]]
+  * DataSourceV2 counterpart of webdataset output of [[graft.sinks.Sinks]]
   * (layout per webdataset.github.io: consecutive `{key}.jpg`,
   * `{key}.txt`, `{key}.json` entries per sample, one shard per tar).
   *

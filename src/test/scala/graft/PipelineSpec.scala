@@ -215,6 +215,47 @@ class PipelineSpec extends SparkSpec {
     assert(second.count == 0, "all shards already done → nothing re-processed")
   }
 
+  test("doneShardIds: a stray *_stats.json name is not a shard marker") {
+    val urls = server.allowedUrls  // 7 urls, 2 shards at 5/shard
+    val list = writeUrlList("stray", urls)
+    val out = tmpDir("stray_out")
+    Pipeline.download(spark, list, out, baseCfg.copy(outputFormat = "files"))
+    Files.write(Paths.get(out, "run_stats.json"), "{}".getBytes("UTF-8"))
+    Files.write(Paths.get(out, "_stats.json"), "{}".getBytes("UTF-8"))
+    // the files sink's `00000/` shard directories are not markers either
+    assert(Pipeline.doneShardIds(spark, out).sorted == Seq(0L, 1L))
+    val second = Pipeline.download(spark, list, out,
+      baseCfg.copy(outputFormat = "files", incrementalMode = "incremental"))
+    assert(second.count == 0)
+    val extended = Pipeline.download(spark, writeUrlList("stray2", urls.take(2)), out,
+      baseCfg.copy(outputFormat = "files", incrementalMode = "extend"))
+    assert(extended.count == 2 && new java.io.File(out, "00002_stats.json").exists)
+  }
+
+  test("incremental mode: a shard without its _stats.json is downloaded again") {
+    val urls = server.allowedUrls  // shard 0: 5 rows, shard 1: 2 rows
+    val list = writeUrlList("half", urls)
+    val out = tmpDir("half_out")
+    Pipeline.download(spark, list, out, baseCfg.copy(outputFormat = "webdataset"))
+    // a crash after shard 1's tar and sidecar were renamed but before
+    // its stats file was: the marker is missing, the tar is garbage
+    Files.delete(Paths.get(out, "00001_stats.json"))
+    Files.write(Paths.get(out, "00001.tar"), "torn".getBytes("UTF-8"))
+    val shard0 = Files.getLastModifiedTime(Paths.get(out, "00000.tar"))
+    val res = Pipeline.download(spark, list, out,
+      baseCfg.copy(outputFormat = "webdataset", incrementalMode = "incremental"))
+    assert(res.count == 2 && res.successes == 2, "only the half-committed shard re-ran")
+    assert(Files.getLastModifiedTime(Paths.get(out, "00000.tar")) == shard0,
+      "the committed shard was skipped")
+    val tin = new org.apache.commons.compress.archivers.tar.TarArchiveInputStream(
+      new java.io.FileInputStream(new java.io.File(out, "00001.tar")))
+    val entries = Iterator.continually(tin.getNextEntry).takeWhile(_ != null).map(_.getName).toList
+    tin.close()
+    assert(entries.count(_.endsWith(".jpg")) == 2, s"shard 1 rewritten: $entries")
+    assert(new java.io.File(out, "00001_stats.json").exists)
+    assert(spark.read.parquet(s"$out/*.parquet").count() == urls.size)
+  }
+
   test("stats sidecars: per-shard counts and status_dict") {
     val urls = server.allowedUrls.take(4) ++ Seq(server.url("/missing/a.jpg"))
     val out = tmpDir("stats")

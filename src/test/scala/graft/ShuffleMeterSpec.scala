@@ -74,6 +74,25 @@ class ShuffleMeterSpec extends SparkSpec {
     assert(clean.isEmpty, s"healthy re-run $healthy2 B vs $healthy B must pass")
   }
 
+  test("webdataset pipeline: no image bytes in the shuffle, only url rows") {
+    val server = new graft.util.HttpImageServer
+    try {
+      val urls = (0 until 48).map(i => server.allowedUrls(i % server.allowedUrls.size) + s"?v=$i")
+      val dir = java.nio.file.Files.createTempDirectory("graft_shuffle_pipe")
+      val list = dir.resolve("urls.txt")
+      java.nio.file.Files.write(list, urls.mkString("\n").getBytes("UTF-8"))
+      val read = ShuffleMeter.attach(spark)
+      val s0 = ShuffleMeter.drainAndRead(spark, read)
+      val res = graft.Pipeline.download(spark, list.toString, dir.resolve("out").toString,
+        graft.config.DownloadConfig(outputFormat = "webdataset", samplesPerShard = 10,
+          threadCount = 8, resizeMode = "border", imageSize = 256,
+          computeHashCol = Some("sha256"), incrementalMode = "overwrite"))
+      val perUrl = (ShuffleMeter.drainAndRead(spark, read) - s0) / urls.size
+      assert(res.successes == urls.size)
+      assert(perUrl < 1024, s"$perUrl shuffle bytes per url: image bytes are being shuffled")
+    } finally server.stop()
+  }
+
   test("baseline round-trip: write then load preserves the map") {
     val dir = java.nio.file.Files.createTempDirectory("shuffle-baseline")
     val p = dir.resolve("shuffle_baseline.json")
