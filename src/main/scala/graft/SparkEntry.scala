@@ -45,20 +45,34 @@ object SparkEntry {
     * carry their schema in a metastore; only this pathless-parquet
     * surface re-infers per read). Keyed by full path because the same
     * table name ships different physical layouts across sf dirs
-    * (events.ts: TIMESTAMP(NANOS) vs (MICROS)).
+    * (events.ts: TIMESTAMP(NANOS) vs (MICROS)), and valid only for the
+    * path's modification stamp: a table rewritten at the same path is
+    * re-inferred, never read with its old schema.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, org.apache.spark.sql.types.StructType)]()
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
+    val stamp = modificationStamp(s, path)
     val cached = schemaCache.get(path)
-    if (cached != null) s.read.schema(cached).parquet(path)
+    if (cached != null && cached._1 == stamp) s.read.schema(cached._2).parquet(path)
     else {
       val df = s.read.parquet(path)
-      schemaCache.put(path, df.schema)
+      schemaCache.put(path, (stamp, df.schema))
       df
     }
+  }
+
+  /** Latest modification time of a table path and its direct
+    * children (a rewrite replaces the part files, and on object
+    * stores a directory has no time of its own); -1 when absent. */
+  private def modificationStamp(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    try fs.listStatus(p).foldLeft(fs.getFileStatus(p).getModificationTime)(
+      (m, st) => math.max(m, st.getModificationTime))
+    catch { case _: java.io.FileNotFoundException => -1L }
   }
 
   /** events.parquet's `ts` column has shipped in two physical forms:
@@ -1475,27 +1489,31 @@ object SparkEntry {
       // the committed index (signature-agreement verify). The oracle
       // replays both batches from scratch — the index is derived state.
       val docs = t(s, dir, "documents")
-      val idx = java.nio.file.Files.createTempDirectory("graft_incr_idx")
-        .resolve("index").toString
-      val b1 = docs.filter(col("doc_id") % 2 === 0)
-      val b2 = docs.filter(col("doc_id") % 2 === 1)
-      val s1 = Dedup.incrementalMinhash(b1, "text", "doc_id", idx,
-        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-        portableHash = true)
-      // Batch-1's commit is overlapped behind batch-2's within-batch
-      // candidate build (guide §2.6; r15): the build depends only on
-      // b2, the commit only writes the index, and the operator
-      // barriers before its first index read — computes exactly what
-      // the sequential { commit(s1); incrementalMinhash(b2) } did.
-      val s2 = Dedup.incrementalMinhashOverlapping(b2, "text", "doc_id", idx,
-        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-        portableHash = true) { () =>
-        Dedup.commitMinhash(s1, "text", "doc_id", idx,
-          shingleSize = 3, numHashes = 128, bands = 32, portableHash = true)
-      }
-      s1.select(col("doc_id"), lit(1).as("batch"))
-        .union(s2.select(col("doc_id"), lit(2).as("batch")))
-        .orderBy("doc_id")
+      val idxDir = java.nio.file.Files.createTempDirectory("graft_incr_idx")
+      val idx = idxDir.resolve("index").toString
+      // The index only feeds s1 and s2, both checkpointed before they
+      // return: the returned plan reads checkpointed blocks alone.
+      try {
+        val b1 = docs.filter(col("doc_id") % 2 === 0)
+        val b2 = docs.filter(col("doc_id") % 2 === 1)
+        val s1 = Dedup.incrementalMinhash(b1, "text", "doc_id", idx,
+          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
+          portableHash = true)
+        // Batch-1's commit is overlapped behind batch-2's within-batch
+        // candidate build (guide §2.6; r15): the build depends only on
+        // b2, the commit only writes the index, and the operator
+        // barriers before its first index read — computes exactly what
+        // the sequential { commit(s1); incrementalMinhash(b2) } did.
+        val s2 = Dedup.incrementalMinhashOverlapping(b2, "text", "doc_id", idx,
+          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
+          portableHash = true) { () =>
+          Dedup.commitMinhash(s1, "text", "doc_id", idx,
+            shingleSize = 3, numHashes = 128, bands = 32, portableHash = true)
+        }
+        s1.select(col("doc_id"), lit(1).as("batch"))
+          .union(s2.select(col("doc_id"), lit(2).as("batch")))
+          .orderBy("doc_id")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(idxDir.toFile)
     }),
     "dedup_simhash" -> ((s, dir) =>
       Dedup.simhashNearDups(t(s, dir, "documents"), "text", "doc_id", maxHamming = 8,

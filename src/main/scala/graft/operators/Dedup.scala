@@ -659,7 +659,7 @@ object Dedup {
     // scale, the MinHash/LSH pipeline) as a logical subtree into
     // every round's analyzed plan, which the driver re-plans per AQE
     // stage — the measured r14 driver-gap pathology (see
-    // Graphs.pageRank). The checkpoint truncates each round to joins
+    // Graphs.triangleStatsImpl). The checkpoint truncates each round to joins
     // over an ExistingRDD leaf; the candidate build runs exactly once.
     val edges = org.apache.spark.sql.graftbridge.CheckpointBridge
       .localCheckpointFreshStats(

@@ -1,7 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{Callable, ExecutorCompletionService, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph algorithms over edge lists — used for
   * centrality-weighted data selection (rank web/document nodes by a
@@ -16,57 +27,224 @@ import org.apache.spark.sql.functions._
   * exactly. The deliberate trade: floor-division truncation loses
   * ≤ 1e-9 rank per (edge, iteration) vs real-valued PageRank —
   * far below any ranking-relevant difference.
+  *
+  * The iterative algorithms ([[pageRank]], [[labelPropagation]]) run
+  * on one RDD kernel ([[NodeKernel]]), not on Catalyst: a round is a
+  * fixed pair of closures, so it is compiled once by the JIT instead
+  * of being analyzed, optimized and code-generated as a new SQL plan
+  * every round. The one-shot algorithms (triangles, cluster quality)
+  * stay DataFrame plans.
   */
 object Graphs {
 
   /** Eager local checkpoint that also RESETS inherited plan
     * statistics ([[org.apache.spark.sql.graftbridge.CheckpointBridge]]):
     * plain `localCheckpoint` carries the origin `sizeInBytes` onto
-    * the LogicalRDD, and a loop frame joined against itself squares
-    * that BigInt every round — stats arithmetic ends up dominating
-    * the round (measured ~3×/round growth) and finally overflows.
+    * the LogicalRDD, and a frame joined against itself squares that
+    * BigInt — stats arithmetic ends up dominating the plan and
+    * finally overflows.
     */
   private def graftCheckpoint(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(df)
 
-  /** Run two independent eagerly-materializing builds concurrently
+  private val ParallelCalls = new AtomicInteger
+
+  /** Run independent eagerly-materializing builds concurrently
     * (guide-§2.6 job overlap): Spark's scheduler happily runs several
-    * jobs at once inside one application — the suites' halves are
-    * only sequential because single-threaded driver code calls their
-    * actions sequentially. Each body runs on its own thread so one
-    * side's tasks backfill the other's inter-stage driver gaps;
-    * exceptions rethrow on the caller. FIFO scheduling keeps the
-    * earlier job's resource priority — exactly the backfill behavior
-    * wanted here.
+    * jobs at once inside one application, so one body's tasks
+    * backfill another's inter-stage driver gaps. FIFO scheduling keeps
+    * the earlier job's resource priority. Results come back in input
+    * order.
+    *
+    * At most `min(bodies, defaultParallelism)` bodies run at once.
+    * Each body's jobs carry their own job tag (a tag, not a job group:
+    * the caller's group — e.g. a per-query budget's — stays in force,
+    * so cancelling it still reaches every body). On the first failure
+    * queued bodies are dropped, running bodies have their jobs
+    * cancelled until their threads return, and the original exception
+    * is rethrown.
     */
-  /** N-way [[inParallel]] for a homogeneous list of independent
-    * eagerly-materializing builds (r15: the recall profiles' per-depth
-    * / per-banding branches). Same semantics: FIFO backfill,
-    * exceptions rethrow on the caller, results in input order.
-    */
-  private[operators] def inParallelSeq[A](bodies: Seq[() => A]): Seq[A] = {
+  private[graft] def inParallelSeq[A](bodies: Seq[() => A]): Seq[A] =
     if (bodies.size <= 1) bodies.map(_())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
+      val sc = SparkSession.active.sparkContext
+      val call = ParallelCalls.incrementAndGet()
+      val tags = bodies.indices.map(i => s"graft-parallel-$call-$i")
+      val threads = new AtomicInteger
+      val pool = Executors.newFixedThreadPool(math.min(bodies.size, sc.defaultParallelism),
+        new ThreadFactory {
+          def newThread(r: Runnable): Thread = {
+            val t = new Thread(r, s"graft-parallel-$call-${threads.getAndIncrement()}")
+            t.setDaemon(true)
+            t
+          }
+        })
+      val done = new ExecutorCompletionService[(Int, A)](pool)
+      val futures = bodies.zip(tags).zipWithIndex.map { case ((body, tag), i) =>
+        done.submit(new Callable[(Int, A)] {
+          def call(): (Int, A) = {
+            sc.addJobTag(tag)
+            sc.setInterruptOnCancel(true)
+            try (i, body()) finally sc.removeJobTag(tag)
+          }
+        })
+      }
+      val out = new Array[Any](bodies.size)
       try {
-        val fs = bodies.map(b => pool.submit(
-          new java.util.concurrent.Callable[A] { def call(): A = b() }))
-        fs.map(_.get())
+        bodies.indices.foreach { _ => val (i, a) = done.take().get(); out(i) = a }
+        out.toSeq.asInstanceOf[Seq[A]]
       } catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
+        case t: Throwable =>
+          // queued bodies never start; running ones get their jobs
+          // cancelled (again, should one submit a job after a cancel)
+          // until they return
+          futures.foreach(_.cancel(false))
+          pool.shutdown()
+          val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+          var idle = false
+          while (!idle && System.nanoTime() < deadline) {
+            tags.foreach(sc.cancelJobsWithTag)
+            idle = pool.awaitTermination(100, TimeUnit.MILLISECONDS)
+          }
+          if (!idle) pool.shutdownNow()
+          throw (t match {
+            case e: java.util.concurrent.ExecutionException => e.getCause
+            case other => other
+          })
       } finally pool.shutdown()
     }
+
+  /** Two-body [[inParallelSeq]]. */
+  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(x, y) = inParallelSeq(Seq[() => Any](() => a, () => b))
+    (x.asInstanceOf[A], y.asInstanceOf[B])
   }
 
-  private[operators] def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fa = pool.submit(new java.util.concurrent.Callable[A] { def call(): A = a })
-      val fb = pool.submit(new java.util.concurrent.Callable[B] { def call(): B = b })
-      (fa.get(), fb.get())
-    } catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    } finally pool.shutdown()
+  /** Rounds between lineage cuts of an iterative state (see
+    * [[NodeKernel.iterate]]). */
+  private val CheckpointEvery = 10
+
+  /** The co-partitioned node-state kernel behind [[pageRank]] and
+    * [[labelPropagation]].
+    *
+    * The edge frame is read ONCE, through `queryExecution.toRdd`, into
+    * an adjacency RDD (node → its distinct out-neighbours; every
+    * endpoint is a node, so a dst-only node has none) that is cached
+    * under one `HashPartitioner(spark.sql.shuffle.partitions)`. Node
+    * state lives in RDDs under the same partitioner, so a round is
+    * one map-side-combined message shuffle plus narrow co-partitioned
+    * zips — no SQL plan inside the loop. Messages are keyed by an
+    * 8-byte node id and combined before they leave the map side, so
+    * nothing wider than a node's combined inbox ever shuffles; no
+    * data-sized collect, no driver-side graph.
+    *
+    * Every round's state is cached (it feeds the next round's message
+    * side AND its update side, which would otherwise recompute the
+    * whole round chain), and [[close]] drops the adjacency and every
+    * state once the caller has materialized its result.
+    */
+  private[graft] final class NodeKernel(edges: DataFrame, srcCol: String, dstCol: String) {
+    private val ends = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
+    private val held = mutable.ArrayBuffer.empty[RDD[_]]
+
+    val partitioner = new HashPartitioner(edges.sparkSession.sessionState.conf.numShufflePartitions)
+
+    /** Output node-id field: nullable exactly when an input endpoint is. */
+    private val idField: StructField = StructField("id", LongType, ends.schema.exists(_.nullable))
+
+    private def hold[T](r: RDD[T]): RDD[T] = {
+      held.synchronized(held += r)
+      r.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** node → distinct out-neighbours. The edge list is a set and null
+      * endpoints are dropped. */
+    val adjacency: RDD[(Long, Array[Long])] = hold(ends.queryExecution.toRdd
+      .flatMap { r =>
+        // (dst, null) makes dst a node without giving it an out-edge
+        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+        else Iterator((r.getLong(0), java.lang.Long.valueOf(r.getLong(1))),
+          (r.getLong(1), null: java.lang.Long))
+      }
+      .combineByKey[mutable.ArrayBuilder.ofLong](
+        (d: java.lang.Long) => append(new mutable.ArrayBuilder.ofLong, d),
+        append, (a, b) => a.addAll(b.result()), partitioner)
+      .mapValues(_.result().distinct))
+
+    /** One round: each node with out-neighbours sends `send(state,
+      * outDegree)` (if any) to every out-neighbour; messages combine
+      * map-side by destination — the round's ONE shuffle — and a
+      * narrow co-partitioned zip applies `update(state, inbox)`
+      * (`None` when nothing arrived) to every node.
+      */
+    def round[S, V: ClassTag, C](state: RDD[(Long, S)])(
+        send: (S, Int) => Option[V])(
+        combine: V => C, add: (C, V) => C, merge: (C, C) => C)(
+        update: (S, Option[C]) => S): RDD[(Long, S)] = {
+      val inbox = adjacency.zipPartitions(state) { (adj, st) =>
+        val byId = mutable.LongMap.from(st)
+        adj.flatMap { case (id, nbrs) =>
+          if (nbrs.isEmpty) Iterator.empty
+          else send(byId(id), nbrs.length) match {
+            case Some(m) => nbrs.iterator.map(d => (d, m))
+            case None => Iterator.empty
+          }
+        }
+      }.combineByKey(combine, add, merge, partitioner)
+      state.zipPartitions(inbox, preservesPartitioning = true) { (st, in) =>
+        val received = mutable.LongMap.from(in)
+        st.map { case (id, s) => (id, update(s, received.get(id))) }
+      }
+    }
+
+    /** Runs up to `iterations` rounds of `step`, lazily: a fixed-round
+      * run is computed by the caller's one materializing job. Every
+      * [[CheckpointEvery]] rounds the state is local-checkpointed to
+      * bound the lineage. With a `settled(old, new)` probe the new
+      * state is local-checkpointed every round and the probe is the
+      * round's one action (it materializes the state it reads); the
+      * loop stops once it returns true.
+      */
+    def iterate[S](init: RDD[(Long, S)], iterations: Int,
+        settled: Option[(RDD[(Long, S)], RDD[(Long, S)]) => Boolean])(
+        step: RDD[(Long, S)] => RDD[(Long, S)]): RDD[(Long, S)] = {
+      var state = hold(init)
+      var it = 0
+      var done = false
+      while (it < iterations && !done) {
+        val next = hold(step(state))
+        it += 1
+        val cut = it % CheckpointEvery == 0 && it < iterations
+        settled match {
+          case Some(probe) => next.localCheckpoint(); done = probe(state, next)
+          case None => if (cut) { next.localCheckpoint(); next.count() }
+        }
+        state = next
+      }
+      state
+    }
+
+    /** The result frame, materialized (one job) before the caller
+      * [[close]]s the kernel. */
+    def frame[S](state: RDD[(Long, S)], valueField: StructField)(value: S => Any): DataFrame =
+      org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointRows(edges.sparkSession,
+        state.map { case (id, s) => InternalRow(id, value(s)) },
+        StructType(Seq(idField, valueField)))
+
+    def close(): Unit = held.synchronized(held.foreach(_.unpersist(blocking = false)))
+  }
+
+  private def append(b: mutable.ArrayBuilder.ofLong, d: java.lang.Long): mutable.ArrayBuilder.ofLong = {
+    if (d != null) b.addOne(d.longValue)
+    b
+  }
+
+  /** Runs `body` over a fresh kernel and frees the kernel's caches
+    * after `body` has materialized its result. */
+  private def withKernel[T](edges: DataFrame, srcCol: String, dstCol: String)(
+      body: NodeKernel => T): T = {
+    val k = new NodeKernel(edges, srcCol, dstCol)
+    try body(k) finally k.close()
   }
 
   /** PageRank by power iteration over a directed edge list.
@@ -83,32 +261,21 @@ object Graphs {
     * Returns (id, rank_nanos: long) — callers divide by 1e9 for the
     * conventional scale.
     *
-    * Scale shape: per iteration, ONE equi-join of the slim
-    * (id, rank) table with the (src, dst, outdeg) edge table on the
-    * source key and ONE map-side-combined sum keyed by destination —
-    * both hash-partitioned by node id, nothing wider than three
-    * longs ever shuffles, and the edge table's partitioning is
-    * reusable across all iterations. No windows, no data-sized
-    * collects, no driver-side graph. Overflow bound: a node's rank
-    * is ≤ the total mass ≤ N·1e9 nanos, so 85·rank stays inside a
-    * long for N < 10^11 nodes.
-    *
-    * Lineage & caching: the (src, dst, outdeg) edge frame — which at
-    * production scale embeds the entire upstream k-NN-graph build —
-    * is PERSISTED before the loop and computed exactly once; the rank
-    * frame is eagerly `localCheckpoint`ed every 3 rounds (and at
-    * exit, so the caches can be freed before returning) to bound the
-    * iterative-join lineage — the [[Dedup.connectedComponents]]
-    * pattern.
+    * Scale shape: [[NodeKernel]] — per iteration one map-side-combined
+    * long sum keyed by destination, then a narrow co-partitioned
+    * update; the edge frame is read once. A fixed-iteration run is ONE
+    * Spark job (plus a lineage cut every [[CheckpointEvery]] rounds).
+    * Overflow bound: a node's rank is ≤ the total mass ≤ N·1e9 nanos,
+    * so 85·rank stays inside a long for N < 10^11 nodes; past that the
+    * exact arithmetic throws rather than wraps.
     *
     * `toleranceNanos` > 0 adds a convergence early-exit: stop when
     * the total absolute rank movement Σ|Δr| of a round is ≤ the
     * tolerance (an exact integer test — no float drift), so
     * large-scale callers don't pay fixed iterations past
-    * convergence. The convergence probe rides the round's
-    * checkpointed frame — one action per round, no recompute. The
-    * default 0 keeps the fixed-iteration form (the oracle-replayable
-    * contract).
+    * convergence. The probe is the round's one action over its
+    * checkpointed state — no recompute. The default 0 keeps the
+    * fixed-iteration form (the oracle-replayable contract).
     */
   def pageRank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                iterations: Int = 5, toleranceNanos: Long = 0L): DataFrame = {
@@ -116,75 +283,27 @@ object Graphs {
       s"iterations must be in [1, 50], got $iterations")
     require(toleranceNanos >= 0L,
       s"toleranceNanos must be >= 0, got $toleranceNanos")
-    // EAGER fresh-stats checkpoint, not a lazy persist: a persisted
-    // frame still carries its full logical subtree (at production
-    // scale, the whole upstream k-NN-graph build) into EVERY round's
-    // analyzed plan, and the driver re-plans that tree once per AQE
-    // stage — measured r14: 27.5 s of the standalone emb_pagerank's
-    // 40 s wall was zero-task inter-stage driver gap, while the suite
-    // variant (which checkpoints edges first) ran the same rounds
-    // with sub-second gaps. The checkpoint truncates each round to a
-    // few joins over ExistingRDD leaves; the edge build still runs
-    // exactly once (now in its own small-plan job).
-    val e = graftCheckpoint(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct())
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().persist()
-    val outdeg = e.groupBy("src").agg(count("*").as("outdeg"))
-    // (src, dst, outdeg) is iteration-invariant: persist it so every
-    // round's join reads cached blocks (its lineage is now two narrow
-    // ops over the checkpointed edge RDD, so the cached subtree the
-    // rounds re-plan is tiny).
-    val withDeg = e.join(outdeg, "src").persist()
-
-    var ranks = nodes.withColumn("rank_nanos", lit(1000000000L))
-    var it = 0
-    var converged = false
-    while (it < iterations && !converged) {
-      val next = pageRankRound(withDeg, nodes, ranks)
-      if (toleranceNanos > 0L) {
-        val flagged = graftCheckpoint(next.as("n").join(ranks.as("o"), Seq("id"))
-          .select(col("id"), col("n.rank_nanos").as("rank_nanos"),
-            abs(col("n.rank_nanos") - col("o.rank_nanos")).as("__delta")))
-        val moved = flagged.agg(coalesce(sum("__delta"), lit(0L))).head.getLong(0)
-        ranks = flagged.select("id", "rank_nanos")
-        converged = moved <= toleranceNanos
-      } else {
-        ranks =
-          if ((it + 1) % 3 == 0 && it + 1 < iterations)
-            graftCheckpoint(next)
-          else next
-      }
-      it += 1
-    }
-    // Materialize the result before dropping the caches it was built
-    // from, so the caller's action never re-derives the edge frame.
-    val out = graftCheckpoint(ranks)
-    withDeg.unpersist()
-    nodes.unpersist()
-    out.orderBy("id")
+    withKernel(edges, srcCol, dstCol)(pageRankOn(_, iterations, toleranceNanos)).orderBy("id")
   }
 
-  /** One power-iteration round — the plan the cluster actually pays
-    * per iteration (the public entry checkpoints its result, so plan
-    * audits must look HERE): one source-keyed equi-join, one
-    * map-side-combined destination sum, one left join back onto the
-    * node set. Package-private test seam.
-    */
-  private[graft] def pageRankRound(withDeg: DataFrame, nodes: DataFrame,
-                                   ranks: DataFrame): DataFrame = {
-    val contribs = withDeg
-      .join(ranks.withColumnRenamed("id", "src"), "src")
-      .select(col("dst").as("id"),
-        expr("(85 * rank_nanos) div (100 * outdeg)").as("c"))
-      .groupBy("id").agg(sum(col("c")).as("inflow"))
-    nodes
-      .join(contribs, Seq("id"), "left")
-      .select(col("id"),
-        (lit(150000000L) + coalesce(col("inflow"), lit(0L))).as("rank_nanos"))
+  private def pageRankOn(k: NodeKernel, iterations: Int, toleranceNanos: Long): DataFrame = {
+    val settled =
+      if (toleranceNanos == 0L) None
+      else Some((o: RDD[(Long, Long)], n: RDD[(Long, Long)]) =>
+        o.zipPartitions(n) { (old, cur) =>
+          val before = mutable.LongMap.from(old)
+          Iterator.single(cur.map { case (id, r) => math.abs(r - before(id)) }.sum)
+        }.collect().sum <= toleranceNanos)
+    val ranks = k.iterate(k.adjacency.mapValues(_ => 1000000000L), iterations, settled)(rankStep(k))
+    k.frame(ranks, StructField("rank_nanos", LongType, nullable = false))(identity)
   }
+
+  /** One PageRank round on the kernel (package-private for the
+    * lineage audit). */
+  private[graft] def rankStep(k: NodeKernel)(ranks: RDD[(Long, Long)]): RDD[(Long, Long)] =
+    k.round(ranks)((r: Long, deg: Int) => Some(Math.multiplyExact(85L, r) / (100L * deg)))(
+      (c: Long) => c, Math.addExact(_: Long, _: Long), Math.addExact(_: Long, _: Long))(
+      (_, in) => Math.addExact(150000000L, in.getOrElse(0L)))
 
   /** Semi-supervised label propagation (the classic LPA step applied
     * to data labeling: spread a small seed set's labels across the
@@ -198,13 +317,13 @@ object Graphs {
     * reached. All arithmetic is exact (counts + integer labels) —
     * bit-identical across partitionings and engines.
     *
-    * Scale shape per iteration: one equi-join of the slim
-    * (id, label) table with the edge list on the source key, one
-    * map-side-combined (dst, label) count, and one (dst)-keyed
-    * arg-max — computed as `max(struct(cnt, -label))`, an
-    * aggregation, NOT a window, so a hub node's candidate list
-    * never sorts. Labels must be non-negative ints (the -label
-    * tie-break trick needs the sign).
+    * Scale shape: [[NodeKernel]] — per iteration every labeled node
+    * sends its label along its out-edges, and the (label → count)
+    * histograms combine map-side by destination (one shuffle); the
+    * arg-max is a scan of each node's histogram, never a sort of a
+    * hub's votes. The seed table is hash-partitioned once to seed
+    * the state. A run is ONE Spark job (plus a lineage cut every
+    * [[CheckpointEvery]] rounds).
     */
   def labelPropagation(edges: DataFrame, seeds: DataFrame,
                        srcCol: String = "src", dstCol: String = "dst",
@@ -212,36 +331,52 @@ object Graphs {
                        iterations: Int = 3): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
-    // The edge list (at scale, the whole upstream k-NN-graph build)
-    // is iteration-invariant: EAGER fresh-stats checkpoint, not a
-    // lazy persist — a persisted frame still carries the full edge
-    // build's logical subtree into every round's analyzed plan, and
-    // the driver re-plans it per AQE stage (the measured r14
-    // emb_pagerank pathology: 27.5 s of zero-task driver gap; see
-    // pageRank). The slim seed table stays a persist; the label frame
-    // is checkpointed every 3 rounds (and at exit) to bound the
-    // iterative-join lineage.
-    val e = graftCheckpoint(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct())
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val seed = seeds.select(col(idCol).cast("long").as("id"),
-      col(labelCol).cast("int").as("seed_label")).persist()
-    // the clamped seed label RIDES the iteration frame (one extra int
-    // column through the checkpoints) so no round re-joins the seed
-    // table — one fewer shuffle join per iteration
-    var labels = nodes.join(seed, Seq("id"), "left")
-      .select(col("id"), col("seed_label"), col("seed_label").as("label"))
-    for (it <- 1 to iterations) {
-      labels = labelPropRound(e, labels)
-      if (it % 3 == 0 && it < iterations)
-        labels = graftCheckpoint(labels)
+    withKernel(edges, srcCol, dstCol)(labelPropOn(_, seeds, idCol, labelCol, iterations))
+      .orderBy("id")
+  }
+
+  /** "No label" in the kernel's label state (labels are ints, so no
+    * real label collides with it). */
+  private val NoLabel = Long.MinValue
+
+  private def labelPropOn(k: NodeKernel, seeds: DataFrame, idCol: String, labelCol: String,
+                          iterations: Int): DataFrame = {
+    val seedRows = seeds.select(col(idCol).cast("long"), col(labelCol).cast("int"))
+      .queryExecution.toRdd
+      .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None
+        else Some((r.getLong(0), r.getInt(1).toLong)))
+      .partitionBy(k.partitioner)
+    // state = (clamped seed label, current label)
+    val init = k.adjacency.zipPartitions(seedRows, preservesPartitioning = true) { (adj, s) =>
+      val seed = mutable.LongMap.from(s)
+      adj.map { case (id, _) => val l = seed.getOrElse(id, NoLabel); (id, (l, l)) }
     }
-    val out = graftCheckpoint(labels.select("id", "label"))
-    seed.unpersist()
-    out.orderBy("id")
+    val labels = k.iterate(init, iterations, None)(labelStep(k))
+    k.frame(labels, StructField("label", IntegerType, nullable = true)) { s =>
+      if (s._2 == NoLabel) null else s._2.toInt
+    }
+  }
+
+  /** One label-propagation round on the kernel (package-private for
+    * the lineage audit). */
+  private[graft] def labelStep(k: NodeKernel)(
+      labels: RDD[(Long, (Long, Long))]): RDD[(Long, (Long, Long))] =
+    k.round(labels)((s: (Long, Long), _: Int) => if (s._2 == NoLabel) None else Some(s._2))(
+      (l: Long) => mutable.LongMap(l -> 1L),
+      (m: mutable.LongMap[Long], l: Long) => { m(l) = m.getOrElse(l, 0L) + 1L; m },
+      (a: mutable.LongMap[Long], b: mutable.LongMap[Long]) => {
+        b.foreachEntry((l, c) => a(l) = a.getOrElse(l, 0L) + c); a
+      })(
+      (s, votes) => if (s._1 != NoLabel) s else votes.fold(s)(v => (s._1, mode(v))))
+
+  /** Most frequent label; ties go to the smallest label. */
+  private def mode(votes: mutable.LongMap[Long]): Long = {
+    var best = NoLabel
+    var bestCount = 0L
+    votes.foreachEntry { (l, c) =>
+      if (c > bestCount || (c == bestCount && l < best)) { best = l; bestCount = c }
+    }
+    best
   }
 
   /** Per-node triangle count + local clustering coefficient over an
@@ -298,8 +433,10 @@ object Graphs {
     // pipeline) is embedded three times in one analyzed plan —
     // exchange reuse may or may not collapse the copies, and the
     // driver re-plans the full tree per AQE stage either way (the
-    // measured r14 driver-gap pathology, see pageRank). One eager
-    // fresh-stats checkpoint truncates all of it.
+    // measured r14 driver-gap pathology: 27.5 s of a 40 s emb_pagerank
+    // run, when it was a DataFrame loop over a persisted edge frame,
+    // was zero-task driver gap). One eager fresh-stats checkpoint
+    // truncates all of it.
     val e = if (materialize) graftCheckpoint(eRaw) else eRaw
     // deg is referenced four times (both orientation sides, the
     // closing-degree join, the final rollup join): persist the
@@ -346,7 +483,7 @@ object Graphs {
     if (!materialize) raw
     else {
       // materialize (node-sized) so the oriented/deg caches can be
-      // freed before returning — the labelPropagation exit pattern
+      // freed before returning
       val out = graftCheckpoint(raw)
       orientedC.unpersist()
       deg.unpersist()
@@ -455,10 +592,10 @@ object Graphs {
     * out_degree 0.
     *
     * Scale shape: the edge frame is an eager fresh-stats checkpoint —
-    * each consumer reads materialized blocks, never re-derives the
-    * LSH buckets; pageRank/labelPropagation then persist their own
-    * slim iteration-invariant frames as usual; the final composition
-    * is two node-keyed equi-joins of node-sized frames.
+    * the out-degree count and the one [[NodeKernel]] adjacency that
+    * pageRank and labelPropagation share read materialized blocks,
+    * never re-derive the LSH buckets; the final composition is two
+    * node-keyed equi-joins of node-sized frames.
     */
   def embeddingGraphSuite(emb: DataFrame, vecCol: String, idCol: String,
       labelCol: String, dim: Int, k: Int = 10, nPlanes: Int = Dedup.AutoPlanes,
@@ -468,40 +605,20 @@ object Graphs {
     val edges = graftCheckpoint(
       Similarity.knnGraph(emb, vecCol, idCol, dim, k, nPlanes, nTables)
         .select(col("src_id"), col("nbr_id")))
-    // PageRank and label propagation are independent given the
-    // checkpointed edge RDD: overlap their iteration jobs (§2.6) so
-    // each side's tasks fill the other's inter-round driver gaps.
-    val (pr, lp) = inParallel(
-      pageRank(edges, "src_id", "nbr_id", prIterations),
-      labelPropagation(edges,
-        emb.filter(col(idCol) % seedEvery === 0).select(col(idCol), col(labelCol)),
-        "src_id", "nbr_id", idCol, labelCol, lpIterations))
+    // PageRank and label propagation share one kernel (one adjacency
+    // build) and are independent given it: overlap their jobs (§2.6)
+    // so each side's tasks fill the other's driver gaps.
+    val (pr, lp) = withKernel(edges, "src_id", "nbr_id") { g =>
+      inParallel(
+        pageRankOn(g, prIterations, 0L),
+        labelPropOn(g, emb.filter(col(idCol) % seedEvery === 0).select(col(idCol), col(labelCol)),
+          idCol, labelCol, lpIterations))
+    }
     val deg = edges.groupBy(col("src_id").as("id"))
       .agg(count("*").as("out_degree"))
     pr.join(lp, "id").join(deg, Seq("id"), "left")
       .select(col("id").as("vec_id"),
         coalesce(col("out_degree"), lit(0L)).as("out_degree"),
         col("rank_nanos"), col("label"))
-  }
-
-  /** One label-propagation round — the per-iteration plan the cluster
-    * pays (the public entry checkpoints its result, so plan audits
-    * must look HERE): source-keyed vote join, map-side-combined
-    * (dst, label) count, (dst)-keyed max-struct arg-max — never a
-    * window. `labels` carries (id, seed_label, label); seeds stay
-    * clamped via the coalesce, no per-round seed join.
-    * Package-private test seam.
-    */
-  private[graft] def labelPropRound(e: DataFrame, labels: DataFrame): DataFrame = {
-    val votes = e.join(labels.select(col("id").as("src"), col("label")), "src")
-      .filter(col("label").isNotNull)
-      .groupBy(col("dst").as("id"), col("label"))
-      .agg(count("*").as("cnt"))
-    val mode = votes.groupBy("id")
-      .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("m"))
-      .select(col("id"), (-col("m.neg")).as("mode_label"))
-    labels.join(mode, Seq("id"), "left")
-      .select(col("id"), col("seed_label"),
-        coalesce(col("seed_label"), col("mode_label"), col("label")).as("label"))
   }
 }

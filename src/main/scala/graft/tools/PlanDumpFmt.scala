@@ -7,12 +7,11 @@ import org.apache.spark.sql.SparkSession
   * optimization-round artifacts (PlanDump keeps the compact
   * executedPlan.toString form behind PLANS.md).
   *
-  * Iterative operators (pageRank / labelPropagation /
-  * connectedComponents) materialize their loop frames EAGERLY while
-  * the query DataFrame is being CONSTRUCTED, so the final plan is a
-  * scan of the checkpointed RDD: for those, the per-round plan seams
-  * (`pageRankRound`, `labelPropRound`) are what a plan audit must
-  * read — `PlanDumpRounds` below prints them alongside.
+  * Iterative operators materialize their results EAGERLY while the
+  * query DataFrame is being CONSTRUCTED, so the final plan is a scan
+  * of the checkpointed rows. pageRank / labelPropagation have no SQL
+  * plan per round at all (they run on the RDD kernel
+  * `Graphs.NodeKernel`; PlanAuditSpec audits its round lineage).
   *
   * Usage: sbt "runMain graft.tools.PlanDumpFmt <outdir> <query> [query ...]"
   * (data dir from $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.001 —

@@ -40,14 +40,29 @@ object ShuffleMeter {
     * sequentially — the counter is global to the context).
     */
   def attach(spark: SparkSession): () => Long = {
-    val total = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) total.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
-    () => total.get()
+    val c = attachCounters(spark)
+    () => c.shuffleBytes.get()
+  }
+
+  /** Running totals of one attached listener: shuffle-write bytes and
+    * started jobs. */
+  final class Counters extends org.apache.spark.scheduler.SparkListener {
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      val m = te.taskMetrics
+      if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+    }
+    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+  }
+
+  /** [[attach]] with every counter exposed; the caller removes the
+    * listener (`sparkContext.removeSparkListener`) when done. */
+  def attachCounters(spark: SparkSession): Counters = {
+    val c = new Counters
+    spark.sparkContext.addSparkListener(c)
+    c
   }
 
   /** Drain the listener bus so every finished task's metrics have

@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 
 /** Stat-resetting eager local checkpoint for iterative algorithms.
   *
@@ -69,5 +72,19 @@ object CheckpointBridge {
       Iterator.single(c)
     }.collect().sum
     (classic.internalCreateDataFrame(rdd, ds.schema), total)
+  }
+
+  /** A frame over an RDD of rows, materialized the way
+    * [[localCheckpointFreshStats]] materializes a frame: the rows are
+    * local-checkpointed by ONE job, and the returned frame scans the
+    * checkpointed blocks with fresh stats — for results computed by
+    * an RDD kernel rather than a SQL plan.
+    */
+  def localCheckpointRows(spark: SparkSession, rows: RDD[InternalRow],
+                          schema: StructType): DataFrame = {
+    rows.localCheckpoint()
+    rows.count()
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
   }
 }

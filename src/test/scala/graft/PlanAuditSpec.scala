@@ -492,41 +492,107 @@ class PlanAuditSpec extends SparkSpec {
     assert(!keyed.contains("txt"), s"text must not ride the banding exchange:\n$keyed")
   }
 
-  test("emb_pagerank: iteration joins are keyed by node id; no cartesian, no window") {
-    // The public entry eagerly checkpoints its result (fresh-stats
-    // LogicalRDD), so the returned plan is just the materialized scan;
-    // the plan the cluster pays per ROUND is the extracted seam.
-    val p = plan("emb_pagerank")
-    assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
-    assert(!p.contains("Window"), s"no window:\n$p")
+  // ---- the iterative graph kernel (Graphs.NodeKernel) --------------------
+  // Its rounds are RDD closures, not SQL plans, so these audit the
+  // round LINEAGE and the job count instead of a plan string.
+
+  /** A 100-node edge frame, materialized (a checkpointed scan). */
+  private def ringEdges = {
     import org.apache.spark.sql.functions._
-    val e = spark.range(100).select(col("id").as("src"),
-      pmod(col("id") * 7 + 1, lit(100L)).as("dst"))
-    val nodes = e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
-    val withDeg = e.join(e.groupBy("src").agg(count("*").as("outdeg")), "src")
-    val round = graft.operators.Graphs.pageRankRound(withDeg, nodes,
-      nodes.withColumn("rank_nanos", lit(1000000000L)))
-    val rp = round.queryExecution.executedPlan.toString
-    assert(!rp.contains("CartesianProduct") && !rp.contains("Window"), s"round plan:\n$rp")
-    assert(rp.contains("partial_sum"), s"inflow sums map-side combined:\n$rp")
+    org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(
+      spark.range(100).select(col("id").as("src"),
+        pmod(col("id") * 7 + 1, lit(100L)).as("dst")))
   }
 
-  test("emb_label_prop: mode is an aggregation (max-struct), never a window over a hub's votes") {
-    val p = plan("emb_label_prop")
-    assert(!p.contains("Window"), s"no window:\n$p")
+  /** The RDDs `rdd` depends on, not descending into `stops`. */
+  private def lineage(rdd: org.apache.spark.rdd.RDD[_],
+                      stops: org.apache.spark.rdd.RDD[_]*): Seq[org.apache.spark.rdd.RDD[_]] = {
+    val seen = scala.collection.mutable.LinkedHashMap.empty[Int, org.apache.spark.rdd.RDD[_]]
+    def walk(r: org.apache.spark.rdd.RDD[_]): Unit =
+      if (!stops.exists(_.id == r.id) && !seen.contains(r.id)) {
+        seen(r.id) = r
+        r.dependencies.foreach(d => walk(d.rdd))
+      }
+    walk(rdd)
+    seen.values.toSeq
+  }
+
+  /** Rounds `step` `n` times from `init` and checks the loop lineage:
+    * exactly one map-side-combined shuffle per round, under the
+    * kernel's partitioner, and no SQL plan inside the loop. */
+  private def auditRounds[S](k: graft.operators.Graphs.NodeKernel,
+      init: org.apache.spark.rdd.RDD[(Long, S)], n: Int)(
+      step: org.apache.spark.rdd.RDD[(Long, S)] => org.apache.spark.rdd.RDD[(Long, S)]): Unit = {
+    val last = (1 to n).foldLeft(init)((s, _) => step(s))
+    val loop = lineage(last, init, k.adjacency)
+    val shuffles = loop.flatMap(_.dependencies).collect {
+      case d: org.apache.spark.ShuffleDependency[_, _, _] => d
+    }
+    assert(shuffles.size == n, s"one shuffle per round: ${loop.map(_.toDebugString).head}")
+    assert(shuffles.forall(_.mapSideCombine), "messages combine map-side")
+    assert(shuffles.forall(_.partitioner == k.partitioner), "one partitioner for all rounds")
+    val sql = loop.map(_.getClass.getName).filter(_.startsWith("org.apache.spark.sql"))
+    assert(sql.isEmpty, s"no SQL plan inside the loop: $sql")
+    assert(last.partitioner.contains(k.partitioner), "state stays co-partitioned")
+  }
+
+  test("emb_pagerank: one map-side-combined shuffle per round, no SQL in the loop") {
+    val k = new graft.operators.Graphs.NodeKernel(ringEdges, "src", "dst")
+    try auditRounds(k, k.adjacency.mapValues(_ => 1000000000L), 4)(graft.operators.Graphs.rankStep(k))
+    finally k.close()
+  }
+
+  test("emb_label_prop: one map-side-combined shuffle per round, no SQL in the loop") {
+    val k = new graft.operators.Graphs.NodeKernel(ringEdges, "src", "dst")
+    val seeded = k.adjacency.mapPartitions(_.map { case (id, _) =>
+      val l = if (id % 5 == 0) id % 10 else Long.MinValue
+      (id, (l, l))
+    }, preservesPartitioning = true)
+    try auditRounds(k, seeded, 3)(
+      graft.operators.Graphs.labelStep(k))
+    finally k.close()
+  }
+
+  test("NodeKernel.iterate: 12 rounds cut the lineage at round 10, ranks unchanged") {
     import org.apache.spark.sql.functions._
-    val e = spark.range(100).select(col("id").as("src"),
-      pmod(col("id") * 7 + 1, lit(100L)).as("dst"))
-    val nodes = e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
-    val seed = spark.range(0, 100, 5).select(col("id"),
-      pmod(col("id"), lit(10L)).cast("int").as("seed_label"))
-    val labels = nodes.join(seed, Seq("id"), "left")
-      .select(col("id"), col("seed_label"), col("seed_label").as("label"))
-    val round = graft.operators.Graphs.labelPropRound(e, labels)
-    val rp = round.queryExecution.executedPlan.toString
-    assert(!rp.contains("Window"), s"no window in the round plan:\n$rp")
-    assert(rp.contains("partial_count"), s"vote counts map-side combined:\n$rp")
-    assert(rp.contains("partial_max"), s"mode arg-max is an aggregation:\n$rp")
+    val twoOut = ringEdges.union(spark.range(100).select(col("id").as("src"),
+      pmod(col("id") * 3 + 2, lit(100L)).as("dst")))
+    val k = new graft.operators.Graphs.NodeKernel(twoOut, "src", "dst")
+    try {
+      val init = k.adjacency.mapValues(_ => 1000000000L)
+      val step = graft.operators.Graphs.rankStep(k) _
+      val cut = k.iterate(init, 12, None)(step)
+      val shuffles = lineage(cut, k.adjacency).flatMap(_.dependencies)
+        .count(_.isInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]])
+      assert(shuffles == 2, "rounds 11 and 12 sit above the round-10 checkpoint")
+      val uncut = (1 to 12).foldLeft(init)((s, _) => step(s))
+      assert(cut.collect().toMap == uncut.collect().toMap)
+    } finally k.close()
+  }
+
+  /** Jobs started while `body` runs (ShuffleMeter's listener). */
+  private def jobsOf(body: => Unit): Long = {
+    val c = graft.tools.ShuffleMeter.attachCounters(spark)
+    try {
+      val read = () => c.jobs.get()
+      val j0 = graft.tools.ShuffleMeter.drainAndRead(spark, read)
+      body
+      graft.tools.ShuffleMeter.drainAndRead(spark, read) - j0
+    } finally spark.sparkContext.removeSparkListener(c)
+  }
+
+  test("pageRank: 5 rounds over a materialized edge frame launch at most 3 jobs") {
+    val e = ringEdges
+    val jobs = jobsOf(graft.operators.Graphs.pageRank(e, iterations = 5))
+    assert(jobs <= 3, s"$jobs jobs")
+  }
+
+  test("labelPropagation: 3 rounds over a materialized edge frame launch at most 3 jobs") {
+    import org.apache.spark.sql.functions._
+    val e = ringEdges
+    val seeds = spark.range(0, 100, 5).select(col("id"), pmod(col("id"), lit(10L)).as("label"))
+    val jobs = jobsOf(graft.operators.Graphs.labelPropagation(e, seeds, iterations = 3))
+    assert(jobs <= 3, s"$jobs jobs")
   }
 
   test("samp_winsorize: thresholds broadcast; windows only roll up bin counts, never values") {
@@ -686,9 +752,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   // The four operators below checkpoint their public result (the
-  // ExistingRDD-scan collapse emb_pagerank also shows), so the shape
+  // returned plan collapses to an ExistingRDD scan), so the shape
   // audits run on the package-private un-materialized seams over
-  // synthetic frames — the labelPropRound precedent.
+  // synthetic frames.
 
   import org.apache.spark.sql.functions._
 
