@@ -1,7 +1,17 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+import graft.plans.BandKeys
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 
@@ -9,13 +19,17 @@ import scala.util.Random
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
-  * Five families, all pure DataFrame transforms (shuffle-conscious,
-  * no driver-side loops, no UDFs in the hot path):
+  * Five families, shuffle-conscious, with no driver-side loops and no
+  * UDFs in the hot path:
   *
   *  - [[exact]]           — md5-fingerprint group-by (one shuffle).
   *  - [[minhashNearDups]] — MinHash + LSH banding: shingle → signature
-  *                          (codegen'd expressions) → band-bucket join
-  *                          → exact-Jaccard verification of candidates.
+  *                          (native expressions, one Catalyst
+  *                          projection) → band buckets → exact-Jaccard
+  *                          verification of candidates, on the
+  *                          co-partitioned RDD kernel [[MinhashKernel]]
+  *                          (also behind [[containmentNearDups]] and
+  *                          [[incrementalMinhash]]).
   *  - [[simhashNearDups]] — 64-bit SimHash + chunk banding + Hamming
   *                          distance verification (`bit_count(xor)`).
   *  - [[ngramJaccardPairs]] — exact pairwise n-gram Jaccard via a
@@ -25,7 +39,7 @@ import scala.util.Random
   *                          random-hyperplane LSH buckets + exact
   *                          cosine verification.
   *
-  * Scale design: every candidate-generation step is an equi-join on a
+  * Scale design: every candidate-generation step groups or joins on a
   * bucket key (hash-partitionable at any cluster size); oversized
   * buckets (degenerate shingles / all-zero vectors) are capped via
   * `maxBucketSize` so one hot key cannot produce a quadratic task —
@@ -150,47 +164,282 @@ object Dedup {
     * `portable = false` (default): 8-byte `xxhash64` keys — smallest
     * shuffle, Spark-only. `portable = true`: the joined slice values
     * as a string key (equality-equivalent, engine-independent).
+    * Computed natively by [[graft.plans.BandKeysExpr]], with the same
+    * [[graft.plans.BandKeys]] function the [[MinhashKernel]] buckets by.
     */
   def bandKeys(sig: Column, bands: Int, rowsPerBand: Int,
-               portable: Boolean = false): Column =
-    array((0 until bands).map { j =>
-      val sliced = slice(sig, j * rowsPerBand + 1, rowsPerBand)
-      val key =
-        if (portable) concat_ws("_", sliced.cast("array<string>"))
-        else xxhash64(sliced)
-      struct(lit(j).as("band"), key.as("key"))
-    }: _*)
-
-  /** Shared MinHash-LSH candidate generation over a (id, shingles)
-    * frame: signature → band keys → capped bucket equi-join →
-    * deduped (id_a, id_b) pairs with id_a < id_b. Buckets carry ONLY
-    * (id, band, key): the band explode multiplies rows by `bands`, so
-    * shuffling shingle arrays through it would multiply shuffle bytes
-    * 32×; shingles rejoin later, once per candidate id. Degenerate
-    * buckets are capped: a bucket of size m yields m² candidate pairs,
-    * so beyond `maxBucketSize` it is a skew bomb, and near-dup pairs
-    * in a mega-bucket are overwhelmingly re-found by other bands.
-    */
-  private def lshCandidatePairs(
-      base: DataFrame, numHashes: Int, bands: Int, seed: Long,
-      maxBucketSize: Int, portableHash: Boolean): DataFrame = {
-    val r = numHashes / bands
-    // portableHash: hash shingles with the engine-independent 60-bit
-    // md5 hash (natively, inside the signature expression's loop) so a
-    // DuckDB oracle can replicate the signature.
-    val sigs = base.withColumn("sig",
-      minhashSignature(col("shingles"), numHashes, seed, portableMd5 = portableHash))
-    val buckets = sigs
-      .select(col("id"), explode(bandKeys(col("sig"), bands, r, portableHash)).as("bk"))
-      .select(col("id"), col("bk.band"), col("bk.key"))
-    val counts = buckets.groupBy("band", "key").agg(count("*").as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucketSize)
-    val sized = buckets.join(counts, Seq("band", "key"))
-    val a = sized.select(col("band"), col("key"), col("id").as("id_a"))
-    val b = sized.select(col("band"), col("key"), col("id").as("id_b"))
-    a.join(b, Seq("band", "key")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
+               portable: Boolean = false): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(graft.plans.BandKeysExpr(expression(sig), bands, rowsPerBand, portable))
   }
+
+  /** One document in the [[MinhashKernel]]: its shingles as UTF-8
+    * bytes (byte equality is the equality `array_intersect` uses; the
+    * shingles are distinct by construction) and its MinHash signature.
+    */
+  private final case class KDoc(shingles: Array[Array[Byte]], sig: Array[Long])
+
+  /** The co-partitioned MinHash-LSH kernel: the one implementation of
+    * candidate generation, exact verification and the index probe
+    * behind [[minhashNearDups]], [[containmentNearDups]] and
+    * [[incrementalMinhash]] — the text-side twin of
+    * [[Graphs.NodeKernel]].
+    *
+    * The input frame is projected once through Catalyst
+    * ([[scanParallelismFloor]], then id, [[wordShingles]] and
+    * [[minhashSignature]]) and read through `queryExecution.toRdd` into
+    * a cached RDD of documents keyed by id. Everything after that is RDD
+    * code under one `HashPartitioner(spark.sql.shuffle.partitions)`, so
+    * a call plans one SQL projection instead of a chain of join and
+    * aggregate plans:
+    *
+    *  - buckets: each document's [[graft.plans.BandKeys]] rows
+    *    `((band, key), id)`, combined map-side into one member list per
+    *    bucket;
+    *  - candidates: every distinct pair (a, b), a < b, sharing a bucket
+    *    of at most `maxBucketSize` members, combined map-side by a. A
+    *    bigger bucket yields no pairs: m members cost m² pairs, and
+    *    near-dups in a mega-bucket are overwhelmingly re-found by other
+    *    bands. Neither shuffle carries text;
+    *  - verification: two co-partitioned joins with the documents (a's
+    *    shingles travel to b's partition) give `inter`, |A| and |B| for
+    *    every candidate;
+    *  - [[indexMatches]]: the same band keys, derived from a persisted
+    *    signature index, probe it with the batch's buckets.
+    *
+    * Ids are read as longs (any integral id column) and written back in
+    * the id column's own type. Rows with a null id or a null text can
+    * pair with nothing and are skipped. Every stage is lazy: the caller
+    * materializes its result (one job) and then [[close]]s the kernel,
+    * which drops its caches.
+    */
+  private[graft] final class MinhashKernel(df: DataFrame, textCol: String, idCol: String,
+      shingleSize: Int, numHashes: Int, bands: Int, seed: Long, maxBucketSize: Int,
+      portableHash: Boolean) {
+    private val spark = df.sparkSession
+    private val held = mutable.ArrayBuffer.empty[RDD[_]]
+    private val r = numHashes / bands
+
+    val partitioner = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+
+    /** The input id column (type and nullability of every output id). */
+    private val idField: StructField = {
+      val f = df.select(col(idCol)).schema.head
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
+        s"MinHash dedup reads ids as longs: id column '$idCol' must be an integral type, " +
+          s"got ${f.dataType.simpleString}")
+      f
+    }
+
+    /** A kernel id back in the id column's type. */
+    private val idOut: Long => Any = idField.dataType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => (id: Long) => id
+    }
+
+    /** Caches `rdd` until [[close]]. */
+    def hold[T](rdd: RDD[T]): RDD[T] = {
+      held.synchronized(held += rdd)
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** id → document, in scan partitions: feeds the buckets and the
+      * verification side. Lazy, so a kernel is free to build and its
+      * first stage runs on whichever thread first asks for a result. */
+    private lazy val scanned: RDD[(Long, KDoc)] = {
+      val base = scanParallelismFloor(df).select(col(idCol).cast("long").as("id"),
+        wordShingles(col(textCol), shingleSize).as("shingles"))
+      hold(base.withColumn("sig",
+          minhashSignature(col("shingles"), numHashes, seed, portableMd5 = portableHash))
+        .queryExecution.toRdd.flatMap { row =>
+          if (row.isNullAt(0) || row.isNullAt(1)) None
+          else {
+            val sh = row.getArray(1)
+            Some((row.getLong(0), KDoc(Array.tabulate(sh.numElements())(sh.getUTF8String(_).getBytes),
+              row.getArray(2).toLongArray())))
+          }
+        })
+    }
+
+    /** id → document under [[partitioner]]: the verification side. */
+    private lazy val docs: RDD[(Long, KDoc)] = hold(scanned.partitionBy(partitioner))
+
+    /** ((band, key), id) for every band of every signature. */
+    private def keyed(sigs: RDD[(Long, Array[Long])]): RDD[((Int, Any), Long)] = {
+      val (b, rows, portable) = (bands, r, portableHash)
+      sigs.flatMap { case (id, sig) =>
+        Iterator.tabulate(b)(j => ((j, BandKeys.key(sig, j, rows, portable)), id))
+      }
+    }
+
+    /** (band, key) → member ids, for every bucket of the batch. */
+    private lazy val buckets: RDD[((Int, Any), Array[Long])] =
+      hold(keyed(scanned.mapValues(_.sig))
+        .combineByKey[mutable.ArrayBuilder.ofLong](
+          (id: Long) => new mutable.ArrayBuilder.ofLong().addOne(id),
+          (m: mutable.ArrayBuilder.ofLong, id: Long) => m.addOne(id),
+          (m: mutable.ArrayBuilder.ofLong, o: mutable.ArrayBuilder.ofLong) => m.addAll(o.result()),
+          partitioner)
+        .mapValues(_.result()))
+
+    /** a → the distinct b > a that share a capped bucket with a, under
+      * [[partitioner]]. */
+    private[graft] lazy val candidates: RDD[(Long, Array[Long])] = {
+      val cap = maxBucketSize
+      distinctPairs(buckets.flatMap { case (_, m) =>
+        if (m.length > cap) Iterator.empty
+        else for {
+          i <- m.indices.iterator
+          j <- (i + 1 until m.length).iterator
+          if m(i) != m(j)
+        } yield if (m(i) < m(j)) (m(i), m(j)) else (m(j), m(i))
+      }).setName(s"MinhashKernel.candidates(maxBucketSize=$cap)")
+    }
+
+    private def distinctPairs(pairs: RDD[(Long, Long)]): RDD[(Long, Array[Long])] =
+      pairs.combineByKey[mutable.HashSet[Long]](
+          (b: Long) => mutable.HashSet(b),
+          (s: mutable.HashSet[Long], b: Long) => s += b,
+          (s: mutable.HashSet[Long], o: mutable.HashSet[Long]) => s ++= o,
+          partitioner)
+        .mapValues(_.toArray)
+
+    /** (a, b, score) for every candidate whose `score(inter, |A|, |B|)`
+      * reaches `threshold`. */
+    def scored(threshold: Double)(score: (Int, Int, Int) => Double): RDD[(Long, Long, Double)] = {
+      val shipped = candidates.zipPartitions(docs) { (cand, ds) =>
+        val byId = groupById(ds)
+        for {
+          (a, bs) <- cand
+          d <- byId.getOrElse(a, Nil).iterator
+          b <- bs.iterator
+        } yield (b, (a, d.shingles))
+      }.partitionBy(partitioner)
+      shipped.zipPartitions(docs) { (in, ds) =>
+        val byId = groupById(ds)
+        val sets = mutable.LongMap.empty[List[java.util.HashSet[UTF8String]]]
+        in.flatMap { case (b, (a, shA)) =>
+          sets.getOrElseUpdate(b, byId.getOrElse(b, Nil).map { d =>
+            val s = new java.util.HashSet[UTF8String](d.shingles.length * 2)
+            d.shingles.foreach(x => s.add(UTF8String.fromBytes(x)))
+            s
+          }).iterator.flatMap { setB =>
+            val inter = shA.count(x => setB.contains(UTF8String.fromBytes(x)))
+            val v = score(inter, shA.length, setB.size)
+            if (v >= threshold) Iterator.single((a, b, v)) else Iterator.empty
+          }
+        }
+      }
+    }
+
+    /** The pairs of [[scored]] as an (id_a, id_b, `scoreName`) frame,
+      * materialized (one job) so the caller may [[close]] the kernel. */
+    def pairs(scoreName: String, threshold: Double)(score: (Int, Int, Int) => Double): DataFrame = {
+      val out = idOut
+      CheckpointBridge.localCheckpointRows(spark,
+        scored(threshold)(score).map { case (a, b, v) => InternalRow(out(a), out(b), v) },
+        StructType(Seq(idField.copy(name = "id_a"), idField.copy(name = "id_b"),
+          StructField(scoreName, DoubleType, nullable = true))))
+    }
+
+    /** Indexed documents, read from (doc_id, sig) rows and cached. */
+    private[graft] def readIndex(index: DataFrame): RDD[(Long, Array[Long])] =
+      hold(index.select(col("doc_id").cast("long"), col("sig"))
+        .queryExecution.toRdd.flatMap { row =>
+          if (row.isNullAt(0) || row.isNullAt(1)) None
+          else Some((row.getLong(0), row.getArray(1).toLongArray()))
+        })
+
+    /** Batch id → the distinct indexed ids that share one of its
+      * buckets, under [[partitioner]]. The index's band keys come from
+      * its signatures through the same [[graft.plans.BandKeys]]; they
+      * shuffle uncombined and only keys the batch holds are kept, so
+      * the index's many single-member buckets cost no combiner. An
+      * index bucket over `maxBucketSize` members is skipped (a
+      * boilerplate bucket that grew across many commits); the batch's
+      * buckets are not capped. */
+    private[graft] def indexCandidates(idx: RDD[(Long, Array[Long])]): RDD[(Long, Array[Long])] = {
+      val cap = maxBucketSize
+      distinctPairs(buckets.zipPartitions(keyed(idx).partitionBy(partitioner)) { (batch, indexed) =>
+        val news = batch.toMap
+        val olds = mutable.HashMap.empty[(Int, Any), mutable.ArrayBuilder.ofLong]
+        indexed.foreach { case (k, o) =>
+          if (news.contains(k)) olds.getOrElseUpdate(k, new mutable.ArrayBuilder.ofLong).addOne(o)
+        }
+        for {
+          (k, os) <- olds.iterator
+          members = os.result()
+          if members.length <= cap
+          n <- news(k).iterator
+          o <- members.iterator
+        } yield (n, o)
+      })
+    }
+
+    /** Ids of batch documents whose signature agrees with a candidate
+      * indexed document's ([[indexCandidates]]) on at least
+      * `minMatches` rows. The batch's signatures travel to the indexed
+      * ids' partitions; indexed documents carry no text.
+      */
+    def indexMatches(index: DataFrame, minMatches: Int): RDD[Long] = {
+      val idx = readIndex(index)
+      val shipped = indexCandidates(idx).zipPartitions(docs) { (c, ds) =>
+        val byId = groupById(ds)
+        for {
+          (n, olds) <- c
+          d <- byId.getOrElse(n, Nil).iterator
+          o <- olds.iterator
+        } yield (o, (n, d.sig))
+      }.partitionBy(partitioner)
+      shipped.zipPartitions(idx.partitionBy(partitioner)) { (in, is) =>
+        val sigOf = groupById(is)
+        in.collect { case (o, (n, sig)) if sigOf.getOrElse(o, Nil).exists(agreement(sig, _) >= minMatches) => n }
+      }
+    }
+
+    /** `rows` of kernel ids as a one-column `name` frame in the id
+      * column's type, materialized (one job). */
+    def idFrame(rows: RDD[Long], name: String): DataFrame = {
+      val out = idOut
+      CheckpointBridge.localCheckpointRows(spark, rows.map(id => InternalRow(out(id))),
+        StructType(Seq(idField.copy(name = name))))
+    }
+
+    def close(): Unit = held.synchronized(held.foreach(_.unpersist(blocking = false)))
+  }
+
+  /** id → every value with that id (ids may repeat, as rows of a join side). */
+  private def groupById[T](it: Iterator[(Long, T)]): mutable.LongMap[List[T]] = {
+    val m = mutable.LongMap.empty[List[T]]
+    it.foreach { case (id, v) => m(id) = v :: m.getOrElse(id, Nil) }
+    m
+  }
+
+  /** Rows on which two signatures agree (over the shorter one's length). */
+  private def agreement(x: Array[Long], y: Array[Long]): Int = {
+    var n = 0
+    var i = 0
+    while (i < math.min(x.length, y.length)) { if (x(i) == y(i)) n += 1; i += 1 }
+    n
+  }
+
+  /** Runs `body` over a fresh kernel and drops the kernel's caches after
+    * `body` has materialized its result. */
+  private def withMinhashKernel[T](df: DataFrame, textCol: String, idCol: String,
+      shingleSize: Int, numHashes: Int, bands: Int, seed: Long, maxBucketSize: Int,
+      portableHash: Boolean)(body: MinhashKernel => T): T = {
+    val k = new MinhashKernel(df, textCol, idCol, shingleSize, numHashes, bands, seed,
+      maxBucketSize, portableHash)
+    try body(k) finally k.close()
+  }
+
+  /** Exact Jaccard of two distinct shingle sets: inter / (|A| + |B| − inter). */
+  private val jaccard = (inter: Int, a: Int, b: Int) => inter.toDouble / (a + b - inter).toDouble
+
+  /** Max-containment of two distinct shingle sets: inter / min(|A|, |B|). */
+  private val containment = (inter: Int, a: Int, b: Int) => inter.toDouble / math.min(a, b).toDouble
 
   /** MinHash band-bucket occupancy profile — the text-side twin of
     * [[Similarity.lshBucketProfile]]: per band, the bucket count,
@@ -373,7 +622,8 @@ object Dedup {
 
   /** Candidate pairs from LSH banding, verified with exact Jaccard over
     * the shingle sets. Returns (id_a, id_b, jaccard) with id_a < id_b
-    * and jaccard >= threshold.
+    * and jaccard >= threshold, materialized by one [[MinhashKernel]] job
+    * (the id column must be integral).
     */
   def minhashNearDups(
       df: DataFrame, textCol: String, idCol: String,
@@ -384,18 +634,8 @@ object Dedup {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands " +
         "(a remainder silently drops hashes from the band keys, degrading LSH recall)")
-    val base = scanParallelismFloor(df).select(
-      col(idCol).as("id"),
-      wordShingles(col(textCol), shingleSize).as("shingles"))
-    val cand = lshCandidatePairs(base, numHashes, bands, seed, maxBucketSize, portableHash)
-    // Exact-Jaccard verification: join the slim shingle frame twice.
-    val shA = base.select(col("id").as("id_a"), col("shingles").as("sh_a"))
-    val shB = base.select(col("id").as("id_b"), col("shingles").as("sh_b"))
-    cand.join(shA, "id_a").join(shB, "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .select(col("id_a"), col("id_b"), (col("inter") / col("uni")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    withMinhashKernel(df, textCol, idCol, shingleSize, numHashes, bands, seed,
+      maxBucketSize, portableHash)(_.pairs("jaccard", threshold)(jaccard))
   }
 
   /** Containment near-dups (Gopher/MassiveText-style): candidates from
@@ -414,7 +654,8 @@ object Dedup {
     * MinHash candidates) trades that tail for the same capped-bucket
     * scale shape as every other LSH operator here; true asymmetric
     * hashing would need a different candidate scheme.
-    * Returns (id_a, id_b, containment) with id_a < id_b.
+    * Returns (id_a, id_b, containment) with id_a < id_b, materialized
+    * by one [[MinhashKernel]] job.
     */
   def containmentNearDups(
       df: DataFrame, textCol: String, idCol: String,
@@ -424,18 +665,8 @@ object Dedup {
       portableHash: Boolean = false): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands")
-    val base = scanParallelismFloor(df).select(
-      col(idCol).as("id"),
-      wordShingles(col(textCol), shingleSize).as("shingles"))
-    val cand = lshCandidatePairs(base, numHashes, bands, seed, maxBucketSize, portableHash)
-    val shA = base.select(col("id").as("id_a"), col("shingles").as("sh_a"))
-    val shB = base.select(col("id").as("id_b"), col("shingles").as("sh_b"))
-    cand.join(shA, "id_a").join(shB, "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .select(col("id_a"), col("id_b"),
-        (col("inter") /
-          least(size(col("sh_a")), size(col("sh_b"))).cast("double")).as("containment"))
-      .filter(col("containment") >= threshold)
+    withMinhashKernel(df, textCol, idCol, shingleSize, numHashes, bands, seed,
+      maxBucketSize, portableHash)(_.pairs("containment", threshold)(containment))
   }
 
   /** Edit-distance-verified near-dup pairs: MinHash-LSH banding
@@ -883,23 +1114,25 @@ object Dedup {
     * same-batch document (exact-Jaccard verified, keep-lowest-id) or
     * an already-indexed one. Returns the surviving rows of `newDocs`.
     *
-    * Index layout (parquet under `indexPath`): `bands/` holds the slim
-    * (band, key, doc_id) LSH bucket rows; `sigs/` holds one
-    * (doc_id, sig) row per indexed document. Indexed documents' raw
-    * text is NOT retained, so the cross-batch verification uses the
-    * standard signature-agreement Jaccard estimate (matching minhash
-    * fraction; unbiased, ±1/√numHashes) rather than exact shingle
-    * Jaccard — the trade that keeps the index O(docs), not O(corpus
-    * text).
+    * Index layout: one parquet dataset, `indexPath/sigs`, with one
+    * (doc_id, sig) row per indexed document; [[commitMinhash]] appends
+    * to it once. The probe derives the index's band keys from those
+    * signatures with the same [[graft.plans.BandKeys]] function the
+    * batch is bucketed with, so no second dataset can fall out of step
+    * with it. Indexed documents' raw text is NOT retained, so the
+    * cross-batch verification uses the standard signature-agreement
+    * Jaccard estimate (matching minhash fraction; unbiased,
+    * ±1/√numHashes) rather than exact shingle Jaccard — the trade that
+    * keeps the index O(docs), not O(corpus text).
     *
-    * Scale shape: candidate generation is an equi-join of the NEW
-    * batch's bucket rows against the index's (both slim), with the
-    * same `maxBucketSize` cap on index buckets every LSH path here
-    * uses; signatures join once per candidate id. Same
+    * Scale shape: one [[MinhashKernel]] runs the within-batch step and
+    * the index probe — the batch's buckets against the index's, with
+    * the same `maxBucketSize` cap on index buckets every LSH path here
+    * uses; signatures meet once per candidate pair. Same
     * commit-after-write contract as [[incrementalExact]]
     * ([[commitMinhash]] appends survivors only AFTER the caller's
     * durable downstream write), and the same localCheckpoint /
-    * stagingPath durability trade.
+    * stagingPath durability trade. The id column must be integral.
     */
   def incrementalMinhash(newDocs: DataFrame, textCol: String, idCol: String,
                          indexPath: String,
@@ -948,91 +1181,51 @@ object Dedup {
       s"numHashes=$numHashes must be divisible by bands=$bands " +
         "(a remainder silently drops hashes from the band keys, degrading LSH recall)")
     val spark = newDocs.sparkSession
-    val r = numHashes / bands
-    // within-batch near-dups: exact-verified pairs, keep the lowest id
-    val batchPairs = minhashNearDups(newDocs, textCol, idCol,
-      shingleSize, numHashes, bands, threshold, seed, maxBucketSize, portableHash)
-    val batchDrops = batchPairs.select(col("id_b").as(idCol)).distinct()
-    val batchSurvivorsRaw = newDocs.join(batchDrops, Seq(idCol), "left_anti")
-
-    // Overlap point: materialize the within-batch survivors (the whole
-    // minhash chain) WHILE the caller's independent work — the previous
-    // batch's index commit — runs on a second thread. The barrier
-    // (inParallel joins both) is crossed before the index-existence
-    // check and every index read below.
-    val survivorsPre = overlappedWork.map { work =>
-      val (ck, _) = Graphs.inParallel(
-        org.apache.spark.sql.graftbridge.CheckpointBridge
-          .localCheckpointFreshStats(batchSurvivorsRaw),
-        work())
-      ck
-    }
-
-    val bandsPath = s"$indexPath/bands"
-    val indexExists = {
-      val p = new org.apache.hadoop.fs.Path(bandsPath)
-      // session conf, not a bare Configuration — see incrementalExact
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-    }
-    val fresh =
-      if (!indexExists) survivorsPre.getOrElse(batchSurvivorsRaw) // materialized once by the exit checkpoint (overlap mode: already materialized behind the overlapped work)
-      else {
-        // Eager checkpoint: the survivors frame embeds the whole
-        // within-batch minhash chain, and the index path references it
-        // TWICE (the signature pass and the final anti-join) — without
-        // the checkpoint the chain is re-planned and re-executed per
-        // reference (the r14 duplicated-subtree pathology; see
-        // connectedComponents). Only on the index path: the fresh-index
-        // batch is materialized exactly once at exit, so a checkpoint
-        // here would be a second full copy of the same rows. In overlap
-        // mode the checkpoint already happened concurrently with the
-        // overlapped work — reuse it.
-        val batchSurvivors = survivorsPre.getOrElse(
-          org.apache.spark.sql.graftbridge.CheckpointBridge
-            .localCheckpointFreshStats(batchSurvivorsRaw))
-        val sigs = batchSurvivors.select(
-          col(idCol).as("id"),
-          minhashSignature(wordShingles(col(textCol), shingleSize), numHashes, seed,
-            portableMd5 = portableHash).as("sig"))
-        val newBuckets = sigs
-          .select(col("id"), explode(bandKeys(col("sig"), bands, r, portable = portableHash)).as("bk"))
-          .select(col("id"), col("bk.band"), col("bk.key"))
-        val idxBuckets = spark.read.parquet(bandsPath)
-        // cap degenerate INDEX buckets (a boilerplate bucket that grew
-        // huge across many committed batches) — recall-for-safety,
-        // same rationale as the batch-mode cap
-        val okBuckets = idxBuckets.groupBy("band", "key")
-          .agg(count("*").as("bucket_n"))
-          .filter(col("bucket_n") <= maxBucketSize)
-          .select("band", "key")
-        val idxSized = idxBuckets.join(okBuckets, Seq("band", "key"))
-          .select(col("band"), col("key"), col("doc_id").as("old_id"))
-        val cand = newBuckets.join(idxSized, Seq("band", "key"))
-          .select(col("id"), col("old_id")).dropDuplicates("id", "old_id")
-        val oldSigs = spark.read.parquet(s"$indexPath/sigs")
-          .select(col("doc_id").as("old_id"), col("sig").as("old_sig"))
-        val newSigs = sigs.select(col("id"), col("sig").as("new_sig"))
-        val est = cand.join(newSigs, "id").join(oldSigs, "old_id")
-          .withColumn("match_n",
-            expr("aggregate(zip_with(new_sig, old_sig, (x, y) -> IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)"))
-          .filter(col("match_n") >= math.ceil(threshold * numHashes).toInt)
-        val indexDrops = est.select(col("id").as(idCol)).distinct()
-        batchSurvivors.join(indexDrops, Seq(idCol), "left_anti")
+    withMinhashKernel(newDocs, textCol, idCol, shingleSize, numHashes, bands, seed,
+        maxBucketSize, portableHash) { k =>
+      // within-batch near-dups: exact-verified pairs, keep the lowest id
+      def within() = k.hold(k.scored(threshold)(jaccard).map(_._2))
+      // Overlap point: materialize the within-batch drops WHILE the
+      // caller's independent work — the previous batch's index commit —
+      // runs on a second thread. The barrier (inParallel joins both) is
+      // crossed before the index-existence check and the index read.
+      val batchDrops = overlappedWork match {
+        case Some(work) => Graphs.inParallel({ val w = within(); w.count(); w }, work())._1
+        case None => within()
       }
-    stagingPath match {
-      case Some(dir) =>
-        fresh.write.mode("overwrite").parquet(dir)
-        spark.read.parquet(dir)
-      case None =>
-        org.apache.spark.sql.graftbridge.CheckpointBridge
-          .localCheckpointFreshStats(fresh)
+      val sigsPath = s"$indexPath/sigs"
+      val indexExists = {
+        val p = new org.apache.hadoop.fs.Path(sigsPath)
+        // session conf, not a bare Configuration — see incrementalExact
+        p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+      }
+      val drops =
+        if (!indexExists) batchDrops
+        else batchDrops.union(k.indexMatches(spark.read.parquet(sigsPath),
+          math.ceil(threshold * numHashes).toInt))
+      val fresh = newDocs.join(k.idFrame(drops, idCol), Seq(idCol), "left_anti")
+      stagingPath match {
+        case Some(dir) =>
+          fresh.write.mode("overwrite").parquet(dir)
+          spark.read.parquet(dir)
+        case None =>
+          CheckpointBridge.localCheckpointFreshStats(fresh)
+      }
     }
   }
 
   /** Record a durably-written batch in the MinHash index — the commit
     * half of [[incrementalMinhash]]; call exactly once per
     * SUCCESSFULLY persisted batch (same idempotency contract as
-    * [[commitFingerprints]]). Parameters must match the query half.
+    * [[commitFingerprints]]). Parameters must match the query half;
+    * `bands` is only checked here, because the probe derives band keys
+    * from the stored signatures.
+    *
+    * One append of (doc_id, sig) rows to `indexPath/sigs`, the whole
+    * index: there is no second dataset whose write could fail after
+    * this one, so every committed signature is one the probe finds.
+    * [[incrementalMinhashOverlapping]] overlaps the whole commit behind
+    * the next batch's within-batch build.
     */
   def commitMinhash(docs: DataFrame, textCol: String, idCol: String,
                     indexPath: String,
@@ -1041,27 +1234,11 @@ object Dedup {
                     portableHash: Boolean = false): Unit = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands (must match the query half)")
-    val r = numHashes / bands
-    val sigs = docs.select(
-      col(idCol).as("doc_id"),
-      minhashSignature(wordShingles(col(textCol), shingleSize), numHashes, seed,
-        portableMd5 = portableHash).as("sig"))
-      .localCheckpoint(eager = true) // one signature pass feeds both writes
-    // The two index writes are deliberately SEQUENTIAL, sigs strictly
-    // before bands (r14-advice fix: the r14 overlap could commit bands
-    // rows whose doc_id has no sigs row if the sigs write failed after
-    // the bands write landed — such orphans silently drop candidates
-    // at incrementalMinhash's inner oldSigs join, degrading recall
-    // with no error; sigs-without-bands, the order restored here, is
-    // harmless — unreferenced rows). The r14 throughput idea survives
-    // one level up: [[incrementalMinhashOverlapping]] overlaps the
-    // WHOLE commit behind the next batch's within-batch build.
-    sigs.write.mode("append").parquet(s"$indexPath/sigs")
-    sigs.select(col("doc_id"),
-        explode(bandKeys(col("sig"), bands, r, portable = portableHash)).as("bk"))
-      .select(col("bk.band"), col("bk.key"), col("doc_id"))
-      .write.mode("append").parquet(s"$indexPath/bands")
-    ()
+    docs.select(
+        col(idCol).as("doc_id"),
+        minhashSignature(wordShingles(col(textCol), shingleSize), numHashes, seed,
+          portableMd5 = portableHash).as("sig"))
+      .write.mode("append").parquet(s"$indexPath/sigs")
   }
 
   /** Seeded random hyperplanes for cosine LSH, baked as plan literals. */

@@ -153,6 +153,70 @@ case class MinHashSignatureExpr(child: Expression, coeffs: Seq[(Long, Long)], pr
     copy(child = newChild)
 }
 
+/** LSH band keys of a MinHash signature: band j covers signature rows
+  * [j·r, j·r + r), clipped to the signature's length (a null signature
+  * has none). Its key is either the slice's `xxhash64` (seed 42,
+  * chained element by element — Spark's `xxhash64(slice)` over
+  * `array<bigint>`) or, in the portable form, the slice's decimal
+  * values joined by "_" (`concat_ws("_", slice.cast("array<string>"))`),
+  * a string any engine can rebuild. One function serves
+  * [[BandKeysExpr]] and the Dedup MinHash kernel, so both bucket
+  * documents identically.
+  */
+object BandKeys {
+  private val Sep = UTF8String.fromString("_")
+
+  /** Band `j`'s key: a `java.lang.Long`, or a `UTF8String` when `portable`. */
+  def key(sig: Array[Long], j: Int, r: Int, portable: Boolean): Any = {
+    val from = math.min(j * r, sig.length)
+    val to = math.min(from + r, sig.length)
+    if (portable) {
+      val parts = new Array[UTF8String](to - from)
+      var i = from
+      while (i < to) { parts(i - from) = UTF8String.fromString(java.lang.Long.toString(sig(i))); i += 1 }
+      UTF8String.concatWs(Sep, parts: _*)
+    } else {
+      var h = TextExprs.XxSeed
+      var i = from
+      while (i < to) { h = XXH64.hashLong(sig(i), h); i += 1 }
+      java.lang.Long.valueOf(h)
+    }
+  }
+}
+
+/** `array<struct<band int, key bigint|string>>`: the [[BandKeys]] of
+  * every band of a signature, in band order. Replaces a per-band
+  * `struct(slice, cast, concat_ws | xxhash64)` expression tree with one
+  * loop; a null signature gives every band the key of an empty slice,
+  * as that tree did.
+  */
+case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int, portable: Boolean)
+    extends UnaryExpression with CodegenFallback {
+  require(bands >= 1 && rowsPerBand >= 1, s"bands=$bands and rowsPerBand=$rowsPerBand must be positive")
+  override def prettyName: String = "band_keys"
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(
+    StructType(Seq(
+      StructField("band", IntegerType, nullable = false),
+      StructField("key", if (portable) StringType else LongType, nullable = false))),
+    containsNull = false)
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = child.eval(input)
+    val sig = if (v == null) Array.emptyLongArray else v.asInstanceOf[ArrayData].toLongArray()
+    val out = new Array[Any](bands)
+    var j = 0
+    while (j < bands) {
+      out(j) = org.apache.spark.sql.catalyst.InternalRow(j, BandKeys.key(sig, j, rowsPerBand, portable))
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** SimHash over a token array: per token-hash bit, fold a +1/-1
   * counter; sign bits packed MSB-first (bit nBits-1 of the hash
   * first), matching the composable `foldLeft` formulation in

@@ -1,0 +1,123 @@
+package graft
+
+import java.io.File
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions._
+
+import graft.operators.Dedup
+import graft.plans.BandKeys
+
+/** The MinHash-LSH kernel's contracts that DedupSpec's result tests do
+  * not pin: band keys identical to the relational formulation, the
+  * single-dataset index, the bucket cap and the id-type check. */
+class MinhashKernelSpec extends SparkSpec {
+
+  /** The Column formulation the native band keys replaced: per band,
+    * `slice`, then `cast` to strings joined by `concat_ws("_")`, or
+    * `xxhash64` of the slice. */
+  private def referenceBandKeys(sig: Column, bands: Int, r: Int, portable: Boolean): Column =
+    array((0 until bands).map { j =>
+      val sliced = slice(sig, j * r + 1, r)
+      val key =
+        if (portable) concat_ws("_", sliced.cast("array<string>"))
+        else xxhash64(sliced)
+      struct(lit(j).as("band"), key.as("key"))
+    }: _*)
+
+  test("band keys: native function and BandKeysExpr equal the slice/cast/concat_ws|xxhash64 formulation") {
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    def value(): Long = rng.nextInt(4) match {
+      case 0 => rng.nextLong()
+      case 1 => rng.nextInt(Int.MaxValue).toLong // the range of real signature rows
+      case 2 => -rng.nextInt(1000).toLong
+      case _ => Seq(0L, Long.MinValue, Long.MaxValue)(rng.nextInt(3))
+    }
+    // (numHashes, bands), including bands = 1 and r = 1
+    for ((numHashes, bands) <- Seq((128, 32), (128, 1), (16, 16), (12, 4), (9, 3), (1, 1))) {
+      val r = numHashes / bands
+      val sigs: Seq[Option[Seq[Long]]] =
+        Seq.fill(30)(Some(Seq.fill(numHashes)(value()))) :+ None
+      val df = sigs.zipWithIndex.map { case (s, i) => (i, s) }.toDF("i", "sig")
+      for (portable <- Seq(false, true)) {
+        val rows = df.select(col("i"),
+            Dedup.bandKeys(col("sig"), bands, r, portable).as("got"),
+            referenceBandKeys(col("sig"), bands, r, portable).as("ref"))
+          .collect()
+        assert(rows.length == sigs.size)
+        rows.foreach { row =>
+          val ref = row.getSeq[Row](2)
+          assert(row.getSeq[Row](1) == ref,
+            s"BandKeysExpr, numHashes=$numHashes bands=$bands portable=$portable")
+          val sig = sigs(row.getInt(0)).fold(Array.emptyLongArray)(_.toArray)
+          (0 until bands).foreach { j =>
+            assert(BandKeys.key(sig, j, r, portable).toString == ref(j).get(1).toString,
+              s"BandKeys.key band $j, numHashes=$numHashes bands=$bands portable=$portable")
+          }
+        }
+      }
+    }
+  }
+
+  private def withIndexDir(body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_minhash_idx")
+    try body(dir.resolve("index").toString)
+    finally FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  private val fox = "the quick brown fox jumps over the lazy dog while the cat sleeps on the warm mat"
+
+  test("incremental minhash: an index without bands/ rows still drops a near-duplicate of a committed doc") {
+    import spark.implicits._
+    withIndexDir { idx =>
+      val b1 = Seq((1L, fox), (2L, "an unrelated note about parquet files and spark jobs on a cluster"))
+        .toDF("doc_id", "text")
+      val s1 = Dedup.incrementalMinhash(b1, "text", "doc_id", idx, shingleSize = 3, threshold = 0.5)
+      Dedup.commitMinhash(s1, "text", "doc_id", idx, shingleSize = 3)
+      // a commit that failed between a signature write and a band-key
+      // write would leave exactly this: committed signatures, no bands
+      FileUtils.deleteDirectory(new File(s"$idx/bands"))
+      val b2 = Seq((3L, fox + " today"), (4L, "a recipe for bread with flour water salt and yeast"))
+        .toDF("doc_id", "text")
+      val s2 = Dedup.incrementalMinhash(b2, "text", "doc_id", idx, shingleSize = 3, threshold = 0.5)
+      assert(s2.select("doc_id").as[Long].collect().toSeq == Seq(4L),
+        "doc 3 near-duplicates committed doc 1 and must be dropped")
+    }
+  }
+
+  test("commitMinhash: one sigs row per committed document, no bands/ dataset") {
+    import spark.implicits._
+    withIndexDir { idx =>
+      val docs = Seq((1L, fox), (2L, "a recipe for bread with flour water salt and yeast"), (3L, "short"))
+        .toDF("doc_id", "text")
+      Dedup.commitMinhash(docs, "text", "doc_id", idx, shingleSize = 3)
+      Dedup.commitMinhash(docs.filter(col("doc_id") === 3L).withColumn("doc_id", lit(4L)),
+        "text", "doc_id", idx, shingleSize = 3)
+      val sigs = spark.read.parquet(s"$idx/sigs")
+      assert(sigs.columns.toSeq == Seq("doc_id", "sig"))
+      assert(sigs.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+      assert(sigs.select(size(col("sig"))).as[Int].collect().forall(_ == 128))
+      assert(!new File(s"$idx/bands").exists(), "band keys are derived from sigs at probe time")
+    }
+  }
+
+  test("bucket cap: a bucket with more than maxBucketSize members yields no pairs") {
+    import spark.implicits._
+    val docs = (1L to 3L).map(i => (i, fox)).toDF("doc_id", "text")
+    def pairs(cap: Int) = Dedup.minhashNearDups(docs, "text", "doc_id", shingleSize = 3,
+        threshold = 0.5, maxBucketSize = cap)
+      .select("id_a", "id_b").as[(Long, Long)].collect().sorted.toSeq
+    assert(pairs(3) == Seq((1L, 2L), (1L, 3L), (2L, 3L)))
+    assert(pairs(2).isEmpty, "every bucket holds all three identical docs")
+  }
+
+  test("non-integral id column is rejected with a clear error") {
+    import spark.implicits._
+    val docs = Seq(("a", fox), ("b", fox)).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException](
+      Dedup.minhashNearDups(docs, "text", "doc_id", shingleSize = 3))
+    assert(e.getMessage.contains("'doc_id' must be an integral type, got string"), e.getMessage)
+  }
+}

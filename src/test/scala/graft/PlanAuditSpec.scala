@@ -106,6 +106,60 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  // ---- the MinHash-LSH kernel (Dedup.MinhashKernel) ----------------------
+  // Candidates and verification are RDD code, not SQL plans, so these
+  // audit the kernel's lineage and the stages a query runs.
+
+  /** The kernel's own shuffles (under its partitioner) that `rdd`
+    * depends on. */
+  private def kernelShuffles(k: graft.operators.Dedup.MinhashKernel,
+                             rdd: org.apache.spark.rdd.RDD[_]) =
+    lineage(rdd).flatMap(_.dependencies).collect {
+      case d: org.apache.spark.ShuffleDependency[_, _, _] if d.partitioner == k.partitioner => d
+    }
+
+  /** A shuffle record is slim when it is ((band, key), id) or (id, id);
+    * a portable band key is signature digits joined by "_". */
+  private def slim(rec: Any): Boolean = rec match {
+    case ((_: Int, _: Long), _: Long) => true
+    case ((_: Int, k: org.apache.spark.unsafe.types.UTF8String), _: Long) =>
+      k.toString.matches("-?[0-9]+(_-?[0-9]+)*")
+    case (_: Long, _: Long) => true
+    case _ => false
+  }
+
+  /** Checks that every kernel shuffle before `candidates` carries only
+    * slim records, and that the bucket shuffle is map-side combined. */
+  private def auditCandidates(k: graft.operators.Dedup.MinhashKernel,
+                              candidates: org.apache.spark.rdd.RDD[_]): Unit = {
+    val shuffles = kernelShuffles(k, candidates)
+    assert(shuffles.nonEmpty, candidates.toDebugString)
+    shuffles.foreach { d =>
+      val recs = d.rdd.take(50).toSeq
+      assert(recs.nonEmpty && recs.forall(slim), s"text-free shuffle records, got ${recs.take(3)}")
+    }
+    assert(shuffles.exists(d => d.mapSideCombine &&
+      d.rdd.take(1).forall { case ((_: Int, _), _) => true; case _ => false }),
+      "the (band, key) bucket shuffle is map-side combined")
+  }
+
+  /** Names of the RDDs in every stage `body` runs. */
+  private def stageRddNames(body: => Unit): Seq[String] = {
+    val names = scala.collection.mutable.ArrayBuffer[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        names.synchronized(names ++= e.stageInfo.rddInfos.map(_.name))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      graft.tools.ShuffleMeter.drainAndRead(spark, () => 0L)
+    } finally spark.sparkContext.removeSparkListener(l)
+    names.synchronized(names.toSeq)
+  }
+
+  private val CappedKernel = "MinhashKernel.candidates(maxBucketSize=1000)"
+
   test("incremental minhash: cross-batch candidate join ships no raw text") {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
@@ -113,38 +167,26 @@ class PlanAuditSpec extends SparkSpec {
       .resolve("index").toString
     graft.operators.Dedup.commitMinhash(
       docs.filter(col("doc_id") % 2 === 0), "text", "doc_id", idx, shingleSize = 3)
-    val plans = scala.collection.mutable.ArrayBuffer[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             d: Long): Unit = plans.synchronized { plans += qe.executedPlan.toString }
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
+    val k = new graft.operators.Dedup.MinhashKernel(docs.filter(col("doc_id") % 2 === 1),
+      "text", "doc_id", shingleSize = 3, numHashes = 128, bands = 32,
+      seed = graft.operators.Dedup.DefaultSeed, maxBucketSize = 1000, portableHash = false)
     try {
-      graft.operators.Dedup.incrementalMinhash(
-        docs.filter(col("doc_id") % 2 === 1), "text", "doc_id", idx,
-        shingleSize = 3, threshold = 0.5).count()
-      val deadline = System.currentTimeMillis() + 15000
-      while (System.currentTimeMillis() < deadline &&
-             !plans.synchronized(plans.exists(_.contains("hashpartitioning(band"))))
-        Thread.sleep(100)
-      val all = plans.synchronized(plans.mkString("\n===\n"))
-      // the (band, key) bucket exchanges must carry only slim keyed
-      // rows — raw document text through a 32x band explode would
-      // multiply shuffle bytes 32x at 100 TB
-      val shipsText = all.linesIterator.exists(l =>
-        l.contains("hashpartitioning(band") && l.contains("text#"))
-      assert(!shipsText, s"bucket exchange must not ship the text column")
-      assert(all.contains("hashpartitioning(band"), "bucket equi-join present")
-    } finally spark.listenerManager.unregister(listener)
+      // the (band, key) bucket shuffles of the batch AND of the index
+      // carry only ((band, key), id), and the candidate pairs only ids:
+      // raw text through a 32x band explode would multiply shuffle
+      // bytes 32x at 100 TB
+      auditCandidates(k, k.candidates)
+      val cross = k.indexCandidates(k.readIndex(spark.read.parquet(s"$idx/sigs")))
+      auditCandidates(k, cross)
+      assert(cross.count() > 0, "the cross-batch candidate join finds indexed buckets")
+    } finally k.close()
   }
 
   test("txt_curation composes the CAPPED LSH near-dup path, not the exact n-gram join") {
-    val p = plan("txt_curation")
-    assert(p.contains("bucket_n"), "bucket-size cap aggregate present in the curation plan")
+    var p = ""
+    val stages = stageRddNames { p = plan("txt_curation") }
+    assert(stages.contains(CappedKernel), s"the capped MinHash kernel ran: ${stages.distinct}")
     assert(!p.contains("n_sh"), "uncapped exact shingle join (ngramJaccardPairs) absent")
-    assert(p.contains("minhash_signature"), "native one-pass signature expression")
   }
 
   test("dedup_embed_lsh: bucket cap present, vectors not shuffled through the explode") {
@@ -683,15 +725,28 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("dedup_containment: capped bucket path, shingles rejoin after candidates, no window") {
-    val p = plan("dedup_containment")
-    assert(p.contains("bucket_n"), "bucket-size cap aggregate present")
-    assert(p.contains("minhash_signature"), "native one-pass signature expression")
+    var p = ""
+    val stages = stageRddNames { p = plan("dedup_containment") }
+    assert(stages.contains(CappedKernel), s"the capped MinHash kernel ran: ${stages.distinct}")
     assert(!p.contains("Window"), s"window-free:\n$p")
-    // band-bucket exchanges are slim: shingle arrays rejoin per
-    // candidate id, never riding the 32× band explode
-    val shipsShingles = p.linesIterator.exists(l =>
-      l.contains("Exchange hashpartitioning(band") && l.contains("shingles#"))
-    assert(!shipsShingles, "bucket shuffle must not ship shingle arrays")
+    // the kernel's shuffles before verification are slim: shingle
+    // arrays meet once per candidate pair, never riding the 32x band
+    // explode
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val k = new graft.operators.Dedup.MinhashKernel(docs, "text", "doc_id",
+      shingleSize = 3, numHashes = 128, bands = 32, seed = graft.operators.Dedup.DefaultSeed,
+      maxBucketSize = 1000, portableHash = true)
+    try auditCandidates(k, k.candidates)
+    finally k.close()
+  }
+
+  test("dedup_minhash_lsh: building and collecting the pairs takes at most 2 jobs") {
+    // a materialized 4-partition input, so the scan floor adds no job
+    val docs = org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(
+      spark.read.parquet(sf("sf0.001") + "/documents.parquet").repartition(4))
+    val jobs = jobsOf(graft.operators.Dedup.minhashNearDups(docs, "text", "doc_id",
+      shingleSize = 3, threshold = 0.3, portableHash = true).collect())
+    assert(jobs <= 2, s"$jobs jobs")
   }
 
   test("evt_attribution: window-free struct-min/max agg; payload columns pruned") {

@@ -9,17 +9,31 @@ own committed correctness artifact even when the driver's scrape fails
 (r11: the driver's file landed as `{}` and the judge had to reproduce
 the gate from scratch).
 
-Usage: python3 tools/selfcheck.py [sfdir] [outdir] [--skip-verify]
+Usage: python3 tools/selfcheck.py [sfdir] [outdir] [--skip-verify] [--write-golden]
+
+--write-golden: instead of comparing, have DuckDB write each oracle's
+result to src/test/resources/oracle/<query>.parquet, the goldens the
+tier-1 oracle specs (DedupOracleSpec) compare Spark's results with. The
+goldens come from DuckDB alone: graft.Verify runs only to export the
+oracle SQL. sfdir must be the sf0.001 data the specs read, and
+SPARK_GRAFT_ONLY picks the queries, e.g.
+  SPARK_GRAFT_ONLY=dedup_minhash_lsh,dedup_incremental \
+    python3 tools/selfcheck.py <data>/sf0.001 /tmp/golden_out --write-golden
 """
 import sys, os, json, subprocess, glob
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WRITE_GOLDEN = "--write-golden" in sys.argv
+if WRITE_GOLDEN and os.path.basename(os.path.normpath(SF)) != "sf0.001":
+    print(f"--write-golden needs the sf0.001 data dir the oracle specs read, got {SF}")
+    sys.exit(2)
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 if "--skip-verify" not in sys.argv:
     r = subprocess.run(["sbt", f'runMain graft.Verify {SF} {OUT}'],
-                       capture_output=True, text=True, cwd="/root/repo")
+                       capture_output=True, text=True, cwd=REPO)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:]); sys.exit(1)
     for line in r.stderr.splitlines():
@@ -48,6 +62,25 @@ oracle = json.load(open(f"{OUT}/oracle_sql.json"))
 # must not masquerade as failures of the current subset
 only = os.environ.get("SPARK_GRAFT_ONLY")
 only_set = set(x.strip() for x in only.split(",")) if only else None
+
+if WRITE_GOLDEN:
+    gdir = os.path.join(REPO, "src", "test", "resources", "oracle")
+    os.makedirs(gdir, exist_ok=True)
+    names = sorted(n for n in oracle if only_set is None or n in only_set)
+    empty = []
+    for name in names:
+        sql = oracle[name].strip().rstrip(";")
+        path = os.path.join(gdir, f"{name}.parquet")
+        con.execute(f"COPY ({sql}) TO '{path}' (FORMAT PARQUET)")
+        n = con.execute(f"SELECT count(*) FROM read_parquet('{path}')").fetchone()[0]
+        print(f"golden {name}: {n} rows")
+        if n == 0:
+            empty.append(name)
+    # an empty golden would let an empty Spark result pass
+    if empty:
+        print(f"EMPTY goldens (give these queries a fixture with rows): {empty}")
+    sys.exit(1 if empty else 0)
+
 fail, ok, noorc = [], [], []
 report = {}
 
