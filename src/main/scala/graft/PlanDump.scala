@@ -40,7 +40,7 @@ object PlanDump {
     "txt_classifier" -> "weight map broadcast as one row; hashed features scored inside the row — no Generate, no data-side shuffle",
     "txt_keywords" -> "tf/df map-side combined; corpus size broadcast; the only window keys by DOC, bounded per doc",
     "sketch_quantile" -> "one (group,bin) count shuffle of <= numBuckets rows per group; window over the bin table, never raw values",
-    "emb_knn_graph" -> "vectors ride the n*nTables bucket rows and cosine computes inside the capped bucket join; pairs cross shuffles only as slim (id_a,id_b,c); bounded-heap per-node top-k, no window",
+    "emb_knn_graph" -> "one RDD kernel job over a single projection: vectors ride the n*nTables bucket rows through one shuffle, each capped bucket scores its pairs locally, both directed edges feed a map-side-combined bounded per-node top-k; no join, no window",
     "dedup_snm_multipass" -> "two rank-and-window passes (prefix + reversed-suffix keys, eager zipWithIndex ranks), slim pair union + map-side-combined distinct, one shared exact-Jaccard verify",
     "dedup_hamming_pairs" -> "8-byte signatures banded into slim (id,band,key) rows; capped buckets; bit_count verify",
     "emb_int8_topk" -> "int8-quantized corpus scans once, never shuffles; integer dot products; broadcast queries",

@@ -15,9 +15,16 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
+  /** `lower(text)` without Spark's first-call ICU table build
+    * ([[graft.plans.LowerUtf8]]). */
+  private def lowerText(text: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(graft.plans.LowerUtf8(expression(text)))
+  }
+
   /** Lower-cased whitespace tokenization. `split` on \s+ after trim. */
   def tokens(text: Column): Column =
-    split(trim(lower(text)), "\\s+")
+    split(trim(lowerText(text)), "\\s+")
 
   /** Whitespace token count. */
   def tokenCount(text: Column): Column =
@@ -96,7 +103,7 @@ object TextFunctions {
     * fingerprinting / exact dedup.
     */
   def normalizeText(text: Column): Column =
-    regexp_replace(trim(lower(text)), "\\s+", " ")
+    regexp_replace(trim(lowerText(text)), "\\s+", " ")
 
   /** Exact-dup fingerprint: md5 of the normalized text. */
   def fingerprint(text: Column): Column =

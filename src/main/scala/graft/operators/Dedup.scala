@@ -2,14 +2,12 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import graft.plans.BandKeys
 import graft.functions.TextFunctions._
@@ -215,35 +213,8 @@ object Dedup {
     */
   private[graft] final class MinhashKernel(df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int, numHashes: Int, bands: Int, seed: Long, maxBucketSize: Int,
-      portableHash: Boolean) {
-    private val spark = df.sparkSession
-    private val held = mutable.ArrayBuffer.empty[RDD[_]]
+      portableHash: Boolean) extends RddKernel(df, idCol, "MinHash dedup") {
     private val r = numHashes / bands
-
-    val partitioner = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
-
-    /** The input id column (type and nullability of every output id). */
-    private val idField: StructField = {
-      val f = df.select(col(idCol)).schema.head
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType),
-        s"MinHash dedup reads ids as longs: id column '$idCol' must be an integral type, " +
-          s"got ${f.dataType.simpleString}")
-      f
-    }
-
-    /** A kernel id back in the id column's type. */
-    private val idOut: Long => Any = idField.dataType match {
-      case ByteType => _.toByte
-      case ShortType => _.toShort
-      case IntegerType => _.toInt
-      case _ => (id: Long) => id
-    }
-
-    /** Caches `rdd` until [[close]]. */
-    def hold[T](rdd: RDD[T]): RDD[T] = {
-      held.synchronized(held += rdd)
-      rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    }
 
     /** id → document, in scan partitions: feeds the buckets and the
       * verification side. Lazy, so a kernel is free to build and its
@@ -406,8 +377,6 @@ object Dedup {
       CheckpointBridge.localCheckpointRows(spark, rows.map(id => InternalRow(out(id))),
         StructType(Seq(idField.copy(name = name))))
     }
-
-    def close(): Unit = held.synchronized(held.foreach(_.unpersist(blocking = false)))
   }
 
   /** id → every value with that id (ids may repeat, as rows of a join side). */
@@ -1658,7 +1627,7 @@ object Dedup {
       shingleSize, threshold)._3
 
   /** Stage frontiers of [[sortedNeighborhoodNearDupsMultiKey]] for the
-    * per-stage scale profile (`tools/SnmProfile`, the KnnProfile
+    * per-stage scale profile (`tools/SnmProfile`, the per-stage
     * treatment the r13 verdict asked for): (scored candidate union —
     * every rank-window pair with its exact Jaccard, pre-threshold;
     * surviving pairs — post-threshold, pre-dedup; verified result —

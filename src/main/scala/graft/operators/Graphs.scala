@@ -591,20 +591,19 @@ object Graphs {
     * vector keeps its true label. Dangling nodes (dst-only) carry
     * out_degree 0.
     *
-    * Scale shape: the edge frame is an eager fresh-stats checkpoint —
-    * the out-degree count and the one [[NodeKernel]] adjacency that
-    * pageRank and labelPropagation share read materialized blocks,
-    * never re-derive the LSH buckets; the final composition is two
-    * node-keyed equi-joins of node-sized frames.
+    * Scale shape: [[Similarity.knnGraph]] returns its edges
+    * materialized, so the out-degree count and the one [[NodeKernel]]
+    * adjacency that pageRank and labelPropagation share read those
+    * blocks and never re-derive the LSH buckets; the final composition
+    * is two node-keyed equi-joins of node-sized frames.
     */
   def embeddingGraphSuite(emb: DataFrame, vecCol: String, idCol: String,
       labelCol: String, dim: Int, k: Int = 10, nPlanes: Int = Dedup.AutoPlanes,
       nTables: Int = 8, seedEvery: Int = 5, prIterations: Int = 5,
       lpIterations: Int = 3): DataFrame = {
     require(seedEvery >= 1, s"seedEvery=$seedEvery must be >= 1")
-    val edges = graftCheckpoint(
-      Similarity.knnGraph(emb, vecCol, idCol, dim, k, nPlanes, nTables)
-        .select(col("src_id"), col("nbr_id")))
+    val edges = Similarity.knnGraph(emb, vecCol, idCol, dim, k, nPlanes, nTables)
+      .select(col("src_id"), col("nbr_id"))
     // PageRank and label propagation share one kernel (one adjacency
     // build) and are independent given it: overlap their jobs (§2.6)
     // so each side's tasks fill the other's driver gaps.

@@ -1,9 +1,14 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -1063,21 +1068,18 @@ object Similarity {
     *
     * This is [[graft.operators.Dedup.embeddingNearDups]]'s bucketing
     * turned DIRECTED (each node collects its own neighbor list, no
-    * threshold) with the bounded-heap per-node top-k instead of a
-    * pair filter — and unlike the ANN queries there is no query set:
-    * the corpus IS both sides, which is exactly when the no-self-join
+    * threshold) with a bounded per-node top-k instead of a pair
+    * filter — and unlike the ANN queries there is no query set: the
+    * corpus IS both sides, which is exactly when the no-self-join
     * discipline matters most.
     *
-    * Scale shape: bucket counts aggregate over slim (table, key)
-    * rows; the bucket equi-join carries each vector once per BUCKET
-    * row (n·nTables of them) and computes cosine inside the join, so
-    * candidate pairs cross shuffles only as slim (id_a, id_b, c)
-    * triples — with AutoPlanes bounding occupancy at ~16, that is
-    * ~16× fewer vector bytes than rejoining vectors per candidate
-    * edge (see [[knnGraphStaged]]); `maxBucketSize` caps the
-    * per-bucket candidate blow-up (m² edge bomb on degenerate
-    * buckets); the per-node top-k is the map-side-combinable bounded
-    * heap, so no window ever sorts a node's full candidate list.
+    * Returns (src_id, rank, nbr_id, cosine): each vector's neighbors
+    * ranked 1..k by (exact cosine desc, nbr_id asc), the cosine
+    * [[graft.functions.MathFunctions.roundTo]] 6 digits. Buckets of
+    * more than `maxBucketSize` members yield no candidates (the m²
+    * edge bomb of a degenerate bucket). Built and materialized by one
+    * [[KnnKernel]] job (two shuffles, no SQL plan after the input
+    * projection); the id column must be integral.
     *
     * KEY DEPTH TRACKS THE CORPUS BY DEFAULT. Candidate work is Σ m²
     * over buckets (m = occupancy): at FIXED key depth it grows
@@ -1099,75 +1101,147 @@ object Similarity {
     */
   def knnGraph(df: DataFrame, vecCol: String, idCol: String, dim: Int,
                k: Int = 10, nPlanes: Int = Dedup.AutoPlanes, nTables: Int = 8,
-               seed: Long = graft.operators.Dedup.DefaultSeed, maxBucketSize: Int = 1000): DataFrame =
-    knnGraphStaged(df, vecCol, idCol, dim, k, nPlanes, nTables, seed, maxBucketSize)._3
+               seed: Long = graft.operators.Dedup.DefaultSeed, maxBucketSize: Int = 1000): DataFrame = {
+    val kernel = new KnnKernel(df, vecCol, idCol, dim, k, nPlanes, nTables, seed, maxBucketSize)
+    try kernel.graph() finally kernel.close()
+  }
 
-  /** [[knnGraph]] with its stage frontiers exposed — (undirected
-    * candidates, undirected scored pairs, final graph) — the seam the
-    * x100 profiler times each stage through without duplicating the
-    * build.
+  /** The co-partitioned hyperplane-LSH kernel behind [[knnGraph]] —
+    * the embedding-side twin of [[Dedup.MinhashKernel]]. One Catalyst
+    * projection (id as long, `v` as `array<double>`, its
+    * [[graft.plans.HyperplaneBuckets]]) is read through
+    * `queryExecution.toRdd`; after that, two shuffles under one
+    * [[partitioner]]:
     *
-    * The verify stage scores each unordered pair ONCE and mirrors:
-    * candidates keep only src < nbr (halving the pair volume the two
-    * vector joins must carry — the dominant shuffle at high density:
-    * a 64-dim double vector is ~40× the slim pair row), then the
-    * scored (id_a, id_b, c) frame explodes INLINE into its two
-    * directed rows before the per-node top-k. Bit-exact: cosine is
-    * symmetric at the IEEE level — Σ aᵢ·bᵢ multiplies commutatively
-    * in the same index order, and ‖a‖·‖b‖ is one commutative product
-    * — so the mirrored score is the identical double. The mirror is
-    * a narrow per-row explode, NOT a self-union: a union of two
-    * projections of the same join subtree re-analyzes it into two
-    * distinct plans that each recompute the joins (measured 2.3× the
-    * wall at 30×; exchange reuse does not rescue it), while the
-    * explode keeps one copy of the whole candidate + verify pipeline.
+    *  - [[buckets]]: each vector rides its `nTables` rows
+    *    `((table, key), (id, v))`, so a bucket's members meet in one
+    *    task. Vectors ride the n·nTables bucket rows, not the candidate
+    *    edges, which outnumber them ~16:1 at AutoPlanes occupancy (at
+    *    the 100× point a rejoin-per-edge layout shuffled 11.7 GB
+    *    against 0.9 GB of bucket rows);
+    *  - [[topK]]: each bucket of at most `maxBucketSize` members scores
+    *    its pairs with [[graft.plans.CosineSimilarity.cosine]] (the
+    *    expression's own loop, so scores are the identical doubles) and
+    *    sends both directed edges into a per-node [[TopK]] set,
+    *    combined map-side. A pair found by several tables carries the
+    *    identical score, so the set keeps it once.
+    *
+    * A row with a null vector has no buckets; a row with a null id
+    * counts toward its buckets' sizes but never pairs; equal ids never
+    * pair. [[graph]] materializes the result in one job.
     */
-  private[graft] def knnGraphStaged(df: DataFrame, vecCol: String, idCol: String,
-      dim: Int, k: Int, nPlanes: Int, nTables: Int, seed: Long,
-      maxBucketSize: Int): (DataFrame, DataFrame, DataFrame) = {
+  private[graft] final class KnnKernel(df: DataFrame, vecCol: String, idCol: String, dim: Int,
+      k: Int, nPlanes: Int, nTables: Int, seed: Long, maxBucketSize: Int)
+      extends RddKernel(df, idCol, "The kNN graph") {
     require(k >= 1, s"k must be positive, got $k")
-    val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val depth = Dedup.resolvePlanes(nPlanes, base, minPlanes = 8)
-    val planes = (0 until nTables).map(t => Dedup.randomPlanes(depth, dim, seed + t))
-    val keyed = base.withColumn("buckets",
-      column(graft.plans.HyperplaneBuckets(expression(col("v")), planes)))
-    // bucket COUNTS aggregate over slim (table, key) rows only
-    val buckets = keyed.select(col("id"), posexplode(col("buckets")).as(Seq("table", "key")))
-    val counts = buckets.groupBy("table", "key").agg(count("*").as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucketSize)
-    // Vectors ride the BUCKET rows, and cosine computes INSIDE the
-    // bucket equi-join — never attached to candidate pairs. With
-    // AutoPlanes bounding expected occupancy at ~16, candidate edges
-    // outnumber bucket rows ~16:1, so shuffling the 64-dim vector on
-    // n·nTables bucket rows is ~16× fewer vector bytes than rejoining
-    // vectors onto the pair list (the previous shape measured a
-    // 11.7 GB pair+vector shuffle and 9.6 GB of spill at the 100×
-    // point; bucket rows carry ~0.9 GB there). A pair blocked by
-    // several tables scores once per table — redundant cosines are
-    // ~200 ns each and the duplicates carry the IDENTICAL IEEE double
-    // (same vectors, same expression), so the slim
-    // (id_a, id_b, c) dedup stays deterministic.
-    val bucketsV = keyed.select(col("id"), col("v"),
-      posexplode(col("buckets")).as(Seq("table", "key")))
-    val sized = bucketsV.join(counts, Seq("table", "key"))
-    val a = sized.select(col("table"), col("key"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = sized.select(col("table"), col("key"), col("id").as("id_b"), col("v").as("v_b"))
-    val cand = a.join(b, Seq("table", "key")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("__c"))
-    val scoredU = cand.dropDuplicates("id_a", "id_b")
-    val scored = scoredU
-      .select(explode(array(
-        struct(col("id_a").as("src_id"), col("id_b").as("nbr_id"), col("__c").as("__c")),
-        struct(col("id_b").as("src_id"), col("id_a").as("nbr_id"), col("__c").as("__c"))))
-        .as("__e"))
-      .select(col("__e.src_id").as("src_id"), col("__e.nbr_id").as("nbr_id"),
-        col("__e.__c").as("__c"))
-    val graph = scored.groupBy("src_id")
-      .agg(graft.plans.TopKByScore.topKByScore(col("__c"), col("nbr_id"), k).as("top"))
-      .select(col("src_id"), posexplode(col("top")).as(Seq("r", "t")))
-      .select(col("src_id"), (col("r") + 1).as("rank"), col("t.id").as("nbr_id"),
-        graft.functions.MathFunctions.roundTo(col("t.score"), 6).as("cosine"))
-    (cand, scoredU, graph)
+
+    private val base = df.select(col(idCol).cast("long").as("id"),
+      col(vecCol).cast("array<double>").as("v"))
+    private val planes = {
+      val depth = Dedup.resolvePlanes(nPlanes, base, minPlanes = 8)
+      (0 until nTables).map(t => Dedup.randomPlanes(depth, dim, seed + t))
+    }
+
+    /** (table, key) → the bucket's members. */
+    private[graft] lazy val buckets: RDD[((Int, Long), Members)] = {
+      val cap = maxBucketSize
+      base.withColumn("keys", column(graft.plans.HyperplaneBuckets(expression(col("v")), planes)))
+        .queryExecution.toRdd
+        .flatMap { row =>
+          if (row.isNullAt(1)) Iterator.empty
+          else {
+            // a null id rides without its vector: it counts, never pairs
+            val m = if (row.isNullAt(0)) (0L, null) else (row.getLong(0), row.getArray(1).copy())
+            val keys = row.getArray(2).toLongArray()
+            Iterator.tabulate(keys.length)(t => ((t, keys(t)), m))
+          }
+        }
+        .combineByKey[Members]((m: (Long, ArrayData)) => new Members(cap).add(m),
+          (b: Members, m: (Long, ArrayData)) => b.add(m), (b: Members, o: Members) => b.addAll(o),
+          partitioner, mapSideCombine = false)
+    }
+
+    /** node id → its best `k` neighbors. */
+    private[graft] lazy val topK: RDD[(Long, TopK)] = {
+      val n = k
+      buckets.flatMap { case (_, b) =>
+        val ms = b.pairable.toArray
+        ms.indices.iterator.flatMap { i =>
+          val (a, va) = ms(i)
+          ms.iterator.drop(i + 1).flatMap { case (c, vc) =>
+            if (a == c) Iterator.empty
+            else {
+              val s = graft.plans.CosineSimilarity.cosine(va, vc)
+              Iterator((a, (s, c)), (c, (s, a)))
+            }
+          }
+        }
+      }.combineByKey[TopK]((e: (Double, Long)) => new TopK(n).add(e._1, e._2),
+        (t: TopK, e: (Double, Long)) => t.add(e._1, e._2), (t: TopK, o: TopK) => t.addAll(o),
+        partitioner)
+    }
+
+    /** (src_id, rank, nbr_id, cosine) rows, materialized (one job). */
+    def graph(): DataFrame = {
+      val out = idOut
+      CheckpointBridge.localCheckpointRows(spark, topK.flatMap { case (src, t) =>
+          Iterator.tabulate(t.n)(r => InternalRow(out(src), r + 1, out(t.ids(r)),
+            math.floor(t.scores(r) * 1e6 + 0.5).toLong / 1e6)) // MathFunctions.roundTo(_, 6)
+        },
+        StructType(Seq(idField.copy(name = "src_id"), StructField("rank", IntegerType, nullable = false),
+          idField.copy(name = "nbr_id", nullable = false), StructField("cosine", DoubleType))))
+    }
+  }
+
+  /** A bucket as its rows arrive: `n` rows, and the (id, vector) of
+    * every member that can pair — dropped once `n` passes the cap. */
+  private[graft] final class Members(cap: Int) extends Serializable {
+    var n = 0
+    var pairable: List[(Long, ArrayData)] = Nil
+    def add(m: (Long, ArrayData)): Members = {
+      n += 1
+      pairable = if (n > cap) Nil else if (m._2 == null) pairable else m :: pairable
+      this
+    }
+    def addAll(o: Members): Members = {
+      n += o.n
+      pairable = if (n > cap) Nil else o.pairable ::: pairable
+      this
+    }
+  }
+
+  /** A node's best `k` neighbors so far: a set of (score, id), best
+    * first by (score desc, id asc) — [[graft.plans.TopKByScore]]'s
+    * order, scores compared as `java.lang.Double.compare` does. */
+  private[graft] final class TopK(k: Int) extends Serializable {
+    var n = 0
+    val scores = new Array[Double](k)
+    val ids = new Array[Long](k)
+
+    /** Ordering of (s, id) against entry `i`: > 0 when it ranks before. */
+    private def cmp(s: Double, id: Long, i: Int): Int = {
+      val c = java.lang.Double.compare(s, scores(i))
+      if (c != 0) c else java.lang.Long.compare(ids(i), id)
+    }
+
+    def add(s: Double, id: Long): TopK = {
+      var p = n // the entries 0 until p rank before (s, id) or equal it
+      while (p > 0 && cmp(s, id, p - 1) > 0) p -= 1
+      if (p < k && (p == 0 || cmp(s, id, p - 1) != 0)) {
+        val last = math.min(n, k - 1)
+        System.arraycopy(scores, p, scores, p + 1, last - p)
+        System.arraycopy(ids, p, ids, p + 1, last - p)
+        scores(p) = s
+        ids(p) = id
+        n = last + 1
+      }
+      this
+    }
+
+    def addAll(o: TopK): TopK = {
+      (0 until o.n).foreach(i => add(o.scores(i), o.ids(i)))
+      this
+    }
   }
 
   /** LSH bucket-occupancy profile — the "are my keys deep enough?"

@@ -73,8 +73,24 @@ case class DotProduct(left: Expression, right: Expression) extends VectorBinaryE
 case class CosineSimilarity(left: Expression, right: Expression) extends VectorBinaryExpression {
   override def prettyName: String = "vec_cosine"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.CosineSimilarity.cosine($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** The one cosine loop — behind the expression's interpreted and
+    * generated code and [[graft.operators.Similarity.KnnKernel]], so a
+    * pair scores the identical double on every path: Σ xᵢ·yᵢ over the
+    * shorter length, then each squared norm over its own length, all
+    * left to right.
+    */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var i = 0
     while (i < n) { dot += x.getDouble(i) * y.getDouble(i); i += 1 }
@@ -87,33 +103,6 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
     val den = math.sqrt(na) * math.sqrt(nb)
     if (den == 0.0) 0.0 else dot / den
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val v = ctx.freshName("v"); val den = ctx.freshName("den")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |double $na = 0.0;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  double $v = $a.getDouble($i); $na += $v * $v;
-         |}
-         |double $nb = 0.0;
-         |for (int $i = 0; $i < $b.numElements(); $i++) {
-         |  double $v = $b.getDouble($i); $nb += $v * $v;
-         |}
-         |double $den = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |${ev.value} = ($den == 0.0) ? 0.0 : $dot / $den;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Σ a_i² with a generated loop. */

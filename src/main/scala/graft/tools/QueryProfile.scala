@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One-shot profile of any registered query at any data dir: wall,
   * shuffle-write bytes, spill (memory/disk), GC delta — the generic
-  * sibling of [[KnnProfile]] for localizing where a scale-curve point
+  * per-stage profilers' sibling for localizing where a scale-curve point
   * spends its time without hand-writing a stage harness per operator.
   *
   * Usage:

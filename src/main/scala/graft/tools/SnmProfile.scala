@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * `dedup_snm_multipass` measured x10/x30 marginals of 1.32/1.43 but
   * 11.5 at x100 (227 s), and the round note could only say "same
   * single-JVM agg-spill class as knn" without per-stage evidence.
-  * This is the KnnProfile treatment applied to the SNM family.
+  * (The kNN graph's r13 profile, by a since-removed KnnProfile tool,
+  * is recorded in KNN_PROFILE_r14.json.)
   *
   * Times three cumulative stage frontiers (scored candidate union →
   * post-threshold survivors → cross-pass distinct result; each prefix

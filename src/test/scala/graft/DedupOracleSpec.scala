@@ -3,21 +3,25 @@ package graft
 import org.apache.spark.sql.Row
 
 /** The DuckDB oracle inside tier-1 for the queries the MinHash-LSH
-  * kernel serves: each query's sf0.001 result must equal its golden in
-  * `src/test/resources/oracle/`, compared the way `tools/selfcheck.py`
-  * compares (columns sorted by name, rows sorted, exact values; a
-  * number equals a number of another width with the same value).
+  * kernel and the kNN kernel serve: each query's sf0.001 result must
+  * equal its golden in `src/test/resources/oracle/`, compared the way
+  * `tools/selfcheck.py` compares (columns sorted by name, rows sorted,
+  * exact values; a number equals a number of another width with the
+  * same value).
   *
   * The goldens are DuckDB's results of the oracle SQL, never Spark's:
   * regenerate them with `tools/selfcheck.py --write-golden` (its
-  * docstring shows the command).
+  * docstring shows the command). The other kNN-graph queries
+  * (`emb_pagerank`, `emb_label_prop`, `emb_graph_suite`) are left out:
+  * their oracles replay iteration chains over the kNN CTE, and
+  * `emb_pagerank`'s did not finish in 500 s on DuckDB at sf0.001.
   */
 class DedupOracleSpec extends SparkSpec {
 
   private val Queries = Seq(
     "dedup_minhash_lsh", "dedup_clusters_lsh", "dedup_cluster_quality", "dedup_triangles",
     "graph_suite", "txt_canonical", "txt_curation", "dedup_threshold_profile",
-    "dedup_containment", "dedup_incremental")
+    "dedup_containment", "dedup_incremental", "emb_knn_graph", "emb_knn_graph_auto")
 
   /** A cell as the comparison sees it. */
   private def norm(v: Any): Any = v match {

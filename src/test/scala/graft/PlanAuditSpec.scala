@@ -360,13 +360,37 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("emb_knn_graph: slim bucket shuffle, capped; vectors rejoin per edge, no window") {
-    val p = plan("emb_knn_graph")
-    // bucket rows must not carry the 64-dim vector through the explode
-    val exchanges = p.linesIterator.filter(_.contains("Exchange")).mkString("\n")
-    assert(!exchanges.contains("buckets"),
-      s"bucket arrays must not cross a shuffle:\n$exchanges")
-    assert(p.contains("partial_"), "bucket counts and top-k heap map-side combined")
-    assert(!p.contains("Window"), s"bounded-heap top-k, not a window sort:\n$p")
+    // the kNN build is the Similarity.KnnKernel lineage, not a SQL plan
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    val k = new graft.operators.Similarity.KnnKernel(emb, "embedding", "vec_id", dim = 64,
+      k = 10, nPlanes = 8, nTables = 8, seed = graft.operators.Dedup.DefaultSeed,
+      maxBucketSize = 1000)
+    try {
+      val shuffles = lineage(k.topK).flatMap(_.dependencies).collect {
+        case d: org.apache.spark.ShuffleDependency[_, _, _] => d
+      }
+      val Seq(edges, buckets) = Seq(k.topK, k.buckets)
+        .map(_.dependencies.head.asInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]])
+      assert(shuffles == Seq(edges, buckets) && shuffles.forall(_.partitioner == k.partitioner),
+        k.topK.toDebugString)
+      // bucket rows carry one (table, key) and one vector, never the
+      // row's whole bucket array
+      val rows = buckets.rdd.take(50).toSeq
+      assert(rows.nonEmpty && rows.forall {
+        case ((_: Int, _: Long), (_: Long, v: org.apache.spark.sql.catalyst.util.ArrayData)) =>
+          v.numElements() == 64
+        case _ => false
+      }, s"((table, key), (id, vector)) bucket rows, got ${rows.take(3)}")
+      val es = edges.rdd.take(50).toSeq
+      assert(es.nonEmpty && es.forall { case (_: Long, (_: Double, _: Long)) => true; case _ => false },
+        s"(node, (score, nbr)) edges, got ${es.take(3)}")
+      assert(edges.mapSideCombine, "the per-node top-k combines map-side")
+      assert(!buckets.mapSideCombine, "bucket members are not buffered map-side")
+      // no SQL plan between the input projection and the result
+      val sql = lineage(k.topK, buckets.rdd).map(_.getClass.getName)
+        .filter(_.startsWith("org.apache.spark.sql"))
+      assert(sql.isEmpty, s"no SQL plan inside the kernel: $sql")
+    } finally k.close()
   }
 
   test("emb_label_outliers: centroids broadcast back; corpus vectors never self-join") {
@@ -746,6 +770,15 @@ class PlanAuditSpec extends SparkSpec {
       spark.read.parquet(sf("sf0.001") + "/documents.parquet").repartition(4))
     val jobs = jobsOf(graft.operators.Dedup.minhashNearDups(docs, "text", "doc_id",
       shingleSize = 3, threshold = 0.3, portableHash = true).collect())
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("emb_knn_graph: building and collecting the graph takes at most 2 jobs") {
+    // a materialized 4-partition input, as in the dedup_minhash_lsh guard
+    val emb = org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(
+      spark.read.parquet(sf("sf0.001") + "/embeddings.parquet").repartition(4))
+    val jobs = jobsOf(graft.operators.Similarity.knnGraph(emb, "embedding", "vec_id",
+      dim = 64, k = 10, nPlanes = 8, nTables = 8).collect())
     assert(jobs <= 2, s"$jobs jobs")
   }
 

@@ -661,4 +661,36 @@ class TextAnalysisSpec extends SparkSpec {
     assert(TextAnalysis.codeDetect(df2, "doc_id", "text")
       .collect()(0).getString(7) === "prose")
   }
+
+  test("LowerUtf8 returns exactly what lower() returns, with ICU case mappings on and off") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
+    import org.apache.spark.sql.functions.{col, lower}
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    import org.apache.spark.unsafe.types.UTF8String
+    val valid = Seq("Hello WORLD 123", "İSTANBUL İi", "ΟΔΟΣ ΣΊΣΥΦΟΣ Σ", "Straße STRASSE ẞ",
+      "ПРИВЕТ Мир Ёж", "Ǆ ǅ ΐ", "")
+    val invalid = Seq(Array[Byte](0x41, 0xff.toByte, 0x42), Array[Byte](0xc3.toByte, 0x41),
+      Array[Byte](0x49, 0xe2.toByte, 0x82.toByte))
+    val bytes = valid.map(_.getBytes("UTF-8")) ++ invalid
+    // a scanned frame, so the projection is code-generated, not folded
+    val df = org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(
+      (bytes.map(Option(_)) :+ None).toDF("b").select(col("b").cast("string").as("s")))
+    val ours = column(graft.plans.LowerUtf8(expression(col("s"))))
+    val key = "spark.sql.icu.caseMappings.enabled"
+    val before = spark.conf.getOption(key)
+    try for (icu <- Seq("true", "false")) {
+      spark.conf.set(key, icu)
+      val got = df.select(lower(col("s")).cast("binary"), ours.cast("binary")).collect()
+      assert(got.length == bytes.size + 1)
+      got.foreach { r =>
+        assert(java.util.Arrays.equals(r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1)),
+          s"icu=$icu: ${Option(r.getAs[Array[Byte]](0)).map(new String(_, "UTF-8"))}")
+      }
+      assert(got.count(_.isNullAt(1)) == 1, "null stays null")
+      bytes.foreach { b =>
+        val lit = Literal(UTF8String.fromBytes(b))
+        assert(graft.plans.LowerUtf8(lit).eval() == Lower(lit).eval(), s"interpreted, icu=$icu")
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
