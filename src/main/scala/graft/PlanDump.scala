@@ -60,14 +60,14 @@ object PlanDump {
     "dedup_containment" -> "same capped LSH candidate frame as minhash; |A∩B|/min verify on the candidate pairs only",
     "txt_novelty" -> "grams shuffle as 8-byte portable hashes; two aggregations, never rejoined on the gram key",
     "evt_attribution" -> "one equi-join + min/max-struct hash agg — no window over a user's touch history",
-    "txt_canonical" -> "capped LSH → pointer-doubling CC → per-cluster row_number keyed by bounded cluster ids",
-    "dedup_clusters_lsh" -> "pointer-doubling CC over capped LSH edges; fresh-stats checkpoints; early-exit probe",
+    "txt_canonical" -> "capped LSH → pointer-jumping CC on the graph kernel → per-cluster row_number keyed by bounded cluster ids",
+    "dedup_clusters_lsh" -> "pointer-jumping CC on the graph kernel over capped LSH edges: one job per round, its changed-node count; result is a checkpointed scan",
     "txt_domain_quality" -> "checkpointed result (one text scan via persisted slim frame); shape audited at the domainQualityImpl seam",
     "evt_cooccurrence" -> "checkpointed result (one event scan via persisted distinct frame); shape audited at the cooccurrenceImpl seam",
     "evt_paths" -> "one user-keyed lead window; share rolls up the tiny path table — events scanned exactly once",
     "evt_rfm" -> "checkpointed result (one event scan via persisted per-user frame); shape audited at the rfmImpl seam",
-    "dedup_triangles" -> "degree-ordered wedge join over the capped LSH edge set — O(m^1.5); checkpointed, shape audited at the triangleStatsImpl seam",
-    "dedup_cluster_quality" -> "persisted pair set feeds CC + triangles once each; node-sized stats join, cluster-keyed rollup, integer-exact verdicts",
+    "dedup_triangles" -> "degree-ordered node iterator on the graph kernel over the capped LSH edge set — O(m^1.5), one job; round lineage audited in PlanAuditSpec",
+    "dedup_cluster_quality" -> "one graph kernel reads the pair set once for CC + triangles; node-sized stats join, cluster-keyed rollup, integer-exact verdicts",
     "evt_active_users" -> "checkpointed result (one event scan via persisted distinct (user,day) frame); shape audited at the activeUsersImpl seam",
     "evt_conversion_lag" -> "type filters pushed to both scans; one user-keyed equi-join; window only over the bounded hour-bucket table",
     "emb_silhouette" -> "plan-literal centroids; one narrow corpus pass, vectors never shuffle; cell-sized rollup + broadcast grid join",

@@ -17,7 +17,7 @@ object TextFunctions {
 
   /** `lower(text)` without Spark's first-call ICU table build
     * ([[graft.plans.LowerUtf8]]). */
-  private def lowerText(text: Column): Column = {
+  private[graft] def lowerText(text: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     column(graft.plans.LowerUtf8(expression(text)))
   }

@@ -825,101 +825,40 @@ object Dedup {
     * the minimum reachable id as its cluster id — the canonicalization
     * step that turns pairwise matches into dedup clusters.
     *
-    * Algorithm: min-label propagation WITH pointer doubling — each
-    * round takes the min over {self, neighbors' labels, label's
-    * label}. Round 1 (labels = min(self, min neighbor)) is folded
-    * into the label initialization — one aggregation, no checkpoint
-    * or convergence probe, since round 1 can never be the converged
-    * round of a non-empty graph. The shortcut join halves label-chain
-    * depth per round, so convergence is O(log diameter) rounds
-    * instead of O(diameter): maxIter = 32 total rounds (init + up to
-    * 31 probed rounds) covers diameters beyond 2^28 (a 300k-node
-    * CHAIN — the StressSpec power-law worst case — settles in ~21
-    * rounds: ~log2 diameter doubling rounds plus the 2 doubling-free
-    * opening rounds and the final no-change round the convergence
-    * probe needs to observe). The early-exit makes the higher cap
-    * free for real dedup graphs, which converge in a handful of
-    * rounds; plain propagation would silently truncate any chain
-    * longer than maxIter. All joins are equi-joins on id/label
-    * (hash-partitionable at any cluster size); labels never leave the
-    * executors — the driver only reads the convergence flag.
+    * Algorithm: min-label propagation WITH pointer jumping (Kiveris et
+    * al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
+    * each round takes the min over {self, neighbours' labels, label's
+    * label}. Round 1 (labels = min(self, min neighbour)) is the start
+    * state, since round 1 can never be the converged round of a
+    * non-empty graph. The jump halves label-chain depth per round, so
+    * convergence takes O(log diameter) rounds instead of O(diameter);
+    * it is engaged from round 3, so shallow graphs (the common dedup
+    * case) converge before paying for it. maxIter = 32 total rounds
+    * covers diameters beyond 2^28 (a 300k-node CHAIN — the StressSpec
+    * power-law worst case — settles in ~21 rounds), and the
+    * convergence early-exit makes the cap free for real dedup graphs;
+    * a run that hits it logs a not-converged warning.
+    *
+    * Scale shape: [[Graphs.NodeKernel]] — the pairs are read once into
+    * an undirected adjacency; a round is a map-side-combined min
+    * message plus, with the jump, a request/reply keyed by label, all
+    * under one partitioner, and its one job is the changed-node count
+    * over the round's local-checkpointed labels. Labels never leave
+    * the executors; the driver reads one count per round.
+    *
+    * Ids are read as longs (the pair columns must be integral) and
+    * returned as (id, cluster_id) in the pair columns' type. A pair
+    * with a null endpoint is dropped; a self-loop makes its endpoint a
+    * (singleton) node.
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
                           maxIter: Int = 32): DataFrame = {
-    // maxIter counts TOTAL rounds including the folded init round (the
-    // loop below probes maxIter-1 rounds) — r14-advice: a caller
-    // passing 1 would get zero probed rounds and an unconditional
-    // not-converged warning, so require the minimum that makes the
-    // parameter meaningful.
+    // maxIter counts TOTAL rounds including round 1: a caller passing
+    // 1 would get zero probed rounds and an unconditional
+    // not-converged warning
     require(maxIter >= 2, s"maxIter=$maxIter must be >= 2 " +
       "(the init round is folded in; at least one probed round is needed)")
-    val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    // EAGER fresh-stats checkpoint, not a lazy cache: a cached edge
-    // frame still carries the whole upstream candidate build (at
-    // scale, the MinHash/LSH pipeline) as a logical subtree into
-    // every round's analyzed plan, which the driver re-plans per AQE
-    // stage — the measured r14 driver-gap pathology (see
-    // Graphs.triangleStatsImpl). The checkpoint truncates each round to joins
-    // over an ExistingRDD leaf; the candidate build runs exactly once.
-    val edges = org.apache.spark.sql.graftbridge.CheckpointBridge
-      .localCheckpointFreshStats(
-        fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))).distinct())
-    // Round 1 folded into the initialization: the first propagation
-    // round's fixpoint step is labels(id) = min(id, min neighbor) for
-    // every node, and edges are symmetrized so every node appears as
-    // src — one aggregation replaces a full round (checkpoint +
-    // convergence probe). Round 1 can never BE the converged round on
-    // a non-empty edge set (each edge's larger endpoint changes), so
-    // no early exit is lost.
-    var labels = edges.groupBy("src").agg(min(col("dst")).as("__mn"))
-      .select(col("src").as("id"), least(col("src"), col("__mn")).as("label"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter - 1) {
-      val viaEdges = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), col("label"))
-      // pointer doubling: follow each node's label to THAT node's
-      // label (labels are node ids, so this is a self-join on the
-      // label frame) — chains compress exponentially. Engaged from
-      // round 3 (loop index 1: the init above is round 1): shallow
-      // graphs (the common dedup case) converge before paying the
-      // extra join; deep chains still finish in O(log diameter)
-      // rounds.
-      val base = labels.select(col("id"), col("label")).union(viaEdges)
-      val withShortcut =
-        if (i < 1) base
-        else base.union(labels.as("x")
-          .join(labels.as("y"), col("x.label") === col("y.id"))
-          .select(col("x.id").as("id"), col("y.label").as("label")))
-      val next = withShortcut.groupBy("id").agg(min("label").as("label"))
-      // ONE action per round, probe included: the changed flag rides
-      // the eagerly checkpointed frame (which also bounds the
-      // iterative-join lineage), and the convergence count is FUSED
-      // into the checkpoint's own materialization job
-      // (localCheckpointFreshStatsCountTrue) — r14 paid a separate
-      // `isEmpty` job per round on top of the checkpoint job (worst on
-      // the converged round, where take(1)'s scale-up scans every
-      // block), ~0.1 s × rounds × 7 CC-backed queries (r14-verdict
-      // item 2). fresh-stats checkpoint: labels enters this round's
-      // plan four times (base ∪ viaEdges ∪ shortcut self-join ⨝ flag
-      // join), so a stats-carrying localCheckpoint would ×4 the
-      // inherited BigInt sizeInBytes every round — see
-      // CheckpointBridge.
-      val (flagged, nChanged) = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointFreshStatsCountTrue(
-          next.as("n").join(labels.as("o"), Seq("id"))
-            .select(col("id"), col("n.label").as("label"),
-                    (col("n.label") =!= col("o.label")).as("chg")),
-          "chg")
-      converged = nChanged == 0L
-      labels = flagged.select("id", "label")
-      i += 1
-    }
-    if (!converged)
-      org.apache.log4j.Logger.getLogger(getClass)
-        .warn(s"connectedComponents: not converged after $maxIter rounds — " +
-          "clusters with diameter > maxIter are split; raise maxIter")
-    labels.select(col("id"), col("label").as("cluster_id"))
+    Graphs.withKernel(pairs, aCol, bCol)(Graphs.componentsOn(_, maxIter))
   }
 
   /** Benchmark decontamination: drop (tag) documents that share any

@@ -6,13 +6,12 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftbridge.CheckpointBridge
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Distributed graph algorithms over edge lists — used for
   * centrality-weighted data selection (rank web/document nodes by a
@@ -28,24 +27,15 @@ import org.apache.spark.storage.StorageLevel
   * ≤ 1e-9 rank per (edge, iteration) vs real-valued PageRank —
   * far below any ranking-relevant difference.
   *
-  * The iterative algorithms ([[pageRank]], [[labelPropagation]]) run
-  * on one RDD kernel ([[NodeKernel]]), not on Catalyst: a round is a
-  * fixed pair of closures, so it is compiled once by the JIT instead
-  * of being analyzed, optimized and code-generated as a new SQL plan
-  * every round. The one-shot algorithms (triangles, cluster quality)
-  * stay DataFrame plans.
+  * Every algorithm ([[pageRank]], [[labelPropagation]],
+  * [[Dedup.connectedComponents]], [[triangleStats]]) runs on one RDD
+  * kernel ([[NodeKernel]]), not on Catalyst: a round is a fixed set of
+  * closures, so it is compiled once by the JIT instead of being
+  * analyzed, optimized and code-generated as a new SQL plan every
+  * round. Only the result frames and their compositions
+  * ([[graphSuite]], [[clusterQuality]]) are DataFrame plans.
   */
 object Graphs {
-
-  /** Eager local checkpoint that also RESETS inherited plan
-    * statistics ([[org.apache.spark.sql.graftbridge.CheckpointBridge]]):
-    * plain `localCheckpoint` carries the origin `sizeInBytes` onto
-    * the LogicalRDD, and a frame joined against itself squares that
-    * BigInt — stats arithmetic ends up dominating the plan and
-    * finally overflows.
-    */
-  private def graftCheckpoint(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(df)
 
   private val ParallelCalls = new AtomicInteger
 
@@ -124,66 +114,73 @@ object Graphs {
     * [[NodeKernel.iterate]]). */
   private val CheckpointEvery = 10
 
-  /** The co-partitioned node-state kernel behind [[pageRank]] and
-    * [[labelPropagation]].
+  /** The co-partitioned node-state kernel behind every graph
+    * algorithm here: [[pageRank]], [[labelPropagation]],
+    * [[Dedup.connectedComponents]] and [[triangleStats]].
     *
     * The edge frame is read ONCE, through `queryExecution.toRdd`, into
-    * an adjacency RDD (node → its distinct out-neighbours; every
-    * endpoint is a node, so a dst-only node has none) that is cached
-    * under one `HashPartitioner(spark.sql.shuffle.partitions)`. Node
-    * state lives in RDDs under the same partitioner, so a round is
-    * one map-side-combined message shuffle plus narrow co-partitioned
-    * zips — no SQL plan inside the loop. Messages are keyed by an
-    * 8-byte node id and combined before they leave the map side, so
-    * nothing wider than a node's combined inbox ever shuffles; no
-    * data-sized collect, no driver-side graph.
+    * adjacency RDDs cached under the [[RddKernel]] partitioner: the
+    * directed [[adjacency]] and, when an algorithm asks for it, the
+    * [[undirected]] one. Node state lives in RDDs under the same
+    * partitioner, so a round is one map-side-combined message shuffle
+    * plus narrow co-partitioned zips — no SQL plan inside the loop.
+    * Messages are keyed by an 8-byte node id and combined before they
+    * leave the map side, so nothing wider than a node's combined inbox
+    * ever shuffles; no data-sized collect, no driver-side graph.
     *
     * Every round's state is cached (it feeds the next round's message
     * side AND its update side, which would otherwise recompute the
-    * whole round chain), and [[close]] drops the adjacency and every
+    * whole round chain), and [[close]] drops the adjacencies and every
     * state once the caller has materialized its result.
     */
-  private[graft] final class NodeKernel(edges: DataFrame, srcCol: String, dstCol: String) {
-    private val ends = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-    private val held = mutable.ArrayBuffer.empty[RDD[_]]
-
-    val partitioner = new HashPartitioner(edges.sparkSession.sessionState.conf.numShufflePartitions)
-
-    /** Output node-id field: nullable exactly when an input endpoint is. */
-    private val idField: StructField = StructField("id", LongType, ends.schema.exists(_.nullable))
-
-    private def hold[T](r: RDD[T]): RDD[T] = {
-      held.synchronized(held += r)
-      r.persist(StorageLevel.MEMORY_AND_DISK)
-    }
+  private[graft] final class NodeKernel(edges: DataFrame, srcCol: String, dstCol: String)
+      extends RddKernel(edges.select(col(srcCol).as("id")).union(edges.select(col(dstCol).as("id"))),
+        "id", s"The graph kernel (edges $srcCol -> $dstCol)") {
+    private val ends = edges.select(col(srcCol).cast(LongType), col(dstCol).cast(LongType))
+      .queryExecution.toRdd
 
     /** node → distinct out-neighbours. The edge list is a set and null
       * endpoints are dropped. */
-    val adjacency: RDD[(Long, Array[Long])] = hold(ends.queryExecution.toRdd
-      .flatMap { r =>
-        // (dst, null) makes dst a node without giving it an out-edge
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else Iterator((r.getLong(0), java.lang.Long.valueOf(r.getLong(1))),
-          (r.getLong(1), null: java.lang.Long))
-      }
-      .combineByKey[mutable.ArrayBuilder.ofLong](
-        (d: java.lang.Long) => append(new mutable.ArrayBuilder.ofLong, d),
-        append, (a, b) => a.addAll(b.result()), partitioner)
-      .mapValues(_.result().distinct))
+    val adjacency: RDD[(Long, Array[Long])] = hold(neighbours(ends.flatMap { r =>
+      // (dst, null) makes dst a node without giving it an out-edge
+      if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+      else Iterator((r.getLong(0), java.lang.Long.valueOf(r.getLong(1))),
+        (r.getLong(1), null: java.lang.Long))
+    }))
 
-    /** One round: each node with out-neighbours sends `send(state,
-      * outDegree)` (if any) to every out-neighbour; messages combine
-      * map-side by destination — the round's ONE shuffle — and a
-      * narrow co-partitioned zip applies `update(state, inbox)`
+    /** node → distinct neighbours with every edge taken both ways. A
+      * pair with a null endpoint is dropped; a self-loop makes its
+      * endpoint a node without giving it a neighbour. */
+    lazy val undirected: RDD[(Long, Array[Long])] = hold(neighbours(ends.flatMap { r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+      else if (r.getLong(0) == r.getLong(1)) Iterator((r.getLong(0), null: java.lang.Long))
+      else Iterator((r.getLong(0), java.lang.Long.valueOf(r.getLong(1))),
+        (r.getLong(1), java.lang.Long.valueOf(r.getLong(0))))
+    }))
+
+    private def neighbours(pairs: RDD[(Long, java.lang.Long)]): RDD[(Long, Array[Long])] =
+      gather(pairs).mapValues(_.distinct)
+
+    /** key → its non-null values, combined map-side under [[partitioner]]. */
+    def gather(pairs: RDD[(Long, java.lang.Long)]): RDD[(Long, Array[Long])] =
+      pairs.combineByKey[mutable.ArrayBuilder.ofLong](
+          (d: java.lang.Long) => append(new mutable.ArrayBuilder.ofLong, d),
+          append, (a, b) => a.addAll(b.result()), partitioner)
+        .mapValues(_.result())
+
+    /** One round over `adj`: each node with neighbours sends
+      * `send(state, degree)` (if any) to every neighbour; messages
+      * combine map-side by destination — the round's ONE shuffle — and
+      * a narrow co-partitioned zip applies `update(state, inbox)`
       * (`None` when nothing arrived) to every node.
       */
-    def round[S, V: ClassTag, C](state: RDD[(Long, S)])(
+    def round[S, V: ClassTag, C, T](adj: RDD[(Long, Array[Long])], state: RDD[(Long, S)])(
         send: (S, Int) => Option[V])(
         combine: V => C, add: (C, V) => C, merge: (C, C) => C)(
-        update: (S, Option[C]) => S): RDD[(Long, S)] = {
-      val inbox = adjacency.zipPartitions(state) { (adj, st) =>
+        update: (S, Option[C]) => T): RDD[(Long, T)] = {
+      val inbox = adj.zipPartitions(state) { (nodes, st) =>
         val byId = mutable.LongMap.from(st)
-        adj.flatMap { case (id, nbrs) =>
+        nodes.flatMap { case (id, nbrs) =>
           if (nbrs.isEmpty) Iterator.empty
           else send(byId(id), nbrs.length) match {
             case Some(m) => nbrs.iterator.map(d => (d, m))
@@ -203,7 +200,8 @@ object Graphs {
       * bound the lineage. With a `settled(old, new)` probe the new
       * state is local-checkpointed every round and the probe is the
       * round's one action (it materializes the state it reads); the
-      * loop stops once it returns true.
+      * old state is then dropped, and the loop stops once the probe
+      * returns true.
       */
     def iterate[S](init: RDD[(Long, S)], iterations: Int,
         settled: Option[(RDD[(Long, S)], RDD[(Long, S)]) => Boolean])(
@@ -216,7 +214,10 @@ object Graphs {
         it += 1
         val cut = it % CheckpointEvery == 0 && it < iterations
         settled match {
-          case Some(probe) => next.localCheckpoint(); done = probe(state, next)
+          case Some(probe) =>
+            next.localCheckpoint()
+            done = probe(state, next)
+            release(state)
           case None => if (cut) { next.localCheckpoint(); next.count() }
         }
         state = next
@@ -224,14 +225,21 @@ object Graphs {
       state
     }
 
-    /** The result frame, materialized (one job) before the caller
-      * [[close]]s the kernel. */
-    def frame[S](state: RDD[(Long, S)], valueField: StructField)(value: S => Any): DataFrame =
-      org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointRows(edges.sparkSession,
-        state.map { case (id, s) => InternalRow(id, value(s)) },
-        StructType(Seq(idField, valueField)))
+    /** The (id, values…) result frame with ids as longs, materialized
+      * (one job) before the caller [[close]]s the kernel. */
+    def frame[S](state: RDD[(Long, S)], valueFields: StructField*)(values: S => Seq[Any]): DataFrame =
+      CheckpointBridge.localCheckpointRows(spark,
+        state.map { case (id, s) => InternalRow.fromSeq(id +: values(s)) },
+        StructType(StructField("id", LongType, idField.nullable) +: valueFields))
 
-    def close(): Unit = held.synchronized(held.foreach(_.unpersist(blocking = false)))
+    /** A node → node map (such as a node's component) as an (id, `name`)
+      * frame in the edge columns' own id type, materialized (one job). */
+    def idFrame(state: RDD[(Long, Long)], name: String): DataFrame = {
+      val out = idOut
+      CheckpointBridge.localCheckpointRows(spark,
+        state.map { case (id, to) => InternalRow(out(id), out(to)) },
+        StructType(Seq(idField, idField.copy(name = name, nullable = true))))
+    }
   }
 
   private def append(b: mutable.ArrayBuilder.ofLong, d: java.lang.Long): mutable.ArrayBuilder.ofLong = {
@@ -241,7 +249,7 @@ object Graphs {
 
   /** Runs `body` over a fresh kernel and frees the kernel's caches
     * after `body` has materialized its result. */
-  private def withKernel[T](edges: DataFrame, srcCol: String, dstCol: String)(
+  private[graft] def withKernel[T](edges: DataFrame, srcCol: String, dstCol: String)(
       body: NodeKernel => T): T = {
     val k = new NodeKernel(edges, srcCol, dstCol)
     try body(k) finally k.close()
@@ -295,13 +303,13 @@ object Graphs {
           Iterator.single(cur.map { case (id, r) => math.abs(r - before(id)) }.sum)
         }.collect().sum <= toleranceNanos)
     val ranks = k.iterate(k.adjacency.mapValues(_ => 1000000000L), iterations, settled)(rankStep(k))
-    k.frame(ranks, StructField("rank_nanos", LongType, nullable = false))(identity)
+    k.frame(ranks, StructField("rank_nanos", LongType, nullable = false))(Seq(_))
   }
 
   /** One PageRank round on the kernel (package-private for the
     * lineage audit). */
   private[graft] def rankStep(k: NodeKernel)(ranks: RDD[(Long, Long)]): RDD[(Long, Long)] =
-    k.round(ranks)((r: Long, deg: Int) => Some(Math.multiplyExact(85L, r) / (100L * deg)))(
+    k.round(k.adjacency, ranks)((r: Long, deg: Int) => Some(Math.multiplyExact(85L, r) / (100L * deg)))(
       (c: Long) => c, Math.addExact(_: Long, _: Long), Math.addExact(_: Long, _: Long))(
       (_, in) => Math.addExact(150000000L, in.getOrElse(0L)))
 
@@ -341,7 +349,7 @@ object Graphs {
 
   private def labelPropOn(k: NodeKernel, seeds: DataFrame, idCol: String, labelCol: String,
                           iterations: Int): DataFrame = {
-    val seedRows = seeds.select(col(idCol).cast("long"), col(labelCol).cast("int"))
+    val seedRows = seeds.select(col(idCol).cast(LongType), col(labelCol).cast(IntegerType))
       .queryExecution.toRdd
       .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None
         else Some((r.getLong(0), r.getInt(1).toLong)))
@@ -353,7 +361,7 @@ object Graphs {
     }
     val labels = k.iterate(init, iterations, None)(labelStep(k))
     k.frame(labels, StructField("label", IntegerType, nullable = true)) { s =>
-      if (s._2 == NoLabel) null else s._2.toInt
+      Seq(if (s._2 == NoLabel) null else s._2.toInt)
     }
   }
 
@@ -361,7 +369,7 @@ object Graphs {
     * the lineage audit). */
   private[graft] def labelStep(k: NodeKernel)(
       labels: RDD[(Long, (Long, Long))]): RDD[(Long, (Long, Long))] =
-    k.round(labels)((s: (Long, Long), _: Int) => if (s._2 == NoLabel) None else Some(s._2))(
+    k.round(k.adjacency, labels)((s: (Long, Long), _: Int) => if (s._2 == NoLabel) None else Some(s._2))(
       (l: Long) => mutable.LongMap(l -> 1L),
       (m: mutable.LongMap[Long], l: Long) => { m(l) = m.getOrElse(l, 0L) + 1L; m },
       (a: mutable.LongMap[Long], b: mutable.LongMap[Long]) => {
@@ -379,6 +387,70 @@ object Graphs {
     best
   }
 
+  /** Connected components on the kernel's [[NodeKernel.undirected]]
+    * adjacency — the algorithm behind [[Dedup.connectedComponents]],
+    * which documents it. Round 1, min(self, min neighbour), is the
+    * start state; each of up to `maxIter - 1` later rounds is one job:
+    * [[componentStep]], then the changed-node count over the round's
+    * local-checkpointed state. Returns (id, cluster_id), materialized.
+    */
+  private[graft] def componentsOn(k: NodeKernel, maxIter: Int): DataFrame = {
+    var converged = false
+    // state: (label, label before the round); round 1 starts from the ids
+    val start = k.undirected.mapPartitions(_.map { case (id, nbrs) =>
+      (id, (nbrs.foldLeft(id)(math.min), id))
+    }, preservesPartitioning = true)
+    var rounds = 0
+    val settled = (_: RDD[(Long, (Long, Long))], n: RDD[(Long, (Long, Long))]) => {
+      converged = n.filter { case (_, (l, was)) => l != was }.count() == 0
+      converged
+    }
+    val labels = k.iterate(start, maxIter - 1, Some(settled)) { l =>
+      rounds += 1
+      componentStep(k, jump = rounds > 1)(l)
+    }
+    if (!converged)
+      org.apache.log4j.Logger.getLogger(getClass)
+        .warn(s"connectedComponents: not converged after $maxIter rounds — " +
+          "clusters with diameter > maxIter are split; raise maxIter")
+    k.idFrame(labels.mapValues(_._1), "cluster_id")
+  }
+
+  /** One components round over (label, label before the last round)
+    * states (package-private for the lineage audit): a node's new
+    * label is the min of its label, its neighbours' labels (a
+    * map-side-combined min message) and, with `jump`, its label's
+    * label. Only a node whose label changed in the last round sends
+    * it: an unchanged neighbour's label was already in the last
+    * round's min. The jump is a request/reply under the kernel's
+    * partitioner: requests are keyed by label and combined map-side,
+    * and only a label whose own label is lower replies.
+    */
+  private[graft] def componentStep(k: NodeKernel, jump: Boolean)(
+      labels: RDD[(Long, (Long, Long))]): RDD[(Long, (Long, Long))] = {
+    val viaNbrs = k.round(k.undirected, labels)(
+      (s: (Long, Long), _: Int) => if (s._1 != s._2) Some(s._1) else None)(
+      (l: Long) => l, math.min(_: Long, _: Long), math.min(_: Long, _: Long))(
+      (s, in) => (in.fold(s._1)(math.min(s._1, _)), s._1))
+    if (!jump) viaNbrs
+    else {
+      val asks = k.gather(labels.flatMap { case (id, (l, _)) =>
+        if (l == id) None else Some((l, java.lang.Long.valueOf(id)))
+      })
+      val replies = labels.zipPartitions(asks) { (st, in) =>
+        val labelOf = mutable.LongMap.from(st.map { case (id, (l, _)) => (id, l) })
+        in.flatMap { case (l, ids) =>
+          val ll = labelOf(l)
+          if (ll < l) ids.iterator.map((_, ll)) else Iterator.empty
+        }
+      }.partitionBy(k.partitioner)
+      viaNbrs.zipPartitions(replies, preservesPartitioning = true) { (st, in) =>
+        val jumped = mutable.LongMap.from(in)
+        st.map { case (id, (l, was)) => (id, (jumped.get(id).fold(l)(math.min(l, _)), was)) }
+      }
+    }
+  }
+
   /** Per-node triangle count + local clustering coefficient over an
     * undirected edge list — the dedup-QA companion to
     * [[Dedup.connectedComponents]]: a near-dup cluster whose nodes
@@ -387,109 +459,77 @@ object Graphs {
     * TRANSITIVE CHAINS (A~B~C with A≁C) — the classic LSH
     * over-merge signature that pairwise thresholds can't see.
     *
-    * Algorithm: degree-ordered node-iterator (the standard
-    * distributed formulation). Each edge is oriented from its
-    * (degree, id)-smaller endpoint to its larger one; wedges are
-    * enumerated at the SMALLEST-ranked vertex of each triangle by
-    * self-joining the oriented list on the source, and a wedge
-    * (x→y, x→z) closes iff the oriented edge y→z exists — so every
-    * triangle is produced exactly once. Orientation bounds the
-    * per-node wedge fan-out by the oriented out-degree, which the
-    * degree ordering caps at O(√m) on any graph — total work
-    * O(m^1.5), the best exact bound, vs the unordered iterator's
-    * O(Σ d²) that a single hub makes quadratic. Per-node counts are
-    * orientation-invariant, so an id-ordered SQL oracle reproduces
-    * them exactly.
+    * Algorithm: the degree-ordered node iterator (Suri & Vassilvitskii,
+    * WWW 2011). Each edge is oriented from its (degree, id)-smaller
+    * endpoint to its larger one; every triangle is enumerated once, at
+    * its smallest-ranked vertex x, as a wedge (x→y, x→z) that closes
+    * iff the oriented edge y→z exists. Orientation caps a node's
+    * oriented out-degree at O(√m) on any graph — total work O(m^1.5),
+    * vs the unordered iterator's O(Σ d²) that a single hub makes
+    * quadratic. Per-node counts are orientation-invariant, so an
+    * id-ordered SQL oracle reproduces them exactly.
     *
-    * Scale shape: degrees are one map-side-combined count; the
-    * orientation joins, the wedge self-join, and the closing join all
-    * key on 8-byte node ids or (long, long) pairs — nothing wider
-    * than three longs ever shuffles, no windows, no driver-side
-    * graph. The oriented edge frame is persisted: it feeds both sides
-    * of the wedge join and the closing probe.
+    * Scale shape: [[NodeKernel]] over the undirected adjacency (a
+    * node's degree is the length of its list). One message round
+    * sends each node's rank to its neighbours, which keep the
+    * higher-ranked ones as their oriented out-list; each x ships, per
+    * oriented neighbour y, the rest of its rank-ordered list to y's
+    * partition, where it is closed against y's own out-list; per-node
+    * counts are a map-side-combined count. Nothing but longs shuffles,
+    * no driver-side graph, one job.
     *
     * Returns (node, degree, n_triangles, clustering) for every node
     * with degree ≥ 1, clustering = 2T / (d(d−1)) rounded to 6 dp
-    * (0.0 for d < 2).
+    * (0.0 for d < 2). Pairs with a null endpoint and self-loops are
+    * dropped.
     */
   def triangleStats(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b"): DataFrame =
-    triangleStatsImpl(pairs, aCol, bCol, materialize = true)
+    withKernel(pairs, aCol, bCol)(trianglesOn)
 
-  /** [[triangleStats]] without the persist/checkpoint materialization —
-    * the plan-audit seam (the checkpoint collapses the public plan to
-    * an ExistingRDD scan, hiding the join shapes audits must see).
-    */
-  private[graft] def triangleStatsImpl(pairs: DataFrame, aCol: String,
-      bCol: String, materialize: Boolean): DataFrame = {
-    val eRaw = pairs.select(
-        least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .dropDuplicates("u", "v")
-    // The oriented edge list references e three times (both degree
-    // projections and the orientation join), so without a checkpoint
-    // the upstream candidate build (at scale, the whole MinHash/LSH
-    // pipeline) is embedded three times in one analyzed plan —
-    // exchange reuse may or may not collapse the copies, and the
-    // driver re-plans the full tree per AQE stage either way (the
-    // measured r14 driver-gap pathology: 27.5 s of a 40 s emb_pagerank
-    // run, when it was a DataFrame loop over a persisted edge frame,
-    // was zero-task driver gap). One eager fresh-stats checkpoint
-    // truncates all of it.
-    val e = if (materialize) graftCheckpoint(eRaw) else eRaw
-    // deg is referenced four times (both orientation sides, the
-    // closing-degree join, the final rollup join): persist the
-    // node-sized frame so it aggregates once instead of four times.
-    val degRaw = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node")))
-      .groupBy("node").agg(count("*").as("d"))
-    val deg = if (materialize) degRaw.persist() else degRaw
-    // orient by (degree, id): rank as a single sortable struct so the
-    // comparison stays one codegen'd expression
-    val du = deg.select(col("node").as("u"), col("d").as("d_u"))
-    val dv = deg.select(col("node").as("v"), col("d").as("d_v"))
-    val oriented = e.join(du, "u").join(dv, "v")
-      .select(
-        when(struct(col("d_u"), col("u")) < struct(col("d_v"), col("v")),
-          struct(col("u").as("src"), col("v").as("dst")))
-          .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("o"))
-      .select(col("o.src").as("src"), col("o.dst").as("dst"))
-      .join(deg.select(col("node").as("dst"), col("d").as("d_dst")), "dst")
-      .select("src", "dst", "d_dst")
-    val orientedC = if (materialize) oriented.persist() else oriented
-    // wedges centered at the lowest-ranked vertex: both out-neighbors,
-    // ordered by rank so the closing edge (if any) is oriented y→z
-    val o1 = orientedC.select(col("src"), col("dst").as("y"), col("d_dst").as("d_y"))
-    val o2 = orientedC.select(col("src"), col("dst").as("z"), col("d_dst").as("d_z"))
-    val wedges = o1.join(o2, "src")
-      .filter(struct(col("d_y"), col("y")) < struct(col("d_z"), col("z")))
-      .select(col("src").as("x"), col("y"), col("z"))
-    val closing = orientedC.select(col("src").as("y"), col("dst").as("z"))
-    val tri = wedges.join(closing, Seq("y", "z"))
-    val perNode = tri.select(col("x").as("node"))
-      .union(tri.select(col("y").as("node")))
-      .union(tri.select(col("z").as("node")))
-      .groupBy("node").agg(count("*").as("n_triangles"))
-    val raw = deg.join(perNode, Seq("node"), "left")
-      .select(
-        col("node"),
-        col("d").as("degree"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
-        graft.functions.MathFunctions.roundTo(when(col("d") >= 2,
-            lit(2.0) * coalesce(col("n_triangles"), lit(0L)).cast("double") /
-              (col("d").cast("double") * (col("d") - 1).cast("double")))
-          .otherwise(lit(0.0)), 6).as("clustering"))
-    if (!materialize) raw
-    else {
-      // materialize (node-sized) so the oriented/deg caches can be
-      // freed before returning
-      val out = graftCheckpoint(raw)
-      orientedC.unpersist()
-      deg.unpersist()
-      out
+  private def trianglesOn(k: NodeKernel): DataFrame = {
+    val counts = k.frame(triangleCounts(k), StructField("degree", LongType, nullable = false),
+      StructField("n_triangles", LongType, nullable = false)) { case (d, t) => Seq(d, t) }
+    counts.select(col("id").as("node"), col("degree"), col("n_triangles"),
+      graft.functions.MathFunctions.roundTo(when(col("degree") >= 2,
+          lit(2.0) * col("n_triangles").cast(DoubleType) /
+            (col("degree").cast(DoubleType) * (col("degree") - 1).cast(DoubleType)))
+        .otherwise(lit(0.0)), 6).as("clustering"))
+  }
+
+  /** node → (degree, n_triangles) for every node with degree ≥ 1, lazy
+    * (package-private for the lineage audit). */
+  private[graft] def triangleCounts(k: NodeKernel): RDD[(Long, (Long, Long))] = {
+    val rank = k.undirected.mapPartitions(_.map { case (id, nbrs) => (id, (nbrs.length, id)) },
+      preservesPartitioning = true)
+    // node → (degree, higher-ranked neighbours in rank order)
+    val oriented = k.hold(k.round(k.undirected, rank)((r: (Int, Long), _: Int) => Some(r))(
+      (r: (Int, Long)) => mutable.ArrayBuffer(r),
+      (b: mutable.ArrayBuffer[(Int, Long)], r: (Int, Long)) => b += r,
+      (a: mutable.ArrayBuffer[(Int, Long)], b: mutable.ArrayBuffer[(Int, Long)]) => a ++= b)(
+      (me, nbrs) => (me._1.toLong,
+        nbrs.fold(Array.empty[Long])(_.filter(r => RankOrder.lt(me, r)).sorted(RankOrder).map(_._2).toArray))))
+    val wedges = oriented.flatMap { case (x, (_, out)) =>
+      Iterator.range(0, out.length - 1)
+        .map(i => (out(i), (x, java.util.Arrays.copyOfRange(out, i + 1, out.length))))
+    }.partitionBy(k.partitioner)
+    val closed = wedges.zipPartitions(oriented) { (ws, os) =>
+      val outOf = mutable.LongMap.from(os.map { case (y, (_, out)) => (y, out.sorted) })
+      ws.flatMap { case (y, (x, zs)) =>
+        val out = outOf(y)
+        val zIn = zs.filter(java.util.Arrays.binarySearch(out, _) >= 0)
+        if (zIn.isEmpty) Iterator.empty
+        else Iterator((x, zIn.length.toLong), (y, zIn.length.toLong)) ++ zIn.iterator.map((_, 1L))
+      }
+    }.reduceByKey(k.partitioner, _ + _)
+    oriented.zipPartitions(closed, preservesPartitioning = true) { (os, cs) =>
+      val n = mutable.LongMap.from(cs)
+      os.collect { case (v, (d, _)) if d > 0 => (v, (d, n.getOrElse(v, 0L))) }
     }
   }
+
+  /** Node rank for triangle orientation: by degree, then by id. */
+  private val RankOrder: Ordering[(Int, Long)] = Ordering.Tuple2[Int, Long]
 
   /** Per-cluster structural quality — the actionable rollup of
     * [[triangleStats]]: for every near-dup connected component, its
@@ -503,12 +543,9 @@ object Graphs {
     * clusters land identically on any engine; the reported density is
     * the one IEEE division of two exact integers, quantized.
     *
-    * Scale shape: the candidate pair set is PERSISTED and feeds both
-    * [[Dedup.connectedComponents]] and [[triangleStats]] exactly once
-    * (both materialize eagerly via fresh-stats checkpoints, after
-    * which the cache is freed — the ReuseExchange-miss discipline);
-    * the stats join and the cluster rollup are node-sized equi-join +
-    * map-side-combined aggregation keyed by cluster id. `avgClustering`
+    * Scale shape: [[graphSuite]] (one kernel, the pair set read once)
+    * and then a map-side-combined aggregation keyed by cluster id.
+    * `avgClustering`
     * is a mean of 6-dp-quantized doubles rounded at 4 dp — the
     * documented partition-order tolerance for sum-of-double columns.
     */
@@ -545,33 +582,15 @@ object Graphs {
     * keep/collapse/re-verify per document, and the shared base
     * [[clusterQuality]] rolls up per cluster.
     *
-    * Scale shape: `pairs` is persisted and scanned exactly once by
-    * each consumer (both materialize eagerly via fresh-stats
-    * checkpoints, after which the cache is freed — the
-    * ReuseExchange-miss discipline); the final composition is one
-    * node-keyed equi-join of two node-sized frames. Running this
-    * instead of the two queries separately halves the edge-build
-    * cost; at bench scale the suite runs in well under the sum of
-    * its parts (see ROUND11 notes).
+    * Scale shape: one [[NodeKernel]] reads `pairs` once into its
+    * undirected adjacency, and both algorithms run on it, each
+    * materializing its node-sized result; the final composition is
+    * one node-keyed equi-join of the two.
     */
   def graphSuite(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b"): DataFrame = {
-    // Eager fresh-stats checkpoint (was a lazy persist): both
-    // consumers' own internal checkpoints plan over a leaf RDD
-    // instead of re-planning the candidate build's subtree, and the
-    // build still runs exactly once.
-    val p = graftCheckpoint(
-      pairs.select(col(aCol).as("id_a"), col(bCol).as("id_b")))
-    // Overlap the two independent consumers (guide §2.6 pattern):
-    // both depend only on the materialized pair RDD, and each is a
-    // chain of small stages with driver think-time between them —
-    // submitting them from two threads lets one side's tasks backfill
-    // the cores the other side's scheduling gaps leave idle (job
-    // descriptions/groups are thread-local, so cancellation and UI
-    // labels stay per-side).
-    val (cc, tri) = inParallel(
-      Dedup.connectedComponents(p),  // (id, cluster_id), checkpointed
-      triangleStats(p))              // (node, degree, n_triangles, clustering)
+    // 32 rounds: Dedup.connectedComponents' default
+    val (cc, tri) = withKernel(pairs, aCol, bCol)(k => (componentsOn(k, 32), trianglesOn(k)))
     cc.join(tri.withColumnRenamed("node", "id"), "id")
       .select(col("id").as("node"), col("cluster_id"), col("degree"),
         col("n_triangles"), col("clustering"))

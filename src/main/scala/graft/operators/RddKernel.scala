@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** What the co-partitioned RDD kernels ([[Dedup.MinhashKernel]],
-  * [[Similarity.KnnKernel]]) share: one
+  * [[Similarity.KnnKernel]], [[Graphs.NodeKernel]]) share: one
   * `HashPartitioner(spark.sql.shuffle.partitions)` for every shuffle,
   * ids read as longs from an integral id column and written back in
   * that column's type, and the caches a kernel holds until [[close]].
@@ -43,6 +43,12 @@ private[graft] abstract class RddKernel(df: DataFrame, idCol: String, what: Stri
   def hold[T](rdd: RDD[T]): RDD[T] = {
     held.synchronized(held += rdd)
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Drops one cache before [[close]]. */
+  def release(rdd: RDD[_]): Unit = {
+    held.synchronized(held -= rdd)
+    rdd.unpersist(blocking = false)
   }
 
   def close(): Unit = held.synchronized(held.foreach(_.unpersist(blocking = false)))

@@ -572,7 +572,7 @@ object TextAnalysis {
     // token count (portable: one regexp + arithmetic)
     val meanLen = when(n === 0, lit(0.0)).otherwise(
       length(regexp_replace(normalizeText(t), " ", "")).cast("double") / n.cast("double"))
-    val lower_t = lower(t)
+    val lower_t = lowerText(t)
     df.select(
       col(idCol),
       (n < minTokens).as("flag_too_short"),
@@ -1080,7 +1080,7 @@ object TextAnalysis {
     val w = when(length(trim(col(textCol))) === 0, lit(0L))
       .otherwise(size(toks).cast("long"))
     val s = greatest(regexp_count(col(textCol), lit("[.!?]+")).cast("long"), lit(1L))
-    val syl = regexp_count(lower(col(textCol)), lit("[aeiouy]+")).cast("long")
+    val syl = regexp_count(lowerText(col(textCol)), lit("[aeiouy]+")).cast("long")
     val flesch = rd(lit(206.835) -
       lit(1.015) * (w.cast("double") / s.cast("double")) -
       lit(84.6) * (syl.cast("double") / w.cast("double")), 6)
@@ -1124,7 +1124,7 @@ object TextAnalysis {
       val r = rtrim(l)
       r.endsWith(";") || r.endsWith("{") || r.endsWith("}")
     })).cast("long")
-    val kw = regexp_count(lower(col(textCol)),
+    val kw = regexp_count(lowerText(col(textCol)),
       lit("\\b(def|class|return|import|function|void|int)\\b")).cast("long")
     df.select(col(idCol).as("doc_id"), nChars.as("n_chars"), nLines.as("n_lines"),
         sym.as("sym_count"), indent.as("indent_lines"), eol.as("eol_code_lines"),

@@ -32,7 +32,11 @@ object BenchSubset {
     // r14-advice fix: a query that CRASHES must not masquerade as a
     // (fast) timing in before/after artifacts — track per-pass success
     // and report failed queries as -1 plus an explicit "failed" list.
-    def onePass(): Map[String, (Double, Boolean)] = names.map { n =>
+    // Each pass also counts the query's jobs and task CPU seconds.
+    val counters = ShuffleMeter.attachCounters(spark)
+    def onePass(): Map[String, (Double, Boolean, Long, Double)] = names.map { n =>
+      val read = () => counters.jobs.get()
+      val (j0, c0) = (ShuffleMeter.drainAndRead(spark, read), counters.taskCpuNs.get())
       val t0 = System.nanoTime()
       val ok =
         try { graft.SparkEntry.queries(n)(spark, dir).count(); true }
@@ -40,17 +44,22 @@ object BenchSubset {
           System.err.println(s"[bench_subset] $n FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
           false
         }
-      n -> (((System.nanoTime() - t0) / 1e9, ok))
+      val secs = (System.nanoTime() - t0) / 1e9
+      val jobs = ShuffleMeter.drainAndRead(spark, read) - j0
+      n -> ((secs, ok, jobs, (counters.taskCpuNs.get() - c0) / 1e9))
     }.toMap
     val p1 = onePass(); val p2 = onePass()
     def f3(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    def best(n: String): Option[Double] = {
-      val oks = Seq(p1(n), p2(n)).collect { case (s, true) => s }
-      if (oks.isEmpty) None else Some(oks.min)
+    def best(n: String): Option[(Double, Boolean, Long, Double)] = {
+      val oks = Seq(p1(n), p2(n)).filter(_._2)
+      if (oks.isEmpty) None else Some(oks.minBy(_._1))
     }
-    val rows = names.map(n => s""""$n":${best(n).map(f3(_).toString).getOrElse("-1")}""")
+    def field(f: ((Double, Boolean, Long, Double)) => String) =
+      names.map(n => s""""$n":${best(n).map(f).getOrElse("-1")}""").mkString(",")
     val failed = names.filter(best(_).isEmpty)
-    println(s"""{"bench_subset":{${rows.mkString(",")}},"failed":[${failed.map("\"" + _ + "\"").mkString(",")}],"dir":"$dir"}""")
+    println(s"""{"bench_subset":{${field(b => f3(b._1).toString)}},""" +
+      s""""jobs":{${field(_._3.toString)}},"task_cpu_s":{${field(b => f3(b._4).toString)}},""" +
+      s""""failed":[${failed.map("\"" + _ + "\"").mkString(",")}],"dir":"$dir"}""")
     spark.stop()
   }
 }

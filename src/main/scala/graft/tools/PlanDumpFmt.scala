@@ -9,9 +9,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Iterative operators materialize their results EAGERLY while the
   * query DataFrame is being CONSTRUCTED, so the final plan is a scan
-  * of the checkpointed rows. pageRank / labelPropagation have no SQL
-  * plan per round at all (they run on the RDD kernel
-  * `Graphs.NodeKernel`; PlanAuditSpec audits its round lineage).
+  * of the checkpointed rows. The graph algorithms have no SQL plan
+  * per round at all (they run on the RDD kernel `Graphs.NodeKernel`;
+  * PlanAuditSpec audits its round lineage).
   *
   * Usage: sbt "runMain graft.tools.PlanDumpFmt <outdir> <query> [query ...]"
   * (data dir from $SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.001 —

@@ -44,14 +44,18 @@ object ShuffleMeter {
     () => c.shuffleBytes.get()
   }
 
-  /** Running totals of one attached listener: shuffle-write bytes and
-    * started jobs. */
+  /** Running totals of one attached listener: shuffle-write bytes,
+    * started jobs and task CPU nanoseconds. */
   final class Counters extends org.apache.spark.scheduler.SparkListener {
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
     val jobs = new java.util.concurrent.atomic.AtomicLong
+    val taskCpuNs = new java.util.concurrent.atomic.AtomicLong
     override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
-      if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      if (m != null) {
+        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        taskCpuNs.addAndGet(m.executorCpuTime)
+      }
     }
     override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
       jobs.incrementAndGet()

@@ -5,26 +5,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-/** Stat-resetting eager local checkpoint for iterative algorithms.
+/** Stat-resetting eager local checkpoints.
   *
   * `Dataset.localCheckpoint` truncates the LOGICAL plan but
   * deliberately carries the origin plan's `Statistics` onto the
-  * replacement `LogicalRDD`. For a loop whose round-k frame joins the
-  * round-(k−1) checkpoint twice (rank delta probes, label
-  * propagation, pointer doubling), the default size-only estimator
-  * multiplies child sizes, so the carried `sizeInBytes` SQUARES (or
-  * worse) every round: the BigInt doubles in bit-length per
-  * iteration, plan-stats arithmetic starts dominating wall time
-  * (~3×/round growth measured on a 3-node graph by round 20), and at
-  * ~2^31 bits `BigInteger` throws `would overflow supported range`.
+  * replacement `LogicalRDD`. A plan that joins such a frame with
+  * itself (or with a frame derived from it) multiplies the carried
+  * `sizeInBytes` under the default size-only estimator; chained
+  * rounds of that square it every round until plan-stats arithmetic
+  * dominates wall time and `BigInteger` finally throws `would overflow
+  * supported range` (~3×/round growth measured on a 3-node graph by
+  * round 20, when the graph loops were SQL plans).
   *
-  * This helper materializes the frame with a plain eager
-  * `localCheckpoint`, then rebuilds a DataFrame over the SAME
+  * [[localCheckpointFreshStats]] materializes the frame with a plain
+  * eager `localCheckpoint`, then rebuilds a DataFrame over the SAME
   * checkpointed `InternalRow` RDD (zero copy, zero re-encode) via
   * `internalCreateDataFrame` — whose `LogicalRDD` carries NO origin
-  * stats, so every round restarts from the default size estimate.
-  * The conservative default also keeps the optimizer from ever
-  * broadcasting the data-sized iteration frame.
+  * stats, so a consumer plans from the default size estimate, which
+  * also keeps the optimizer from broadcasting a data-sized frame.
+  * [[localCheckpointRows]] does the same for rows an RDD kernel
+  * computed.
   *
   * Lives under `org.apache.spark.sql` solely to reach the
   * `private[sql]` `internalCreateDataFrame`.
@@ -35,43 +35,6 @@ object CheckpointBridge {
       .asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val classic = ck.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     classic.internalCreateDataFrame(ck.queryExecution.toRdd, ck.schema)
-  }
-
-  /** [[localCheckpointFreshStats]] FUSED with a boolean-column count:
-    * materializes the frame and counts the rows where `boolCol` is
-    * true (nulls count as false, matching `filter(col(boolCol))`) in
-    * the SAME job — the checkpointed blocks are persisted as the
-    * counting pass computes them, so an iterative operator's
-    * convergence probe costs zero extra actions instead of one
-    * `isEmpty`/`count` job per round (the r15 fix for the r14-verdict
-    * "CC convergence probe is a per-round driver round-trip" item).
-    *
-    * Mirrors `Dataset.localCheckpoint(eager = true)`'s mechanics:
-    * `queryExecution.toRdd` (with AQE this materializes the upstream
-    * query stages exactly as the eager checkpoint would), a defensive
-    * per-row copy (the scan reuses `InternalRow` buffers), RDD-level
-    * `localCheckpoint()`, then ONE job over a per-partition counting
-    * child — computing every parent partition persists it, and
-    * `SparkContext.runJob`'s `doCheckpoint()` hook finalizes the
-    * checkpoint with no partition left to recompute. The returned
-    * frame scans the SAME checkpointed rows with fresh stats, exactly
-    * like [[localCheckpointFreshStats]].
-    */
-  def localCheckpointFreshStatsCountTrue(df: DataFrame, boolCol: String): (DataFrame, Long) = {
-    val idx = df.schema.fieldIndex(boolCol)
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-    val classic = ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val total = rdd.mapPartitions { it =>
-      var c = 0L
-      while (it.hasNext) {
-        val r = it.next()
-        if (!r.isNullAt(idx) && r.getBoolean(idx)) c += 1
-      }
-      Iterator.single(c)
-    }.collect().sum
-    (classic.internalCreateDataFrame(rdd, ds.schema), total)
   }
 
   /** A frame over an RDD of rows, materialized the way

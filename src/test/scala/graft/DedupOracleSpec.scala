@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.Row
 
 /** The DuckDB oracle inside tier-1 for the queries the MinHash-LSH
-  * kernel and the kNN kernel serve: each query's sf0.001 result must
+  * kernel, the kNN kernel and the graph kernel's connected components
+  * and triangle counts serve: each query's sf0.001 result must
   * equal its golden in `src/test/resources/oracle/`, compared the way
   * `tools/selfcheck.py` compares (columns sorted by name, rows sorted,
   * exact values; a number equals a number of another width with the
@@ -21,7 +22,8 @@ class DedupOracleSpec extends SparkSpec {
   private val Queries = Seq(
     "dedup_minhash_lsh", "dedup_clusters_lsh", "dedup_cluster_quality", "dedup_triangles",
     "graph_suite", "txt_canonical", "txt_curation", "dedup_threshold_profile",
-    "dedup_containment", "dedup_incremental", "emb_knn_graph", "emb_knn_graph_auto")
+    "dedup_containment", "dedup_incremental", "emb_knn_graph", "emb_knn_graph_auto",
+    "dedup_clusters", "dedup_winnowing_clusters")
 
   /** A cell as the comparison sees it. */
   private def norm(v: Any): Any = v match {

@@ -661,6 +661,49 @@ class PlanAuditSpec extends SparkSpec {
     assert(jobs <= 3, s"$jobs jobs")
   }
 
+  test("connectedComponents: rounds are kernel closures, no SQL plan inside the loop") {
+    val k = new graft.operators.Graphs.NodeKernel(ringEdges, "src", "dst")
+    try {
+      val start = k.undirected.mapValues(_ => (0L, 1L))
+      val last = Seq(false, true, true).foldLeft(start)((l, jump) =>
+        graft.operators.Graphs.componentStep(k, jump)(l))
+      val loop = lineage(last, start, k.undirected)
+      val shuffles = loop.flatMap(_.dependencies).collect {
+        case d: org.apache.spark.ShuffleDependency[_, _, _] => d
+      }
+      // a min message per round; a request and a reply per jump
+      assert(shuffles.size == 7, s"${last.toDebugString}")
+      assert(shuffles.count(_.mapSideCombine) == 5, "min messages and requests combine map-side")
+      assert(shuffles.forall(_.partitioner == k.partitioner), "one partitioner for all rounds")
+      val sql = loop.map(_.getClass.getName).filter(_.startsWith("org.apache.spark.sql"))
+      assert(sql.isEmpty, s"no SQL plan inside the loop: $sql")
+      assert(last.partitioner.contains(k.partitioner), "labels stay co-partitioned")
+    } finally k.close()
+  }
+
+  test("connectedComponents: a materialized 64-node chain launches at most 10 jobs") {
+    import org.apache.spark.sql.functions._
+    val chain = org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(
+      spark.range(63).select(col("id").as("id_a"), (col("id") + 1).as("id_b")))
+    val jobs = jobsOf(graft.operators.Dedup.connectedComponents(chain))
+    assert(jobs <= 10, s"$jobs jobs")
+  }
+
+  test("triangleStats: a materialized edge frame launches at most 1 job") {
+    val e = ringEdges
+    val jobs = jobsOf(graft.operators.Graphs.triangleStats(e, "src", "dst"))
+    assert(jobs <= 1, s"$jobs jobs")
+  }
+
+  test("txt_c4_filters, txt_readability, txt_code_detect: lowercase through LowerUtf8, not Spark's lower()") {
+    for (q <- Seq("txt_c4_filters", "txt_readability", "txt_code_detect")) {
+      val exprs = SparkEntry.queries(q)(spark, sf("sf0.001")).queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case e => e.getClass.getSimpleName }))
+      assert(!exprs.contains("Lower"), s"$q plans Spark's lower()")
+      assert(exprs.contains("LowerUtf8"), s"$q lowercases")
+    }
+  }
+
   test("samp_winsorize: thresholds broadcast; windows only roll up bin counts, never values") {
     val p = plan("samp_winsorize")
     assert(p.contains("BroadcastHashJoin"), s"O(groups) thresholds must broadcast:\n$p")
@@ -977,15 +1020,27 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("triangleStats seam: long-keyed joins only, no window, no cartesian") {
-    val pairs = spark.range(3000).select((col("id") % 500).as("id_a"),
-      ((col("id") * 13 + 7) % 500).as("id_b"))
-    val p = graft.operators.Graphs.triangleStatsImpl(pairs, "id_a", "id_b",
-        materialize = false)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("Window"), s"no window:\n$p")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"every join an equi-join:\n$p")
-    assert(p.contains("partial_"), s"degree/per-node counts map-side combined:\n$p")
+    // the triangle counts are kernel closures: audit their lineage
+    val pairs = org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(
+      spark.range(3000).select((col("id") % 500).as("id_a"), ((col("id") * 13 + 7) % 500).as("id_b")))
+    val k = new graft.operators.Graphs.NodeKernel(pairs, "id_a", "id_b")
+    try {
+      val counts = graft.operators.Graphs.triangleCounts(k)
+      val loop = lineage(counts, k.undirected)
+      val shuffles = loop.flatMap(_.dependencies).collect {
+        case d: org.apache.spark.ShuffleDependency[_, _, _] => d
+      }
+      assert(shuffles.size == 3, "orientation, wedges, counts")
+      assert(shuffles.forall(_.partitioner == k.partitioner), "one partitioner")
+      val sql = loop.map(_.getClass.getName).filter(_.startsWith("org.apache.spark.sql"))
+      assert(sql.isEmpty, s"no SQL plan inside the rounds: $sql")
+      val countShuffle = counts.dependencies.map(_.rdd).flatMap(_.dependencies).collect {
+        case d: org.apache.spark.ShuffleDependency[_, _, _] => d
+      }
+      assert(countShuffle.size == 1 && countShuffle.head.mapSideCombine,
+        "per-node counts combine map-side")
+      assert(counts.partitioner.contains(k.partitioner), "counts stay co-partitioned")
+    } finally k.close()
   }
 
   test("emb_diversity: one global agg, no joins, corpus never shuffles") {
