@@ -50,7 +50,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     def f3(d: Double): String = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def f1(d: Double): String = BigDecimal(d).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
 
@@ -59,57 +58,36 @@ object Bench {
     val calib = cpuProbe(n = 1)._1
     val probeBefore = cpuProbe()
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Per-query shuffle accounting: a task-level listener sums shuffle
-    // write bytes; the before/after delta per query is the direct
-    // evidence for the shuffle-minimization claims (a query whose
-    // bytes balloon at higher SF is a scale bug the wall-clock alone
-    // can hide behind fast local disks).
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
-    def drainListeners(): Unit =
-      try org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      catch { case _: Throwable => Thread.sleep(300) }
+    val spark = graft.tools.LocalSession()
+    // One meter for the whole run: per query it records the wall split
+    // (construction, action, driver gap), jobs, stages, task time,
+    // shuffle, spill and GC; the pipeline runs read its CPU and
+    // task-failure totals.
+    val meter = graft.tools.Meter(spark)
     // untimed warm-up: one representative query absorbs JVM/codegen/
     // scan warm-up so the first TIMED query isn't charged for it
     try SparkEntry.queries("q1_agg")(spark, sfDir).count()
     catch { case _: Throwable => }
-    def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame) = {
-      drainListeners()
-      val s0 = shuffleBytes.get()
-      val secs = timed(name)(fn(spark, sfDir).count())
-      drainListeners()
-      (secs, shuffleBytes.get() - s0)
-    }
-    // UNIFORM two passes over every query, keep the per-query min of
-    // (secs, shuffle-bytes-of-that-min-run). Symmetric treatment: no
-    // outlier-only retry bias (the r4 asymmetric policy could only
-    // lower the total) — every query gets the same min-of-2.
+    def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame) =
+      meter.measure(name)(fn(spark, sfDir))(_.count())
+    def secsOf(r: graft.tools.Meter.Record): Double = r.time.get.wallMs / 1e3
+    // UNIFORM two passes over every query, keep the per-query record
+    // of the faster run. Symmetric treatment: no outlier-only retry
+    // bias (the r4 asymmetric policy could only lower the total) —
+    // every query gets the same min-of-2.
     val pass1 = SparkEntry.queries.map { case (name, fn) => name -> timeQuery(name, fn) }
     val pass2 = SparkEntry.queries.map { case (name, fn) => name -> timeQuery(name, fn) }
     // A query that fails in ANY run has no time: it is listed under
     // "failed" and stays out of the total.
-    def minRun(runs: Seq[(Option[Double], Long)]): Option[(Double, Long)] =
-      if (runs.exists(_._1.isEmpty)) None
-      else Some(runs.map { case (s, b) => (s.get, b) }.minBy(_._1))
+    def minRun(runs: Seq[graft.tools.Meter.Record]): Option[graft.tools.Meter.Record] =
+      if (runs.exists(_.time.isEmpty)) None else Some(runs.minBy(secsOf))
     val minOf2 = pass1.map { case (name, r1) => name -> minRun(Seq(r1, pass2(name))) }
     // One extra retry for anything STILL implausibly slow after two
     // passes (both passes can straddle one long throttle window).
-    val sortedSecs = minOf2.values.flatten.map(_._1).toSeq.sorted
+    val sortedSecs = minOf2.values.flatten.map(secsOf).toSeq.sorted
     val median = if (sortedSecs.isEmpty) 0.0 else sortedSecs(sortedSecs.size / 2)
     val outlierNames = minOf2.collect {
-      case (name, Some((s, _))) if s > math.max(2.0, 8 * median) => name
+      case (name, Some(r)) if secsOf(r) > math.max(2.0, 8 * median) => name
     }.toSeq
     val runs = minOf2 ++ outlierNames.map { name =>
       name -> minRun(Seq(pass1(name), pass2(name), timeQuery(name, SparkEntry.queries(name))))
@@ -148,8 +126,6 @@ object Bench {
           // output bytes — the PipelineGate metrics, recorded here so
           // every bench artifact carries its own adjudication evidence
           // (a throttled host inflates `sec` but not `*_cpu_us_per_img`).
-          val execCpuRead = graft.tools.PipelineMeter.attachExecutorCpu(spark)
-          val taskForensics = graft.tools.PipelineMeter.attachTaskForensics(spark)
           val serverCounters = () => (server.requests.get(), server.errors.get())
           case class PipeRun(images: Long, successes: Long, secs: Double,
                              m: graft.tools.PipelineMeter.PipeMeasure) {
@@ -158,8 +134,7 @@ object Bench {
           }
           def runOnce(fmt: String, out: String): PipeRun = {
             val dir = tmp.resolve(out).toString
-            val m = graft.tools.PipelineMeter.measure(spark, execCpuRead, dir,
-              Some(taskForensics), Some(serverCounters)) {
+            val m = graft.tools.PipelineMeter.measure(meter, dir, Some(serverCounters)) {
               val res = Pipeline.download(spark, urlFile.toString, dir,
                 graft.config.DownloadConfig(outputFormat = fmt, samplesPerShard = 250,
                   threadCount = 64, resizeMode = "border", imageSize = 256,
@@ -290,7 +265,7 @@ object Bench {
     // [success] — still inside the tail; under a direct java
     // invocation it is the literal last line), covering last-line,
     // tail-scan, and grep parsers.
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
+    val total = if (results.nonEmpty) results.values.map(secsOf).sum else 0.0
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // FIXED small headline set (r14): the old prefix filter matched
     // ~85 queries and the compact line ran ~2,400 chars — the
@@ -308,7 +283,7 @@ object Bench {
       "txt_quality", "txt_tokens", "txt_canonical",
       "sketch_hll_distinct", "mm_image_meta", "evt_funnel")
     val headline = headlineNames.flatMap(k => results.get(k).map(k -> _))
-    val qsHead = headline.map { case (k, (secs, _)) => "\"" + k + "\":" + f3(secs) }
+    val qsHead = headline.map { case (k, r) => "\"" + k + "\":" + f3(secsOf(r)) }
       .mkString("{", ",", "}")
     val sfName = new java.io.File(sfDir).getName
     val compactFull =
@@ -322,17 +297,20 @@ object Bench {
       else
         s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"queries":{},"sf":"$sfName","detail":"BENCH_FULL.json",$probesCompact$pipelineStats}"""
     try {
-      val qsAll = results.map { case (k, (secs, _)) => "\"" + k + "\":" + f3(secs) }
+      val qsAll = results.map { case (k, r) => "\"" + k + "\":" + f3(secsOf(r)) }
         .mkString("{", ",", "}")
-      val sh = results.map { case (k, (_, b)) => "\"" + k + "\":" + b }
+      val sh = results.map { case (k, r) => "\"" + k + "\":" + r.shuffleWrite }
+        .mkString("{", ",", "}")
+      // the kept run's full meter record per query
+      val recs = results.map { case (k, r) => "\"" + k + "\":" + r.json }
         .mkString("{", ",", "}")
       // first-pass totals ride along so the retry policy's effect is
       // itself auditable (ADVICE r4: report both, not just the min)
-      val p1Total = pass1.values.flatMap(_._1).sum
-      val p2Total = pass2.values.flatMap(_._1).sum
+      val p1Total = pass1.values.flatMap(_.time).map(_.wallMs / 1e3).sum
+      val p2Total = pass2.values.flatMap(_.time).map(_.wallMs / 1e3).sum
       val retriedJson = outlierNames.map("\"" + _ + "\"").mkString("[", ",", "]")
       val full =
-        s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"pass1_total":${f3(p1Total)},"pass2_total":${f3(p2Total)},"queries":$qsAll,"shuffle_bytes":$sh,"extra_retried":$retriedJson,"sf":"$sfDir",$probesJson$pipelineStatsFull}"""
+        s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"pass1_total":${f3(p1Total)},"pass2_total":${f3(p2Total)},"queries":$qsAll,"shuffle_bytes":$sh,"records":$recs,"extra_retried":$retriedJson,"sf":"$sfDir",$probesJson$pipelineStatsFull}"""
       val w = new java.io.PrintWriter("BENCH_FULL.json", "UTF-8")
       try w.println(full) finally w.close()
     } catch { case _: Throwable => } // detail file is best-effort; the line below is the contract
@@ -342,6 +320,7 @@ object Bench {
     // stack hooks that replay stale results at exit
     Bench.lastCompact = compact
     Bench.hookOnce
+    meter.close()
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[bench] ${failed.size} queries FAILED: ${failed.mkString(", ")}")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates `PLANS.md`: the executed physical plans of the
   * heaviest / most design-relevant queries, checked in so the scale
   * claims (pushdown, broadcast, partial aggregation, bucket caps,
@@ -88,11 +86,7 @@ object PlanDump {
     "meta_integrity" -> "distinct parent keys → LeftAnti orphan counts per relation; scalar one-row cross joins broadcast")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.tools.LocalSession(cpus = 4)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val sb = new StringBuilder
     sb.append("# PLANS — executed physical plans of the load-bearing queries\n\n")

@@ -37,7 +37,7 @@ object SparkEntry {
 
   /** Parquet footer schemas per path — METADATA only, never rows.
     * Every bare `read.parquet` runs a footer-inference job (~60–150 ms
-    * driver+scheduling, measured r15 with OverheadProfile: 1 job per
+    * driver+scheduling, measured r15; `tools.Profile` splits it: 1 job per
     * `t()` call in BOTH bench passes — q4_join_multi paid five of
     * them per construction); passing the schema explicitly skips the
     * job while execution still scans the parquet data in full on

@@ -1493,7 +1493,7 @@ object Dedup {
     * the exact Jaccard is computed inside the join — re-joining
     * arrays onto the pair frontier afterwards sorted pair-count ×
     * array rows and was 98% of the x100 wall (r14, see
-    * [[sortedNeighborhoodStaged]]); only slim scored triples shuffle
+    * [[sortedNeighborhoodNearDupsMultiKey]]); only slim scored triples shuffle
     * after the pass.
     *
     * Determinism: rank order is (key, id) with a unique id, and the
@@ -1550,29 +1550,7 @@ object Dedup {
     * distinct over the SURVIVING slim (id_a, id_b, jaccard) triples
     * (the only post-pass shuffle). Total candidate volume is
     * ≤ k·n·(window−1): still linear in n, still no skew tail, no cap
-    * to tune; nothing fat is ever sorted by pair count (see
-    * [[sortedNeighborhoodStaged]] for the r14 profile that forced
-    * this shape).
-    *
-    * Key expressions should be engine-portable ASCII (wrap prefixes in
-    * `hex(...)` — see [[sortedNeighborhoodNearDups]]'s determinism
-    * note). Returns (id_a, id_b, jaccard), id_a < id_b, each pair once.
-    */
-  def sortedNeighborhoodNearDupsMultiKey(
-      df: DataFrame, textCol: String, idCol: String,
-      keyExprs: Seq[Column], window: Int = 10, shingleSize: Int = 3,
-      threshold: Double = 0.3): DataFrame =
-    sortedNeighborhoodStaged(df, textCol, idCol, keyExprs, window,
-      shingleSize, threshold)._3
-
-  /** Stage frontiers of [[sortedNeighborhoodNearDupsMultiKey]] for the
-    * per-stage scale profile (`tools/SnmProfile`, the per-stage
-    * treatment the r13 verdict asked for): (scored candidate union —
-    * every rank-window pair with its exact Jaccard, pre-threshold;
-    * surviving pairs — post-threshold, pre-dedup; verified result —
-    * cross-pass deduped). The third element IS the operator's result —
-    * the public method delegates here, so the profiled stages are the
-    * shipped plan, not a reconstruction.
+    * to tune.
     *
     * r14 redesign (the knn r13 lesson applied to the SNM family):
     * the r13 shape deduped SLIM pairs first and then re-joined the
@@ -1591,11 +1569,15 @@ object Dedup {
     * traffic drops from 2·|pairs| join-sorted rows to ≤ 4·n
     * straight-through rows per pass, and nothing fat is ever sorted
     * by pair count.
+    *
+    * Key expressions should be engine-portable ASCII (wrap prefixes in
+    * `hex(...)` — see [[sortedNeighborhoodNearDups]]'s determinism
+    * note). Returns (id_a, id_b, jaccard), id_a < id_b, each pair once.
     */
-  def sortedNeighborhoodStaged(
+  def sortedNeighborhoodNearDupsMultiKey(
       df: DataFrame, textCol: String, idCol: String,
       keyExprs: Seq[Column], window: Int = 10, shingleSize: Int = 3,
-      threshold: Double = 0.3): (DataFrame, DataFrame, DataFrame) = {
+      threshold: Double = 0.3): DataFrame = {
     require(window >= 2, s"window=$window must be >= 2 (a 1-row neighborhood has no pairs)")
     require(keyExprs.nonEmpty, "at least one blocking-key expression is required")
     val spark = df.sparkSession
@@ -1654,9 +1636,7 @@ object Dedup {
     // The distinct runs even for a single pass (whose pairs are
     // already unique): a keys-only aggregate over the tiny surviving
     // set costs nothing and keeps one code path.
-    val surviving = candUnion.filter(col("jaccard") >= threshold)
-    val verified = surviving.distinct()
-    (candUnion, surviving, verified)
+    candUnion.filter(col("jaccard") >= threshold).distinct()
   }
 
   /** Two-pass [[sortedNeighborhoodNearDupsMultiKey]] with the default

@@ -283,7 +283,8 @@ object Sampling {
     // operator (r15) — the md5 bucket-hash passes are too cheap to earn
     // the round-robin exchange at any placement tried (+0.28 s with
     // doc- or token-level floors on the count passes; no win from the
-    // final logw_q scan floor either — BenchSubset A/B pairs).
+    // final logw_q scan floor either — bench-shaped A/B pairs, the
+    // method `graft.tools.Profile` now runs).
     def bucketCounts(df: DataFrame, cname: String) =
       df.select(explode(toksSafe(col(textCol))).as("__t"))
         .select(bucket(col("__t")).as("__b"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Bimodality forensics harness for the download→resize→package
   * pipeline (r12 verdict #1): the same loopback run as
   * [[PipelineGate]], looped `iters` times, with EVERY run's full
@@ -45,15 +43,8 @@ object PipelineForensics {
     val iters = if (args.length > 0) args(0).toInt else 20
     val n = if (args.length > 1) args(1).toInt else 6000
     val pressureSf = if (args.length > 2) Some(args(2)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val execCpu = PipelineMeter.attachExecutorCpu(spark)
-    val taskForensics = PipelineMeter.attachTaskForensics(spark)
+    val spark = LocalSession()
+    val meter = Meter(spark)
     val server = new graft.util.HttpImageServer
     val serverCounters = () => (server.requests.get(), server.errors.get())
     val out = new java.io.PrintWriter(new java.io.FileWriter("PIPELINE_FORENSICS.jsonl", true))
@@ -77,8 +68,7 @@ object PipelineForensics {
       // iterations — losing exactly the post-pathology samples this
       // instrument exists to collect).
       def once(fmt: String, dir: String): Option[PipelineMeter.PipeMeasure] =
-        try Some(PipelineMeter.measure(spark, execCpu, dir,
-          Some(taskForensics), Some(serverCounters)) {
+        try Some(PipelineMeter.measure(meter, dir, Some(serverCounters)) {
           val r = graft.Pipeline.download(spark, urlFile.toString, dir, cfg(fmt))
           (r.count, r.successes)
         })
@@ -159,6 +149,7 @@ object PipelineForensics {
     } finally {
       out.close()
       server.stop()
+      meter.close()
       spark.stop()
     }
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone pipeline regression gate (the [[SmokeGate]] analog for
   * the download→resize→package pipeline): runs the loopback-server
   * pipeline in the reference's published configuration, measures
@@ -29,15 +27,8 @@ object PipelineGate {
     graft.config.SaltEnv.requireUnsalted("PipelineGate")
     val n = if (args.nonEmpty) args(0).toInt
       else sys.env.getOrElse("SPARK_GRAFT_PIPELINE_GATE_N", "6000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val execCpu = PipelineMeter.attachExecutorCpu(spark)
-    val taskForensics = PipelineMeter.attachTaskForensics(spark)
+    val spark = LocalSession()
+    val meter = Meter(spark)
     val server = new graft.util.HttpImageServer
     val serverCounters = () => (server.requests.get(), server.errors.get())
     var exitCode = 0
@@ -55,8 +46,7 @@ object PipelineGate {
         computeHashCol = Some("sha256"), incrementalMode = "overwrite")
       def once(fmt: String, out: String): PipelineMeter.PipeMeasure = {
         val dir = tmp.resolve(out).toString
-        val m = PipelineMeter.measure(spark, execCpu, dir,
-          Some(taskForensics), Some(serverCounters)) {
+        val m = PipelineMeter.measure(meter, dir, Some(serverCounters)) {
           val r = graft.Pipeline.download(spark, urlFile.toString, dir, cfg(fmt))
           (r.count, r.successes)
         }
@@ -140,6 +130,7 @@ object PipelineGate {
       }
     } finally {
       server.stop()
+      meter.close()
       spark.stop()
     }
     if (exitCode != 0) sys.exit(exitCode)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Machine-independent regression accounting for the
   * download→resize→package pipeline, and the baseline gate over it.
   *
@@ -103,21 +101,6 @@ object PipelineMeter {
     def imgPerSec: Double = if (wallSecs <= 0) 0.0 else images / wallSecs
   }
 
-  /** Attach a task-level listener summing `executorCpuTime` (ns).
-    * Same bracketing discipline as [[ShuffleMeter.attach]]: runs must
-    * be sequential, the counter is global to the context.
-    */
-  def attachExecutorCpu(spark: SparkSession): () => Long = {
-    val total = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) total.addAndGet(m.executorCpuTime)
-      }
-    })
-    () => total.get()
-  }
-
   /** Whole-JVM CPU time (ns since JVM start), −1 if the platform bean
     * is unavailable. In local mode the executors ARE this JVM, so the
     * delta around a run covers pool threads/GC/sinks too.
@@ -157,34 +140,6 @@ object PipelineMeter {
       .map(p => math.max(0L, p.getUsage.getUsed)).sum
   }
 
-  /** Attach a listener counting failed task ends and re-attempted
-    * stages — the "silent retry" forensics: a task that fails and
-    * retries re-runs its download/decode work (CPU charged twice) yet
-    * the pipeline result row still reports zero failures. TaskKilled
-    * ends (speculative-duplicate kills, AQE stage cancellation) are
-    * EXCLUDED (ADVICE r13): a killed task's work is abandoned, not
-    * redone, so counting it would inflate the silent-retry signal with
-    * events that re-run nothing. Same global bracketing discipline as
-    * [[attachExecutorCpu]]. Returns a reader of
-    * (taskFailures, stageRetries) cumulative counts.
-    */
-  def attachTaskForensics(spark: SparkSession): () => (Long, Long) = {
-    val failures = new java.util.concurrent.atomic.AtomicLong
-    val retries = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        te.reason match {
-          case org.apache.spark.Success => ()
-          case _: org.apache.spark.TaskKilled => () // no work redone
-          case _ => failures.incrementAndGet()
-        }
-      override def onStageSubmitted(
-          ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (ss.stageInfo.attemptNumber() > 0) retries.incrementAndGet()
-    })
-    () => (failures.get(), retries.get())
-  }
-
   /** True when the per-image process-CPU of sibling attempts diverges
     * more than `ratio` — the r12 bimodality signature (4–5.5 ms/img
     * healthy vs 16–66 ms/img pathological on identical code). −1
@@ -208,11 +163,15 @@ object PipelineMeter {
     }
   }
 
-  /** Bracket one pipeline run: drains the listener bus before and
-    * after so every finished task's CPU has landed, then reads the
-    * output dir size. `run` returns (images, successes). GC/JIT deltas
-    * are always captured; task-retry and server counters when the
-    * optional readers are supplied (both monotonic-cumulative).
+  /** Bracket one pipeline run: the meter drains the listener bus
+    * before and after so every finished task's CPU has landed, then
+    * the output dir size is read. `run` returns (images, successes).
+    * GC/JIT deltas, task-thread CPU, failed task ends (a task that
+    * fails and retries re-runs its download/decode work, charging its
+    * CPU twice while the result row reports zero failures; killed
+    * tasks re-run nothing and are not counted) and stage re-attempts
+    * are always captured; server counters when the optional reader is
+    * supplied (monotonic-cumulative).
     *
     * `canary = true` (default) additionally runs the out-of-JVM
     * [[HostCanary]] for the duration of the run and brackets the
@@ -220,32 +179,26 @@ object PipelineMeter {
     * costs one busy core out of 32 for the attempt; the committed
     * baseline is measured with it ON, so the cost is in-band.
     */
-  def measure(spark: SparkSession, execCpuRead: () => Long, outDir: String,
-              taskForensics: Option[() => (Long, Long)] = None,
+  def measure(meter: Meter, outDir: String,
               serverCounters: Option[() => (Long, Long)] = None,
               canary: Boolean = true)
              (run: => (Long, Long)): PipeMeasure = {
-    def drain(): Unit =
-      try org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      catch { case _: Throwable => Thread.sleep(300) }
-    drain()
+    val m0 = meter.totals()
     val hs0 = HostProbe.cpuStat(); val ss0 = HostProbe.schedstat()
     val can = if (canary) Some(new HostCanary()) else None
-    val e0 = execCpuRead(); val p0 = processCpuNs(); val t0 = System.nanoTime()
+    val p0 = processCpuNs(); val t0 = System.nanoTime()
     val g0 = gcMillis(); val j0 = jitMillis()
-    val tf0 = taskForensics.map(_.apply()); val sc0 = serverCounters.map(_.apply())
+    val sc0 = serverCounters.map(_.apply())
     val (images, successes) = run
     val wall = (System.nanoTime() - t0) / 1e9
     val canStats = can.map(_.stop())
     val hs1 = HostProbe.cpuStat(); val ss1 = HostProbe.schedstat()
     val mhz = HostProbe.cpuMhz()
-    drain()
+    val d = meter.totals() - m0
     val p1 = processCpuNs()
     // metric-unavailable propagates as −1, never as a 0 delta
     val procDelta = if (p0 < 0 || p1 < 0) -1L else p1 - p0
     val j1 = jitMillis()
-    val (tfF, tfR) = taskForensics.map(_.apply()).zip(tf0)
-      .map { case (a, b) => (a._1 - b._1, a._2 - b._2) }.getOrElse((-1L, -1L))
     val (scQ, scE) = serverCounters.map(_.apply()).zip(sc0)
       .map { case (a, b) => (a._1 - b._1, a._2 - b._2) }.getOrElse((-1L, -1L))
     val (steal, busyPct) = hs0.zip(hs1).map { case (a, b) =>
@@ -256,10 +209,10 @@ object PipelineMeter {
     val runqWait = ss0.zip(ss1)
       .map { case (a, b) => (b._2 - a._2) / 1000000L }.getOrElse(-1L)
     PipeMeasure(images, successes, wall,
-      execCpuRead() - e0, procDelta, dirBytes(outDir),
+      d.taskCpuNs, procDelta, dirBytes(outDir),
       gcMs = gcMillis() - g0,
       jitMs = if (j0 < 0 || j1 < 0) -1L else j1 - j0,
-      taskFailures = tfF, stageRetries = tfR,
+      taskFailures = d.taskFailures, stageRetries = d.stageRetries,
       serverRequests = scQ, serverErrors = scE,
       canaryNsMed = canStats.map(_.medianNs).getOrElse(-1L),
       canaryNsMin = canStats.map(_.minNs).getOrElse(-1L),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-point scale curves for individual queries — the follow-up
   * probe when a [[ScaleSmoke]] 10× ratio looks high: a t10/t1 ratio
   * under 10 is sublinear ON AVERAGE but can hide a superlinear tail
@@ -32,28 +30,21 @@ object ScaleCurve {
     val unknown = queries.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: $unknown")
 
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_INITIAL_PARTITIONS: let AQE START big shuffles at
     // this partition count and coalesce the small ones back down —
     // the production setting for runs whose largest shuffle outgrows
     // cpus × ~200 MB (the x100 curve points)
-    sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS").foreach(n =>
-      builder.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n))
+    val initial = sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")
+      .map("spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> _)
     // SPARK_GRAFT_ADVISORY_PARTITION_BYTES: AQE coalesces post-shuffle
     // partitions back to THIS size regardless of initialPartitionNum —
     // for hash-agg-heavy stages the in-memory hash map runs ~10x the
     // shuffle bytes, so the 64m default packs ~600 MB of agg state per
     // task and spills; 16m is the production setting for agg-bound
     // jobs (measured on the knn x100 point, KNN_PROFILE_r14)
-    sys.env.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES").foreach(n =>
-      builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", n))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val advisory = sys.env.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES")
+      .map("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> _)
+    val spark = LocalSession((initial ++ advisory).toSeq: _*)
 
     val dirs: Seq[(Int, String)] = (1, baseDir) +: factors.map { f =>
       val d = s"$outRoot/x$f"

@@ -169,15 +169,7 @@ object ScaleSmoke {
     val outDir = args(1)
     val maxRatio = if (args.length > 2) args(2).toDouble else 16.0
     val timeoutSec = if (args.length > 3) args(3).toInt else 300
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     buildScaledDir(spark, baseDir, outDir)
 

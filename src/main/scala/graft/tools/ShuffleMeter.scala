@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Per-query shuffle-byte accounting + the baseline regression gate.
+/** The per-query shuffle-byte baseline regression gate (the bytes
+  * come from [[Meter]]).
   *
   * Shuffle-write bytes are the one machine-independent signal this
   * throttle-prone host offers: wall seconds need min-of-2 passes and
@@ -34,51 +33,6 @@ object ShuffleMeter {
   val RatioTolerance = 1.5
   val AbsFloorBytes: Long = 1L << 20
 
-  /** Attach a task-level shuffle-write listener to the session and
-    * return a () => Long reading the running total. The caller brackets
-    * each query with [[drainAndRead]] deltas (queries must run
-    * sequentially — the counter is global to the context).
-    */
-  def attach(spark: SparkSession): () => Long = {
-    val c = attachCounters(spark)
-    () => c.shuffleBytes.get()
-  }
-
-  /** Running totals of one attached listener: shuffle-write bytes,
-    * started jobs and task CPU nanoseconds. */
-  final class Counters extends org.apache.spark.scheduler.SparkListener {
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val taskCpuNs = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        taskCpuNs.addAndGet(m.executorCpuTime)
-      }
-    }
-    override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-  }
-
-  /** [[attach]] with every counter exposed; the caller removes the
-    * listener (`sparkContext.removeSparkListener`) when done. */
-  def attachCounters(spark: SparkSession): Counters = {
-    val c = new Counters
-    spark.sparkContext.addSparkListener(c)
-    c
-  }
-
-  /** Drain the listener bus so every finished task's metrics have
-    * landed, then read the counter — the before/after pair around a
-    * fully-materialized query is that query's shuffle bytes.
-    */
-  def drainAndRead(spark: SparkSession, read: () => Long): Long = {
-    try org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-    catch { case _: Throwable => Thread.sleep(300) }
-    read()
-  }
-
   /** The pure gate: compare measured bytes against the baseline.
     * Returns (breaches, newQueries) — a query absent from the baseline
     * is NEW (reported, never failed: the baseline is regenerated when
@@ -99,12 +53,23 @@ object ShuffleMeter {
     (breaches, newQ)
   }
 
-  /** Load `tools/shuffle_baseline.json` (flat {"query": bytes} map,
-    * written by `SmokeGate` under SPARK_GRAFT_WRITE_SHUFFLE_BASELINE).
+  /** Baseline key recording the `spark.sql.shuffle.partitions` the
+    * bytes were measured at: shuffle bytes grow with the partition
+    * count (sf0.1 `emb_knn_graph`: 4.38 MB at 4, 8.36 MB at 32), so a
+    * baseline only gates runs at its own count.
+    */
+  val PartitionsKey = "__shuffle_partitions"
+
+  /** Load a flat {"key": number} baseline file (`tools/shuffle_baseline.json`,
+    * written by `SmokeGate` under SPARK_GRAFT_WRITE_SHUFFLE_BASELINE,
+    * or `tools/pipeline_baseline.json`), without [[PartitionsKey]].
     * Hand-rolled parse: the file is machine-written flat JSON and the
     * repo carries no JSON library beyond Spark's internals.
     */
   def loadBaseline(path: java.nio.file.Path): Option[Map[String, Long]] =
+    readFlat(path).map(_ - PartitionsKey)
+
+  private def readFlat(path: java.nio.file.Path): Option[Map[String, Long]] =
     if (!java.nio.file.Files.exists(path)) None
     else {
       val txt = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
@@ -112,8 +77,22 @@ object ShuffleMeter {
       Some(re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toLong).toMap)
     }
 
-  def writeBaseline(path: java.nio.file.Path, measured: Map[String, Long]): Unit = {
-    val body = measured.toSeq.sorted
+  /** Why the baseline at `path` cannot gate a run at `partitions`
+    * shuffle partitions, or None when it can (or there is none). */
+  def partitionsMismatch(path: java.nio.file.Path, partitions: Int): Option[String] =
+    readFlat(path).flatMap(_.get(PartitionsKey) match {
+      case Some(p) if p == partitions => None
+      case recorded =>
+        val at = recorded.fold("an unrecorded partition count")(p => s"$p shuffle partitions")
+        Some(s"shuffle baseline $path was measured at $at but this run uses " +
+          s"$partitions; rerun at the baseline's count (SPARK_GRAFT_CPUS) or regenerate it")
+    })
+
+  /** Write a flat baseline file; the shuffle baseline passes the
+    * partition count its bytes were measured at. */
+  def writeBaseline(path: java.nio.file.Path, measured: Map[String, Long],
+                    partitions: Option[Int] = None): Unit = {
+    val body = (measured ++ partitions.map(PartitionsKey -> _.toLong)).toSeq.sorted
       .map { case (n, b) => s"""  "$n": $b""" }.mkString("{\n", ",\n", "\n}\n")
     java.nio.file.Files.write(path, body.getBytes("UTF-8"))
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query wall-time smoke gate — the check that would have caught
   * round 7's winnowing regression (two queries green on correctness at
   * sf0.01 but 300× over budget at sf0.1, which timed out the whole
@@ -35,6 +33,10 @@ import org.apache.spark.sql.SparkSession
   * windows make wall seconds unreadable. Queries missing from the
   * baseline are reported NEW and do not fail; regenerate the baseline
   * with SPARK_GRAFT_WRITE_SHUFFLE_BASELINE=1 after adding queries.
+  * Shuffle bytes grow with the partition count, so the baseline
+  * records the `spark.sql.shuffle.partitions` it was measured at and
+  * a run at any other count is refused up front (exit 2) instead of
+  * being gated against it.
   *
   * Usage: sbt "runMain graft.tools.SmokeGate /root/testdata/sf0.1 60 600"
   * Subset via SPARK_GRAFT_ONLY=a,b,c (same contract as Verify).
@@ -46,16 +48,17 @@ object SmokeGate {
     val sfDir = args(0)
     val timeoutSec = if (args.length > 1) args(1).toInt else 60
     val totalBudgetSec = if (args.length > 2) args(2).toInt else 600
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val readShuffle = ShuffleMeter.attach(spark)
+    val spark = LocalSession()
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val baselinePath = java.nio.file.Paths.get("tools/shuffle_baseline.json")
+    val writeBaseline = sys.env.contains("SPARK_GRAFT_WRITE_SHUFFLE_BASELINE")
+    // bytes measured at one partition count say nothing about another
+    if (!writeBaseline) ShuffleMeter.partitionsMismatch(baselinePath, partitions).foreach { why =>
+      System.err.println(s"[smoke] REFUSED: $why")
+      spark.stop()
+      sys.exit(2)
+    }
+    val meter = Meter(spark)
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double, String, Long)]
@@ -70,12 +73,12 @@ object SmokeGate {
           results += ((name, 0.0, "SKIPPED_BUDGET", 0L))
           println(f"[smoke] $name%-28s ${0.0}%8.2f s  SKIPPED_BUDGET")
         } else {
-          val s0 = ShuffleMeter.drainAndRead(spark, readShuffle)
+          val s0 = meter.totals()
           val (sec, status) = QueryRunner.runWithBudget(
               spark, s"smoke-$name", name, timeoutSec, "smoke") {
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           }
-          val bytes = ShuffleMeter.drainAndRead(spark, readShuffle) - s0
+          val bytes = (meter.totals() - s0).shuffleBytes
           results += ((name, sec, status, bytes))
           println(f"[smoke] $name%-28s ${sec}%8.2f s  $status  ${bytes}%12d B")
         }
@@ -83,11 +86,11 @@ object SmokeGate {
 
     // shuffle gate: only fully-completed runs carry meaningful bytes
     val measured = results.collect { case (n, _, "ok", b) => n -> b }.toMap
-    val baselinePath = java.nio.file.Paths.get("tools/shuffle_baseline.json")
     val (shuffleBreaches, newQueries) =
-      if (sys.env.contains("SPARK_GRAFT_WRITE_SHUFFLE_BASELINE")) {
-        ShuffleMeter.writeBaseline(baselinePath, measured)
-        println(s"[smoke] wrote shuffle baseline: $baselinePath (${measured.size} queries)")
+      if (writeBaseline) {
+        ShuffleMeter.writeBaseline(baselinePath, measured, Some(partitions))
+        println(s"[smoke] wrote shuffle baseline: $baselinePath (${measured.size} queries " +
+          s"at $partitions shuffle partitions)")
         (Seq.empty[ShuffleMeter.Breach], Seq.empty[String])
       } else ShuffleMeter.loadBaseline(baselinePath) match {
         case Some(base) =>
@@ -115,6 +118,7 @@ object SmokeGate {
       .map(b => s""""${b.name}":{"bytes":${b.bytes},"baseline":${b.baseline}}""")
       .mkString("{", ",", "}")
     println(s"""{"smoke_gate":{"sf_dir":"$sfDir","timeout_sec":$timeoutSec,"total_budget_sec":$totalBudgetSec,"total_sec":${f"$totalElapsedSec%.2f"},"breaches":${bad.size},"shuffle_breaches":$shJson,"new_queries":${newQueries.size},"queries":$json}}""")
+    meter.close()
     spark.stop()
     if (bad.nonEmpty || shuffleBreaches.nonEmpty) {
       System.err.println(s"[smoke] FAILED: ${(bad.map(_._1) ++ shuffleBreaches.map(b => s"${b.name} (shuffle)")).mkString(", ")}")

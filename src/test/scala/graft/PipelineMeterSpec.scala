@@ -1,7 +1,7 @@
 package graft
 
 import graft.config.DownloadConfig
-import graft.tools.{PipelineMeter, ShuffleMeter}
+import graft.tools.{Meter, PipelineMeter, ShuffleMeter}
 
 /** End-to-end proof that the pipeline CPU gate trips on a genuine
   * per-image work regression and stays quiet on a healthy re-run —
@@ -22,7 +22,7 @@ class PipelineMeterSpec extends SparkSpec {
   }
 
   test("gate trips on real extra per-image CPU work; healthy re-run passes") {
-    withServer { server =>
+    withServer { server => Meter.using(spark) { meter =>
       val n = 210
       val urls = (0 until n).map { i =>
         val (w, h) = server.sizes(i % server.sizes.length)
@@ -31,17 +31,14 @@ class PipelineMeterSpec extends SparkSpec {
       val tmp = java.nio.file.Files.createTempDirectory("graft_meter_spec")
       val urlFile = tmp.resolve("urls.txt")
       java.nio.file.Files.write(urlFile, urls.mkString("\n").getBytes("UTF-8"))
-      val execCpu = PipelineMeter.attachExecutorCpu(spark)
       val light = DownloadConfig(outputFormat = "dummy", samplesPerShard = 70,
         threadCount = 8, disableAllReencoding = true, computeHashCol = None,
         incrementalMode = "overwrite")
       val heavy = light.copy(disableAllReencoding = false, resizeMode = "border",
         imageSize = 256, computeHashCol = Some("sha256"))
-      val taskForensics = PipelineMeter.attachTaskForensics(spark)
       val serverCounters = () => (server.requests.get(), server.errors.get())
       def run(cfg: DownloadConfig, out: String): PipelineMeter.PipeMeasure =
-        PipelineMeter.measure(spark, execCpu, tmp.resolve(out).toString,
-          Some(taskForensics), Some(serverCounters)) {
+        PipelineMeter.measure(meter, tmp.resolve(out).toString, Some(serverCounters)) {
           val r = Pipeline.download(spark, urlFile.toString,
             tmp.resolve(out).toString, cfg)
           (r.count, r.successes)
@@ -76,7 +73,7 @@ class PipelineMeterSpec extends SparkSpec {
       assert(quiet.isEmpty,
         s"healthy re-run (warmer JIT) must stay inside the gate: " +
           s"base=${base.execCpuUsPerImg}us rerun=${rerun.execCpuUsPerImg}us")
-    }
+    }}
   }
 
   test("check: CPU gates upward only; out-bytes gates both ways; floor and new metrics") {
@@ -154,14 +151,14 @@ class PipelineMeterSpec extends SparkSpec {
 
   test("measure: canary + /proc fields land in the PipeMeasure") {
     assume(new java.io.File("/proc/stat").exists, "Linux-only fields")
-    val m = PipelineMeter.measure(spark, () => 0L, "/tmp/graft_canary_none") {
+    val m = Meter.using(spark)(PipelineMeter.measure(_, "/tmp/graft_canary_none") {
       // burn real CPU for ~2.5 s so the canary collects chunks
       val deadline = System.nanoTime() + 2500L * 1000000L
       var x = 1L
       while (System.nanoTime() < deadline) x ^= graft.tools.CanaryProcess.chunk(1L << 20, x)
       if (x == 42L) println("")
       (100L, 100L)
-    }
+    })
     assert(m.canaryMode === "process", s"canary mode: $m")
     assert(m.canaryChunks > 0 && m.canaryNsMed > 0 && m.canaryNsMin > 0,
       s"canary stats must be captured: $m")

@@ -153,7 +153,7 @@ class PlanAuditSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      graft.tools.ShuffleMeter.drainAndRead(spark, () => 0L)
+      graft.tools.Meter.drain(spark)
     } finally spark.sparkContext.removeSparkListener(l)
     names.synchronized(names.toSeq)
   }
@@ -636,15 +636,11 @@ class PlanAuditSpec extends SparkSpec {
     } finally k.close()
   }
 
-  /** Jobs started while `body` runs (ShuffleMeter's listener). */
-  private def jobsOf(body: => Unit): Long = {
-    val c = graft.tools.ShuffleMeter.attachCounters(spark)
-    try {
-      val read = () => c.jobs.get()
-      val j0 = graft.tools.ShuffleMeter.drainAndRead(spark, read)
-      body
-      graft.tools.ShuffleMeter.drainAndRead(spark, read) - j0
-    } finally spark.sparkContext.removeSparkListener(c)
+  /** Jobs started while `body` runs (the tools' meter). */
+  private def jobsOf(body: => Unit): Long = graft.tools.Meter.using(spark) { m =>
+    val j0 = m.totals().jobs
+    body
+    m.totals().jobs - j0
   }
 
   test("pageRank: 5 rounds over a materialized edge frame launch at most 3 jobs") {
