@@ -272,16 +272,10 @@ object Bench {
     // driver's 2,000-char stdout tail cut its HEAD off, which is
     // exactly why BENCH_r12/r13 landed "parsed: null" (both committed
     // tails start mid-line). One representative per family plus the
-    // heaviest entries keeps the line ~1,300 chars with room for
-    // sbt's trailing [success] line; the full per-query map is in
-    // BENCH_FULL.json as always.
-    val headlineNames = Seq(
-      "q1_agg", "q4_join_multi", "q7_window_rank",
-      "dedup_exact", "dedup_minhash_lsh", "dedup_snm_multipass",
-      "dedup_edit_distance", "ann_bruteforce_topk", "emb_knn_graph_auto",
-      "emb_pagerank", "emb_label_prop", "graph_suite",
-      "txt_quality", "txt_tokens", "txt_canonical",
-      "sketch_hll_distinct", "mm_image_meta", "evt_funnel")
+    // heaviest entries (the `Headline` tag) keeps the line ~1,300
+    // chars with room for sbt's trailing [success] line; the full
+    // per-query map is in BENCH_FULL.json as always.
+    val headlineNames = graft.queries.QuerySpec.tagged(graft.queries.QuerySpec.Headline)
     val headline = headlineNames.flatMap(k => results.get(k).map(k -> _))
     val qsHead = headline.map { case (k, r) => "\"" + k + "\":" + f3(secsOf(r)) }
       .mkString("{", ",", "}")

@@ -167,11 +167,13 @@ object Pipeline {
     val endTime = System.currentTimeMillis() / 1000.0
     // metaFrame reads the durable sidecars (this and earlier runs') —
     // acting on it later never re-triggers downloads. No sidecars →
-    // empty frame.
+    // empty frame. The read takes the paths the glob found: given the
+    // glob string, the data-source resolution first probes it as a
+    // literal directory and logs a FileNotFoundException.
+    val sidecars = Option(fs.globStatus(new Path(s"$outDir/*.parquet")))
+      .getOrElse(Array.empty).map(_.getPath.toString)
     val metaFrame =
-      if (Option(fs.globStatus(new Path(s"$outDir/*.parquet"))).exists(_.nonEmpty))
-        spark.read.parquet(s"$outDir/*.parquet")
-      else spark.emptyDataFrame
+      if (sidecars.nonEmpty) spark.read.parquet(sidecars.toSeq: _*) else spark.emptyDataFrame
     // K8 wandb-parity: the authoritative post-run counters flow to the
     // structured metrics hook + optional JSON-lines file — the same
     // numbers the reference ships to wandb (logger.py:119-141).

@@ -5,11 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = graft.tools.LocalSession()
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c — run a subset (builder-side iteration;
     // the driver never sets it, so the gate always runs everything).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val only = graft.queries.QuerySpec.only
+    val spark = graft.tools.LocalSession()
+    new java.io.File(outDir).mkdirs()
     // per-query outcome: Right(rows written) | Left(error class) —
     // feeds the driver-scrapable trailing JSON line (r13 verdict #3:
     // three rounds of CORRECTNESS_rN.json = {} were a driver scrape

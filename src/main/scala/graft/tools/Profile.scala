@@ -33,9 +33,7 @@ object Profile {
     require(positional.length >= 2,
       "usage: Profile <dir> <query> [query ...] [--stages] [--plan] [--formatted <outdir>]")
     val dir = positional.head
-    val names = positional.tail.toSeq
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: $unknown")
+    val names = graft.queries.QuerySpec.requireKnown(positional.tail.toSeq)
 
     val spark = LocalSession()
     try Meter.using(spark) { meter =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit, TimeoutException}
 
 /** Shared per-query timed-run harness for the gate tools
-  * ([[SmokeGate]], [[ScaleSmoke]]): run a body to full materialization
+  * ([[SmokeGate]], [[ScaleSmoke]], [[ScaleCurve]]): run a body to full materialization
   * on its OWN single-thread executor under a wall budget, cancel the
   * Spark job group on breach, and measure from the moment the task
   * actually starts (never from submit, so a stuck predecessor cannot

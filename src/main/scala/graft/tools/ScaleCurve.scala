@@ -10,8 +10,10 @@ package graft.tools
   *
   * Builds one [[ScaleSmoke.buildScaledDir]] dataset per factor
   * (cached by the completion marker) and times each query at 1× plus
-  * every factor; prints per-query seconds and marginal ratios plus a
-  * trailing JSON line for the round artifact.
+  * every factor through [[QueryRunner.runWithBudget]] (a point over
+  * `timeoutSec` is cancelled and reported TIMEOUT); prints per-query
+  * seconds and marginal ratios plus a trailing JSON line for the round
+  * artifact.
   *
   * Usage:
   *   sbt "runMain graft.tools.ScaleCurve /root/testdata/sf0.1 /tmp/graft_curve \
@@ -24,11 +26,10 @@ object ScaleCurve {
       "usage: ScaleCurve <base sf dir> <out root> <queriesCsv> <factorsCsv> [timeoutSec]")
     val baseDir = args(0)
     val outRoot = args(1)
-    val queries = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val queries = graft.queries.QuerySpec.requireKnown(
+      args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val factors = args(3).split(",").map(_.trim.toInt).toSeq.sorted
     val timeoutSec = if (args.length > 4) args(4).toInt else 300
-    val unknown = queries.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: $unknown")
 
     // SPARK_GRAFT_INITIAL_PARTITIONS: let AQE START big shuffles at
     // this partition count and coalesce the small ones back down —
@@ -51,24 +52,17 @@ object ScaleCurve {
       ScaleSmoke.buildScaledDir(spark, baseDir, d, f)
       (f, d)
     }
+    // one point: full materialization under the wall budget, cancelled
+    // and reported TIMEOUT on breach
+    def run(q: String, f: Int, d: String): (Double, String) =
+      QueryRunner.runWithBudget(spark, s"curve-$q-x$f", q, timeoutSec, "curve") {
+        graft.SparkEntry.queries(q)(spark, d).write.format("noop").mode("overwrite").save()
+      }
     // warm-up at 1× absorbs JVM/codegen cost
-    queries.headOption.foreach { q =>
-      try graft.SparkEntry.queries(q)(spark, baseDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    }
+    queries.headOption.foreach(run(_, 1, baseDir))
     def f2(d: Double) = BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP)
     val rows = queries.map { q =>
-      val points = dirs.map { case (f, d) =>
-        val t0 = System.nanoTime()
-        val status =
-          try { graft.SparkEntry.queries(q)(spark, d)
-            .write.format("noop").mode("overwrite").save(); "ok" }
-          catch { case e: Throwable => e.getClass.getSimpleName }
-        val secs = (System.nanoTime() - t0) / 1e9
-        if (secs > timeoutSec) println(s"[curve] WARNING: $q @${f}x ran ${f2(secs)} s")
-        (f, secs, status)
-      }
+      val points = dirs.map { case (f, d) => val (secs, status) = run(q, f, d); (f, secs, status) }
       val marginals = points.sliding(2).collect {
         case Seq((f1x, t1, _), (f2x, t2, _)) =>
           s""""x${f1x}_to_x$f2x":${f2(t2 / math.max(t1, 1e-9))}"""

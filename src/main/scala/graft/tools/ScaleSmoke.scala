@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.QuerySpec
+
 /** sf1 (10×) scale tier for the heavy queries — the check the 60 s
   * sf0.1 [[SmokeGate]] cannot do: a per-query budget catches
   * constant-factor bombs, but SUPERLINEAR creep (an uncapped bucket
@@ -22,10 +24,12 @@ import org.apache.spark.sql.functions._
   *  - every other table copied as-is (schema parity so any query can
   *    run; only documents/embeddings-driven queries are graded).
   *
-  * Then times each query in [[ScaledQueries]] once at 1× (after a
-  * warm-up) and once at 10× (noop sink, full materialization,
-  * per-query wall budget with job-group cancel), and grades the
-  * t10/t1 ratio against `maxRatio` (default 16 ≈ 10× rows with log
+  * Then times each `Scale10x`-tagged query (the heaviest sf0.1 bench
+  * queries driven by the tables this tier scales; queries reading the
+  * TPC-H tables would measure a 1× ratio and are left to SmokeGate)
+  * once at 1× (after a warm-up) and once at 10× (noop sink, full
+  * materialization, per-query wall budget with job-group cancel), and
+  * grades the t10/t1 ratio against `maxRatio` (default 16 ≈ 10× rows with log
   * headroom for O(n log n) shapes and round growth). The two EXACT
   * all-pairs recall oracles (dedup_embed_cosine, and
   * dedup_ngram_jaccard's cross-copy behavior is linear here by
@@ -39,51 +43,6 @@ import org.apache.spark.sql.functions._
   * Usage: sbt "runMain graft.tools.ScaleSmoke /root/testdata/sf0.1 /tmp/graft_sf1 [maxRatio] [timeoutSec]"
   */
 object ScaleSmoke {
-
-  /** Heaviest sf0.1 bench queries driven by documents/embeddings/
-    * events — the tables the 10× tier scales. (Queries reading the
-    * TPC-H tables would measure a 1× ratio here and are left to
-    * SmokeGate.)
-    */
-  val ScaledQueries: Seq[String] = Seq(
-    "dedup_incremental", "txt_canonical", "dedup_clusters_lsh", "dedup_clusters",
-    "dedup_edit_distance", "txt_curation", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "txt_fuzzy_decontaminate", "txt_ccnet_buckets", "dedup_winnowing_clusters",
-    "dedup_winnowing", "dedup_embed_lsh", "txt_pmi", "dedup_simhash", "txt_keywords",
-    "dedup_semantic", "dedup_hamming_pairs", "sketch_cms_topk", "ann_ivf_topk",
-    "dedup_containment", "txt_novelty", "txt_domain_quality",
-    "dedup_triangles", "emb_drift", "emb_kcenter", "dedup_cluster_quality",
-    // graph class: iterative frames over the scaled embeddings-derived
-    // edges — their 10× points previously lived only in round-notes
-    // prose from GRAFT_STRESS runs; one committed JSON carries them now
-    "emb_pagerank", "emb_label_prop", "emb_knn_graph",
-    // round-11 one-build-many-queries suites + the key-depth advisor
-    "graph_suite", "emb_graph_suite", "emb_bucket_profile",
-    // round-12: the band advisor, the recall advisor, and the
-    // DEFAULT-parameter (corpus-derived depth) knn build — the tier
-    // proves the advisors are themselves scale-clean and that auto
-    // depth keeps the default build near-linear where pinned-8 wasn't
-    "dedup_band_profile", "emb_recall_profile", "emb_knn_graph_auto",
-    "dedup_recall_profile",
-    // round-12 session 2: the sorted-neighborhood blocking family
-    // (candidate volume exactly n·(w−1) — the tier proves the range-
-    // exchange + bucket-join rank pairing stays linear), the one-row
-    // stats OOD scan, and the Markov scoring (one user-keyed window)
-    "dedup_sorted_neighborhood", "emb_ood_score", "evt_markov_score",
-    "evt_changepoint", "emb_pq_profile", "emb_ivf_profile",
-    "dedup_threshold_profile", "evt_gap_profile",
-    // round-13: the multi-pass merge/purge variant (two ranked passes
-    // + slim pair distinct — the tier proves the union/dedup stays
-    // linear like its single-pass parent)
-    "dedup_snm_multipass",
-    // round-10 additions over documents/embeddings
-    "txt_zipf", "txt_boilerplate", "txt_readability", "txt_code_detect",
-    "emb_diversity", "emb_silhouette", "emb_dims_health", "emb_recall_eval",
-    // event-analytics class: events scale on the USER axis (10× users,
-    // same per-user behavior and calendar span — how a real log grows)
-    "evt_active_users", "evt_attribution", "evt_paths", "evt_rfm",
-    "evt_lifecycle", "evt_cohort_ltv", "evt_gini", "evt_bots",
-    "evt_cooccurrence", "evt_funnel", "evt_trend", "evt_regularity")
 
   /** Build the `factor`× dir (default 10 — the committed tier;
     * [[ScaleCurve]] reuses it for 30× spot checks). Idempotency is
@@ -169,13 +128,13 @@ object ScaleSmoke {
     val outDir = args(1)
     val maxRatio = if (args.length > 2) args(2).toDouble else 16.0
     val timeoutSec = if (args.length > 3) args(3).toInt else 300
+    val only = QuerySpec.only
     val spark = LocalSession()
 
     buildScaledDir(spark, baseDir, outDir)
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val queries = graft.SparkEntry.queries
-    val rows = ScaledQueries
+    val rows = QuerySpec.tagged(QuerySpec.Scale10x)
       .filter(n => only.forall(_.contains(n)))
       .map { name =>
         val fn = queries(name)

@@ -48,6 +48,7 @@ object SmokeGate {
     val sfDir = args(0)
     val timeoutSec = if (args.length > 1) args(1).toInt else 60
     val totalBudgetSec = if (args.length > 2) args(2).toInt else 600
+    val only = graft.queries.QuerySpec.only
     val spark = LocalSession()
     val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val baselinePath = java.nio.file.Paths.get("tools/shuffle_baseline.json")
@@ -60,7 +61,6 @@ object SmokeGate {
     }
     val meter = Meter(spark)
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double, String, Long)]
     val runStart = System.nanoTime()
     def totalElapsedSec: Double = (System.nanoTime() - runStart) / 1e9

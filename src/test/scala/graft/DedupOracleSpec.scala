@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.Row
 
-/** The DuckDB oracle inside tier-1 for the queries the MinHash-LSH
-  * kernel, the kNN kernel and the graph kernel's connected components
-  * and triangle counts serve: each query's sf0.001 result must
-  * equal its golden in `src/test/resources/oracle/`, compared the way
+import graft.queries.QuerySpec
+
+/** The DuckDB oracle inside tier-1 for the `Golden`-tagged queries
+  * (those the MinHash-LSH kernel, the kNN kernel and the graph
+  * kernel's connected components and triangle counts serve): each
+  * query's sf0.001 result must equal its golden in
+  * `src/test/resources/oracle/`, compared the way
   * `tools/selfcheck.py` compares (columns sorted by name, rows sorted,
   * exact values; a number equals a number of another width with the
   * same value).
@@ -18,12 +21,6 @@ import org.apache.spark.sql.Row
   * `emb_pagerank`'s did not finish in 500 s on DuckDB at sf0.001.
   */
 class DedupOracleSpec extends SparkSpec {
-
-  private val Queries = Seq(
-    "dedup_minhash_lsh", "dedup_clusters_lsh", "dedup_cluster_quality", "dedup_triangles",
-    "graph_suite", "txt_canonical", "txt_curation", "dedup_threshold_profile",
-    "dedup_containment", "dedup_incremental", "emb_knn_graph", "emb_knn_graph_auto",
-    "dedup_clusters", "dedup_winnowing_clusters")
 
   /** A cell as the comparison sees it. */
   private def norm(v: Any): Any = v match {
@@ -52,7 +49,7 @@ class DedupOracleSpec extends SparkSpec {
     (names, rows.map(r => idx.map(i => norm(r.get(i)))).sorted(rowOrder))
   }
 
-  for (q <- Queries) test(s"$q matches its DuckDB golden at sf0.001") {
+  for (q <- QuerySpec.tagged(QuerySpec.Golden)) test(s"$q matches its DuckDB golden at sf0.001") {
     val url = getClass.getResource(s"/oracle/$q.parquet")
     assert(url != null, s"no golden for $q: run tools/selfcheck.py --write-golden")
     val golden = spark.read.parquet(url.toString)

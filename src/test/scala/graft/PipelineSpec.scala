@@ -67,6 +67,37 @@ class PipelineSpec extends SparkSpec {
     assert(succ.toSeq.map(r => (r.getInt(0), r.getInt(1))) == Seq((256, 256)))
   }
 
+  test("metaFrame reads every shard's sidecar, and the read logs no FileStreamSink WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warned.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.setLevel(Level.WARN)
+    logger.addAppender(capture)
+    val urls = server.allowedUrls
+    val out = tmpDir("meta")
+    val res =
+      try Pipeline.download(spark, writeUrlList("meta", urls), out,
+        baseCfg.copy(outputFormat = "webdataset"))
+      finally { logger.removeAppender(capture); logger.setLevel(level); capture.stop() }
+    assert(warned.isEmpty, s"FileStreamSink warned: $warned")
+    val sidecars = new java.io.File(out).listFiles.filter(_.getName.endsWith(".parquet"))
+      .map(_.getName).sorted.toSeq
+    assert(sidecars == Seq("00000.parquet", "00001.parquet"))
+    assert(res.metaFrame.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName)
+      .sorted.toSeq == sidecars)
+    assert(res.metaFrame.count() == urls.size)
+  }
+
   test("webdataset sink: {shard:05d}.tar with entries per success") {
     val urls = server.allowedUrls
     val out = tmpDir("wds")

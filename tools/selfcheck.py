@@ -19,6 +19,8 @@ oracle SQL. sfdir must be the sf0.001 data the specs read, and
 SPARK_GRAFT_ONLY picks the queries, e.g.
   SPARK_GRAFT_ONLY=dedup_minhash_lsh,dedup_incremental \
     python3 tools/selfcheck.py <data>/sf0.001 /tmp/golden_out --write-golden
+A new golden is checked only once its query carries the `Golden` tag
+(QuerySpecSpec fails while the tags and the golden files differ).
 """
 import sys, os, json, subprocess, glob
 
@@ -61,7 +63,11 @@ oracle = json.load(open(f"{OUT}/oracle_sql.json"))
 # hold stale results from an earlier run at a different SF, and those
 # must not masquerade as failures of the current subset
 only = os.environ.get("SPARK_GRAFT_ONLY")
-only_set = set(x.strip() for x in only.split(",")) if only else None
+only_set = set(x.strip() for x in only.split(",") if x.strip()) if only else None
+if only_set is not None and only_set - set(oracle):
+    # a typo must not select nothing and pass
+    print(f"SPARK_GRAFT_ONLY names unknown queries: {sorted(only_set - set(oracle))}")
+    sys.exit(2)
 
 if WRITE_GOLDEN:
     gdir = os.path.join(REPO, "src", "test", "resources", "oracle")
