@@ -431,7 +431,7 @@ object DedupQueries {
          UNION ALL SELECT doc_id, 2 AS batch FROM b2_surv
          ORDER BY doc_id"""
     }),
-    QuerySpec("dedup_simhash", Scale10x)((s, dir) =>
+    QuerySpec("dedup_simhash", Scale10x, Golden)((s, dir) =>
       Dedup.simhashNearDups(t(s, dir, "documents"), "text", "doc_id", maxHamming = 8,
           portableHash = true)
         .orderBy("id_a", "id_b"))(simhashOracleSql),
@@ -441,7 +441,7 @@ object DedupQueries {
           dim = 64, threshold = 0.4, nPlanes = 8, nTables = 8)
         .select(col("id_a"), col("id_b"), rd(col("cosine"), 6).as("cosine"))
         .orderBy("id_a", "id_b"))(embedLshOracleSql),
-    QuerySpec("dedup_semantic", Scale10x,
+    QuerySpec("dedup_semantic", Scale10x, Golden,
       PlanDoc("narrow literal-matrix cell assignment, slim within-cell self-join, keep-lowest-id anti-join"))((s, dir) =>
       // SemDeDup: k-means cells + within-cell cosine pruning, keep the
       // lowest-id representative. Deterministic portable-seed variant
@@ -586,7 +586,7 @@ object DedupQueries {
            least(n.doc_id, min(r.dst)) AS cluster_id
          FROM nodes n LEFT JOIN reach r ON r.src = n.doc_id
          GROUP BY n.doc_id ORDER BY n.doc_id"""),
-    QuerySpec("dedup_edit_distance", Headline, Scale10x,
+    QuerySpec("dedup_edit_distance", Headline, Scale10x, Golden,
       PlanDoc("LSH candidates with (id,len,band,key) rows; length pre-filter before text joins; bounded levenshtein"))((s, dir) =>
       // MinHash-LSH candidates (same portable chain as
       // dedup_minhash_lsh) verified by BOUNDED levenshtein over the
@@ -694,7 +694,7 @@ object DedupQueries {
              " / (CAST(tdeg.d AS DOUBLE) * CAST(tdeg.d - 1 AS DOUBLE)) ELSE 0.0 END", 6)}
            AS clustering
          FROM tdeg LEFT JOIN tpn USING (node) ORDER BY doc_id"""),
-    QuerySpec("dedup_band_profile", Scale10x)((s, dir) =>
+    QuerySpec("dedup_band_profile", Scale10x, Golden)((s, dir) =>
       // Text-side LSH advisor: per-band bucket occupancy + the exact
       // candidate work the minhash dedup's candidate join will pay —
       // shows which bands carry hot (degenerate/boilerplate) buckets
@@ -710,7 +710,7 @@ object DedupQueries {
            CAST(sum(CASE WHEN m > 1000 THEN 1 ELSE 0 END) AS BIGINT) AS n_over_cap,
            CAST(sum(CASE WHEN m <= 1000 THEN m * (m - 1) // 2 ELSE 0 END) AS BIGINT) AS candidate_pairs
          FROM bpf GROUP BY band ORDER BY band"""),
-    QuerySpec("dedup_recall_profile", Scale10x)((s, dir) =>
+    QuerySpec("dedup_recall_profile", Scale10x, Golden)((s, dir) =>
       // The recall half of the band decision: per bands value, the
       // exact capped candidate work PLUS the measured fraction of
       // true near-dup pairs (exact Jaccard >= 0.3 on an 8-doc

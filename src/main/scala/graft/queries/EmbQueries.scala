@@ -529,7 +529,7 @@ object EmbQueries {
            FROM s)
          SELECT query_id, corpus_id, cosine, rank FROM r WHERE rank <= 10
          ORDER BY query_id, rank"""),
-    QuerySpec("ann_ivf_topk", Scale10x, PlanDoc("narrow literal-matrix assignment, broadcast probes"))((s, dir) => {
+    QuerySpec("ann_ivf_topk", Scale10x, Golden, PlanDoc("narrow literal-matrix assignment, broadcast probes"))((s, dir) => {
       // deterministic variant (portable-hash seed cells, no Lloyd
       // averaging) so the DuckDB oracle replicates the whole IVF
       // pipeline; the k-means path keeps its recall gate in DedupSpec
@@ -541,7 +541,7 @@ object EmbQueries {
         .select(col("query_id"), col("corpus_id"), rd(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("query_id", "rank")
     })(annIvfOracleSql),
-    QuerySpec("ann_pq_topk", PlanDoc("narrow codebook-literal encode + ADC, corpus never shuffles"))((s, dir) => {
+    QuerySpec("ann_pq_topk", Golden, PlanDoc("narrow codebook-literal encode + ADC, corpus never shuffles"))((s, dir) => {
       // deterministic variant (portable-seed codebook) so the DuckDB
       // oracle replicates PQ encode + ADC scoring bit-for-bit
       val e = t(s, dir, "embeddings")
@@ -681,14 +681,14 @@ object EmbQueries {
       // emb_knn_graph finding) BEFORE a big build.
       graft.operators.Similarity.lshBucketProfile(t(s, dir, "embeddings"),
         "embedding", "vec_id", dim = 64, nPlanes = 8, nTables = 8))(embBucketProfileOracleSql),
-    QuerySpec("emb_pq_profile", Scale10x)((s, dir) =>
+    QuerySpec("emb_pq_profile", Scale10x, Golden)((s, dir) =>
       // PQ codebook-quality advisor: exact mean reconstruction error
       // per candidate subspace count (shared seed codebook), one
       // narrow corpus scan scoring every m at once — the bits-vs-
       // distortion curve measured before a cluster-wide encode.
       graft.operators.Similarity.pqDistortionProfile(t(s, dir, "embeddings"),
         "embedding", "vec_id", dim = 64, portableSeed = true))(pqProfileOracleSql),
-    QuerySpec("emb_ivf_profile", Scale10x)((s, dir) =>
+    QuerySpec("emb_ivf_profile", Scale10x, Golden)((s, dir) =>
       // IVF nProbe advisor: exact scan work + sampled recall@k per
       // candidate probe count — ONE corpus pass scores every depth
       // (cells partition the corpus, so each candidate row carries
@@ -906,7 +906,7 @@ object EmbQueries {
            END AS mean_pairwise_sqdist
          FROM dvt"""
     }),
-    QuerySpec("emb_recall_eval", Scale10x,
+    QuerySpec("emb_recall_eval", Scale10x, Golden,
       PlanDoc("both ANN arms broadcast queries; overlap join broadcasts the k·|Q|-row approx arm; count map-side combined"))((s, dir) => {
       // ANN self-QA: recall@10 of the deterministic IVF index vs the
       // exact brute-force top-10 on the same query split.

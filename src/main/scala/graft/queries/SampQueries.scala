@@ -99,7 +99,7 @@ object SampQueries {
        rk AS (SELECT key, id,
            CAST(row_number() OVER (PARTITION BY key ORDER BY b, id) AS INTEGER) AS rank FROM sc)
        SELECT key, id, rank FROM rk WHERE rank <= 10 ORDER BY key, rank"""),
-    QuerySpec("samp_cluster_balanced",
+    QuerySpec("samp_cluster_balanced", Golden,
       PlanDoc("narrow literal-matrix cell assignment; per-cell bounded heap — no window sorts a cell"))((s, dir) =>
       // Diversity sampling: ≤ perCell rows from each k-means cell,
       // picked by deterministic hash order via the bounded heap —

@@ -323,7 +323,7 @@ object TextQueries {
          WHERE lang_pred = 'en' AND quality_score >= 0.5
            AND doc_id NOT IN (SELECT doc_id FROM losers)
          ORDER BY doc_id"""),
-    QuerySpec("txt_fuzzy_decontaminate", Scale10x,
+    QuerySpec("txt_fuzzy_decontaminate", Scale10x, Golden,
       PlanDoc("cross-corpus band join (corpus buckets vs benchmark buckets); capped; exact-Jaccard verify"))((s, dir) => {
       // FUZZY decontamination: corpus docs (doc_id >= 20) whose n-gram
       // Jaccard vs any eval doc (doc_id < 20) reaches 0.3 are removed
