@@ -24,21 +24,17 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** 32-way busy-loop probe: per-thread seconds for a fixed xorshift
-    * workload run on `n` concurrent threads. On a healthy 32-vcpu host
-    * the 32-way median tracks the 1-way time; under host starvation it
-    * multiplies. Returns (median, p90) seconds.
+    * workload ([[graft.tools.CanaryProcess.chunk]]) run on `n`
+    * concurrent threads. On a healthy 32-vcpu host the 32-way median
+    * tracks the 1-way time; under host starvation it multiplies.
+    * Returns (median, p90) seconds.
     */
   def cpuProbe(n: Int = 32, iters: Long = 1L << 28): (Double, Double) = {
     val times = new Array[Double](n)
     val threads = (0 until n).map { i =>
       new Thread(() => {
         val t0 = System.nanoTime()
-        var x = 0x9e3779b97f4a7c15L + i
-        var k = 0L
-        while (k < iters) {
-          x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-          k += 1
-        }
+        val x = graft.tools.CanaryProcess.chunk(iters, i)
         if (x == 42L) println("") // defeat dead-code elimination
         times(i) = (System.nanoTime() - t0) / 1e9
       })
@@ -127,12 +123,7 @@ object Bench {
           // every bench artifact carries its own adjudication evidence
           // (a throttled host inflates `sec` but not `*_cpu_us_per_img`).
           val serverCounters = () => (server.requests.get(), server.errors.get())
-          case class PipeRun(images: Long, successes: Long, secs: Double,
-                             m: graft.tools.PipelineMeter.PipeMeasure) {
-            def rate: Double = images / secs
-            def successRate: Double = successes / secs
-          }
-          def runOnce(fmt: String, out: String): PipeRun = {
+          def runOnce(fmt: String, out: String): graft.tools.PipelineMeter.PipeMeasure = {
             val dir = tmp.resolve(out).toString
             val m = graft.tools.PipelineMeter.measure(meter, dir, Some(serverCounters)) {
               val res = Pipeline.download(spark, urlFile.toString, dir,
@@ -141,9 +132,8 @@ object Bench {
                   computeHashCol = Some("sha256"), incrementalMode = "overwrite"))
               (res.count, res.successes)
             }
-            val r = PipeRun(m.images, m.successes, m.wallSecs, m)
-            bestRate = math.max(bestRate, r.rate)
-            r
+            bestRate = math.max(bestRate, m.imgPerSec)
+            m
           }
           // full per-attempt forensics (r12 verdict #2: BOTH attempts
           // of a retried phase must survive into the artifact — the
@@ -157,22 +147,11 @@ object Bench {
           val pipeBase = graft.tools.ShuffleMeter
             .loadBaseline(graft.tools.PipelineMeter.BaselinePath).getOrElse(Map.empty)
           val canaryBase = pipeBase.getOrElse(graft.tools.PipelineMeter.CanaryBaselineKey, -1L)
-          def attemptJson(r: PipeRun, tag: String): String = {
+          def attemptJson(m: graft.tools.PipelineMeter.PipeMeasure, tag: String): String = {
             val procBase = pipeBase.getOrElse(s"${tag}_proc_cpu_us_per_img", -1L)
-            val verdict = graft.tools.PipelineMeter.adjudicate(r.m, canaryBase, procBase)
-            s"""{"sec":${f3(r.secs)},"img_per_sec":${f1(r.rate)},""" +
-              s""""proc_cpu_us_per_img":${r.m.procCpuUsPerImg},""" +
-              s""""exec_cpu_us_per_img":${r.m.execCpuUsPerImg},""" +
-              s""""out_bytes_per_img":${r.m.outBytesPerImg},""" +
-              s""""gc_ms":${r.m.gcMs},"jit_ms":${r.m.jitMs},""" +
-              s""""task_failures":${r.m.taskFailures},"stage_retries":${r.m.stageRetries},""" +
-              s""""server_requests":${r.m.serverRequests},"server_errors":${r.m.serverErrors},""" +
-              s""""canary_ns_med":${r.m.canaryNsMed},"canary_ns_min":${r.m.canaryNsMin},""" +
-              s""""canary_chunks":${r.m.canaryChunks},"canary_mode":"${r.m.canaryMode}",""" +
-              s""""steal_ms":${r.m.stealMs},"host_busy_pct":${r.m.hostBusyPct},""" +
-              s""""runq_wait_ms":${r.m.runqWaitMs},"cpu_mhz":${r.m.cpuMhz},""" +
-              s""""verdict":"$verdict",""" +
-              s""""failures":${r.images - r.successes}}"""
+            val verdict = graft.tools.PipelineMeter.adjudicate(m, canaryBase, procBase)
+            m.json(omit = Set("images", "successes"), rateDecimals = 1,
+              tail = Seq("verdict" -> s""""$verdict"""", "failures" -> (m.images - m.successes)))
           }
           // Timed run with throttle defense: if this run's img/s lands
           // below 50% of the best rate seen this invocation, re-run
@@ -186,22 +165,23 @@ object Bench {
             val first = runOnce(fmt, out)
             val attempts = scala.collection.mutable.ArrayBuffer(first)
             val best =
-              if (first.rate < 0.5 * bestRate) {
+              if (first.imgPerSec < 0.5 * bestRate) {
                 val second = runOnce(fmt, out + "_retry")
                 attempts += second
-                if (second.rate > first.rate) second else first
+                if (second.imgPerSec > first.imgPerSec) second else first
               } else first
             val failures = best.images - best.successes
             if (failures > 0)
               System.err.println(s"[bench] WARNING: pipeline $fmt had $failures/" +
                 s"${best.images} failures — img/s not comparable to clean runs")
-            val bimodal = graft.tools.PipelineMeter.bimodal(attempts.map(_.m).toSeq)
+            val bimodal = graft.tools.PipelineMeter.bimodal(attempts.toSeq)
             val compact =
-              s"""{"images":${best.images},"successes":${best.successes},"sec":${f3(best.secs)},""" +
-                s""""img_per_sec":${f1(best.rate)},"success_per_sec":${f1(best.successRate)},""" +
-                s""""proc_cpu_us_per_img":${best.m.procCpuUsPerImg},""" +
-                s""""exec_cpu_us_per_img":${best.m.execCpuUsPerImg},""" +
-                s""""out_bytes_per_img":${best.m.outBytesPerImg},""" +
+              s"""{"images":${best.images},"successes":${best.successes},"sec":${f3(best.wallSecs)},""" +
+                s""""img_per_sec":${f1(best.imgPerSec)},""" +
+                s""""success_per_sec":${f1(best.successes / best.wallSecs)},""" +
+                s""""proc_cpu_us_per_img":${best.procCpuUsPerImg},""" +
+                s""""exec_cpu_us_per_img":${best.execCpuUsPerImg},""" +
+                s""""out_bytes_per_img":${best.outBytesPerImg},""" +
                 s""""failures":$failures,"retried":${best ne first},"bimodal":$bimodal}"""
             val full = compact.dropRight(1) +
               s""","attempts":[${attempts.map(attemptJson(_, tagOf(fmt))).mkString(",")}]}"""

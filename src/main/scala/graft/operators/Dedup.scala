@@ -127,13 +127,12 @@ object Dedup {
 
   /** Cross-engine 60-bit string hash: the first 15 hex chars of md5,
     * parsed as an integer. Any engine with md5 reproduces it exactly
-    * (the DuckDB oracle does), unlike Spark's seed-42 xxh64 kernel.
-    * Production defaults keep the faster native xxh64; the
-    * oracle-checked LSH queries pass `portableHash = true` so the
-    * whole approximate pipeline is independently recomputable.
-    * Under [[graft.config.PortableSalt]] the salt prefixes the md5
-    * input (on both engines); unsalted, the expression is exactly the
-    * committed baseline's.
+    * (the DuckDB oracle does); it is the one hash of every MinHash
+    * signature, band key and SimHash here, so each approximate
+    * pipeline is independently recomputable. Under
+    * [[graft.config.PortableSalt]] the salt prefixes the md5 input (on
+    * both engines); unsalted, the expression is exactly the committed
+    * baseline's.
     */
   def portableHash60(s: Column): Column =
     if (graft.config.PortableSalt.isDefault)
@@ -143,32 +142,28 @@ object Dedup {
         s.cast("string")).cast("binary")), 1, 15), 16, 10).cast("long")
 
   /** MinHash signature of the shingle set as `array<bigint>`:
-    * min over shingles of `(a·(xxh64(s) mod P) + b) mod P` per hash
-    * function — a native one-pass expression
+    * min over shingles of `(a·(portableHash60(s) mod P) + b) mod P` per
+    * hash function — a native one-pass expression
     * ([[graft.plans.MinHashSignatureExpr]]); all K mins computed in a
     * single compiled loop over the shingle array.
     */
-  def minhashSignature(shingles: Column, numHashes: Int = 128, seed: Long = graft.operators.Dedup.DefaultSeed,
-                       portableMd5: Boolean = false): Column = {
+  def minhashSignature(shingles: Column, numHashes: Int = 128,
+                       seed: Long = graft.operators.Dedup.DefaultSeed): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     column(graft.plans.MinHashSignatureExpr(
-      expression(shingles), minhashCoeffs(numHashes, seed), Prime, portableMd5))
+      expression(shingles), minhashCoeffs(numHashes, seed), Prime))
   }
 
   /** LSH band keys: hash each r-row slice of the signature. Two docs
     * land in the same (band, key) bucket iff their signatures agree on
-    * that band — P[collision] = 1-(1-j^r)^b for Jaccard j.
-    *
-    * `portable = false` (default): 8-byte `xxhash64` keys — smallest
-    * shuffle, Spark-only. `portable = true`: the joined slice values
-    * as a string key (equality-equivalent, engine-independent).
-    * Computed natively by [[graft.plans.BandKeysExpr]], with the same
+    * that band — P[collision] = 1-(1-j^r)^b for Jaccard j. The key is
+    * the slice's values joined by "_" (engine-independent). Computed
+    * natively by [[graft.plans.BandKeysExpr]], with the same
     * [[graft.plans.BandKeys]] function the [[MinhashKernel]] buckets by.
     */
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int,
-               portable: Boolean = false): Column = {
+  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    column(graft.plans.BandKeysExpr(expression(sig), bands, rowsPerBand, portable))
+    column(graft.plans.BandKeysExpr(expression(sig), bands, rowsPerBand))
   }
 
   /** One document in the [[MinhashKernel]]: its shingles as UTF-8
@@ -212,8 +207,8 @@ object Dedup {
     * which drops its caches.
     */
   private[graft] final class MinhashKernel(df: DataFrame, textCol: String, idCol: String,
-      shingleSize: Int, numHashes: Int, bands: Int, seed: Long, maxBucketSize: Int,
-      portableHash: Boolean) extends RddKernel(df, idCol, "MinHash dedup") {
+      shingleSize: Int, numHashes: Int, bands: Int, seed: Long, maxBucketSize: Int)
+      extends RddKernel(df, idCol, "MinHash dedup") {
     private val r = numHashes / bands
 
     /** id → document, in scan partitions: feeds the buckets and the
@@ -222,8 +217,7 @@ object Dedup {
     private lazy val scanned: RDD[(Long, KDoc)] = {
       val base = scanParallelismFloor(df).select(col(idCol).cast("long").as("id"),
         wordShingles(col(textCol), shingleSize).as("shingles"))
-      hold(base.withColumn("sig",
-          minhashSignature(col("shingles"), numHashes, seed, portableMd5 = portableHash))
+      hold(base.withColumn("sig", minhashSignature(col("shingles"), numHashes, seed))
         .queryExecution.toRdd.flatMap { row =>
           if (row.isNullAt(0) || row.isNullAt(1)) None
           else {
@@ -238,15 +232,15 @@ object Dedup {
     private lazy val docs: RDD[(Long, KDoc)] = hold(scanned.partitionBy(partitioner))
 
     /** ((band, key), id) for every band of every signature. */
-    private def keyed(sigs: RDD[(Long, Array[Long])]): RDD[((Int, Any), Long)] = {
-      val (b, rows, portable) = (bands, r, portableHash)
+    private def keyed(sigs: RDD[(Long, Array[Long])]): RDD[((Int, UTF8String), Long)] = {
+      val (b, rows) = (bands, r)
       sigs.flatMap { case (id, sig) =>
-        Iterator.tabulate(b)(j => ((j, BandKeys.key(sig, j, rows, portable)), id))
+        Iterator.tabulate(b)(j => ((j, BandKeys.key(sig, j, rows)), id))
       }
     }
 
     /** (band, key) → member ids, for every bucket of the batch. */
-    private lazy val buckets: RDD[((Int, Any), Array[Long])] =
+    private lazy val buckets: RDD[((Int, UTF8String), Array[Long])] =
       hold(keyed(scanned.mapValues(_.sig))
         .combineByKey[mutable.ArrayBuilder.ofLong](
           (id: Long) => new mutable.ArrayBuilder.ofLong().addOne(id),
@@ -335,7 +329,7 @@ object Dedup {
       val cap = maxBucketSize
       distinctPairs(buckets.zipPartitions(keyed(idx).partitionBy(partitioner)) { (batch, indexed) =>
         val news = batch.toMap
-        val olds = mutable.HashMap.empty[(Int, Any), mutable.ArrayBuilder.ofLong]
+        val olds = mutable.HashMap.empty[(Int, UTF8String), mutable.ArrayBuilder.ofLong]
         indexed.foreach { case (k, o) =>
           if (news.contains(k)) olds.getOrElseUpdate(k, new mutable.ArrayBuilder.ofLong).addOne(o)
         }
@@ -397,10 +391,10 @@ object Dedup {
   /** Runs `body` over a fresh kernel and drops the kernel's caches after
     * `body` has materialized its result. */
   private def withMinhashKernel[T](df: DataFrame, textCol: String, idCol: String,
-      shingleSize: Int, numHashes: Int, bands: Int, seed: Long, maxBucketSize: Int,
-      portableHash: Boolean)(body: MinhashKernel => T): T = {
+      shingleSize: Int, numHashes: Int, bands: Int, seed: Long,
+      maxBucketSize: Int)(body: MinhashKernel => T): T = {
     val k = new MinhashKernel(df, textCol, idCol, shingleSize, numHashes, bands, seed,
-      maxBucketSize, portableHash)
+      maxBucketSize)
     try body(k) finally k.close()
   }
 
@@ -424,8 +418,8 @@ object Dedup {
     * the profile tells you which.
     *
     * Determinism/portability: identical signature/band chain as the
-    * build (same seed, same portable-hash toggle); counts/max/pairs
-    * exact longs; avg one quantized IEEE division.
+    * build (same seed, same hash); counts/max/pairs exact longs; avg
+    * one quantized IEEE division.
     *
     * Scale shape: one corpus scan into slim (id, band, key) rows, one
     * map-side-combined (band, key) count, one tiny per-band rollup;
@@ -435,18 +429,16 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 5, numHashes: Int = 128, bands: Int = 32,
       seed: Long = graft.operators.Dedup.DefaultSeed,
-      maxBucketSize: Int = 1000,
-      portableHash: Boolean = false): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands")
     val rd = graft.functions.MathFunctions.roundTo _
     val r = numHashes / bands
     val base = df.select(col(idCol).as("id"),
       wordShingles(col(textCol), shingleSize).as("shingles"))
-    val sigs = base.withColumn("sig",
-      minhashSignature(col("shingles"), numHashes, seed, portableMd5 = portableHash))
+    val sigs = base.withColumn("sig", minhashSignature(col("shingles"), numHashes, seed))
     val counts = sigs
-      .select(col("id"), explode(bandKeys(col("sig"), bands, r, portableHash)).as("bk"))
+      .select(col("id"), explode(bandKeys(col("sig"), bands, r)).as("bk"))
       .select(col("id"), col("bk.band"), col("bk.key"))
       .groupBy("band", "key").agg(count("*").as("m"))
     counts.groupBy("band")
@@ -505,8 +497,8 @@ object Dedup {
     * largest portable seed-hash (the k-means-seed chain); truth is the
     * same exact-Jaccard arithmetic as [[minhashNearDups]]' verify
     * (integer set sizes, one IEEE division); signatures/band keys are
-    * the identical chain as the build, so with `portableHash = true`
-    * the whole profile is engine-replayable.
+    * the identical chain as the build, so the whole profile is
+    * engine-replayable.
     *
     * Scale shape: truth is ONE corpus scan against the broadcast
     * Q-row shingle sample; each bands value is one more scan into slim
@@ -519,8 +511,7 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       bandsList: Seq[Int], shingleSize: Int = 5, numHashes: Int = 128,
       threshold: Double = 0.7, seed: Long = graft.operators.Dedup.DefaultSeed,
-      maxBucketSize: Int = 1000, sampleQ: Int = 8,
-      portableHash: Boolean = false): DataFrame = {
+      maxBucketSize: Int = 1000, sampleQ: Int = 8): DataFrame = {
     require(bandsList.nonEmpty && bandsList.forall(b => b >= 1 && numHashes % b == 0),
       s"every bands value must divide numHashes=$numHashes, got $bandsList")
     require(sampleQ >= 1, s"sampleQ must be positive, got $sampleQ")
@@ -529,14 +520,7 @@ object Dedup {
     val base = scanParallelismFloor(df).select(col(idCol).as("id"),
       wordShingles(col(textCol), shingleSize).as("shingles"))
     // deterministic portable sample (same chain as the k-means seeds)
-    val seedHash = pmod(pmod(col("id"), lit(1000003L)) *
-      lit(graft.config.PortableSalt.seedMul), lit(2147483647L))
-    val sample = base
-      .join(broadcast(base
-        .agg(graft.plans.TopKByScore.topKByScore(
-          seedHash.cast("double"), col("id"), sampleQ).as("top"))
-        .select(explode(col("top.id")).as("query_id"))),
-        col("id") === col("query_id"))
+    val sample = Similarity.seedSample(base, sampleQ)
       .select(col("query_id"), col("shingles").as("q_sh"))
       .localCheckpoint(eager = true) // Q rows, reused by truth + every bands value
     // exact ground truth: near-dup pairs by shingle Jaccard >= threshold
@@ -560,17 +544,15 @@ object Dedup {
     bandsList.map { b =>
       val r = numHashes / b
       val buckets = base
-        .withColumn("sig",
-          minhashSignature(col("shingles"), numHashes, seed, portableMd5 = portableHash))
-        .select(col("id"), explode(bandKeys(col("sig"), b, r, portableHash)).as("bk"))
+        .withColumn("sig", minhashSignature(col("shingles"), numHashes, seed))
+        .select(col("id"), explode(bandKeys(col("sig"), b, r)).as("bk"))
         .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
       val counts = buckets.groupBy("band", "key").agg(count(lit(1)).as("m"))
       val work = counts.agg(coalesce(sum(when(col("m") <= maxBucketSize.toLong,
           expr("m * (m - 1) div 2")).otherwise(0L)), lit(0L)).as("candidate_pairs"))
       val qb = sample
-        .withColumn("sig",
-          minhashSignature(col("q_sh"), numHashes, seed, portableMd5 = portableHash))
-        .select(col("query_id"), explode(bandKeys(col("sig"), b, r, portableHash)).as("bk"))
+        .withColumn("sig", minhashSignature(col("q_sh"), numHashes, seed))
+        .select(col("query_id"), explode(bandKeys(col("sig"), b, r)).as("bk"))
         .select(col("query_id"), col("bk.band").as("band"), col("bk.key").as("key"))
       val cand = buckets
         .join(counts.filter(col("m") <= maxBucketSize.toLong).select("band", "key"),
@@ -598,13 +580,12 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 5, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.7, seed: Long = graft.operators.Dedup.DefaultSeed,
-      maxBucketSize: Int = 1000,
-      portableHash: Boolean = false): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands " +
         "(a remainder silently drops hashes from the band keys, degrading LSH recall)")
     withMinhashKernel(df, textCol, idCol, shingleSize, numHashes, bands, seed,
-      maxBucketSize, portableHash)(_.pairs("jaccard", threshold)(jaccard))
+      maxBucketSize)(_.pairs("jaccard", threshold)(jaccard))
   }
 
   /** Containment near-dups (Gopher/MassiveText-style): candidates from
@@ -630,12 +611,11 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 5, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.8, seed: Long = graft.operators.Dedup.DefaultSeed,
-      maxBucketSize: Int = 1000,
-      portableHash: Boolean = false): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands")
     withMinhashKernel(df, textCol, idCol, shingleSize, numHashes, bands, seed,
-      maxBucketSize, portableHash)(_.pairs("containment", threshold)(containment))
+      maxBucketSize)(_.pairs("containment", threshold)(containment))
   }
 
   /** Edit-distance-verified near-dup pairs: MinHash-LSH banding
@@ -663,8 +643,8 @@ object Dedup {
   def editDistanceNearDups(
       df: DataFrame, textCol: String, idCol: String,
       maxDist: Int, shingleSize: Int = 3, numHashes: Int = 128,
-      bands: Int = 32, seed: Long = graft.operators.Dedup.DefaultSeed, maxBucketSize: Int = 1000,
-      portableHash: Boolean = false): DataFrame = {
+      bands: Int = 32, seed: Long = graft.operators.Dedup.DefaultSeed,
+      maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands")
     require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
@@ -672,13 +652,12 @@ object Dedup {
     val base = scanParallelismFloor(df).select(col(idCol).as("id"), col(textCol).as("txt"),
       length(col(textCol)).as("len"),
       wordShingles(col(textCol), shingleSize).as("shingles"))
-    val sigs = base.withColumn("sig",
-      minhashSignature(col("shingles"), numHashes, seed, portableMd5 = portableHash))
+    val sigs = base.withColumn("sig", minhashSignature(col("shingles"), numHashes, seed))
     // Bucket rows carry (id, len, band, key): len is one long and
     // lets the length pre-filter run BEFORE any text moves.
     val buckets = sigs
       .select(col("id"), col("len"),
-        explode(bandKeys(col("sig"), bands, r, portableHash)).as("bk"))
+        explode(bandKeys(col("sig"), bands, r)).as("bk"))
       .select(col("id"), col("len"), col("bk.band"), col("bk.key"))
     val counts = buckets.groupBy("band", "key").agg(count("*").as("bucket_n"))
       .filter(col("bucket_n") <= maxBucketSize)
@@ -697,42 +676,28 @@ object Dedup {
       .select("id_a", "id_b", "dist")
   }
 
-  /** 64-bit SimHash of the token multiset: per bit of each token's
-    * xxh64, fold a +1/-1 counter; sign bits packed into one long —
-    * a native one-pass expression ([[graft.plans.SimHash64Expr]]).
-    */
-  def simhash64(text: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    column(graft.plans.SimHash64Expr(expression(tokens(text))))
-  }
-
   /** SimHash over the low `nBits` bits of the portable 60-bit md5
-    * token hash — the oracle-parity form, hashed natively in the
-    * expression loop.
+    * token hash, hashed natively in the expression loop
+    * ([[graft.plans.SimHash64Expr]]); the DuckDB oracle recomputes it.
     */
   def simhashPortable(text: Column, nBits: Int = 60): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    column(graft.plans.SimHash64Expr(expression(tokens(text)), nBits, portableMd5 = true))
+    column(graft.plans.SimHash64Expr(expression(tokens(text)), nBits))
   }
 
   /** SimHash near-dups: band the fingerprint into `chunks` equal bit
     * slices (pigeonhole: Hamming ≤ chunks-1 ⇒ at least one chunk
     * equal), bucket-join on chunks, verify with `bit_count(xor)`.
-    *
-    * `portableHash = true` switches to the 60-bit md5-based simhash
-    * (4 × 15-bit chunks) that the DuckDB oracle recomputes.
+    * The fingerprint is [[simhashPortable]] over 4 × 15-bit chunks.
     */
   def simhashNearDups(
       df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 10000,
-      portableHash: Boolean = false): DataFrame = {
+      maxHamming: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
     val chunks = 4
-    val chunkBits = if (portableHash) 15 else 16
+    val chunkBits = 15
     val chunkMask = (1L << chunkBits) - 1
-    val sigCol =
-      if (portableHash) simhashPortable(col(textCol), chunks * chunkBits)
-      else simhash64(col(textCol))
-    val withSig = df.select(col(idCol).as("id"), sigCol.as("sig"))
+    val withSig = df.select(col(idCol).as("id"),
+      simhashPortable(col(textCol), chunks * chunkBits).as("sig"))
     val keyed = withSig.select(col("id"), col("sig"),
       explode(array((0 until chunks).map { j =>
         struct(lit(j).as("band"),
@@ -904,8 +869,7 @@ object Dedup {
       textCol: String, idCol: String,
       shingleSize: Int = 5, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.5, seed: Long = graft.operators.Dedup.DefaultSeed,
-      maxBucketSize: Int = 1000,
-      portableHash: Boolean = false): DataFrame = {
+      maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands " +
         "(a remainder silently drops hashes from the band keys, degrading LSH recall)")
@@ -913,12 +877,11 @@ object Dedup {
     def prep(src: DataFrame): DataFrame = {
       val base = scanParallelismFloor(src).select(col(idCol).as("id"),
         wordShingles(col(textCol), shingleSize).as("shingles"))
-      base.withColumn("sig",
-        minhashSignature(col("shingles"), numHashes, seed, portableMd5 = portableHash))
+      base.withColumn("sig", minhashSignature(col("shingles"), numHashes, seed))
     }
     def toBuckets(s: DataFrame, idName: String): DataFrame = s
       .select(col("id").as(idName),
-        explode(bandKeys(col("sig"), bands, r, portable = portableHash)).as("bk"))
+        explode(bandKeys(col("sig"), bands, r)).as("bk"))
       .select(col(idName), col("bk.band"), col("bk.key"))
     val corpus = prep(df)
     val bench = prep(benchmark)
@@ -1047,11 +1010,10 @@ object Dedup {
                          shingleSize: Int = 5, numHashes: Int = 128,
                          bands: Int = 32, threshold: Double = 0.7,
                          seed: Long = graft.operators.Dedup.DefaultSeed, maxBucketSize: Int = 1000,
-                         stagingPath: Option[String] = None,
-                         portableHash: Boolean = false): DataFrame =
+                         stagingPath: Option[String] = None): DataFrame =
     incrementalMinhashImpl(newDocs, textCol, idCol, indexPath, shingleSize,
       numHashes, bands, threshold, seed, maxBucketSize, stagingPath,
-      portableHash, overlappedWork = None)
+      overlappedWork = None)
 
   /** [[incrementalMinhash]] with an independent unit of driver work —
     * in the intended use, the PREVIOUS batch's [[commitMinhash]] —
@@ -1071,11 +1033,10 @@ object Dedup {
       shingleSize: Int = 5, numHashes: Int = 128,
       bands: Int = 32, threshold: Double = 0.7,
       seed: Long = graft.operators.Dedup.DefaultSeed, maxBucketSize: Int = 1000,
-      stagingPath: Option[String] = None,
-      portableHash: Boolean = false)(work: () => Unit): DataFrame =
+      stagingPath: Option[String] = None)(work: () => Unit): DataFrame =
     incrementalMinhashImpl(newDocs, textCol, idCol, indexPath, shingleSize,
       numHashes, bands, threshold, seed, maxBucketSize, stagingPath,
-      portableHash, overlappedWork = Some(work))
+      overlappedWork = Some(work))
 
   private def incrementalMinhashImpl(newDocs: DataFrame, textCol: String, idCol: String,
                          indexPath: String,
@@ -1083,14 +1044,13 @@ object Dedup {
                          bands: Int, threshold: Double,
                          seed: Long, maxBucketSize: Int,
                          stagingPath: Option[String],
-                         portableHash: Boolean,
                          overlappedWork: Option[() => Unit]): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands " +
         "(a remainder silently drops hashes from the band keys, degrading LSH recall)")
     val spark = newDocs.sparkSession
     withMinhashKernel(newDocs, textCol, idCol, shingleSize, numHashes, bands, seed,
-        maxBucketSize, portableHash) { k =>
+        maxBucketSize) { k =>
       // within-batch near-dups: exact-verified pairs, keep the lowest id
       def within() = k.hold(k.scored(threshold)(jaccard).map(_._2))
       // Overlap point: materialize the within-batch drops WHILE the
@@ -1138,14 +1098,12 @@ object Dedup {
   def commitMinhash(docs: DataFrame, textCol: String, idCol: String,
                     indexPath: String,
                     shingleSize: Int = 5, numHashes: Int = 128,
-                    bands: Int = 32, seed: Long = graft.operators.Dedup.DefaultSeed,
-                    portableHash: Boolean = false): Unit = {
+                    bands: Int = 32, seed: Long = graft.operators.Dedup.DefaultSeed): Unit = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands (must match the query half)")
     docs.select(
         col(idCol).as("doc_id"),
-        minhashSignature(wordShingles(col(textCol), shingleSize), numHashes, seed,
-          portableMd5 = portableHash).as("sig"))
+        minhashSignature(wordShingles(col(textCol), shingleSize), numHashes, seed).as("sig"))
       .write.mode("append").parquet(s"$indexPath/sigs")
   }
 
@@ -1328,14 +1286,14 @@ object Dedup {
     * `maxCellSize` — the same skew-bomb guard as every LSH path here
     * (an over-full cell at 100 TB means nCells is too small; the cap
     * degrades recall, never blows up a task). Vectors rejoin once per
-    * candidate pair, not per cell row. With `portableSeed = true` and
-    * `lloydIters = 0` the whole pipeline is bit-replicable by the
-    * DuckDB oracle (same contract as `ann_ivf_topk`).
+    * candidate pair, not per cell row. With `lloydIters = 0` the
+    * whole pipeline is bit-replicable by the DuckDB oracle (same
+    * contract as the deterministic IVF top-k).
     */
   def semanticDedup(
       df: DataFrame, vecCol: String, idCol: String,
       nCells: Int = 16, threshold: Double = 0.95,
-      lloydIters: Int = 2, portableSeed: Boolean = false,
+      lloydIters: Int = 2,
       maxCellSize: Int = 10000): DataFrame = {
     // parameter errors fail BEFORE any Spark job runs (nCells = 0
     // would silently lump the corpus into one phantom cell)
@@ -1346,7 +1304,7 @@ object Dedup {
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     val cents = Similarity.kmeansCentroids(
       base.select(col("id").as("corpus_id"), col("v").as("cv")),
-      nCells, lloydIters, portableSeed)
+      nCells, lloydIters)
     val assigned = base.withColumn("cell_id",
       column(graft.plans.NearestCentroid(expression(col("v")), cents.toSeq.map(_.toSeq))))
     val slim = assigned.select("id", "cell_id")
@@ -1451,11 +1409,11 @@ object Dedup {
       df: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 3, numHashes: Int = 128, bands: Int = 32,
       seed: Long = graft.operators.Dedup.DefaultSeed, maxBucketSize: Int = 1000,
-      portableHash: Boolean = false, bins: Int = 10): DataFrame = {
+      bins: Int = 10): DataFrame = {
     require(bins >= 2, s"bins=$bins must be >= 2")
     val rd = graft.functions.MathFunctions.roundTo _
     val pairs = minhashNearDups(df, textCol, idCol, shingleSize, numHashes,
-      bands, threshold = 0.0, seed, maxBucketSize, portableHash)
+      bands, threshold = 0.0, seed, maxBucketSize)
     val w = org.apache.spark.sql.expressions.Window.partitionBy()
     pairs.select(least(floor(col("jaccard") * lit(bins)).cast("int"),
         lit(bins - 1)).as("bin"))

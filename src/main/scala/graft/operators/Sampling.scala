@@ -120,12 +120,10 @@ object Sampling {
     * shuffle, and no window ever sorts a cell's full membership (a
     * hot cell is a skew bomb for a row_number plan, not for a heap).
     * Selection is a pure function of (salt, id): reruns, retries, and
-    * the DuckDB oracle (portableSeed = true, lloydIters = 0)
-    * reproduce the exact sample.
+    * the DuckDB oracle (lloydIters = 0) reproduce the exact sample.
     */
   def clusterBalancedSample(df: DataFrame, vecCol: String, idCol: String,
                             nCells: Int, perCell: Int, lloydIters: Int = 2,
-                            portableSeed: Boolean = false,
                             salt: String = "cbs"): DataFrame = {
     require(nCells > 0, s"nCells=$nCells must be positive")
     require(perCell > 0, s"perCell=$perCell must be positive")
@@ -133,7 +131,7 @@ object Sampling {
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     val cents = Similarity.kmeansCentroids(
       base.select(col("id").as("corpus_id"), col("v").as("cv")),
-      nCells, lloydIters, portableSeed)
+      nCells, lloydIters)
     val assigned = base.withColumn("cell_id",
       column(graft.plans.NearestCentroid(expression(col("v")), cents.toSeq.map(_.toSeq))))
       .select("id", "cell_id")

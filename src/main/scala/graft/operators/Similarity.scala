@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
@@ -58,13 +58,35 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
+  /** The portable id hash behind every deterministic seed and sample:
+    * `pmod(pmod(id, 1000003) · seedMul, 2^31−1)` — integer arithmetic
+    * any engine reproduces exactly (intermediates < 2^52, ANSI-safe),
+    * so a DuckDB oracle re-derives the same seed set.
+    */
+  private[graft] def seedHash(id: Column): Column =
+    pmod(pmod(id, lit(1000003L)) * lit(graft.config.PortableSalt.seedMul), lit(2147483647L))
+
+  /** The `n` values of `df`'s `idCol` with the largest [[seedHash]]
+    * (ties to the smaller id), as a one-column frame named `name` —
+    * the bounded-heap top-n aggregate: map-side partial top-n, the
+    * shuffle carries ≤ n rows per partition. No `count()` over the
+    * corpus, no single-partition `Window.orderBy`.
+    */
+  private[graft] def seedIds(df: DataFrame, idCol: String, n: Int, name: String): DataFrame =
+    df.agg(graft.plans.TopKByScore.topKByScore(
+        seedHash(col(idCol)).cast("double"), col(idCol), n).as("top"))
+      .select(explode(col("top.id")).as(name))
+
+  /** The rows of `base` (which must carry `id`) whose id is one of the
+    * `n` [[seedIds]], with that id repeated as `query_id`: the
+    * deterministic query sample of the recall profiles. */
+  private[graft] def seedSample(base: DataFrame, n: Int): DataFrame =
+    base.join(broadcast(seedIds(base, "id", n, "query_id")), col("id") === col("query_id"))
+
   /** k-means centroids without any full-corpus shuffle or global sort:
     *
-    *  1. SEED — the `nCells` corpus rows with the largest
-    *     `xxhash64(id)` (a deterministic pseudo-random sample) picked
-    *     by the bounded-heap top-k aggregate: map-side partial top-k,
-    *     the shuffle carries ≤ nCells rows per partition. No `count()`
-    *     over the corpus, no single-partition `Window.orderBy`.
+    *  1. SEED — the `nCells` corpus rows of [[seedIds]] (a
+    *     deterministic pseudo-random sample).
     *  2. LLOYD rounds — assignment is a narrow map (the centroid
     *     matrix is a plan literal inside [[graft.plans.NearestCentroid]]);
     *     the new means come from a posexplode + partial-aggregated
@@ -72,28 +94,15 @@ object Similarity {
     *     independent of corpus size. Empty cells keep their previous
     *     centroid.
     */
-  def kmeansCentroids(c: DataFrame, nCells: Int, lloydIters: Int = 2,
-                      portableSeed: Boolean = false): Array[Array[Double]] = {
-    // portableSeed: integer-arithmetic id hash any engine reproduces
-    // exactly ((id mod 1000003)·2654435761 mod 2^31-1 — intermediates
-    // < 2^52, ANSI-safe), so a DuckDB oracle can re-derive the exact
-    // seed set; default is the faster xxhash64.
-    val seedHash =
-      if (portableSeed)
-        pmod(pmod(col("corpus_id"), lit(1000003L)) * lit(graft.config.PortableSalt.seedMul), lit(2147483647L))
-      else xxhash64(col("corpus_id"))
-    val seedIds = c
-      .agg(graft.plans.TopKByScore.topKByScore(
-        seedHash.cast("double"), col("corpus_id"), nCells).as("top"))
-      .select(explode(col("top.id")).as("id"))
-      .collect().map(_.getLong(0))
+  def kmeansCentroids(c: DataFrame, nCells: Int, lloydIters: Int = 2): Array[Array[Double]] = {
+    val ids = seedIds(c, "corpus_id", nCells, "id").collect().map(_.getLong(0))
     // Fetch the seed rows via a broadcast semi-join on a 1-column
     // frame: an `isin(ids…)` literal IN-list would put all nCells ids
     // in the plan text, bloating plan size/compile time at large
     // nCells; the join keeps the plan O(1) regardless of cell count.
     val spark = c.sparkSession
     import spark.implicits._
-    val seedDf = seedIds.toSeq.toDF("corpus_id")
+    val seedDf = ids.toSeq.toDF("corpus_id")
     var cents: Array[Array[Double]] = c
       .join(broadcast(seedDf), Seq("corpus_id"), "left_semi")
       .orderBy("corpus_id")  // tiny frame (nCells rows): determinism only
@@ -180,25 +189,12 @@ object Similarity {
       graft.functions.MathFunctions.roundTo(distCol / lit(1e12), 6).as("dist"))
   }
 
-  /** The deterministic hash-seeded initial centroids shared by
-    * [[kmeansAssign]] and [[embeddingDrift]]: the `nCells` rows with
-    * the highest multiplicative id hash, selected by the bounded-heap
-    * top-k (no corpus sort), their quantized coordinates collected —
-    * `nCells · dim` doubles on the driver, never data-sized. `base`
-    * must carry (id, qd).
-    */
-  private def seededCentroids(base: DataFrame, nCells: Int): Array[Array[Double]] = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val seedHash = pmod(pmod(col("id"), lit(1000003L)) * lit(graft.config.PortableSalt.seedMul), lit(2147483647L))
-    val seedIds = base
-      .agg(graft.plans.TopKByScore.topKByScore(seedHash.cast("double"), col("id"), nCells).as("top"))
-      .select(explode(col("top.id")).as("id")).collect().map(_.getLong(0))
-    val seedDf = seedIds.toSeq.toDF("id")
-    base.join(broadcast(seedDf), Seq("id"), "left_semi")
-      .orderBy("id") // tiny frame (nCells rows): determinism only
-      .select("qd").collect().map(_.getSeq[Double](0).toArray)
-  }
+  /** The [[kmeansCentroids]] seeds (no Lloyd rounds) of a `base`
+    * carrying (id, qd): the quantized coordinates of the `nCells`
+    * [[seedIds]] rows — `nCells · dim` doubles on the driver, never
+    * data-sized. */
+  private def seededCentroids(base: DataFrame, nCells: Int): Array[Array[Double]] =
+    kmeansCentroids(base.select(col("id").as("corpus_id"), col("qd").as("cv")), nCells, lloydIters = 0)
 
   /** Greedy k-center selection (farthest-first traversal) — the
     * coreset / diversity-selection primitive: pick `k` corpus points
@@ -246,8 +242,7 @@ object Similarity {
         .select(col("m.s"), col("m.nid"), col("m.v")).collect()(0)
       (-r.getLong(1), r.getSeq[Double](2), r.getDouble(0))
     }
-    val seedHash = pmod(pmod(col("id"), lit(1000003L)) * lit(graft.config.PortableSalt.seedMul), lit(2147483647L))
-    val (seedId, seedVec, _) = pick(seedHash.cast("double"), base)
+    val (seedId, seedVec, _) = pick(seedHash(col("id")).cast("double"), base)
     val picks = scala.collection.mutable.ArrayBuffer[(Int, Long, Option[Double])]()
     picks += ((0, seedId, None))
     var cur = base.withColumn("md",
@@ -437,7 +432,7 @@ object Similarity {
     // broadcast it so the overlap join never sorts the exact arm
     val approx = broadcast(
       ivfTopK(corpus, queries, vecCol, idCol, k,
-          nCells = nCells, nProbe = nProbe, lloydIters = 0, portableSeed = true)
+          nCells = nCells, nProbe = nProbe, lloydIters = 0)
         .select(col("query_id").as("__qi"), col("corpus_id").as("__ci")))
     exact.join(approx,
         col("query_id") === col("__qi") && col("corpus_id") === col("__ci"),
@@ -690,8 +685,7 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int,
       m: Int = 8, ksub: Int = 16, lloydIters: Int = 2,
-      rerank: Int = 0,
-      portableSeed: Boolean = false): DataFrame = {
+      rerank: Int = 0): DataFrame = {
     // parameter errors fail BEFORE any Spark job runs (m = 0 would
     // otherwise surface as '/ by zero' after the seeding job)
     require(m > 0 && ksub > 0 && k > 0, s"m=$m, ksub=$ksub, k=$k must all be positive")
@@ -702,7 +696,7 @@ object Similarity {
     // measured recall@10 ≈ 0.14 on the synthetic corpus, refined ≥
     // several-fold better). lloydIters = 0 keeps the deterministic
     // seed-only codebook the DuckDB oracle replicates.
-    val seed = kmeansCentroids(c, ksub, lloydIters = 0, portableSeed)
+    val seed = kmeansCentroids(c, ksub, lloydIters = 0)
     require(seed.isEmpty || seed(0).length % m == 0,
       s"PQ subspace count m=$m must divide the embedding dim ${seed.headOption.fold(0)(_.length)} " +
       "(integer truncation would silently drop trailing dimensions and break code indexing)")
@@ -799,8 +793,7 @@ object Similarity {
     */
   def pqDistortionProfile(
       df: DataFrame, vecCol: String, idCol: String, dim: Int = 64,
-      ms: Seq[Int] = Seq(2, 4, 8, 16), ksub: Int = 16,
-      portableSeed: Boolean = false): DataFrame = {
+      ms: Seq[Int] = Seq(2, 4, 8, 16), ksub: Int = 16): DataFrame = {
     require(ms.nonEmpty && ms.forall(m => m > 0 && dim % m == 0),
       s"every subspace count in $ms must be positive and divide dim=$dim")
     require(ksub >= 2, s"ksub=$ksub must be >= 2")
@@ -808,7 +801,7 @@ object Similarity {
     val dec = "decimal(38,0)"
     val c = df.select(col(idCol).as("corpus_id"),
       col(vecCol).cast("array<double>").as("cv"))
-    val seed = kmeansCentroids(c, ksub, lloydIters = 0, portableSeed)
+    val seed = kmeansCentroids(c, ksub, lloydIters = 0)
     require(seed.nonEmpty, "pqDistortionProfile needs a non-empty corpus")
     val cbLit = array(seed.toSeq.map(v => array(v.toSeq.map(lit): _*)): _*)
     // per-subspace distortion: min over the ksub candidates of the
@@ -866,27 +859,20 @@ object Similarity {
   def ivfProbeProfile(
       df: DataFrame, vecCol: String, idCol: String, dim: Int = 64,
       probes: Seq[Int] = Seq(1, 2, 4, 8), nCells: Int = 16, k: Int = 10,
-      sampleQ: Int = 8, portableSeed: Boolean = false): DataFrame = {
+      sampleQ: Int = 8): DataFrame = {
     require(probes.nonEmpty && probes.forall(p => p >= 1 && p <= nCells),
       s"every probe count in $probes must be in [1, nCells=$nCells]")
     require(k >= 1 && sampleQ >= 1, s"k=$k and sampleQ=$sampleQ must be positive")
     val rd = graft.functions.MathFunctions.roundTo _
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     val c = base.select(col("id").as("corpus_id"), col("v").as("cv"))
-    val cents = kmeansCentroids(c, nCells, lloydIters = 0, portableSeed)
+    val cents = kmeansCentroids(c, nCells, lloydIters = 0)
     require(cents.nonEmpty, "ivfProbeProfile needs a non-empty corpus")
     val assigned = base.withColumn("cell_id",
       column(graft.plans.NearestCentroid(expression(col("v")), cents.toSeq.map(_.toSeq))))
     // deterministic portable sample + exact ground truth: the
     // lshRecallProfile chain (hash top-Q, bounded-heap exact top-k)
-    val seedHash = pmod(pmod(col("id"), lit(1000003L)) *
-      lit(graft.config.PortableSalt.seedMul), lit(2147483647L))
-    val sample = base
-      .join(broadcast(base
-        .agg(graft.plans.TopKByScore.topKByScore(
-          seedHash.cast("double"), col("id"), sampleQ).as("top"))
-        .select(explode(col("top.id")).as("query_id"))),
-        col("id") === col("query_id"))
+    val sample = seedSample(base, sampleQ)
       .select(col("query_id"), col("v").as("qv"))
       .localCheckpoint(eager = true)
     val truth = base.crossJoin(broadcast(sample))
@@ -945,16 +931,16 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       vecCol: String, idCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
-      lloydIters: Int = 2, portableSeed: Boolean = false): DataFrame = {
+      lloydIters: Int = 2): DataFrame = {
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).cast("array<double>").as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
 
-    // lloydIters = 0 + portableSeed: centroids are exact corpus rows
-    // picked by the portable hash — every downstream double (sqdist,
-    // argmin, cosine) is a sequential fold over exact parquet values,
-    // so the whole query is bit-replicable in a DuckDB oracle. The
-    // k-means default trades that for better cells (recall-tested).
-    val cents = kmeansCentroids(c, nCells, lloydIters, portableSeed)
+    // lloydIters = 0: centroids are exact corpus rows picked by the
+    // portable hash — every downstream double (sqdist, argmin, cosine)
+    // is a sequential fold over exact parquet values, so the whole
+    // query is bit-replicable in a DuckDB oracle. The k-means default
+    // trades that for better cells (recall-tested).
+    val cents = kmeansCentroids(c, nCells, lloydIters)
     val centsSeq = cents.toSeq.map(_.toSeq)
 
     // Narrow assignment: one int column, no join, no shuffle.
@@ -1337,14 +1323,7 @@ object Similarity {
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     // deterministic portable sample: the sampleQ ids with the largest
     // portable seed-hash (same chain as the k-means / SemDeDup seeds)
-    val seedHash = pmod(pmod(col("id"), lit(1000003L)) *
-      lit(graft.config.PortableSalt.seedMul), lit(2147483647L))
-    val sample = base
-      .join(broadcast(base
-        .agg(graft.plans.TopKByScore.topKByScore(
-          seedHash.cast("double"), col("id"), sampleQ).as("top"))
-        .select(explode(col("top.id")).as("query_id"))),
-        col("id") === col("query_id"))
+    val sample = seedSample(base, sampleQ)
       .select(col("query_id"), col("v").as("qv"))
       .localCheckpoint(eager = true) // Q rows, reused by every depth
     // exact ground truth (self excluded): one corpus scan, broadcast

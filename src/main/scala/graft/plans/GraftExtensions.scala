@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SQL-surface registration for graft's native expressions, via the
   * standard `SparkSessionExtensions` hook:
@@ -13,64 +12,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
   * }}}
   *
-  * makes `vec_dot`, `vec_cosine`, `vec_sqnorm`, `vec_sqdist`,
-  * `word_shingles`, `minhash_signature`, `simhash64`,
-  * `simhash_portable`, `capped_counter`, `nearest_centroid`,
-  * `pq_encode`, and `pq_adc_score` usable from plain SQL, planned and
-  * codegen'd like built-ins — the same surface
+  * makes every function of [[GraftFunctions.functions]] usable from
+  * plain SQL, planned and codegen'd like built-ins — the same table
   * [[GraftFunctions.register]] installs on a live session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
-  import GraftFunctions.{intArg, matrixArg}
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - sequential dot product of two array<double>"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("vec_cosine"),
-      info("vec_cosine", "vec_cosine(a, b) - cosine similarity of two array<double>"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("vec_sqnorm"),
-      info("vec_sqnorm", "vec_sqnorm(a) - sum of squares"),
-      (args: Seq[Expression]) => SquaredNorm(args(0))))
-    ext.injectFunction((FunctionIdentifier("vec_sqdist"),
-      info("vec_sqdist", "vec_sqdist(a, b) - squared euclidean distance"),
-      (args: Seq[Expression]) => SquaredDistance(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "word_shingles(tokens, n) - distinct word n-grams"),
-      (args: Seq[Expression]) => WordShinglesExpr(args(0), intArg(args(1), "n"))))
-    ext.injectFunction((FunctionIdentifier("minhash_signature"),
-      info("minhash_signature", "minhash_signature(shingles, k) - MinHash signature array<bigint>"),
-      (args: Seq[Expression]) => MinHashSignatureExpr(args(0),
-        graft.operators.Dedup.defaultCoeffs(intArg(args(1), "k")), 2147483647L)))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash of a token array"),
-      (args: Seq[Expression]) => SimHash64Expr(args(0))))
-    ext.injectFunction((FunctionIdentifier("capped_counter"),
-      info("capped_counter", "capped_counter(key, cap) - memory-capped frequency map"),
-      (args: Seq[Expression]) =>
-        CappedCounter(args(0), intArg(args(1), "cap")).toAggregateExpression()))
-    // kept in lock-step with GraftFunctions.register — the runtime
-    // temp-function path and this extensions path must expose the
-    // same SQL surface
-    ext.injectFunction((FunctionIdentifier("simhash_portable"),
-      info("simhash_portable", "simhash_portable(tokens) - 60-bit md5-based SimHash"),
-      (args: Seq[Expression]) => SimHash64Expr(args(0), 60, portableMd5 = true)))
-    ext.injectFunction((FunctionIdentifier("nearest_centroid"),
-      info("nearest_centroid", "nearest_centroid(vec, centroids) - argmin sqdist cell id"),
-      (args: Seq[Expression]) =>
-        NearestCentroid(args(0), matrixArg(args(1), "nearest_centroid"))))
-    ext.injectFunction((FunctionIdentifier("pq_encode"),
-      info("pq_encode", "pq_encode(vec, codebook, m) - PQ codes array<int>"),
-      (args: Seq[Expression]) =>
-        PqEncode(args(0), matrixArg(args(1), "pq_encode"), intArg(args(2), "m"))))
-    ext.injectFunction((FunctionIdentifier("pq_adc_score"),
-      info("pq_adc_score", "pq_adc_score(qvec, codes, codebook, m) - approx squared L2"),
-      (args: Seq[Expression]) =>
-        PqAdcScore(args(0), args(1), matrixArg(args(2), "pq_adc_score"), intArg(args(3), "m"))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build))
+    }
 }

@@ -1,16 +1,17 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** Runtime registration of graft's SQL functions on a live session —
-  * the `createOrReplaceTempFunction` counterpart of
+/** graft's SQL functions ([[functions]]) and their runtime
+  * registration on a live session — the counterpart of
   * [[GraftExtensions]] (which hooks session construction via
   * `spark.sql.extensions`).
   */
 object GraftFunctions {
 
-  private[plans] def intArg(e: Expression, what: String): Int = e match {
+  private def intArg(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
   }
@@ -18,7 +19,7 @@ object GraftFunctions {
   /** Constant `array<array<double>>` argument (centroid matrix /
     * PQ codebook), folded once at resolution into the plan.
     */
-  private[plans] def matrixArg(e: Expression, fname: String): Seq[Seq[Double]] = {
+  private def matrixArg(e: Expression, fname: String): Seq[Seq[Double]] = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     def bad(what: String) = throw new IllegalArgumentException(
       s"$fname expects a non-null constant array<array<double>>; $what")
@@ -39,42 +40,46 @@ object GraftFunctions {
     }
   }
 
+  /** One SQL function: its name, its usage line and the builder of
+    * its expression from the call's arguments. */
+  final case class SqlFunction(name: String, usage: String, build: Seq[Expression] => Expression) {
+    def info: ExpressionInfo =
+      new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
+  }
+
+  /** Every graft SQL function: the one table [[register]] and
+    * [[GraftExtensions]] both install. */
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("vec_dot", "vec_dot(a, b) - sequential dot product of two array<double>",
+      args => DotProduct(args(0), args(1))),
+    SqlFunction("vec_cosine", "vec_cosine(a, b) - cosine similarity of two array<double>",
+      args => CosineSimilarity(args(0), args(1))),
+    SqlFunction("vec_sqnorm", "vec_sqnorm(a) - sum of squares",
+      args => SquaredNorm(args(0))),
+    SqlFunction("vec_sqdist", "vec_sqdist(a, b) - squared euclidean distance",
+      args => SquaredDistance(args(0), args(1))),
+    SqlFunction("word_shingles", "word_shingles(tokens, n) - distinct word n-grams",
+      args => WordShinglesExpr(args(0), intArg(args(1), "n"))),
+    SqlFunction("minhash_signature",
+      "minhash_signature(shingles, k) - MinHash signature array<bigint> over the md5-60 shingle hash",
+      args => MinHashSignatureExpr(args(0),
+        graft.operators.Dedup.defaultCoeffs(intArg(args(1), "k")), 2147483647L)),
+    SqlFunction("simhash_portable", "simhash_portable(tokens) - 60-bit md5-based SimHash",
+      args => SimHash64Expr(args(0), 60)),
+    SqlFunction("capped_counter", "capped_counter(key, cap) - memory-capped frequency map",
+      args => CappedCounter(args(0), intArg(args(1), "cap")).toAggregateExpression()),
+    // args(1): a constant array<array<double>> of centroids (any
+    // foldable expression — `array(array(...))` literals included),
+    // folded once at resolution into the plan
+    SqlFunction("nearest_centroid", "nearest_centroid(vec, centroids) - argmin sqdist cell id",
+      args => NearestCentroid(args(0), matrixArg(args(1), "nearest_centroid"))),
+    SqlFunction("pq_encode", "pq_encode(vec, codebook, m) - PQ codes array<int>",
+      args => PqEncode(args(0), matrixArg(args(1), "pq_encode"), intArg(args(2), "m"))),
+    SqlFunction("pq_adc_score", "pq_adc_score(qvec, codes, codebook, m) - approx squared L2",
+      args => PqAdcScore(args(0), args(1), matrixArg(args(2), "pq_adc_score"), intArg(args(3), "m"))))
+
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot",
-      (args: Seq[Expression]) => DotProduct(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_cosine",
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_sqnorm",
-      (args: Seq[Expression]) => SquaredNorm(args(0)), "built-in")
-    reg.createOrReplaceTempFunction("vec_sqdist",
-      (args: Seq[Expression]) => SquaredDistance(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("word_shingles",
-      (args: Seq[Expression]) => WordShinglesExpr(args(0), intArg(args(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      (args: Seq[Expression]) => MinHashSignatureExpr(args(0),
-        graft.operators.Dedup.defaultCoeffs(intArg(args(1), "k")), 2147483647L), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      (args: Seq[Expression]) => SimHash64Expr(args(0)), "built-in")
-    reg.createOrReplaceTempFunction("capped_counter",
-      (args: Seq[Expression]) =>
-        CappedCounter(args(0), intArg(args(1), "cap")).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("nearest_centroid",
-      // args(0) = vector, args(1) = constant array<array<double>> of
-      // centroids (any foldable expression — `array(array(...))`
-      // literals included); folded once at resolution into the plan.
-      (args: Seq[Expression]) =>
-        NearestCentroid(args(0), matrixArg(args(1), "nearest_centroid")), "built-in")
-    reg.createOrReplaceTempFunction("simhash_portable",
-      (args: Seq[Expression]) => SimHash64Expr(args(0), 60, portableMd5 = true), "built-in")
-    reg.createOrReplaceTempFunction("pq_encode",
-      // (vector, constant codebook of full-dim rows, m subspaces)
-      (args: Seq[Expression]) =>
-        PqEncode(args(0), matrixArg(args(1), "pq_encode"), intArg(args(2), "m")), "built-in")
-    reg.createOrReplaceTempFunction("pq_adc_score",
-      // (query vector, codes array<int>, constant codebook, m)
-      (args: Seq[Expression]) =>
-        PqAdcScore(args(0), args(1), matrixArg(args(2), "pq_adc_score"),
-          intArg(args(3), "m")), "built-in")
+    functions.foreach(f => reg.registerFunction(FunctionIdentifier(f.name), f.info, f.build))
   }
 }

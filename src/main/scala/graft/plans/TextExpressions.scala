@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, Codege
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native expressions for the text-dedup hot path.
@@ -21,19 +20,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * escaping the interpreted expression-tree evaluation, not codegen
   * of string plumbing).
   *
-  * All hashing uses XXH64 with seed 42 — the same kernel and default
-  * seed as Spark's built-in `xxhash64`, so signatures are identical
-  * to the composable formulation and stable cluster-wide.
+  * Every hash is the portable 60-bit md5 hash ([[md5Hash60]]), which
+  * any engine with md5 reproduces, so a DuckDB oracle replays each
+  * signature, band key and fingerprint exactly.
   */
 object TextExprs {
-  final val XxSeed = 42L
-
-  def xxh64(s: UTF8String): Long =
-    XXH64.hashUTF8String(s, XxSeed)
-
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
+  }
+
+  /** The input check of the hash expressions, which read their
+    * child's elements as strings. */
+  def stringArray(name: String, child: Expression): TypeCheckResult = child.dataType match {
+    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$name requires array<string>, got ${t.simpleString}")
   }
 
   /** The portable 60-bit hash ([[graft.operators.Dedup.portableHash60]])
@@ -106,27 +107,18 @@ case class WordShinglesExpr(child: Expression, n: Int)
 }
 
 /** MinHash signature: for each (a_k, b_k), min over shingles of
-  * (a_k · (h(s) mod P) + b_k) mod P. One pass over the shingle
-  * array computes all K signature rows.
-  *
-  * Input is either `array<string>` (shingles hashed in-loop with the
-  * fast xxh64 kernel — the production path) or `array<bigint>` of
-  * PRE-hashed shingles (the oracle-parity path, where the hash must be
-  * reproducible in other engines — see `Dedup.portableHash60`).
+  * (a_k · (h(s) mod P) + b_k) mod P, with h = [[TextExprs.md5Hash60]].
+  * One pass over the `array<string>` shingle array computes all K
+  * signature rows.
   */
-case class MinHashSignatureExpr(child: Expression, coeffs: Seq[(Long, Long)], prime: Long,
-                                portableMd5: Boolean = false)
+case class MinHashSignatureExpr(child: Expression, coeffs: Seq[(Long, Long)], prime: Long)
     extends UnaryExpression with CodegenFallback {
   override def prettyName: String = "minhash_signature"
+  override def checkInputDataTypes(): TypeCheckResult = TextExprs.stringArray(prettyName, child)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   private val as: Array[Long] = coeffs.map(_._1).toArray
   private val bs: Array[Long] = coeffs.map(_._2).toArray
-
-  @transient private lazy val prehashed: Boolean = child.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
 
   override def nullSafeEval(input: Any): Any = {
     val shingles = input.asInstanceOf[ArrayData]
@@ -135,11 +127,7 @@ case class MinHashSignatureExpr(child: Expression, coeffs: Seq[(Long, Long)], pr
     val n = shingles.numElements()
     var i = 0
     while (i < n) {
-      val h =
-        if (prehashed) shingles.getLong(i)
-        else if (portableMd5) TextExprs.md5Hash60(shingles.getUTF8String(i))
-        else TextExprs.xxh64(shingles.getUTF8String(i))
-      val red = java.lang.Math.floorMod(h, prime)
+      val red = java.lang.Math.floorMod(TextExprs.md5Hash60(shingles.getUTF8String(i)), prime)
       var j = 0
       while (j < k) {
         val v = java.lang.Math.floorMod(as(j) * red + bs(j), prime)
@@ -157,42 +145,32 @@ case class MinHashSignatureExpr(child: Expression, coeffs: Seq[(Long, Long)], pr
 
 /** LSH band keys of a MinHash signature: band j covers signature rows
   * [j·r, j·r + r), clipped to the signature's length (a null signature
-  * has none). Its key is either the slice's `xxhash64` (seed 42,
-  * chained element by element — Spark's `xxhash64(slice)` over
-  * `array<bigint>`) or, in the portable form, the slice's decimal
-  * values joined by "_" (`concat_ws("_", slice.cast("array<string>"))`),
-  * a string any engine can rebuild. One function serves
-  * [[BandKeysExpr]] and the Dedup MinHash kernel, so both bucket
-  * documents identically.
+  * has none). Its key is the slice's decimal values joined by "_"
+  * (`concat_ws("_", slice.cast("array<string>"))`), a string any
+  * engine can rebuild. One function serves [[BandKeysExpr]] and the
+  * Dedup MinHash kernel, so both bucket documents identically.
   */
 object BandKeys {
   private val Sep = UTF8String.fromString("_")
 
-  /** Band `j`'s key: a `java.lang.Long`, or a `UTF8String` when `portable`. */
-  def key(sig: Array[Long], j: Int, r: Int, portable: Boolean): Any = {
+  /** Band `j`'s key. */
+  def key(sig: Array[Long], j: Int, r: Int): UTF8String = {
     val from = math.min(j * r, sig.length)
     val to = math.min(from + r, sig.length)
-    if (portable) {
-      val parts = new Array[UTF8String](to - from)
-      var i = from
-      while (i < to) { parts(i - from) = UTF8String.fromString(java.lang.Long.toString(sig(i))); i += 1 }
-      UTF8String.concatWs(Sep, parts: _*)
-    } else {
-      var h = TextExprs.XxSeed
-      var i = from
-      while (i < to) { h = XXH64.hashLong(sig(i), h); i += 1 }
-      java.lang.Long.valueOf(h)
-    }
+    val parts = new Array[UTF8String](to - from)
+    var i = from
+    while (i < to) { parts(i - from) = UTF8String.fromString(java.lang.Long.toString(sig(i))); i += 1 }
+    UTF8String.concatWs(Sep, parts: _*)
   }
 }
 
-/** `array<struct<band int, key bigint|string>>`: the [[BandKeys]] of
-  * every band of a signature, in band order. Replaces a per-band
-  * `struct(slice, cast, concat_ws | xxhash64)` expression tree with one
-  * loop; a null signature gives every band the key of an empty slice,
-  * as that tree did.
+/** `array<struct<band int, key string>>`: the [[BandKeys]] of every
+  * band of a signature, in band order. Replaces a per-band
+  * `struct(slice, cast, concat_ws)` expression tree with one loop; a
+  * null signature gives every band the key of an empty slice, as that
+  * tree did.
   */
-case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int, portable: Boolean)
+case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int)
     extends UnaryExpression with CodegenFallback {
   require(bands >= 1 && rowsPerBand >= 1, s"bands=$bands and rowsPerBand=$rowsPerBand must be positive")
   override def prettyName: String = "band_keys"
@@ -200,7 +178,7 @@ case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int, portabl
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("band", IntegerType, nullable = false),
-      StructField("key", if (portable) StringType else LongType, nullable = false))),
+      StructField("key", StringType, nullable = false))),
     containsNull = false)
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
@@ -209,7 +187,7 @@ case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int, portabl
     val out = new Array[Any](bands)
     var j = 0
     while (j < bands) {
-      out(j) = org.apache.spark.sql.catalyst.InternalRow(j, BandKeys.key(sig, j, rowsPerBand, portable))
+      out(j) = org.apache.spark.sql.catalyst.InternalRow(j, BandKeys.key(sig, j, rowsPerBand))
       j += 1
     }
     new GenericArrayData(out)
@@ -219,33 +197,26 @@ case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int, portabl
     copy(child = newChild)
 }
 
-/** SimHash over a token array: per token-hash bit, fold a +1/-1
-  * counter; sign bits packed MSB-first (bit nBits-1 of the hash
-  * first), matching the composable `foldLeft` formulation in
-  * [[graft.operators.Dedup.simhash64]].
-  *
-  * `array<string>` input hashes tokens in-loop with xxh64 (production,
-  * nBits=64); `array<bigint>` input uses the pre-hashed values
-  * directly (oracle-parity path with the portable 60-bit hash).
+/** SimHash over a token array: per bit of each token's
+  * [[TextExprs.md5Hash60]], fold a +1/-1 counter over the low `nBits`
+  * bits; sign bits packed MSB-first (bit nBits-1 of the hash first),
+  * the fold order of the DuckDB oracle's replay
+  * ([[graft.operators.Dedup.simhashPortable]]).
   */
-case class SimHash64Expr(child: Expression, nBits: Int = 64, portableMd5: Boolean = false)
+case class SimHash64Expr(child: Expression, nBits: Int)
     extends UnaryExpression with CodegenFallback {
-  require(nBits >= 1 && nBits <= 64)
+  require(nBits >= 1 && nBits <= 60)
   override def prettyName: String = "simhash64"
+  override def checkInputDataTypes(): TypeCheckResult = TextExprs.stringArray(prettyName, child)
   override def dataType: DataType = LongType
-
-  @transient private lazy val prehashed: Boolean = child.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
 
   // Token distributions are Zipfian — memoize md5 results per
   // expression instance (one per task, single-threaded eval) with a
   // bounded map; >90% of occurrences hit the cache on natural text,
-  // cutting the digest cost of the portable path several-fold.
+  // cutting the digest cost several-fold.
   @transient private lazy val md5Cache = new java.util.HashMap[String, java.lang.Long](1 << 12)
 
-  private def portableHash(s: UTF8String): Long = {
+  private def hash(s: UTF8String): Long = {
     val key = s.toString
     val hit = md5Cache.get(key)
     if (hit != null) hit.longValue()
@@ -263,10 +234,7 @@ case class SimHash64Expr(child: Expression, nBits: Int = 64, portableMd5: Boolea
     val n = toks.numElements()
     var i = 0
     while (i < n) {
-      val h =
-        if (prehashed) toks.getLong(i)
-        else if (portableMd5) portableHash(toks.getUTF8String(i))
-        else TextExprs.xxh64(toks.getUTF8String(i))
+      val h = hash(toks.getUTF8String(i))
       var b = 0
       while (b < nBits) {
         counters(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1)

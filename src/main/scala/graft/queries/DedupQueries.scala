@@ -200,7 +200,7 @@ object DedupQueries {
       // duplicate mode and the background separate before a dedup run
       // commits to a cutoff.
       Dedup.jaccardThresholdProfile(t(s, dir, "documents"), "text", "doc_id",
-        shingleSize = 3, numHashes = 128, bands = 32, portableHash = true))(
+        shingleSize = 3, numHashes = 128, bands = 32))(
       s"""WITH $minhashLshCtes,
          tp_b AS (SELECT least(CAST(floor(jac * 10) AS INTEGER), 9) AS bin,
              CAST(count(*) AS BIGINT) AS n_pairs FROM mh_ver GROUP BY 1)
@@ -321,8 +321,7 @@ object DedupQueries {
       // buckets) — what you actually run at 100 TB, where the exact-pair
       // variant above is the sampled recall oracle.
       val pairs = Dedup.minhashNearDups(t(s, dir, "documents"), "text", "doc_id",
-        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-        portableHash = true)
+        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3)
       Dedup.connectedComponents(pairs)
         .select(col("id").as("doc_id"), col("cluster_id"))
         .orderBy("doc_id")
@@ -340,16 +339,10 @@ object DedupQueries {
            least(n.doc_id, min(r.dst)) AS cluster_id
          FROM nodes n LEFT JOIN reach r ON r.src = n.doc_id
          GROUP BY n.doc_id ORDER BY n.doc_id"""),
-    // portableHash: the oracle-checked variants hash shingles/tokens
-    // with the engine-independent md5-based hash so the DuckDB oracle
-    // replicates the WHOLE approximate pipeline (signature, banding,
-    // bucket cap, verification) bit-for-bit; the xxh64 fast path is
-    // covered by DedupSpec recall tests.
     QuerySpec("dedup_minhash_lsh", Headline, Scale10x, Golden,
       PlanDoc("MinHash kernel: band buckets combined map-side into capped member lists, candidate pairs and a co-partitioned exact-Jaccard verify in one job; text never shuffles, no Catalyst join"))((s, dir) =>
       Dedup.minhashNearDups(t(s, dir, "documents"), "text", "doc_id",
-          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-          portableHash = true)
+          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3)
         .select(col("id_a"), col("id_b"), rd(col("jaccard"), 6).as("jaccard"))
         .orderBy("id_a", "id_b"))(minhashLshOracleSql),
     QuerySpec("dedup_containment", Scale10x, Golden,
@@ -358,8 +351,7 @@ object DedupQueries {
       // MAX-CONTAINMENT |A∩B|/min(|A|,|B|) — the embeds-the-other
       // metric (Gopher-style) symmetric Jaccard under-scores.
       Dedup.containmentNearDups(t(s, dir, "documents"), "text", "doc_id",
-          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.5,
-          portableHash = true)
+          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.5)
         .select(col("id_a"), col("id_b"), rd(col("containment"), 6).as("containment"))
         .orderBy("id_a", "id_b"))(containmentOracleSql),
     QuerySpec("dedup_incremental", Scale10x, Golden)((s, dir) => {
@@ -377,18 +369,16 @@ object DedupQueries {
         val b1 = docs.filter(col("doc_id") % 2 === 0)
         val b2 = docs.filter(col("doc_id") % 2 === 1)
         val s1 = Dedup.incrementalMinhash(b1, "text", "doc_id", idx,
-          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-          portableHash = true)
+          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3)
         // Batch-1's commit is overlapped behind batch-2's within-batch
         // candidate build (guide §2.6; r15): the build depends only on
         // b2, the commit only writes the index, and the operator
         // barriers before its first index read — computes exactly what
         // the sequential { commit(s1); incrementalMinhash(b2) } did.
         val s2 = Dedup.incrementalMinhashOverlapping(b2, "text", "doc_id", idx,
-          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-          portableHash = true) { () =>
+          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3) { () =>
           Dedup.commitMinhash(s1, "text", "doc_id", idx,
-            shingleSize = 3, numHashes = 128, bands = 32, portableHash = true)
+            shingleSize = 3, numHashes = 128, bands = 32)
         }
         s1.select(col("doc_id"), lit(1).as("batch"))
           .union(s2.select(col("doc_id"), lit(2).as("batch")))
@@ -432,8 +422,7 @@ object DedupQueries {
          ORDER BY doc_id"""
     }),
     QuerySpec("dedup_simhash", Scale10x, Golden)((s, dir) =>
-      Dedup.simhashNearDups(t(s, dir, "documents"), "text", "doc_id", maxHamming = 8,
-          portableHash = true)
+      Dedup.simhashNearDups(t(s, dir, "documents"), "text", "doc_id", maxHamming = 8)
         .orderBy("id_a", "id_b"))(simhashOracleSql),
     QuerySpec("dedup_embed_lsh", Scale10x,
       PlanDoc("capped hyperplane buckets, vectors rejoin per candidate"))((s, dir) =>
@@ -448,7 +437,7 @@ object DedupQueries {
       // (lloydIters = 0) so the oracle replays the full pipeline; the
       // k-means path keeps its behavior tests in DedupSpec.
       Dedup.semanticDedup(t(s, dir, "embeddings"), "embedding", "vec_id",
-          nCells = 8, threshold = 0.4, lloydIters = 0, portableSeed = true)
+          nCells = 8, threshold = 0.4, lloydIters = 0)
         .orderBy("id"))(dedupSemanticOracleSql),
     QuerySpec("dedup_url")((s, dir) => {
       // URL canonicalization dedup: four crawl-spelling variants of
@@ -592,8 +581,7 @@ object DedupQueries {
       // dedup_minhash_lsh) verified by BOUNDED levenshtein over the
       // raw text — the character-edit notion of near-duplicate.
       Dedup.editDistanceNearDups(t(s, dir, "documents"), "text", "doc_id",
-          maxDist = 32, shingleSize = 3, numHashes = 128, bands = 32,
-          portableHash = true)
+          maxDist = 32, shingleSize = 3, numHashes = 128, bands = 32)
         .orderBy("id_a", "id_b"))(
       s"""WITH ${minhashChain("ed_", "")},
          edl AS (SELECT doc_id, text, length(text) AS len FROM documents),
@@ -611,8 +599,7 @@ object DedupQueries {
       // integer-exact clique/chain/mixed verdict — "collapse this
       // cluster" vs "re-verify before collapsing".
       val pairs = Dedup.minhashNearDups(t(s, dir, "documents"), "text", "doc_id",
-        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-        portableHash = true)
+        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3)
       graft.operators.Graphs.clusterQuality(pairs)
         .orderBy("cluster_id")
     })(
@@ -669,8 +656,7 @@ object DedupQueries {
       // Degree-ordered node-iterator: O(m^1.5) exact, per-node counts
       // orientation-invariant so the id-ordered oracle matches.
       val pairs = Dedup.minhashNearDups(t(s, dir, "documents"), "text", "doc_id",
-        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-        portableHash = true)
+        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3)
       graft.operators.Graphs.triangleStats(pairs)
         .select(col("node").as("doc_id"), col("degree"),
           col("n_triangles"), col("clustering"))
@@ -700,7 +686,7 @@ object DedupQueries {
       // shows which bands carry hot (degenerate/boilerplate) buckets
       // and what the cap is dropping, before the corpus-scale run.
       Dedup.minhashBandProfile(t(s, dir, "documents"), "text", "doc_id",
-        shingleSize = 3, numHashes = 128, bands = 32, portableHash = true))(
+        shingleSize = 3, numHashes = 128, bands = 32))(
       s"""WITH $minhashLshCtes,
          bpf AS (SELECT band, key, CAST(count(*) AS BIGINT) AS m
            FROM mh_buckets GROUP BY band, key)
@@ -718,7 +704,7 @@ object DedupQueries {
       // 1-(1-j^r)^b curve on the actual corpus, caps included.
       Dedup.minhashRecallProfile(t(s, dir, "documents"), "text", "doc_id",
         bandsList = Seq(8, 16, 32), shingleSize = 3, numHashes = 128,
-        threshold = 0.3, sampleQ = 8, portableHash = true))(
+        threshold = 0.3, sampleQ = 8))(
       dedupRecallProfileOracleSql(Seq(8, 16, 32), 128, 0.3, 8)),
     QuerySpec("graph_suite", Headline, Scale10x, Golden)((s, dir) => {
       // One-build-many-queries composition: the capped-LSH pair set
@@ -727,8 +713,7 @@ object DedupQueries {
       // keep/collapse/re-verify frame, where running dedup_clusters_lsh
       // + dedup_triangles separately pays the candidate build twice.
       val pairs = Dedup.minhashNearDups(t(s, dir, "documents"), "text", "doc_id",
-        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-        portableHash = true)
+        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3)
       graft.operators.Graphs.graphSuite(pairs)
         .select(col("node").as("doc_id"), col("cluster_id"), col("degree"),
           col("n_triangles"), col("clustering"))

@@ -537,7 +537,7 @@ object EmbQueries {
       Similarity.ivfTopK(
           e.filter(col("vec_id") >= 5), e.filter(col("vec_id") < 5),
           "embedding", "vec_id", 10, nCells = 16, nProbe = 4,
-          lloydIters = 0, portableSeed = true)
+          lloydIters = 0)
         .select(col("query_id"), col("corpus_id"), rd(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("query_id", "rank")
     })(annIvfOracleSql),
@@ -547,8 +547,7 @@ object EmbQueries {
       val e = t(s, dir, "embeddings")
       Similarity.pqTopK(
           e.filter(col("vec_id") >= 5), e.filter(col("vec_id") < 5),
-          "embedding", "vec_id", 10, m = 8, ksub = 16, lloydIters = 0,
-          portableSeed = true)
+          "embedding", "vec_id", 10, m = 8, ksub = 16, lloydIters = 0)
         .select(col("query_id"), col("corpus_id"),
                 rd(col("approx_sqdist"), 6).as("approx_sqdist"), col("rank"))
         .orderBy("query_id", "rank")
@@ -687,14 +686,14 @@ object EmbQueries {
       // narrow corpus scan scoring every m at once — the bits-vs-
       // distortion curve measured before a cluster-wide encode.
       graft.operators.Similarity.pqDistortionProfile(t(s, dir, "embeddings"),
-        "embedding", "vec_id", dim = 64, portableSeed = true))(pqProfileOracleSql),
+        "embedding", "vec_id", dim = 64))(pqProfileOracleSql),
     QuerySpec("emb_ivf_profile", Scale10x, Golden)((s, dir) =>
       // IVF nProbe advisor: exact scan work + sampled recall@k per
       // candidate probe count — ONE corpus pass scores every depth
       // (cells partition the corpus, so each candidate row carries
       // exactly one probe rank).
       graft.operators.Similarity.ivfProbeProfile(t(s, dir, "embeddings"),
-        "embedding", "vec_id", dim = 64, portableSeed = true))(
+        "embedding", "vec_id", dim = 64))(
       ivfProfileOracleSql(Seq(1, 2, 4, 8), 16, 10, 8)),
     QuerySpec("emb_recall_profile", Scale10x)((s, dir) =>
       // The recall half of the key-depth decision emb_bucket_profile

@@ -108,7 +108,7 @@ object SampQueries {
       // replays the cells, the hash order, and the cap exactly.
       graft.operators.Sampling.clusterBalancedSample(t(s, dir, "embeddings"),
           "embedding", "vec_id", nCells = 8, perCell = 5,
-          lloydIters = 0, portableSeed = true)
+          lloydIters = 0)
         .orderBy("cell_id", "rank"))(sampClusterBalancedOracleSql),
     QuerySpec("samp_mixture",
       PlanDoc("derived keep-rates become a literal CASE filter — narrow scan, no join or window on the data path"))((s, dir) => {

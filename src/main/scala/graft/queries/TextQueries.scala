@@ -187,8 +187,7 @@ object TextQueries {
       // follows clustering in a real curation stack.
       val docs = t(s, dir, "documents")
       val pairs = Dedup.minhashNearDups(docs, "text", "doc_id",
-        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-        portableHash = true)
+        shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3)
       val clusters = Dedup.connectedComponents(pairs)
         .select(col("id").as("doc_id"), col("cluster_id"))
       val q = TextAnalysis.quality(docs, "text").select(col("doc_id"), col("quality_score"))
@@ -288,8 +287,7 @@ object TextQueries {
       val docs = t(s, dir, "documents")
       val scored = TextAnalysis.quality(TextAnalysis.withLangId(docs, "text"), "text")
       val dupLosers = Dedup.minhashNearDups(docs, "text", "doc_id",
-          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.5,
-          portableHash = true)
+          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.5)
         .select(col("id_b").as("doc_id")).distinct()
       scored
         .filter(col("lang_pred") === "en" && col("quality_score") >= 0.5)
@@ -333,8 +331,7 @@ object TextQueries {
       val docs = t(s, dir, "documents")
       Dedup.minhashDecontaminate(docs.filter(col("doc_id") >= 20),
           docs.filter(col("doc_id") < 20), "text", "doc_id",
-          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3,
-          portableHash = true)
+          shingleSize = 3, numHashes = 128, bands = 32, threshold = 0.3)
         .select("doc_id").orderBy("doc_id")
     })(fuzzyDecontaminateOracleSql),
     QuerySpec("txt_chunk_dedup",

@@ -84,21 +84,10 @@ object PipelineForensics {
                probe: (Double, Double)): String = {
         val verdict = PipelineMeter.adjudicate(m, canaryBase,
           base.getOrElse(s"${tag(fmt)}_proc_cpu_us_per_img", -1L))
-        s"""{"iter":$iter,"fmt":"$fmt","images":${m.images},"successes":${m.successes},""" +
-          s""""sec":${f3(m.wallSecs)},"img_per_sec":${f3(m.imgPerSec)},""" +
-          s""""proc_cpu_us_per_img":${m.procCpuUsPerImg},""" +
-          s""""exec_cpu_us_per_img":${m.execCpuUsPerImg},""" +
-          s""""out_bytes_per_img":${m.outBytesPerImg},""" +
-          s""""gc_ms":${m.gcMs},"jit_ms":${m.jitMs},""" +
-          s""""task_failures":${m.taskFailures},"stage_retries":${m.stageRetries},""" +
-          s""""server_requests":${m.serverRequests},"server_errors":${m.serverErrors},""" +
-          s""""canary_ns_med":${m.canaryNsMed},"canary_ns_min":${m.canaryNsMin},""" +
-          s""""canary_chunks":${m.canaryChunks},"canary_mode":"${m.canaryMode}",""" +
-          s""""steal_ms":${m.stealMs},"host_busy_pct":${m.hostBusyPct},""" +
-          s""""runq_wait_ms":${m.runqWaitMs},"cpu_mhz":${m.cpuMhz},""" +
-          s""""verdict":"$verdict",""" +
-          s""""code_cache_mb":${PipelineMeter.codeCacheUsedBytes() / (1024 * 1024)},""" +
-          s""""probe_med":${f3(probe._1)},"probe_p90":${f3(probe._2)}}"""
+        m.json(head = Seq("iter" -> iter, "fmt" -> s""""$fmt""""),
+          tail = Seq("verdict" -> s""""$verdict"""",
+            "code_cache_mb" -> PipelineMeter.codeCacheUsedBytes() / (1024 * 1024),
+            "probe_med" -> f3(probe._1), "probe_p90" -> f3(probe._2)))
       }
       // optional bench-context pressure phase: every registered query
       // once, loading the code cache like the real bench's query phase

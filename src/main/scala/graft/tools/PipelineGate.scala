@@ -53,18 +53,8 @@ object PipelineGate {
         // per-run forensics line (r12 verdict #2): gc/jit/task-retry/
         // server counters make a pathological run attributable from
         // the gate output alone
-        println(s"""[pipeline-gate] run $out: {"images":${m.images},""" +
-          s""""successes":${m.successes},"sec":${BigDecimal(m.wallSecs)
-            .setScale(3, BigDecimal.RoundingMode.HALF_UP)},""" +
-          s""""proc_cpu_us_per_img":${m.procCpuUsPerImg},""" +
-          s""""exec_cpu_us_per_img":${m.execCpuUsPerImg},""" +
-          s""""gc_ms":${m.gcMs},"jit_ms":${m.jitMs},""" +
-          s""""task_failures":${m.taskFailures},"stage_retries":${m.stageRetries},""" +
-          s""""server_requests":${m.serverRequests},"server_errors":${m.serverErrors},""" +
-          s""""canary_ns_med":${m.canaryNsMed},"canary_ns_min":${m.canaryNsMin},""" +
-          s""""canary_chunks":${m.canaryChunks},"canary_mode":"${m.canaryMode}",""" +
-          s""""steal_ms":${m.stealMs},"host_busy_pct":${m.hostBusyPct},""" +
-          s""""runq_wait_ms":${m.runqWaitMs},"cpu_mhz":${m.cpuMhz}}""")
+        println(s"[pipeline-gate] run $out: " +
+          m.json(omit = Set("img_per_sec", "out_bytes_per_img")))
         m
       }
       // untimed warm-up: JIT/ImageIO/HTTP-client warm-up is progressive

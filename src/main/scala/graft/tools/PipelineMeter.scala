@@ -99,6 +99,30 @@ object PipelineMeter {
     def procCpuUsPerImg: Long = if (procCpuNs < 0) -1L else per(procCpuNs / 1000)
     def outBytesPerImg: Long = per(outBytes)
     def imgPerSec: Double = if (wallSecs <= 0) 0.0 else images / wallSecs
+
+    /** This measure as one JSON object, the one form every pipeline tool
+      * prints: the caller's `head` members, then the measure's own
+      * members in one fixed order (less `omit`), then the caller's
+      * `tail`. `head` and `tail` values are JSON literals; `sec` keeps 3
+      * decimals and `img_per_sec` keeps `rateDecimals`.
+      */
+    def json(head: Seq[(String, Any)] = Nil, tail: Seq[(String, Any)] = Nil,
+             omit: Set[String] = Set.empty, rateDecimals: Int = 3): String = {
+      def dec(d: Double, n: Int) = BigDecimal(d).setScale(n, BigDecimal.RoundingMode.HALF_UP)
+      val own = Seq[(String, Any)](
+        "images" -> images, "successes" -> successes, "sec" -> dec(wallSecs, 3),
+        "img_per_sec" -> dec(imgPerSec, rateDecimals),
+        "proc_cpu_us_per_img" -> procCpuUsPerImg, "exec_cpu_us_per_img" -> execCpuUsPerImg,
+        "out_bytes_per_img" -> outBytesPerImg, "gc_ms" -> gcMs, "jit_ms" -> jitMs,
+        "task_failures" -> taskFailures, "stage_retries" -> stageRetries,
+        "server_requests" -> serverRequests, "server_errors" -> serverErrors,
+        "canary_ns_med" -> canaryNsMed, "canary_ns_min" -> canaryNsMin,
+        "canary_chunks" -> canaryChunks, "canary_mode" -> s""""$canaryMode"""",
+        "steal_ms" -> stealMs, "host_busy_pct" -> hostBusyPct,
+        "runq_wait_ms" -> runqWaitMs, "cpu_mhz" -> cpuMhz)
+      (head ++ own.filterNot(f => omit(f._1)) ++ tail)
+        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    }
   }
 
   /** Whole-JVM CPU time (ns since JVM start), −1 if the platform bean

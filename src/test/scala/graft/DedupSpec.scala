@@ -119,7 +119,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash near-dups: identical docs at hamming 0, near at small distance") {
-    val sigs = planted.select(col("doc_id"), Dedup.simhash64(col("text")).as("sig"))
+    val sigs = planted.select(col("doc_id"), Dedup.simhashPortable(col("text")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs(1L) == sigs(4L), "identical text → identical simhash")
     val d12 = java.lang.Long.bitCount(sigs(1L) ^ sigs(2L))
@@ -193,10 +193,10 @@ class DedupSpec extends SparkSpec {
     // documented recall-for-safety trade, same as the LSH bucket cap)
     val ident = (0L until 500L).map(i => (i, Array.fill(8)(1.0f))).toDF("vec_id", "embedding")
     val capped = Dedup.semanticDedup(ident, "embedding", "vec_id",
-      nCells = 2, threshold = 0.9, lloydIters = 0, portableSeed = true, maxCellSize = 100)
+      nCells = 2, threshold = 0.9, lloydIters = 0, maxCellSize = 100)
     assert(capped.count() == 500, "capped cell forms no pairs; all rows survive")
     val uncapped = Dedup.semanticDedup(ident.limit(20), "embedding", "vec_id",
-      nCells = 2, threshold = 0.9, lloydIters = 0, portableSeed = true)
+      nCells = 2, threshold = 0.9, lloydIters = 0)
     assert(uncapped.count() == 1, "under the cap the duplicate group collapses to one")
   }
 
@@ -1184,7 +1184,7 @@ class DedupSpec extends SparkSpec {
     val rows = (0L until 40L).map(i => (i, s"doc $i has words w${i % 7} w${i % 5} w${i % 3} tail"))
     val out = graft.operators.Dedup.minhashBandProfile(
         rows.toDF("id", "text"), "text", "id",
-        shingleSize = 2, numHashes = 16, bands = 8, portableHash = true).collect()
+        shingleSize = 2, numHashes = 16, bands = 8).collect()
     assert(out.length === 8)
     out.foreach(r => assert(r.getLong(2) === 40L, s"every doc lands once per band: $r"))
     out.foreach(r => assert(r.getLong(6) >= 0L && r.getLong(3) >= 1L))
@@ -1329,7 +1329,7 @@ class DedupSpec extends SparkSpec {
     val out = graft.operators.Dedup.minhashRecallProfile(
         (groups ++ fillers).toDF("doc_id", "text"), "text", "doc_id",
         bandsList = Seq(4, 8, 16), shingleSize = 3, numHashes = 16,
-        threshold = 0.5, sampleQ = 6, portableHash = true)
+        threshold = 0.5, sampleQ = 6)
       .collect().sortBy(_.getInt(0))
     assert(out.length === 3)
     val truthN = out.head.getLong(3)
@@ -1350,7 +1350,7 @@ class DedupSpec extends SparkSpec {
     val out = graft.operators.Dedup.minhashRecallProfile(
         docs, "text", "doc_id", bandsList = Seq(8, 32),
         shingleSize = 3, numHashes = 128, threshold = 0.3,
-        sampleQ = 6, portableHash = true)
+        sampleQ = 6)
       .collect().sortBy(_.getInt(0))
     assert(out.length === 2)
     assert(out.map(_.getLong(3)).distinct.length === 1, "one shared truth set")

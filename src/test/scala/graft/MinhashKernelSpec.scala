@@ -15,18 +15,14 @@ import graft.plans.BandKeys
 class MinhashKernelSpec extends SparkSpec {
 
   /** The Column formulation the native band keys replaced: per band,
-    * `slice`, then `cast` to strings joined by `concat_ws("_")`, or
-    * `xxhash64` of the slice. */
-  private def referenceBandKeys(sig: Column, bands: Int, r: Int, portable: Boolean): Column =
+    * `slice`, then `cast` to strings joined by `concat_ws("_")`. */
+  private def referenceBandKeys(sig: Column, bands: Int, r: Int): Column =
     array((0 until bands).map { j =>
-      val sliced = slice(sig, j * r + 1, r)
-      val key =
-        if (portable) concat_ws("_", sliced.cast("array<string>"))
-        else xxhash64(sliced)
+      val key = concat_ws("_", slice(sig, j * r + 1, r).cast("array<string>"))
       struct(lit(j).as("band"), key.as("key"))
     }: _*)
 
-  test("band keys: native function and BandKeysExpr equal the slice/cast/concat_ws|xxhash64 formulation") {
+  test("band keys: native function and BandKeysExpr equal the slice/cast/concat_ws formulation") {
     import spark.implicits._
     val rng = new scala.util.Random(11)
     def value(): Long = rng.nextInt(4) match {
@@ -41,21 +37,18 @@ class MinhashKernelSpec extends SparkSpec {
       val sigs: Seq[Option[Seq[Long]]] =
         Seq.fill(30)(Some(Seq.fill(numHashes)(value()))) :+ None
       val df = sigs.zipWithIndex.map { case (s, i) => (i, s) }.toDF("i", "sig")
-      for (portable <- Seq(false, true)) {
-        val rows = df.select(col("i"),
-            Dedup.bandKeys(col("sig"), bands, r, portable).as("got"),
-            referenceBandKeys(col("sig"), bands, r, portable).as("ref"))
-          .collect()
-        assert(rows.length == sigs.size)
-        rows.foreach { row =>
-          val ref = row.getSeq[Row](2)
-          assert(row.getSeq[Row](1) == ref,
-            s"BandKeysExpr, numHashes=$numHashes bands=$bands portable=$portable")
-          val sig = sigs(row.getInt(0)).fold(Array.emptyLongArray)(_.toArray)
-          (0 until bands).foreach { j =>
-            assert(BandKeys.key(sig, j, r, portable).toString == ref(j).get(1).toString,
-              s"BandKeys.key band $j, numHashes=$numHashes bands=$bands portable=$portable")
-          }
+      val rows = df.select(col("i"),
+          Dedup.bandKeys(col("sig"), bands, r).as("got"),
+          referenceBandKeys(col("sig"), bands, r).as("ref"))
+        .collect()
+      assert(rows.length == sigs.size)
+      rows.foreach { row =>
+        val ref = row.getSeq[Row](2)
+        assert(row.getSeq[Row](1) == ref, s"BandKeysExpr, numHashes=$numHashes bands=$bands")
+        val sig = sigs(row.getInt(0)).fold(Array.emptyLongArray)(_.toArray)
+        (0 until bands).foreach { j =>
+          assert(BandKeys.key(sig, j, r).toString == ref(j).get(1).toString,
+            s"BandKeys.key band $j, numHashes=$numHashes bands=$bands")
         }
       }
     }

@@ -208,4 +208,32 @@ class PipelineMeterSpec extends SparkSpec {
     assert(!PipelineMeter.bimodal(Seq(m(5000), noBean)),
       "an unmeasurable attempt cannot make a pair bimodal")
   }
+
+  test("json: the three pipeline tools print their members in their own order") {
+    val m = PipelineMeter.PipeMeasure(100, 98, 2.5, 49000000L, 98000000L, 9800L,
+      gcMs = 1, jitMs = 2, taskFailures = 3, stageRetries = 4, serverRequests = 5,
+      serverErrors = 6, canaryNsMed = 7, canaryNsMin = 8, canaryChunks = 9,
+      canaryMode = "child", stealMs = 10, hostBusyPct = 11, runqWaitMs = 12, cpuMhz = 13)
+    val counters = """"gc_ms":1,"jit_ms":2,"task_failures":3,"stage_retries":4,""" +
+      """"server_requests":5,"server_errors":6,"canary_ns_med":7,"canary_ns_min":8,""" +
+      """"canary_chunks":9,"canary_mode":"child","steal_ms":10,"host_busy_pct":11,""" +
+      """"runq_wait_ms":12,"cpu_mhz":13"""
+    // PipelineGate's per-run line
+    assert(m.json(omit = Set("img_per_sec", "out_bytes_per_img")) ===
+      """{"images":100,"successes":98,"sec":2.500,"proc_cpu_us_per_img":1000,""" +
+        s""""exec_cpu_us_per_img":500,$counters}""")
+    // Bench's per-attempt record
+    assert(m.json(omit = Set("images", "successes"), rateDecimals = 1,
+        tail = Seq("verdict" -> "\"healthy\"", "failures" -> 2)) ===
+      """{"sec":2.500,"img_per_sec":40.0,"proc_cpu_us_per_img":1000,""" +
+        s""""exec_cpu_us_per_img":500,"out_bytes_per_img":100,$counters,""" +
+        """"verdict":"healthy","failures":2}""")
+    // PipelineForensics' line
+    assert(m.json(head = Seq("iter" -> 0, "fmt" -> "\"parquet\""),
+        tail = Seq("verdict" -> "\"healthy\"", "code_cache_mb" -> 64, "probe_med" -> "0.500")) ===
+      """{"iter":0,"fmt":"parquet","images":100,"successes":98,"sec":2.500,""" +
+        """"img_per_sec":40.000,"proc_cpu_us_per_img":1000,"exec_cpu_us_per_img":500,""" +
+        s""""out_bytes_per_img":100,$counters,"verdict":"healthy","code_cache_mb":64,""" +
+        """"probe_med":0.500}""")
+  }
 }

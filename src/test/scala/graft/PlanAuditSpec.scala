@@ -119,9 +119,8 @@ class PlanAuditSpec extends SparkSpec {
     }
 
   /** A shuffle record is slim when it is ((band, key), id) or (id, id);
-    * a portable band key is signature digits joined by "_". */
+    * a band key is signature digits joined by "_". */
   private def slim(rec: Any): Boolean = rec match {
-    case ((_: Int, _: Long), _: Long) => true
     case ((_: Int, k: org.apache.spark.unsafe.types.UTF8String), _: Long) =>
       k.toString.matches("-?[0-9]+(_-?[0-9]+)*")
     case (_: Long, _: Long) => true
@@ -169,7 +168,7 @@ class PlanAuditSpec extends SparkSpec {
       docs.filter(col("doc_id") % 2 === 0), "text", "doc_id", idx, shingleSize = 3)
     val k = new graft.operators.Dedup.MinhashKernel(docs.filter(col("doc_id") % 2 === 1),
       "text", "doc_id", shingleSize = 3, numHashes = 128, bands = 32,
-      seed = graft.operators.Dedup.DefaultSeed, maxBucketSize = 1000, portableHash = false)
+      seed = graft.operators.Dedup.DefaultSeed, maxBucketSize = 1000)
     try {
       // the (band, key) bucket shuffles of the batch AND of the index
       // carry only ((band, key), id), and the candidate pairs only ids:
@@ -798,7 +797,7 @@ class PlanAuditSpec extends SparkSpec {
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val k = new graft.operators.Dedup.MinhashKernel(docs, "text", "doc_id",
       shingleSize = 3, numHashes = 128, bands = 32, seed = graft.operators.Dedup.DefaultSeed,
-      maxBucketSize = 1000, portableHash = true)
+      maxBucketSize = 1000)
     try auditCandidates(k, k.candidates)
     finally k.close()
   }
@@ -808,7 +807,7 @@ class PlanAuditSpec extends SparkSpec {
     val docs = org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(
       spark.read.parquet(sf("sf0.001") + "/documents.parquet").repartition(4))
     val jobs = jobsOf(graft.operators.Dedup.minhashNearDups(docs, "text", "doc_id",
-      shingleSize = 3, threshold = 0.3, portableHash = true).collect())
+      shingleSize = 3, threshold = 0.3).collect())
     assert(jobs <= 2, s"$jobs jobs")
   }
 

@@ -2,10 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the one session policy, the one listener and the one query
-  * registry single: a new main builds its session through
-  * `tools.LocalSession`, meters through `tools.Meter` and selects
-  * queries by `QuerySpec` tag, never through its own copies.
+/** Keeps the one session policy, the one listener, the one query
+  * registry and the one hash family single: a new main builds its
+  * session through `tools.LocalSession`, meters through `tools.Meter`
+  * and selects queries by `QuerySpec` tag, and the MinHash, SimHash and
+  * seed operators hash only with the oracle-checked md5-60 and id
+  * hashes, never through their own copies.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -47,5 +49,16 @@ class SourceGuardSpec extends AnyFunSuite {
       if names(n) && !warmUps((f, n))
     } yield s"$f: $n"
     assert(outside.isEmpty, s"select queries by QuerySpec tag, not by name: $outside")
+  }
+
+  test("one hash family: no portable… flag, no xxh64 in the MinHash, SimHash and seed code") {
+    val flags = codeLines.filter { case (_, l) => """\bportable\w*\s*:\s*Boolean""".r.findFirstIn(l).isDefined }
+    assert(flags.isEmpty, s"hash with the one oracle-checked family, not behind a flag: $flags")
+    val hashFamily = Set("graft/operators/Dedup.scala", "graft/operators/Similarity.scala",
+      "graft/operators/Sampling.scala")
+    val xx = codeLines.filter { case (f, l) =>
+      (f.startsWith("graft/plans/") || hashFamily(f)) && "(?i)xx(h|hash)64".r.findFirstIn(l).isDefined
+    }
+    assert(xx.isEmpty, s"xxh64 is not an oracle-checked hash: $xx")
   }
 }
