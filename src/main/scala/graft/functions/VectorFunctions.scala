@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Dense-vector math over `array<float>` / `array<double>` embedding
-  * columns, expressed with `zip_with` / `aggregate` higher-order
-  * built-ins so everything is codegen'd — no UDF, no driver loop.
+  * columns, as native codegen'd expressions
+  * ([[graft.plans.CosineSimilarity]] and its siblings), not UDFs.
   *
   * Scale note: these are per-row scalar expressions; the pairwise
   * operators that use them (similarity search, near-dup) control the
@@ -15,22 +14,11 @@ import org.apache.spark.sql.functions._
 object VectorFunctions {
 
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-  import graft.plans.{CosineSimilarity, DotProduct, SquaredDistance, SquaredNorm}
-
-  /** Sequential dot product — native codegen'd expression
-    * ([[graft.plans.DotProduct]]); bit-identical to the
-    * `aggregate(zip_with(...))` fold, ~50× faster (tight generated
-    * loop inside whole-stage codegen instead of interpreted lambdas).
-    */
-  def dot(a: Column, b: Column): Column =
-    column(DotProduct(expression(a), expression(b)))
+  import graft.plans.{CosineSimilarity, SquaredDistance, SquaredNorm}
 
   /** Sum of squares (native codegen'd loop). */
   def sqNorm(a: Column): Column =
     column(SquaredNorm(expression(a)))
-
-  /** L2 norm. */
-  def l2Norm(a: Column): Column = sqrt(sqNorm(a))
 
   /** Cosine similarity; 0.0 when either vector has zero norm. Fused
     * single-expression dot+norms ([[graft.plans.CosineSimilarity]]).
@@ -41,29 +29,4 @@ object VectorFunctions {
   /** Squared Euclidean distance (native codegen'd loop). */
   def sqDist(a: Column, b: Column): Column =
     column(SquaredDistance(expression(a), expression(b)))
-
-  /** L2-normalized copy of the vector (unit length; zero vector stays zero). */
-  def normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n === 0.0, a).otherwise(transform(a, v => v / n))
-  }
-
-  /** Sign-bit signature against a fixed hyperplane matrix (random
-    * hyperplane LSH for cosine similarity). `planes(i)(j)` is the j-th
-    * coordinate of the i-th hyperplane; the result is an
-    * `array<int>` of 0/1 bits, one per plane. Hyperplanes are literal
-    * arrays baked into the plan (seeded on the driver) so the
-    * signature is deterministic cluster-wide.
-    */
-  def hyperplaneBits(vec: Column, planes: Seq[Seq[Double]]): Column = {
-    val bitCols = planes.map { p =>
-      val planeLit = array(p.map(lit): _*)
-      when(dot(vec.cast("array<double>"), planeLit) >= 0.0, lit(1)).otherwise(lit(0))
-    }
-    array(bitCols: _*)
-  }
-
-  /** Pack an array<int> of 0/1 bits into a long bucket id. */
-  def packBits(bits: Column): Column =
-    aggregate(bits, lit(0L), (acc, b) => acc * 2L + b.cast("long"))
 }

@@ -1,13 +1,6 @@
 package graft.operators
 
 import java.awt.image.BufferedImage
-import java.io.ByteArrayInputStream
-import javax.imageio.ImageIO
-
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
-import graft.config.DownloadConfig
 
 /** Bounding-box gaussian blur (T10) — reference `blurrer.py:20-92`.
   *
@@ -19,8 +12,8 @@ import graft.config.DownloadConfig
   * kernel truncation); the contract is "pixels inside boxes changed,
   * pixels outside untouched", which the spec tests assert.
   *
-  * Deterministic pure kernel — applied through a UDF on the task
-  * thread like the resizer.
+  * Deterministic pure kernel — [[Resizer]] calls [[blurImage]] on the
+  * task thread, on the image it already decoded.
   */
 object Blurrer {
 
@@ -114,16 +107,5 @@ object Blurrer {
       }
     }
     out
-  }
-
-  /** Byte-level convenience (decode → blur → encode) for direct use.
-    * Undecodable payloads pass through unchanged; a blur FAILURE on a
-    * decoded image propagates (same redaction rationale as above).
-    */
-  def blurBytes(bytes: Array[Byte], bboxes: Seq[Seq[Double]], cfg: DownloadConfig): Array[Byte] = {
-    if (bytes == null || bboxes == null || bboxes.isEmpty) return bytes
-    val img = ImageIO.read(new ByteArrayInputStream(bytes))
-    if (img == null) bytes
-    else Resizer.encode(blurImage(img, bboxes), cfg.encodeFormat, cfg.encodeQuality)
   }
 }

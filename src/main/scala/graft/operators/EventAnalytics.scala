@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * (user, event_type, timestamp): ordered conversion funnels and
   * cohort retention — the two standard product-analytics rollups a
   * training-data/telemetry warehouse runs beside the curation
-  * pipeline (the batch counterparts of
-  * [[graft.streaming.EventStream]]'s sessionization).
+  * pipeline.
   *
   * Scale contract (both operators):
   *  - every shuffle is keyed by the user column and carries only

@@ -1,32 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.operators.Resizer
 
-/** Multimodal column operators: image / audio / video payloads as
-  * opaque `binary` columns with typed metadata structs.
-  *
-  * The Spark-side plumbing — schemas, batch iteration shape
-  * (`mapPartitions` over rows, the JVM analog of `mapInPandas`
-  * batches), partitioning — is real and tested. The media kernels
-  * split two ways:
-  *  - images: REAL decode/resize via the [[Resizer]] (ImageIO);
-  *  - audio/video METADATA: real codec-free parses for WAV, AIFF,
-  *    FLAC (STREAMINFO), MP3 (frame-header walk), MP4/MOV (mvhd) and
-  *    Matroska/WebM (EBML) — sample rate / channels / duration /
-  *    timescale, `stubbed = false`;
-  *  - video FRAMES: REALLY extracted for MP4 tracks whose samples
-  *    are self-contained images (MJPEG family, PNG-in-MP4): the
-  *    sample table is demuxed box-by-box and each sampled frame is
-  *    sliced + ImageIO-decoded (`stubbed = false`);
-  *  - inter-frame video codecs (h264…) and PCM-from-compressed
-  *    audio: no codec library exists in this container, so those
-  *    stay deterministic STUBS (`stubbed = true` in the output
-  *    struct) — the contract is the schema + plumbing, with the
-  *    kernel swappable for javacv/ffmpeg.
+/** Multimodal column operators over image payloads: the payload is an
+  * opaque `binary` column and the operator adds a typed metadata
+  * struct, decoded for real with ImageIO (format sniffed by the
+  * [[Resizer]]). img2dataset handles images only, so this is the
+  * whole multimodal tier; `mm_image_meta` reads it.
   */
 object Multimodal {
 
@@ -50,1271 +33,5 @@ object Multimodal {
       }
     })
     df.withColumn(out, f(col(binaryCol)))
-  }
-
-  /** 64-bit difference hash (dHash) of an image payload — the
-    * standard perceptual fingerprint for near-duplicate IMAGE dedup
-    * (re-encodes, resizes and small crops of one photo land within a
-    * few bits of each other; unrelated photos average ~32 bits apart).
-    * REAL decode (ImageIO — png/jpeg/gif/bmp in this JVM), REAL
-    * kernel: average-pool the luma plane onto a 9×8 grid, emit bit
-    * (row·8+col) = [left brighter than right], MSB-first. Undecodable
-    * or null payloads hash to NULL (and [[Dedup.hammingNearDups]]
-    * filters NULL signatures out of candidacy).
-    *
-    * Pipeline position: run ONCE at ingest next to the download
-    * (one decode amortized against resize/EXIF which already decode),
-    * persist the 8-byte column, then every dedup run is
-    * `hammingNearDups` over longs — no terabyte re-decode. Average
-    * pooling (not nearest-neighbor sampling) makes the signature
-    * stable under the ±1px resampling differences that separate
-    * JPEG libraries.
-    */
-  def imageDHash(df: DataFrame, binaryCol: String, out: String = "dhash"): DataFrame = {
-    val f = udf((bytes: Array[Byte]) => dhash64(bytes))
-    df.withColumn(out, f(col(binaryCol)))
-  }
-
-  /** The pure dHash kernel: Option.empty on any decode failure. */
-  private[graft] def dhash64(bytes: Array[Byte]): Option[Long] = {
-    if (bytes == null) return None
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: Throwable => null }
-    if (img == null || img.getWidth < 1 || img.getHeight < 1) return None
-    val (gw, gh) = (9, 8)
-    val w = img.getWidth; val h = img.getHeight
-    // integer average pooling over the source rectangle each grid cell
-    // covers — cell edges via (i*w)/gw so the union tiles the image
-    // exactly and no pixel is counted twice
-    val cell = Array.ofDim[Double](gh, gw)
-    var gy = 0
-    while (gy < gh) {
-      val y0 = (gy * h) / gh; val y1 = math.max(((gy + 1) * h) / gh, y0 + 1)
-      var gx = 0
-      while (gx < gw) {
-        val x0 = (gx * w) / gw; val x1 = math.max(((gx + 1) * w) / gw, x0 + 1)
-        var sum = 0L; var n = 0L
-        var y = y0
-        while (y < math.min(y1, h)) {
-          var x = x0
-          while (x < math.min(x1, w)) {
-            val rgb = img.getRGB(x, y)
-            // integer ITU-R 601 luma — deterministic across JVMs
-            sum += (299 * ((rgb >> 16) & 0xFF) + 587 * ((rgb >> 8) & 0xFF) + 114 * (rgb & 0xFF))
-            n += 1; x += 1
-          }
-          y += 1
-        }
-        cell(gy)(gx) = if (n == 0) 0.0 else sum.toDouble / n
-        gx += 1
-      }
-      gy += 1
-    }
-    var sig = 0L
-    var i = 0
-    while (i < 64) {
-      val r = i / 8; val c = i % 8
-      if (cell(r)(c) > cell(r)(c + 1)) sig |= 1L << (63 - i)
-      i += 1
-    }
-    Some(sig)
-  }
-
-  /** Audio features: REAL header parse for WAV/AIFF/FLAC/MP3 payloads;
-    * for uncompressed (WAV/AIFF PCM) payloads the SAMPLES are really
-    * decoded too ([[decodePcm]]) and the sample-domain fields (rms,
-    * peak, zero_cross_rate, spectral_centroid_hz, silence_ratio) are
-    * measured, not estimated. Compressed formats leave those fields
-    * null (header metadata only); unrecognized payloads take the
-    * deterministic stub estimate (`stubbed = true`).
-    */
-  case class AudioFeatures(n_bytes: Option[Int], duration_sec_est: Option[Double],
-                           sample_rate: Option[Int], channels: Option[Int],
-                           bits_per_sample: Option[Int],
-                           fingerprint: Option[Long],
-                           rms: Option[Double], peak: Option[Double],
-                           zero_cross_rate: Option[Double],
-                           spectral_centroid_hz: Option[Double],
-                           silence_ratio: Option[Double],
-                           stubbed: Boolean)
-
-  /** Parsed `fmt ` + `data` chunks of a RIFF/WAVE container, or None
-    * if the payload is not a well-formed WAV. PCM (format 1) and IEEE
-    * float (format 3) are accepted — duration is EXACT from the data
-    * chunk length (`dataLen / byteRate`), no codec needed; compressed
-    * WAV formats (ADPCM, mp3-in-wav) are rejected → stub path.
-    */
-  private[graft] def parseWavHeader(b: Array[Byte]): Option[(Int, Int, Int, Double)] = {
-    def u16(o: Int) = ((b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8))
-    def u32(o: Int) = ((b(o) & 0xFF).toLong | ((b(o + 1) & 0xFF).toLong << 8) |
-      ((b(o + 2) & 0xFF).toLong << 16) | ((b(o + 3) & 0xFF).toLong << 24))
-    def tag(o: Int, s: String) = b.length >= o + 4 && s.indices.forall(i => b(o + i) == s(i).toByte)
-    if (b.length < 44 || !tag(0, "RIFF") || !tag(8, "WAVE")) return None
-    // chunk walk: fmt and data can appear in any order with extension
-    // chunks (LIST, fact) between them. The offset is a Long: a
-    // crafted u32 chunk size near 2^31 must walk the cursor PAST the
-    // payload (ending the loop), never wrap it negative into an AIOOBE
-    var offL = 12L
-    var fmt: Option[(Int, Int, Int, Long)] = None // (format, channels, rate, byteRate)
-    var dataLen: Option[Long] = None
-    while (offL + 8 <= b.length && (fmt.isEmpty || dataLen.isEmpty)) {
-      val off = offL.toInt
-      val size = u32(off + 4)
-      if (tag(off, "fmt ") && off + 24 <= b.length) {
-        fmt = Some((u16(off + 8), u16(off + 10), u32(off + 12).toInt, u32(off + 16)))
-      } else if (tag(off, "data")) {
-        // size may overrun a truncated payload — clamp to real bytes
-        dataLen = Some(math.min(size, (b.length - off - 8).toLong))
-      }
-      offL += 8 + size + (size & 1) // chunks are word-aligned
-    }
-    for {
-      (format, ch, rate, byteRate) <- fmt
-      dl <- dataLen
-      if (format == 1 || format == 3) && ch > 0 && rate > 0 && byteRate > 0
-    } yield {
-      val bits = (byteRate * 8 / (rate.toLong * ch)).toInt
-      (rate, ch, bits, dl.toDouble / byteRate)
-    }
-  }
-
-  /** Parsed `COMM` chunk of an AIFF container (big-endian sibling of
-    * WAV): (sampleRate, channels, bits, durationSec). The sample rate
-    * is an 80-bit IEEE 754 extended float per the AIFF spec — decoded
-    * exactly for the realistic exponent range.
-    */
-  private[graft] def parseAiffHeader(b: Array[Byte]): Option[(Int, Int, Int, Double)] = {
-    def u16(o: Int) = ((b(o) & 0xFF) << 8) | (b(o + 1) & 0xFF)
-    def u32(o: Int) = ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-      ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-    def tag(o: Int, s: String) = b.length >= o + 4 && s.indices.forall(i => b(o + i) == s(i).toByte)
-    if (b.length < 38 || !tag(0, "FORM") || !(tag(8, "AIFF") || tag(8, "AIFC"))) return None
-    // Long cursor: huge crafted chunk sizes end the walk instead of
-    // wrapping negative (same rationale as the WAV walk above)
-    var offL = 12L
-    while (offL + 8 <= b.length) {
-      val off = offL.toInt
-      val size = u32(off + 4)
-      if (tag(off, "COMM") && off + 8 + 18 <= b.length) {
-        val ch = u16(off + 8)
-        val nFrames = u32(off + 10)
-        val bits = u16(off + 14)
-        // 80-bit extended float: 1 sign + 15 exponent (bias 16383) +
-        // 64-bit mantissa with explicit integer bit
-        val exp = u16(off + 16) & 0x7FFF
-        val mantHi = u32(off + 18)
-        val mantLo = u32(off + 22)
-        val mant = (mantHi.toDouble * 4294967296.0) + mantLo.toDouble
-        val rate = mant * math.pow(2.0, exp - 16383 - 63)
-        val rateI = math.round(rate).toInt
-        return if (ch > 0 && rateI > 0) Some((rateI, ch, bits, nFrames.toDouble / rateI)) else None
-      }
-      offL += 8 + size + (size & 1)
-    }
-    None
-  }
-
-  /** Decoded PCM audio: mono-mixed samples normalized to [-1, 1]. */
-  private[graft] case class PcmAudio(rate: Int, channels: Int, bits: Int,
-                                     samples: Array[Double])
-
-  /** REAL sample decode for uncompressed payloads — raw PCM needs no
-    * codec library, only the container's byte layout (public specs:
-    * RIFF/WAVE little-endian, AIFF big-endian). Integer PCM at
-    * 8/16/24/32 bits plus IEEE float32/64 WAV; channels are mono-mixed
-    * by averaging; at most `maxSamples` frames are decoded (bounded
-    * work per row — features over the first ~10 s are representative
-    * and the cap keeps the UDF's cost independent of payload size).
-    * FLAC payloads decode too ([[FlacCodec]] — lossless, exact
-    * samples); lossy formats (MP3) return None and stay on the
-    * header-only path.
-    */
-  private[graft] def decodePcm(b: Array[Byte], maxSamples: Int = 480000): Option[PcmAudio] =
-    decodeWavPcm(b, maxSamples).orElse(decodeAiffPcm(b, maxSamples))
-      .orElse(decodeFlacPcm(b, maxSamples))
-
-  /** FLAC → mono-mixed normalized samples via the from-scratch frame
-    * decoder ([[FlacCodec]]) — lossless, so the samples are exact.
-    */
-  private def decodeFlacPcm(b: Array[Byte], maxSamples: Int): Option[PcmAudio] =
-    FlacCodec.decode(b, maxSamples).map { case (rate, ch, bits, chans) =>
-      val n = math.min(chans.map(_.length).min, maxSamples)
-      val scale = (1L << (bits - 1)).toDouble
-      val out = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        var acc = 0.0
-        var c = 0
-        while (c < ch) { acc += chans(c)(i) / scale; c += 1 }
-        out(i) = acc / ch
-        i += 1
-      }
-      PcmAudio(rate, ch, bits, out)
-    }
-
-  private def decodeWavPcm(b: Array[Byte], maxSamples: Int): Option[PcmAudio] = {
-    def u16(o: Int) = (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-    def u32(o: Int) = (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-      ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-    def tag(o: Int, s: String) = b.length >= o + 4 && s.indices.forall(i => b(o + i) == s(i).toByte)
-    if (b.length < 44 || !tag(0, "RIFF") || !tag(8, "WAVE")) return None
-    var offL = 12L
-    var fmt: Option[(Int, Int, Int, Int)] = None // (format, ch, rate, bits)
-    var data: Option[(Int, Int)] = None          // (payload offset, len)
-    while (offL + 8 <= b.length && (fmt.isEmpty || data.isEmpty)) {
-      val off = offL.toInt
-      val size = u32(off + 4)
-      if (tag(off, "fmt ") && off + 24 <= b.length)
-        fmt = Some((u16(off + 8), u16(off + 10), u32(off + 12).toInt, u16(off + 22)))
-      else if (tag(off, "data"))
-        data = Some((off + 8, math.min(size, (b.length - off - 8).toLong).toInt))
-      offL += 8 + size + (size & 1)
-    }
-    for {
-      (format, ch, rate, bits) <- fmt
-      (dOff, dLen) <- data
-      if ch > 0 && rate > 0 && bits > 0 && bits % 8 == 0
-      if (format == 1 && bits <= 32) || (format == 3 && (bits == 32 || bits == 64))
-    } yield {
-      val bytesPer = bits / 8
-      val frameBytes = bytesPer * ch
-      val nFrames = math.min(dLen / frameBytes, maxSamples)
-      val out = new Array[Double](nFrames)
-      var f = 0
-      while (f < nFrames) {
-        var acc = 0.0
-        var c = 0
-        while (c < ch) {
-          val o = dOff + f * frameBytes + c * bytesPer
-          acc += (if (format == 3 && bits == 32)
-              java.lang.Float.intBitsToFloat(u32(o).toInt).toDouble
-            else if (format == 3)
-              java.lang.Double.longBitsToDouble(u32(o) | (u32(o + 4) << 32))
-            else bits match {
-              case 8  => ((b(o) & 0xFF) - 128) / 128.0 // WAV 8-bit is UNSIGNED
-              case 16 => ((b(o) & 0xFF) | (b(o + 1) << 8)).toShort / 32768.0
-              case 24 => (((b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8) | (b(o + 2) << 16)) << 8 >> 8) / 8388608.0
-              case _  => u32(o).toInt / 2147483648.0
-            })
-          c += 1
-        }
-        out(f) = acc / ch
-        f += 1
-      }
-      PcmAudio(rate, ch, bits, out)
-    }
-  }
-
-  private def decodeAiffPcm(b: Array[Byte], maxSamples: Int): Option[PcmAudio] = {
-    def tag(o: Int, s: String) = b.length >= o + 4 && s.indices.forall(i => b(o + i) == s(i).toByte)
-    def u32(o: Int) = ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-      ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-    if (b.length < 38 || !tag(0, "FORM")) return None
-    val aifc = tag(8, "AIFC")
-    if (!tag(8, "AIFF") && !aifc) return None
-    val hdr = parseAiffHeader(b).getOrElse(return None)
-    val (rate, ch, bits, _) = hdr
-    if (bits <= 0 || bits % 8 != 0 || bits > 32) return None
-    // locate COMM (for the AIFC compression fourcc) and SSND
-    var offL = 12L
-    var ssnd: Option[(Int, Int)] = None
-    var compressed = false
-    while (offL + 8 <= b.length) {
-      val off = offL.toInt
-      val size = u32(off + 4)
-      if (tag(off, "COMM") && aifc && off + 8 + 22 <= b.length)
-        // AIFC COMM carries a compression type after the 18 PCM bytes;
-        // only "NONE" (uncompressed BE PCM) is decodable here
-        compressed = !tag(off + 8 + 18, "NONE")
-      else if (tag(off, "SSND") && off + 16 <= b.length) {
-        val dataOff = u32(off + 8) // offset INTO the sound data
-        val start = off + 16 + dataOff
-        // bound by the SSND chunk's own extent (clamped to the real
-        // payload) — a trailing chunk after SSND must never be
-        // decoded as samples
-        val chunkEnd = math.min(off + 8 + size, b.length.toLong)
-        if (start >= 0 && start <= chunkEnd)
-          ssnd = Some((start.toInt, (chunkEnd - start).toInt))
-      }
-      offL += 8 + size + (size & 1)
-    }
-    if (compressed) return None
-    ssnd.map { case (dOff, avail) =>
-      val bytesPer = bits / 8
-      val frameBytes = bytesPer * ch
-      val nFrames = math.min(avail / frameBytes, maxSamples)
-      val out = new Array[Double](nFrames)
-      var f = 0
-      while (f < nFrames) {
-        var acc = 0.0
-        var c = 0
-        while (c < ch) {
-          val o = dOff + f * frameBytes + c * bytesPer
-          acc += (bits match { // AIFF integer PCM is SIGNED big-endian at every depth
-            case 8  => b(o) / 128.0
-            case 16 => ((b(o) << 8) | (b(o + 1) & 0xFF)).toShort / 32768.0
-            case 24 => ((((b(o) & 0xFF) << 16) | ((b(o + 1) & 0xFF) << 8) | (b(o + 2) & 0xFF)) << 8 >> 8) / 8388608.0
-            case _  => (((b(o) & 0xFF) << 24) | ((b(o + 1) & 0xFF) << 16) | ((b(o + 2) & 0xFF) << 8) | (b(o + 3) & 0xFF)) / 2147483648.0
-          })
-          c += 1
-        }
-        out(f) = acc / ch
-        f += 1
-      }
-      PcmAudio(rate, ch, bits, out)
-    }
-  }
-
-  /** Sample-domain features over decoded PCM: RMS energy, peak
-    * amplitude, zero-crossing rate (crossings/sec), spectral centroid
-    * (Hz, magnitude-weighted mean frequency over up to 16 FFT windows
-    * of 2048), and silence ratio (fraction of |x| < 1e-3). All
-    * computed from REAL samples — the measurements a curation pipeline
-    * filters on (clipped/silent/narrowband audio detection).
-    */
-  private[graft] def pcmFeatures(p: PcmAudio): (Double, Double, Double, Option[Double], Double) = {
-    val s = p.samples
-    val n = s.length
-    if (n == 0) return (0.0, 0.0, 0.0, None, 1.0)
-    var sumSq = 0.0; var peak = 0.0; var crossings = 0; var silent = 0
-    // Zero-crossings are SIGN FLIPS between consecutive NONZERO
-    // samples — exact zeros are skipped entirely, so a
-    // positive→0→positive excursion (gated/zero-padded PCM, 8-bit
-    // 0x80 digital silence) counts 0 crossings, not 2.
-    var lastSign = 0
-    var i = 0
-    while (i < n) {
-      val x = s(i)
-      sumSq += x * x
-      val ax = math.abs(x)
-      if (ax > peak) peak = ax
-      if (ax < 1e-3) silent += 1
-      if (x != 0) {
-        val sign = if (x > 0) 1 else -1
-        if (lastSign != 0 && sign != lastSign) crossings += 1
-        lastSign = sign
-      }
-      i += 1
-    }
-    val rms = math.sqrt(sumSq / n)
-    val zcr = crossings.toDouble * p.rate / n
-    val centroid = spectralCentroid(s, p.rate)
-    (rms, peak, zcr, centroid, silent.toDouble / n)
-  }
-
-  /** Magnitude-spectrum centroid via an in-place radix-2 FFT
-    * (Cooley–Tukey, iterative) over up to 16 consecutive Hann-windowed
-    * 2048-sample windows (shorter inputs use the largest power of two
-    * that fits, min 64). The Hann window keeps rectangular-window
-    * leakage from dominating the weighted mean — a pure 440 Hz tone
-    * reads ~440 Hz windowed vs ~1040 Hz unwindowed. DC is excluded;
-    * None when the input is too short or entirely silent.
-    */
-  private[graft] def spectralCentroid(s: Array[Double], rate: Int): Option[Double] = {
-    val n = s.length
-    val win = math.min(2048, java.lang.Integer.highestOneBit(math.max(n, 1)))
-    if (win < 64) return None
-    val nWin = math.min(n / win, 16)
-    val hann = Array.tabulate(win)(i => 0.5 - 0.5 * math.cos(2.0 * math.Pi * i / win))
-    val mag = new Array[Double](win / 2)
-    val re = new Array[Double](win)
-    val im = new Array[Double](win)
-    var w = 0
-    while (w < nWin) {
-      var i = 0
-      while (i < win) { re(i) = s(w * win + i) * hann(i); im(i) = 0.0; i += 1 }
-      fftInPlace(re, im)
-      var k = 1
-      while (k < win / 2) { mag(k) += math.hypot(re(k), im(k)); k += 1 }
-      w += 1
-    }
-    var num = 0.0; var den = 0.0
-    var k = 1
-    while (k < win / 2) {
-      num += (k.toDouble * rate / win) * mag(k); den += mag(k); k += 1
-    }
-    if (den > 0) Some(num / den) else None
-  }
-
-  /** Haitsma–Kalker-style perceptual audio fingerprint (the audio
-    * counterpart of [[imageDHash]]): per overlapping Hann-windowed
-    * frame, signal energy in 16 log-spaced bands (300–3000 Hz, the
-    * perceptually dominant range), one bit per band = the sign of the
-    * band-energy difference's TIME DELTA —
-    * `(E(f,b) − E(f,b+1)) − (E(f−1,b) − E(f−1,b+1)) > 0` — the
-    * classic robust-hash construction (Haitsma & Kalker 2002): signs
-    * of double differences survive volume changes exactly (scaling
-    * samples by c scales every energy by c², leaving every sign
-    * intact) and survive mild transcoding approximately. Returns the
-    * per-frame 16-bit words (≤ `maxFrames`, bounded work per row) plus
-    * a 64-bit summary (the first four words packed) whose Hamming
-    * distance feeds the existing banded near-dup machinery
-    * ([[Dedup]]'s hamming pairs work on any long signature).
-    * None when the payload is too short to frame or the rate too low
-    * for the band range.
-    */
-  private[graft] def audioFingerprint(p: PcmAudio,
-                                      maxFrames: Int = 96): Option[(Array[Int], Long)] = {
-    val s = p.samples
-    val win = math.min(2048, java.lang.Integer.highestOneBit(math.max(s.length / 2, 1)))
-    if (win < 256 || p.rate < 4000) return None
-    val hop = win / 2
-    val nFrames = math.min((s.length - win) / hop + 1, maxFrames)
-    if (nFrames < 2) return None
-    val nBands = 16
-    val lo = 300.0
-    val hi = math.min(3000.0, p.rate / 2.0 * 0.9)
-    if (hi <= lo * 1.5) return None
-    // log-spaced band edges → FFT bin indices (monotone, deduped by
-    // the max() guard so degenerate adjacent edges merge safely)
-    val edges = Array.tabulate(nBands + 1) { i =>
-      val f = lo * math.pow(hi / lo, i.toDouble / nBands)
-      math.max(1, math.min(win / 2 - 1, (f * win / p.rate).toInt))
-    }
-    val hann = Array.tabulate(win)(i => 0.5 - 0.5 * math.cos(2.0 * math.Pi * i / win))
-    val re = new Array[Double](win)
-    val im = new Array[Double](win)
-    var prev: Array[Double] = null
-    val words = new Array[Int](nFrames - 1)
-    var f = 0
-    while (f < nFrames) {
-      var i = 0
-      while (i < win) { re(i) = s(f * hop + i) * hann(i); im(i) = 0.0; i += 1 }
-      fftInPlace(re, im)
-      val e = new Array[Double](nBands)
-      var b = 0
-      while (b < nBands) {
-        var k = edges(b)
-        var acc = 0.0
-        while (k < math.max(edges(b + 1), edges(b) + 1) && k < win / 2) {
-          acc += re(k) * re(k) + im(k) * im(k); k += 1
-        }
-        e(b) = acc
-        b += 1
-      }
-      if (prev != null) {
-        var w = 0
-        var b2 = 0
-        while (b2 < nBands - 1) {
-          val d = (e(b2) - e(b2 + 1)) - (prev(b2) - prev(b2 + 1))
-          w = (w << 1) | (if (d > 0) 1 else 0)
-          b2 += 1
-        }
-        // 15 delta bits + 1 intra-frame bit keeps the word 16 wide
-        w = (w << 1) | (if (e(nBands - 1) > e(0)) 1 else 0)
-        words(f - 1) = w
-      }
-      prev = e
-      f += 1
-    }
-    var summary = 0L
-    var j = 0
-    while (j < math.min(4, words.length)) { summary = (summary << 16) | (words(j) & 0xFFFFL); j += 1 }
-    Some((words, summary))
-  }
-
-  /** Audio fingerprint plumbing: struct(fp_bits, n_frames,
-    * frame_words, stubbed) per row. `stubbed = true` when no PCM
-    * decode path exists for the payload (lossy audio, garbage) — the
-    * same honesty flag as the other multimodal kernels.
-    */
-  case class AudioFingerprint(fp_bits: Option[Long], n_frames: Option[Int],
-                              frame_words: Option[Seq[Int]], stubbed: Boolean)
-
-  def withAudioFingerprint(df: DataFrame, binaryCol: String,
-                           out: String = "audio_fp"): DataFrame = {
-    val f = udf((bytes: Array[Byte]) => {
-      val fp = Option(bytes).flatMap(decodePcm(_)).flatMap(audioFingerprint(_))
-      fp match {
-        case Some((words, bits)) =>
-          AudioFingerprint(Some(bits), Some(words.length + 1), Some(words.toSeq), stubbed = false)
-        case None => AudioFingerprint(None, None, None, stubbed = true)
-      }
-    })
-    df.withColumn(out, f(col(binaryCol)))
-  }
-
-  /** Iterative in-place radix-2 FFT (bit-reversal permutation +
-    * butterfly passes). `re.length` must be a power of two.
-    */
-  private[graft] def fftInPlace(re: Array[Double], im: Array[Double]): Unit = {
-    val n = re.length
-    require(n > 0 && (n & (n - 1)) == 0, s"FFT size must be a power of two, got $n")
-    // bit-reversal permutation
-    var i = 1; var j = 0
-    while (i < n) {
-      var bit = n >> 1
-      while ((j & bit) != 0) { j ^= bit; bit >>= 1 }
-      j |= bit
-      if (i < j) {
-        val tr = re(i); re(i) = re(j); re(j) = tr
-        val ti = im(i); im(i) = im(j); im(j) = ti
-      }
-      i += 1
-    }
-    var len = 2
-    while (len <= n) {
-      val ang = -2.0 * math.Pi / len
-      val wr = math.cos(ang); val wi = math.sin(ang)
-      var base = 0
-      while (base < n) {
-        var cr = 1.0; var ci = 0.0
-        var k = 0
-        while (k < len / 2) {
-          val ur = re(base + k); val ui = im(base + k)
-          val vr = re(base + k + len / 2) * cr - im(base + k + len / 2) * ci
-          val vi = re(base + k + len / 2) * ci + im(base + k + len / 2) * cr
-          re(base + k) = ur + vr; im(base + k) = ui + vi
-          re(base + k + len / 2) = ur - vr; im(base + k + len / 2) = ui - vi
-          val ncr = cr * wr - ci * wi; ci = cr * wi + ci * wr; cr = ncr
-          k += 1
-        }
-        base += len
-      }
-      len <<= 1
-    }
-  }
-
-  /** MP3 (MPEG-1/2/2.5 Layer III) frame-header walk: (sampleRate,
-    * channels, durationSec, avgBitrateKbps). A pure header parse — no
-    * codec: every frame's length is derivable from its 4-byte header
-    * (`samplesPerFrame/8 · bitrate / sampleRate + padding`), so
-    * duration is the sum of per-frame sample counts. Walks an ID3v2
-    * prefix (syncsafe size) first; requires ≥ 2 valid consecutive
-    * frames so random binary can't masquerade as MP3; VBR streams are
-    * handled naturally (each frame contributes its own time).
-    */
-  private[graft] def parseMp3(b: Array[Byte]): Option[(Int, Int, Double, Int)] = {
-    var off = 0L
-    if (b.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
-      val sz = ((b(6) & 0x7F) << 21) | ((b(7) & 0x7F) << 14) | ((b(8) & 0x7F) << 7) | (b(9) & 0x7F)
-      off = 10L + sz
-    }
-    // public MPEG audio tables: Layer III bitrates (kbps) and the
-    // MPEG-1 sample rates (MPEG-2 halves them, MPEG-2.5 quarters them)
-    val v1Bit = Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 0)
-    val v2Bit = Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160, 0)
-    val v1Rates = Array(44100, 48000, 32000)
-    var frames = 0
-    var fullFrames = 0 // frames whose WHOLE body fits the payload
-    var totalSec = 0.0
-    var kbpsSum = 0L
-    var rate0 = 0
-    var ch0 = 0
-    var cont = true
-    while (cont && off + 4 <= b.length) {
-      val o = off.toInt
-      val h1 = b(o + 1) & 0xFF
-      if ((b(o) & 0xFF) == 0xFF && (h1 & 0xE0) == 0xE0) {
-        val version = (h1 >> 3) & 3 // 0=MPEG2.5, 2=MPEG2, 3=MPEG1
-        val layer = (h1 >> 1) & 3   // 1 = Layer III
-        val h2 = b(o + 2) & 0xFF
-        val brIdx = (h2 >> 4) & 0xF
-        val srIdx = (h2 >> 2) & 3
-        val padding = (h2 >> 1) & 1
-        if (version != 1 && layer == 1 && brIdx != 0 && brIdx != 15 && srIdx != 3) {
-          val rate = version match {
-            case 3 => v1Rates(srIdx)
-            case 2 => v1Rates(srIdx) / 2
-            case _ => v1Rates(srIdx) / 4
-          }
-          val kbps = if (version == 3) v1Bit(brIdx) else v2Bit(brIdx)
-          val spf = if (version == 3) 1152 else 576 // samples per frame
-          val flen = spf / 8 * kbps * 1000 / rate + padding
-          if (flen <= 4) cont = false
-          else {
-            if (frames == 0) {
-              rate0 = rate
-              ch0 = if (((b(o + 3) >> 6) & 3) == 3) 1 else 2 // mode 3 = mono
-            }
-            frames += 1
-            if (off + flen <= b.length) fullFrames += 1
-            totalSec += spf.toDouble / rate
-            kbpsSum += kbps
-            off += flen
-          }
-        } else cont = false
-      } else cont = false // strict: no resync scan, trailing junk ends the walk
-    }
-    // acceptance needs ≥ 2 FULLY-contained frames (a sync word + header
-    // that happens to sit at a truncation point is not evidence); a
-    // trailing header-only frame still contributes its duration
-    if (fullFrames >= 2) Some((rate0, ch0, totalSec, (kbpsSum / frames).toInt)) else None
-  }
-
-  /** FLAC STREAMINFO block: (sampleRate, channels, bitsPerSample,
-    * durationSec) from the mandatory first metadata block — a fixed
-    * 34-byte bitfield layout (rate 20 bits, channels-1 3, bits-1 5,
-    * totalSamples 36), no codec needed. Duration is EXACT:
-    * `totalSamples / rate`.
-    */
-  private[graft] def parseFlacStreamInfo(b: Array[Byte]): Option[(Int, Int, Int, Double)] = {
-    if (b.length < 8 || b(0) != 'f' || b(1) != 'L' || b(2) != 'a' || b(3) != 'C') return None
-    var off = 4L
-    while (off + 4 <= b.length) {
-      val o = off.toInt
-      val hdr = b(o) & 0xFF
-      val len = ((b(o + 1) & 0xFF) << 16) | ((b(o + 2) & 0xFF) << 8) | (b(o + 3) & 0xFF)
-      if ((hdr & 0x7F) == 0) { // STREAMINFO
-        val s = o + 4
-        if (len < 34 || s + 34 > b.length) return None
-        val rate = ((b(s + 10) & 0xFF) << 12) | ((b(s + 11) & 0xFF) << 4) | ((b(s + 12) & 0xFF) >> 4)
-        val ch = ((b(s + 12) >> 1) & 7) + 1
-        val bits = (((b(s + 12) & 1) << 4) | ((b(s + 13) & 0xFF) >> 4)) + 1
-        val total = ((b(s + 13) & 0x0FL) << 32) | ((b(s + 14) & 0xFFL) << 24) |
-          ((b(s + 15) & 0xFFL) << 16) | ((b(s + 16) & 0xFFL) << 8) | (b(s + 17) & 0xFFL)
-        return if (rate > 0) Some((rate, ch, bits, total.toDouble / rate)) else None
-      }
-      if ((hdr & 0x80) != 0) return None // last-block flag, no STREAMINFO seen
-      off += 4L + len
-    }
-    None
-  }
-
-  /** Audio feature extraction: WAV/AIFF/FLAC/MP3 payloads are REALLY
-    * parsed (sample rate, channels, bit depth where the format has
-    * one, exact duration — pure header reads, no codec dependency,
-    * `stubbed = false`); anything else falls back to the deterministic
-    * stub estimate (`stubbed = true`) — swap that branch for a real
-    * codec (javacv) without touching the plumbing: schema, batching,
-    * and partitioning stay identical.
-    */
-  def withAudioFeatures(df: DataFrame, binaryCol: String, out: String = "audio_features"): DataFrame = {
-    val f = udf((bytes: Array[Byte]) => {
-      if (bytes == null)
-        AudioFeatures(None, None, None, None, None, None, None, None, None, None, None,
-          stubbed = true)
-      else {
-        var h = 1125899906842597L
-        var i = 0
-        while (i < math.min(bytes.length, 4096)) { h = h * 31 + bytes(i); i += 1 }
-        // uncompressed payloads: REAL sample decode → measured features
-        val pcm = decodePcm(bytes).map { p =>
-          val (rms, peak, zcr, centroid, silence) = pcmFeatures(p)
-          (Some(rms), Some(peak), Some(zcr), centroid, Some(silence))
-        }.getOrElse((None, None, None, None, None))
-        parseWavHeader(bytes).orElse(parseAiffHeader(bytes))
-          .orElse(parseFlacStreamInfo(bytes)) match {
-          case Some((rate, ch, bits, dur)) =>
-            AudioFeatures(Some(bytes.length), Some(dur), Some(rate), Some(ch), Some(bits),
-              Some(h), pcm._1, pcm._2, pcm._3, pcm._4, pcm._5, stubbed = false)
-          case None => parseMp3(bytes) match {
-            case Some((rate, ch, dur, _)) =>
-              // lossy format: no per-sample bit depth, no sample decode
-              AudioFeatures(Some(bytes.length), Some(dur), Some(rate), Some(ch), None,
-                Some(h), None, None, None, None, None, stubbed = false)
-            case None =>
-              // stub estimate: assume 16kHz 16-bit mono PCM
-              AudioFeatures(Some(bytes.length), Some(bytes.length / 32000.0),
-                None, None, None, Some(h), None, None, None, None, None, stubbed = true)
-          }
-        }
-      }
-    })
-    df.withColumn(out, f(col(binaryCol)))
-  }
-
-  /** Bitstream-domain MP3 features — the struct [[Mp3Bitstream]] fills
-    * from the side-info parse + CRC verification. NULL fields for
-    * non-MP3 payloads (`is_mp3 = false`). These are REAL measured
-    * signals (gain trajectory = loudness proxy, short-block fraction =
-    * transient density, exact CBR/VBR, per-frame CRC verdicts); sample
-    * decode for lossy audio stays formally out of scope
-    * (DEVIATIONS #9 — the ISO constant tables have no trustworthy
-    * in-container source).
-    */
-  case class Mp3Features(is_mp3: Boolean, frames: Option[Int],
-                         crc_protected: Option[Int], crc_valid: Option[Int],
-                         gain_mean: Option[Double], gain_std: Option[Double],
-                         short_block_frac: Option[Double], vbr: Option[Boolean])
-
-  def withMp3Bitstream(df: DataFrame, binaryCol: String, out: String = "mp3_bitstream"): DataFrame = {
-    val f = udf((bytes: Array[Byte]) => {
-      val s = Option(bytes).flatMap(Mp3Bitstream.stats(_))
-      s match {
-        case Some(m) => Mp3Features(is_mp3 = true, Some(m.frames),
-          Some(m.crcProtected), Some(m.crcValid), Some(m.gainMean),
-          Some(m.gainStd), Some(m.shortBlockFrac), Some(m.vbr))
-        case None => Mp3Features(is_mp3 = false, None, None, None, None, None, None, None)
-      }
-    })
-    df.withColumn(out, f(col(binaryCol)))
-  }
-
-  /** Video container metadata (real header parse, stub-free for MP4). */
-  case class VideoMeta(n_bytes: Option[Int], container: Option[String],
-                       duration_sec: Option[Double], timescale: Option[Int],
-                       stubbed: Boolean)
-
-  /** Parse an ISO BMFF (MP4/MOV) `moov/mvhd` box for (duration_sec,
-    * timescale) — a pure big-endian box walk, no codec needed. Returns
-    * None unless the payload is a well-formed MP4 with an mvhd box.
-    */
-  private[graft] def parseMp4Duration(b: Array[Byte]): Option[(Double, Int)] = {
-    def u32(o: Int): Long =
-      ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) | ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-    def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
-    def typ(o: Int): String = new String(b, o + 4, 4, "US-ASCII")
-    // walk boxes in [start, end) looking for `name`; returns (payload
-    // offset, payload end) of the first match
-    def find(start: Int, end: Int, name: String): Option[(Int, Int)] = {
-      var off = start
-      while (off + 8 <= end) {
-        val size0 = u32(off)
-        val (size, hdr) =
-          if (size0 == 1 && off + 16 <= end) (u64(off + 8), 16)
-          else if (size0 == 0) ((end - off).toLong, 8) // box extends to EOF
-          else (size0, 8)
-        if (size < hdr || off + size > end || size > Int.MaxValue) return None
-        if (typ(off) == name) return Some((off + hdr, off + size.toInt))
-        off += size.toInt
-      }
-      None
-    }
-    if (b.length < 16) return None
-    // MP4 sanity: a leading ftyp (or styp) box
-    val head = typ(0)
-    if (head != "ftyp" && head != "styp") return None
-    for {
-      (moovStart, moovEnd) <- find(0, b.length, "moov")
-      (mvhd, mvhdEnd) <- find(moovStart, moovEnd, "mvhd")
-      if mvhd + 4 <= mvhdEnd
-      version = b(mvhd) & 0xFF
-      result <- version match {
-        // timescale must also fit the Int it is reported as — a u32
-        // above 2^31 would otherwise narrow to a negative value
-        case 0 if mvhd + 20 <= mvhdEnd =>
-          val scale = u32(mvhd + 12); val dur = u32(mvhd + 16)
-          if (scale > 0 && scale <= Int.MaxValue) Some((dur.toDouble / scale, scale.toInt)) else None
-        case 1 if mvhd + 32 <= mvhdEnd =>
-          val scale = u32(mvhd + 20); val dur = u64(mvhd + 24)
-          if (scale > 0 && scale <= Int.MaxValue) Some((dur.toDouble / scale, scale.toInt)) else None
-        case _ => None
-      }
-    } yield result
-  }
-
-  /** Matroska/WebM duration via a pure EBML walk: (docType,
-    * durationSec, timestampScaleNs). Parses the EBML header's DocType
-    * ("matroska" | "webm"), then Segment → Info → TimestampScale
-    * (uint ns/tick, default 1e6) and Duration (float32/64 in ticks).
-    * Handles unknown-size (all-ones vint) Segment/Info elements, which
-    * streamed matroska commonly uses. No codec needed.
-    */
-  private[graft] def parseMkvDuration(b: Array[Byte]): Option[(String, Double, Long)] = {
-    if (b.length < 8 || (b(0) & 0xFF) != 0x1A || (b(1) & 0xFF) != 0x45 ||
-        (b(2) & 0xFF) != 0xDF || (b(3) & 0xFF) != 0xA3) return None
-    def vintLen(first: Int): Int = {
-      var m = 0x80; var n = 1
-      while (n <= 8 && (first & m) == 0) { m >>= 1; n += 1 }
-      if (n > 8) -1 else n
-    }
-    // element ID: marker bits KEPT (matroska convention)
-    def readId(off: Int): Option[(Long, Int)] = {
-      if (off >= b.length) return None
-      val n = vintLen(b(off) & 0xFF)
-      if (n < 1 || n > 4 || off + n > b.length) return None
-      var v = 0L
-      var i = 0
-      while (i < n) { v = (v << 8) | (b(off + i) & 0xFF); i += 1 }
-      Some((v, n))
-    }
-    // data size: marker bit STRIPPED; all-ones = unknown size
-    def readSize(off: Int): Option[(Long, Int)] = {
-      if (off >= b.length) return None
-      val first = b(off) & 0xFF
-      val n = vintLen(first)
-      if (n < 1 || off + n > b.length) return None
-      var v = (first & (0xFF >>> n)).toLong
-      var i = 1
-      while (i < n) { v = (v << 8) | (b(off + i) & 0xFF); i += 1 }
-      val unknown = v == (1L << (7 * n)) - 1
-      Some((if (unknown) -1L else v, n))
-    }
-    // first child with `id` within [start, end): (payloadStart, payloadEnd)
-    def findChild(start: Int, end: Int, id: Long): Option[(Int, Int)] = {
-      var off = start
-      while (off < end) {
-        val (eid, idLen) = readId(off).getOrElse(return None)
-        val (sz, szLen) = readSize(off + idLen).getOrElse(return None)
-        val payload = off + idLen + szLen
-        val payloadEnd =
-          if (sz < 0) end // unknown size: extends to the enclosing end
-          else if (payload + sz > end || sz > Int.MaxValue) return None
-          else payload + sz.toInt
-        if (eid == id) return Some((payload, payloadEnd))
-        if (sz < 0) return None // can't skip an unknown-size sibling
-        off = payloadEnd
-      }
-      None
-    }
-    def uintAt(s: Int, e: Int): Long = {
-      var v = 0L; var i = s
-      while (i < e && i - s < 8) { v = (v << 8) | (b(i) & 0xFF); i += 1 }
-      v
-    }
-    for {
-      (ebmlS, ebmlE) <- findChild(0, b.length, 0x1A45DFA3L)
-      (segS, segE) <- findChild(ebmlE, b.length, 0x18538067L)
-      (infoS, infoE) <- findChild(segS, segE, 0x1549A966L)
-      (durS, durE) <- findChild(infoS, infoE, 0x4489L)
-    } yield {
-      val docType = findChild(ebmlS, ebmlE, 0x4282L)
-        .map { case (s, e) => new String(b, s, e - s, "US-ASCII").takeWhile(_ > ' ') }
-        .getOrElse("matroska")
-      val scale = findChild(infoS, infoE, 0x2AD7B1L)
-        .map { case (s, e) => uintAt(s, e) }.filter(_ > 0).getOrElse(1000000L)
-      val ticks = (durE - durS) match {
-        case 4 => java.lang.Float.intBitsToFloat(uintAt(durS, durE).toInt).toDouble
-        case 8 => java.lang.Double.longBitsToDouble(uintAt(durS, durE))
-        case _ => 0.0
-      }
-      (docType, ticks * scale / 1e9, scale)
-    }
-  }
-
-  /** Video metadata extraction: MP4/MOV and Matroska/WebM containers
-    * are REALLY parsed (duration + timescale, `stubbed = false`);
-    * other containers keep the stub estimate, swappable for a real
-    * demuxer.
-    */
-  def withVideoMeta(df: DataFrame, binaryCol: String, out: String = "video_meta"): DataFrame = {
-    val f = udf((bytes: Array[Byte]) => {
-      if (bytes == null) VideoMeta(None, None, None, None, stubbed = true)
-      else parseMp4Duration(bytes) match {
-        case Some((dur, scale)) =>
-          VideoMeta(Some(bytes.length), Some("mp4"), Some(dur), Some(scale), stubbed = false)
-        case None => parseMkvDuration(bytes) match {
-          case Some((docType, dur, scaleNs)) =>
-            VideoMeta(Some(bytes.length), Some(docType), Some(dur),
-              if (scaleNs <= Int.MaxValue) Some(scaleNs.toInt) else None, stubbed = false)
-          case None =>
-            // stub estimate: ~1 Mbit/s payload
-            VideoMeta(Some(bytes.length), None, Some(bytes.length / 125000.0), None, stubbed = true)
-        }
-      }
-    })
-    df.withColumn(out, f(col(binaryCol)))
-  }
-
-  /** One video sample located in an MP4 payload: byte extent plus
-    * presentation start time in seconds (from stts × mdhd timescale).
-    */
-  private[graft] case class Mp4Sample(index: Int, offset: Long, size: Long, timeSec: Double)
-
-  /** A demuxed MP4 video track: sample fourcc, located samples,
-    * sync-sample indices (0-based positions into `samples`; None when
-    * the track has no `stss` box, which per ISO 14496-12 means EVERY
-    * sample is a sync sample), and codec-level dimensions (for avc1:
-    * parsed from the SPS inside `avcC`, falling back to the
-    * VisualSampleEntry width/height fields).
-    */
-  private[graft] case class Mp4Track(fourcc: String, samples: Array[Mp4Sample],
-                                     sync: Option[Set[Int]], dims: Option[(Int, Int)])
-
-  /** Demux the FIRST video ('vide' handler) track's sample table out
-    * of an MP4/MOV payload — pure box walk, no codec: stsd (sample
-    * fourcc), stsz (sizes), stsc + stco/co64 (chunk layout →
-    * per-sample byte offsets), stts + mdhd timescale (per-sample
-    * start times). Returns (fourcc, samples) with at most
-    * `maxSamples` entries; None when any table is missing/corrupt or
-    * extents fall outside the payload.
-    */
-  private[graft] def parseMp4Samples(b: Array[Byte],
-                                     maxSamples: Int = 4096): Option[Mp4Track] = {
-    def u32(o: Int): Long =
-      ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) | ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-    def u64(o: Int): Long = (u32(o) << 32) | u32(o + 4)
-    def typ(o: Int): String = new String(b, o + 4, 4, "US-ASCII")
-    // all child boxes named `name` in [start, end): (payload, payloadEnd)
-    def children(start: Int, end: Int, name: String): List[(Int, Int)] = {
-      var off = start
-      var acc = List.empty[(Int, Int)]
-      while (off + 8 <= end) {
-        val size0 = u32(off)
-        val (size, hdr) =
-          if (size0 == 1 && off + 16 <= end) (u64(off + 8), 16)
-          else if (size0 == 0) ((end - off).toLong, 8)
-          else (size0, 8)
-        if (size < hdr || off + size > end || size > Int.MaxValue) return acc.reverse
-        if (typ(off) == name) acc = (off + hdr, off + size.toInt) :: acc
-        off += size.toInt
-      }
-      acc.reverse
-    }
-    def first(start: Int, end: Int, name: String): Option[(Int, Int)] =
-      children(start, end, name).headOption
-    if (b.length < 16 || (typ(0) != "ftyp" && typ(0) != "styp")) return None
-    val videoTrak = for {
-      (moovS, moovE) <- first(0, b.length, "moov").toList
-      (trakS, trakE) <- children(moovS, moovE, "trak")
-      (mdiaS, mdiaE) <- first(trakS, trakE, "mdia").toList
-      (hdlrS, hdlrE) <- first(mdiaS, mdiaE, "hdlr").toList
-      // hdlr: ver/flags(4) pre_defined(4) handler_type(4)
-      if hdlrS + 12 <= hdlrE && new String(b, hdlrS + 8, 4, "US-ASCII") == "vide"
-    } yield (mdiaS, mdiaE)
-    videoTrak.headOption.flatMap { case (mdiaS, mdiaE) =>
-      for {
-        (mdhdS, mdhdE) <- first(mdiaS, mdiaE, "mdhd")
-        timescale <- {
-          val v = if (mdhdS < mdhdE) b(mdhdS) & 0xFF else -1
-          if (v == 0 && mdhdS + 16 <= mdhdE) Some(u32(mdhdS + 12))
-          else if (v == 1 && mdhdS + 24 <= mdhdE) Some(u32(mdhdS + 20))
-          else None
-        }
-        if timescale > 0
-        (minfS, minfE) <- first(mdiaS, mdiaE, "minf")
-        (stblS, stblE) <- first(minfS, minfE, "stbl")
-        (stsdS, stsdE) <- first(stblS, stblE, "stsd")
-        // stsd: ver/flags(4) entry_count(4) entry{size(4) fourcc(4) …}
-        if stsdS + 16 <= stsdE && u32(stsdS + 4) >= 1
-        fourcc = new String(b, stsdS + 12, 4, "US-ASCII")
-        (stszS, stszE) <- first(stblS, stblE, "stsz")
-        if stszS + 12 <= stszE
-        uniform = u32(stszS + 4)
-        nSamples0 = u32(stszS + 8)
-        if nSamples0 >= 1 && nSamples0 <= 1000000
-        nSamples = math.min(nSamples0, maxSamples.toLong).toInt
-        sizes <- {
-          if (uniform > 0) Some(Array.fill(nSamples)(uniform))
-          else if (stszS + 12 + 4L * nSamples <= stszE)
-            Some(Array.tabulate(nSamples)(i => u32(stszS + 12 + 4 * i)))
-          else None
-        }
-        (stscS, stscE) <- first(stblS, stblE, "stsc")
-        if stscS + 8 <= stscE
-        nStsc = u32(stscS + 4).toInt
-        if nStsc >= 1 && nStsc <= 100000 && stscS + 8 + 12L * nStsc <= stscE
-        stsc = Array.tabulate(nStsc)(i =>
-          (u32(stscS + 8 + 12 * i), u32(stscS + 12 + 12 * i)))  // (first_chunk, samples/chunk)
-        chunkOffsets <- {
-          first(stblS, stblE, "stco") match {
-            case Some((s, e)) if s + 8 <= e =>
-              val n = u32(s + 4).toInt
-              if (n >= 1 && n <= 1000000 && s + 8 + 4L * n <= e)
-                Some(Array.tabulate(n)(i => u32(s + 8 + 4 * i)))
-              else None
-            case _ => first(stblS, stblE, "co64") match {
-              case Some((s, e)) if s + 8 <= e =>
-                val n = u32(s + 4).toInt
-                if (n >= 1 && n <= 1000000 && s + 8 + 8L * n <= e)
-                  Some(Array.tabulate(n)(i => u64(s + 8 + 8 * i)))
-                else None
-              case _ => None
-            }
-          }
-        }
-        (sttsS, sttsE) <- first(stblS, stblE, "stts")
-        if sttsS + 8 <= sttsE
-        nStts = u32(sttsS + 4).toInt
-        if nStts >= 1 && nStts <= 100000 && sttsS + 8 + 8L * nStts <= sttsE
-      } yield {
-        // expand stts → per-sample start times (seconds)
-        val times = new Array[Double](nSamples)
-        var si = 0; var t = 0L; var e = 0
-        while (e < nStts && si < nSamples) {
-          val cnt = u32(sttsS + 8 + 8 * e); val delta = u32(sttsS + 12 + 8 * e)
-          var k = 0L
-          while (k < cnt && si < nSamples) {
-            times(si) = t.toDouble / timescale; t += delta; si += 1; k += 1
-          }
-          e += 1
-        }
-        while (si < nSamples) { times(si) = t.toDouble / timescale; si += 1 }
-        // expand stsc/stco → per-sample byte offsets
-        val samples = new Array[Mp4Sample](nSamples)
-        var sample = 0; var chunk = 0; var sc = 0
-        while (sample < nSamples && chunk < chunkOffsets.length) {
-          while (sc + 1 < stsc.length && stsc(sc + 1)._1 - 1 <= chunk) sc += 1
-          val perChunk = stsc(sc)._2
-          var off = chunkOffsets(chunk)
-          var k = 0L
-          while (k < perChunk && sample < nSamples) {
-            samples(sample) = Mp4Sample(sample, off, sizes(sample), times(sample))
-            off += sizes(sample); sample += 1; k += 1
-          }
-          chunk += 1
-        }
-        val filled = samples.take(sample)
-          .filter(s => s.offset >= 0 && s.size > 0 && s.offset + s.size <= b.length)
-        // stss (optional): 1-based sync-sample numbers → 0-based set.
-        // Absent box = every sample is sync (ISO 14496-12 §8.6.2).
-        val sync = first(stblS, stblE, "stss").flatMap { case (s, e) =>
-          if (s + 8 > e) None
-          else {
-            val n = u32(s + 4).toInt
-            if (n >= 0 && n <= 1000000 && s + 8 + 4L * n <= e)
-              Some(Array.tabulate(n)(i => u32(s + 8 + 4 * i).toInt - 1).toSet)
-            else None
-          }
-        }
-        // codec dims: avc1/avc3 → SPS inside avcC (authoritative,
-        // crop-aware); fall back to the VisualSampleEntry u16 fields.
-        val entryS = stsdS + 8
-        val entrySize = u32(entryS)
-        val entryE = math.min(entryS + math.min(entrySize, Int.MaxValue.toLong).toInt, stsdE)
-        val entryDims =
-          if (entryS + 36 <= entryE) {
-            val w = ((b(entryS + 32) & 0xFF) << 8) | (b(entryS + 33) & 0xFF)
-            val h = ((b(entryS + 34) & 0xFF) << 8) | (b(entryS + 35) & 0xFF)
-            if (w > 0 && h > 0) Some((w, h)) else None
-          } else None
-        val spsDims =
-          if ((fourcc == "avc1" || fourcc == "avc3") && entryS + 86 <= entryE)
-            first(entryS + 86, entryE, "avcC").flatMap { case (aS, aE) =>
-              // AVCDecoderConfigurationRecord: ver profile compat level
-              // lenSizeMinusOne numSPS, then u16-length-prefixed SPS NALs
-              if (aS + 8 > aE || (b(aS) & 0xFF) != 1) None
-              else {
-                val nSps = b(aS + 5) & 0x1F
-                if (nSps < 1) None
-                else {
-                  val spsLen = ((b(aS + 6) & 0xFF) << 8) | (b(aS + 7) & 0xFF)
-                  if (aS + 8 + spsLen > aE) None
-                  else parseH264SpsDims(java.util.Arrays.copyOfRange(b, aS + 8, aS + 8 + spsLen))
-                }
-              }
-            }
-          else None
-        Mp4Track(fourcc, filled, sync, spsDims.orElse(entryDims))
-      }
-    }.filter(_.samples.nonEmpty)
-  }
-
-  /** H.264 SPS parse for (width, height) — public bitstream syntax
-    * from ISO/IEC 14496-10 §7.3.2.1: an exp-Golomb bit reader over the
-    * RBSP (emulation-prevention 00 00 03 bytes removed), walking every
-    * field up to the frame-cropping block, including the High-profile
-    * chroma/bit-depth/scaling-list section. Width/height come from
-    * `pic_width_in_mbs_minus1` / `pic_height_in_map_units_minus1`
-    * (16-px macroblock units, doubled vertically for field coding)
-    * minus the crop offsets scaled by the chroma-format crop units.
-    */
-  private[graft] def parseH264SpsDims(nal: Array[Byte]): Option[(Int, Int)] = {
-    if (nal.length < 4 || (nal(0) & 0x1F) != 7) return None // NAL type 7 = SPS
-    // strip the NAL header byte, un-escape 00 00 03 → 00 00
-    val rbsp = new Array[Byte](nal.length - 1)
-    var n = 0
-    var i = 1
-    while (i < nal.length) {
-      if (i + 2 < nal.length && nal(i) == 0 && nal(i + 1) == 0 && nal(i + 2) == 3) {
-        rbsp(n) = 0; rbsp(n + 1) = 0; n += 2; i += 3
-      } else { rbsp(n) = nal(i); n += 1; i += 1 }
-    }
-    var bit = 0
-    val nBits = n * 8
-    def u(k: Int): Int = { // k-bit unsigned read; -1 on underrun
-      if (bit + k > nBits) { bit = nBits + 1; return -1 }
-      var v = 0
-      var j = 0
-      while (j < k) {
-        v = (v << 1) | ((rbsp(bit >> 3) >> (7 - (bit & 7))) & 1)
-        bit += 1; j += 1
-      }
-      v
-    }
-    def ue(): Int = { // exp-Golomb: countLeadingZeros zeros, 1, then zeros bits
-      var zeros = 0
-      while (bit < nBits && ((rbsp(bit >> 3) >> (7 - (bit & 7))) & 1) == 0) { bit += 1; zeros += 1 }
-      if (bit >= nBits || zeros > 30) { bit = nBits + 1; return -1 }
-      bit += 1 // the marker 1
-      val rest = if (zeros == 0) 0 else u(zeros)
-      if (rest < 0) -1 else (1 << zeros) - 1 + rest
-    }
-    def se(): Int = { val k = ue(); if (k < 0) k else if (k % 2 == 0) -(k / 2) else (k + 1) / 2 }
-    def ok = bit <= nBits
-    val profile = u(8); u(8); u(8) // profile_idc, constraint flags, level_idc
-    ue()                           // seq_parameter_set_id
-    var chromaIdc = 1              // default 4:2:0
-    if (Set(100, 110, 122, 244, 44, 83, 86, 118, 128, 138, 139, 134, 135).contains(profile)) {
-      chromaIdc = ue()
-      if (chromaIdc == 3) u(1)     // separate_colour_plane_flag
-      ue(); ue(); u(1)             // bit depths, transform bypass
-      if (u(1) == 1) {             // seq_scaling_matrix_present_flag
-        val lists = if (chromaIdc == 3) 12 else 8
-        var l = 0
-        while (l < lists && ok) {
-          if (u(1) == 1) {         // scaling_list_present[l]
-            val size = if (l < 6) 16 else 64
-            var last = 8; var next = 8; var j = 0
-            while (j < size && ok) {
-              if (next != 0) next = (last + se() + 256) % 256
-              if (next != 0) last = next
-              j += 1
-            }
-          }
-          l += 1
-        }
-      }
-    }
-    ue()                           // log2_max_frame_num_minus4
-    val pocType = ue()
-    if (pocType == 0) ue()
-    else if (pocType == 1) {
-      u(1); se(); se()
-      val cyc = ue()
-      var j = 0
-      while (j < cyc && j <= 255 && ok) { se(); j += 1 }
-    }
-    ue(); u(1)                     // max_num_ref_frames, gaps flag
-    val widthMbs = ue()
-    val heightMapUnits = ue()
-    val frameMbsOnly = u(1)
-    if (frameMbsOnly == 0) u(1)    // mb_adaptive_frame_field_flag
-    u(1)                           // direct_8x8_inference_flag
-    var cropL = 0; var cropR = 0; var cropT = 0; var cropB = 0
-    if (u(1) == 1) { cropL = ue(); cropR = ue(); cropT = ue(); cropB = ue() }
-    if (!ok || widthMbs < 0 || heightMapUnits < 0 || frameMbsOnly < 0 ||
-        cropL < 0 || cropR < 0 || cropT < 0 || cropB < 0) return None
-    // sanity bound: H.264 level 6.2 tops out near 2^13 MBs per side; a
-    // garbage exp-Golomb value must not overflow the ×16 multiply into
-    // a plausible-looking positive dimension
-    if (widthMbs >= 65536 || heightMapUnits >= 65536 ||
-        cropL >= 65536 || cropR >= 65536 || cropT >= 65536 || cropB >= 65536) return None
-    val (subW, subH) = chromaIdc match {
-      case 0 => (1, 1) // monochrome: crop units are 1 × (2 - fmof)
-      case 1 => (2, 2) // 4:2:0
-      case 2 => (2, 1) // 4:2:2
-      case _ => (1, 1) // 4:4:4 (or separate planes)
-    }
-    val cropUnitX = if (chromaIdc == 0 || chromaIdc == 3) 1 else subW
-    val cropUnitY = (if (chromaIdc == 0 || chromaIdc == 3) 1 else subH) * (2 - frameMbsOnly)
-    val w = (widthMbs + 1) * 16 - cropUnitX * (cropL + cropR)
-    val h = (2 - frameMbsOnly) * (heightMapUnits + 1) * 16 - cropUnitY * (cropT + cropB)
-    if (w > 0 && h > 0) Some((w, h)) else None
-  }
-
-  /** Sample fourccs whose payloads are self-contained still images —
-    * the tractable no-codec-library decode path (motion-JPEG family +
-    * PNG-in-MP4). Other codecs (avc1/hev1/vp09…) need a real video
-    * decoder and stay on the stub path.
-    */
-  private val ImageSampleCodecs = Set("jpeg", "mjpa", "mjpb", "png ")
-
-  private[graft] case class VideoFrame(frame_idx: Int, frame_time_sec: Double,
-                                       frame_payload: Array[Byte],
-                                       frame_width: Option[Int], frame_height: Option[Int],
-                                       stubbed: Boolean)
-
-  /** Codecs whose MP4 samples can be emitted as real frames without a
-    * pixel decoder: keyframes are self-contained length-prefixed NAL
-    * units and the SPS carries the dimensions. Pixel decode of the
-    * emitted payload still needs an external h264 decoder.
-    */
-  private val NalSampleCodecs = Set("avc1", "avc3")
-
-  /** Video frame sampling: one row per sampled frame at
-    * `everyNthSecond` spacing, at most `maxFrames`.
-    *
-    * For MP4 payloads whose video track carries self-contained image
-    * samples (MJPEG / PNG-in-MP4), the frames are REALLY extracted:
-    * the sample table is demuxed ([[parseMp4Samples]]), the sample
-    * nearest at-or-after each k·everyNthSecond mark is sliced out of
-    * the payload, and its dimensions are decoded with ImageIO —
-    * `frame_payload` holds the standalone image bytes,
-    * `stubbed = false`. For h264 tracks (avc1/avc3) the KEYFRAMES
-    * (stss sync samples) are really demuxed too: `frame_payload`
-    * holds the sample's length-prefixed NAL units, `frame_time_sec`
-    * the real presentation time, and the dimensions come from the SPS
-    * ([[parseH264SpsDims]]) — only pixel decode of that payload needs
-    * an external codec. Other codecs and non-MP4 containers keep the
-    * size-based row-count ESTIMATE with a null payload and
-    * `stubbed = true` — the schema/fan-out contract is identical on
-    * every path, so a real decoder slots in without a plan change.
-    */
-  def sampleVideoFrames(df: DataFrame, binaryCol: String, everyNthSecond: Double = 1.0,
-                        maxFrames: Int = 8): DataFrame = {
-    require(everyNthSecond > 0, s"everyNthSecond must be positive, got $everyNthSecond")
-    require(maxFrames >= 1, s"maxFrames must be >= 1, got $maxFrames")
-    // First sample at-or-after each k·step mark. After a pick, the
-    // next mark jumps STRICTLY beyond the picked sample's timestamp
-    // (and the search resumes after it) — so a step much finer than
-    // the real frame spacing can never burn marks on the same sample
-    // and under-fill maxFrames while later samples still exist.
-    def pick(samples: Array[Mp4Sample]): Seq[Int] = {
-      val picked = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var from = 0
-      var k = 0
-      var done = false
-      while (picked.size < maxFrames && !done) {
-        val target = k * everyNthSecond
-        val i = samples.indexWhere(_.timeSec >= target - 1e-9, from)
-        if (i == -1) done = true
-        else {
-          picked += i
-          from = i + 1
-          k = math.max(k + 1,
-            (math.floor((samples(i).timeSec + 1e-9) / everyNthSecond) + 1).toInt)
-        }
-      }
-      picked.toSeq
-    }
-    val f = udf((bytes: Array[Byte]) => {
-      val real: Option[Seq[VideoFrame]] =
-        if (bytes == null) None
-        else parseMp4Samples(bytes) match {
-          case Some(track) if ImageSampleCodecs.contains(track.fourcc) =>
-            Some(pick(track.samples).zipWithIndex.map { case (si, fi) =>
-              val s = track.samples(si)
-              val payload = java.util.Arrays.copyOfRange(bytes, s.offset.toInt,
-                (s.offset + s.size).toInt)
-              val dims =
-                try Option(javax.imageio.ImageIO.read(
-                    new java.io.ByteArrayInputStream(payload)))
-                  .map(im => (im.getWidth, im.getHeight))
-                catch { case _: Exception => None }
-              VideoFrame(fi, s.timeSec, payload, dims.map(_._1), dims.map(_._2),
-                stubbed = false)
-            })
-          case Some(track) if NalSampleCodecs.contains(track.fourcc) =>
-            // only sync samples are self-contained — sample over the
-            // keyframe subsequence (no stss box = every sample is sync)
-            val keyframes = track.sync match {
-              case Some(sync) => track.samples.filter(s => sync.contains(s.index))
-              case None       => track.samples
-            }
-            Some(pick(keyframes).zipWithIndex.map { case (si, fi) =>
-              val s = keyframes(si)
-              val payload = java.util.Arrays.copyOfRange(bytes, s.offset.toInt,
-                (s.offset + s.size).toInt)
-              VideoFrame(fi, s.timeSec, payload,
-                track.dims.map(_._1), track.dims.map(_._2), stubbed = false)
-            })
-          case _ => None
-        }
-      real.getOrElse {
-        val nBytes = if (bytes == null) 0 else bytes.length
-        val n = math.min(math.max(nBytes / 100000, 1), maxFrames)
-        (0 until n).map(i =>
-          VideoFrame(i, i * everyNthSecond, null, None, None, stubbed = true))
-      }
-    })
-    df.withColumn("__frames", f(col(binaryCol)))
-      .select(col("*"), explode(col("__frames")).as("__fr"))
-      .drop("__frames")
-      .select(col("*"), col("__fr.frame_idx").as("frame_idx"),
-        col("__fr.frame_time_sec").as("frame_time_sec"),
-        col("__fr.frame_payload").as("frame_payload"),
-        col("__fr.frame_width").as("frame_width"),
-        col("__fr.frame_height").as("frame_height"),
-        col("__fr.stubbed").as("stubbed"))
-      .drop("__fr")
-  }
-
-  /** Batched image resize over the payload column via the REAL
-    * resizer — the `mapInPandas`-shaped path: one task thread per
-    * partition, payloads processed in a streaming iterator.
-    */
-  def resizeImages(df: DataFrame, binaryCol: String, cfg: graft.config.DownloadConfig,
-                   out: String = "resized"): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField(out, BinaryType, nullable = true))
-    val idx = df.schema.fieldIndex(binaryCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val res = Resizer.resizeBytes(r.getAs[Array[Byte]](idx), cfg)
-        Row.fromSeq(r.toSeq :+ res.payload)
-      }
-    }(Encoders.row(outSchema))
   }
 }

@@ -36,16 +36,10 @@ object Sampling {
   private def bucketOf(key: Column, salt: String): Column =
     pmod(Dedup.portableHash60(concat(lit(salt + ":"), key.cast("string"))), lit(Denom))
 
-  /** Uniform `frac` sample keyed by `keyCol`: keep iff
-    * `hash(salt:key) mod 10^6 < frac·10^6`. Different `salt`s give
-    * independent samples over the same keys.
-    */
-  def deterministicSample(df: DataFrame, keyCol: String, frac: Double,
-                          salt: String = "samp"): DataFrame =
-    df.filter(bucketOf(col(keyCol), salt) < ppm(frac))
-
   /** Per-stratum sampling rates (e.g. downsample English, keep all of
     * a rare language) — the data-mixing primitive of corpus curation.
+    * A row is kept iff `hash(salt:key) mod 10^6 < rate·10^6`, so
+    * different `salt`s give independent samples over the same keys.
     * Rates are baked as a literal CASE chain: the filter stays a
     * narrow scan-side expression, no join, no shuffle.
     */

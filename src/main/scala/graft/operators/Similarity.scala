@@ -1518,145 +1518,4 @@ object Similarity {
           col("logit_q").cast("double") / lit(1e9), 6).as("lin_score"),
         coalesce(col("logit_q") > thresholdQ, lit(false)).as("keep"))
   }
-
-  /** Dense (mean, covariance, n) from ONE [[graft.plans.MomentMatrix]]
-    * pass — the un-rounded driver-side form [[covarianceMatrix]]'s
-    * d²-row frame is derived from; d×d doubles, so the collect is a
-    * few KB regardless of corpus size. Same n ≥ 2 / strict null
-    * contract as [[covarianceMatrix]].
-    */
-  private[graft] def momentsDense(df: DataFrame, vecCol: String,
-                                  dim: Int): (Array[Double], Array[Array[Double]], Long) = {
-    require(dim >= 1, s"dim must be >= 1, got $dim")
-    val q = transform(col(vecCol).cast("array<double>"),
-      x => floor(x * lit(1e6) + lit(0.5)).cast("long"))
-    val qe = concat(q, array(lit(1L)))
-    val cells = df.select(qe.as("__qe"))
-      .agg(graft.plans.MomentMatrix.momentMatrix(col("__qe"), dim + 1).as("__m"))
-      .select(explode(col("__m")).as("p"))
-      .select(col("p.i"), col("p.j"), col("p.s"))
-      .collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getDecimal(2))).toMap
-    val n = cells((dim, dim)).longValueExact()
-    require(n >= 2, s"covariance needs n >= 2 rows, got $n")
-    val mean = Array.tabulate(dim)(i => cells((i, dim)).doubleValue() / n / 1e6)
-    val cov = Array.ofDim[Double](dim, dim)
-    for (i <- 0 until dim; j <- i until dim) {
-      val sij = cells((i, j)).doubleValue()
-      val si = cells((i, dim)).doubleValue()
-      val sj = cells((j, dim)).doubleValue()
-      val c = (sij - si * sj / n) / (n - 1).toDouble / 1e12
-      cov(i)(j) = c; cov(j)(i) = c
-    }
-    (mean, cov, n)
-  }
-
-  /** Cyclic Jacobi eigendecomposition of a symmetric matrix (public
-    * textbook algorithm: sweep every (p, q) pair in a FIXED order,
-    * rotate away a(p,q), accumulate rotations) — deterministic given
-    * the input, converges quadratically; d ≤ a few hundred is
-    * driver-trivial. Returns (eigenvalues, eigenvectors as ROWS),
-    * sorted by eigenvalue DESC (tie: original index), each vector
-    * sign-normalized so its largest-|component| entry (lowest index
-    * on ties) is positive — a fully deterministic basis.
-    */
-  private[graft] def jacobiEigen(m: Array[Array[Double]],
-                                 maxSweeps: Int = 64): (Array[Double], Array[Array[Double]]) = {
-    val d = m.length
-    require(m.forall(_.length == d), "matrix must be square")
-    val a = m.map(_.clone())
-    val v = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
-    def offNorm: Double = {
-      var s = 0.0
-      for (p <- 0 until d; qq <- p + 1 until d) s += a(p)(qq) * a(p)(qq)
-      math.sqrt(s)
-    }
-    val scale = math.max(1e-300, m.map(_.map(math.abs).max).max)
-    var sweep = 0
-    while (offNorm > 1e-12 * scale && sweep < maxSweeps) {
-      for (p <- 0 until d - 1; qq <- p + 1 until d) {
-        val apq = a(p)(qq)
-        if (math.abs(apq) > 1e-300) {
-          val theta = (a(qq)(qq) - a(p)(p)) / (2.0 * apq)
-          val t =
-            if (theta >= 0) 1.0 / (theta + math.sqrt(theta * theta + 1.0))
-            else -1.0 / (-theta + math.sqrt(theta * theta + 1.0))
-          val c = 1.0 / math.sqrt(t * t + 1.0)
-          val s = t * c
-          for (i <- 0 until d) {
-            val aip = a(i)(p); val aiq = a(i)(qq)
-            a(i)(p) = c * aip - s * aiq
-            a(i)(qq) = s * aip + c * aiq
-          }
-          for (i <- 0 until d) {
-            val api = a(p)(i); val aqi = a(qq)(i)
-            a(p)(i) = c * api - s * aqi
-            a(qq)(i) = s * api + c * aqi
-          }
-          for (i <- 0 until d) {
-            val vip = v(i)(p); val viq = v(i)(qq)
-            v(i)(p) = c * vip - s * viq
-            v(i)(qq) = s * vip + c * viq
-          }
-        }
-      }
-      sweep += 1
-    }
-    val order = (0 until d).sortBy(i => (-a(i)(i), i))
-    val vals = order.map(i => a(i)(i)).toArray
-    val vecs = order.map { i =>
-      val col = Array.tabulate(d)(r => v(r)(i))
-      val pivot = col.indices.maxBy(r => (math.abs(col(r)), -r))
-      if (col(pivot) < 0) col.map(x => -x) else col
-    }.toArray
-    (vals, vecs)
-  }
-
-  /** PCA projection: exact covariance from ONE 128-bit moment pass
-    * ([[graft.plans.MomentMatrix]] — the [[covarianceMatrix]] scan),
-    * eigendecomposed on the driver with the deterministic
-    * [[jacobiEigen]] (the d×d matrix is KBs at any corpus size), then
-    * each vector is centered and projected onto the top-`k` principal
-    * components as a NARROW map — the component vectors are plan
-    * literals, so the projection is one codegen'd zip_with fold per
-    * component, no joins, no shuffles, the corpus scanned once per
-    * job. Returns (id, pc array<double> of length k, each rounded at
-    * 1e-6) plus the basis via [[pcaBasis]] for reuse.
-    *
-    * The standard embedding-pipeline reduction step (whitening /
-    * dimension cut before clustering or ANN) — eigensolver from
-    * scratch because no linear-algebra library ships in this
-    * container; Jacobi on d = 64 converges in a handful of sweeps.
-    */
-  def pcaBasis(df: DataFrame, vecCol: String, dim: Int,
-               k: Int): (Array[Double], Array[Array[Double]], Array[Double]) = {
-    require(k >= 1 && k <= dim, s"k=$k outside [1, $dim]")
-    val (mean, cov, _) = momentsDense(df, vecCol, dim)
-    val (vals, vecs) = jacobiEigen(cov)
-    (vals.take(k), vecs.take(k), mean)
-  }
-
-  /** `whiten = true` divides each component by √λ (PCA whitening —
-    * unit variance per output dimension, the normalization embedding
-    * pipelines apply before cosine/clustering); components whose
-    * eigenvalue is ≤ 0 (numerically degenerate directions) emit 0
-    * rather than dividing by ~0.
-    */
-  def pcaProject(df: DataFrame, vecCol: String, idCol: String,
-                 dim: Int, k: Int, whiten: Boolean = false): DataFrame = {
-    val (vals, vecs, mean) = pcaBasis(df, vecCol, dim, k)
-    val v = col(vecCol).cast("array<double>")
-    val meanLit = array(mean.map(lit): _*)
-    val centered = zip_with(v, meanLit, (x, mu) => x - mu)
-    val comps = vecs.zip(vals).map { case (e, lam) =>
-      val elit = array(e.map(lit): _*)
-      val proj = aggregate(zip_with(elit, centered, (w, x) => w * x), lit(0.0), (acc, p) => acc + p)
-      val scaled =
-        if (!whiten) proj
-        else if (lam > 0.0) proj / lit(math.sqrt(lam))
-        else lit(0.0)
-      graft.functions.MathFunctions.roundTo(scaled, 6)
-    }
-    df.select(col(idCol), when(size(v) === dim, array(comps: _*)).as("pc"))
-  }
 }

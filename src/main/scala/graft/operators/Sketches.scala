@@ -111,8 +111,7 @@ object Sketches {
     val gs = groupCols.map(col)
     // NULL values are excluded (a null would otherwise produce a
     // null-bucket register row that skews __n in the harmonic fold) —
-    // same semantics as COUNT(DISTINCT), the oracle SQL, and the
-    // streaming hllDistinctStream path
+    // same semantics as COUNT(DISTINCT) and the oracle SQL
     // max rank per (group, register) — map-side combinable, ≤ m rows
     // per group survive the shuffle no matter the input size
     df.filter(col(valueCol).isNotNull)

@@ -492,8 +492,7 @@ object DedupQueries {
       // Signature-agnostic banded-Hamming near-dup (the core behind
       // perceptual image dedup): 48 packed sign bits per embedding as
       // the stand-in fingerprint, 6 bands × 8 bits, bit_count verify.
-      // The image front-end (Multimodal.imageDHash) feeds the SAME
-      // operator and is spec-tested on real decoded pixels.
+      // A perceptual image hash would feed the SAME operator.
       import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
       val planes = Seq(Dedup.randomPlanes(48, 64, Dedup.DefaultSeed))
       val sigs = t(s, dir, "embeddings").select(col("vec_id").as("id"),

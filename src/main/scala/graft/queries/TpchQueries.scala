@@ -422,8 +422,7 @@ object TpchQueries {
          ${roundToSql("covar_samp(l_quantity, l_discount)", 6)} AS cov_qd
          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     QuerySpec("q32_sessionize_batch")((s, dir) => {
-      // Batch formulation of gap sessionization (streaming twin:
-      // EventStream.sessionize): session bumps when the gap > 300 s.
+      // Batch gap sessionization: session bumps when the gap > 300 s.
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       events(s, dir)
         .withColumn("ms", expr("ts_us div 1000"))

@@ -254,30 +254,6 @@ class DedupSpec extends SparkSpec {
     assert(codes.forall(_.getSeq[Int](0).length == 8), "64 doubles -> 8 codes")
   }
 
-  test("incremental exact dedup: commit-after-write keeps retries safe") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString + "/index"
-    val batch1 = Seq((1L, "alpha beta"), (2L, "gamma"), (3L, "ALPHA   beta")) // 3 dups 1
-      .toDF("doc_id", "text")
-    val out1 = Dedup.incrementalExact(batch1, "text", "doc_id", dir)
-    assert(out1.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L),
-      "within-batch dup collapsed to min id")
-    // idempotency: BEFORE the commit, a retry of the same batch sees
-    // the same survivors — a failed downstream write loses nothing
-    val retry = Dedup.incrementalExact(batch1, "text", "doc_id", dir)
-    assert(retry.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L),
-      "pre-commit retry returns the full batch again")
-    Dedup.commitFingerprints(out1, "text", dir) // the batch is now 'durably written'
-    val batch2 = Seq((10L, "alpha beta"), (11L, "delta"), (12L, "gamma"))
-      .toDF("doc_id", "text")
-    val out2 = Dedup.incrementalExact(batch2, "text", "doc_id", dir)
-    assert(out2.select("doc_id").collect().map(_.getLong(0)).toSet == Set(11L),
-      "only the genuinely new doc survives batch 2")
-    Dedup.commitFingerprints(out2, "text", dir)
-    val batch3 = Seq((20L, "delta")).toDF("doc_id", "text")
-    assert(Dedup.incrementalExact(batch3, "text", "doc_id", dir).isEmpty,
-      "batch-2 survivor's committed fingerprint blocks batch 3")
-  }
-
   test("incremental minhash dedup: near-dups blocked within batch and across batches") {
     val dir = java.nio.file.Files.createTempDirectory("graft_mh_idx").toString + "/index"
     val base = "the quick brown fox jumps over the lazy dog again and again until quite done"
@@ -328,18 +304,6 @@ class DedupSpec extends SparkSpec {
       s"exact decontaminate drops the shared-phrase doc too, got $exactKept")
   }
 
-  test("incremental exact dedup: durable staging variant survives re-reads") {
-    val base = java.nio.file.Files.createTempDirectory("graft_dedup_stg").toString
-    val dir = base + "/index"; val stage = base + "/staging"
-    val batch = Seq((1L, "alpha"), (2L, "beta"), (3L, "ALPHA")).toDF("doc_id", "text")
-    val out = Dedup.incrementalExact(batch, "text", "doc_id", dir, Some(stage))
-    assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    // the survivors are durably on disk (not executor-local blocks):
-    // an independent read of the staging dir sees the same rows
-    assert(spark.read.parquet(stage).count() == 2)
-    assert(out.columns.toSet == Set("doc_id", "text"), "__fp not leaked")
-  }
-
   test("connected components: 100-deep chain converges via pointer doubling") {
     // plain O(diameter) propagation would need 100 rounds and silently
     // truncate at maxIter=20; pointer doubling needs ~log2(100) ≈ 7
@@ -372,12 +336,12 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native vector expressions match HOF reference formulation bit-exactly") {
-    import graft.functions.VectorFunctions
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     val emb = spark.read.parquet(sf("sf0.001/embeddings.parquet")).limit(50)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val hofDot = aggregate(zip_with(col("v"), col("v"), (x, y) => x * y), lit(0.0), (a, x) => a + x)
     val rows = emb.select(
-      VectorFunctions.dot(col("v"), col("v")).as("native"),
+      column(graft.plans.DotProduct(expression(col("v")), expression(col("v")))).as("native"),
       hofDot.as("hof")).collect()
     assert(rows.forall(r => r.getDouble(0) == r.getDouble(1)), "bit-identical dot products")
   }
@@ -420,6 +384,28 @@ class DedupSpec extends SparkSpec {
     }
     val agree = int8Top1.keys.count(k => int8Top1(k) == exactTop1(k))
     assert(agree >= 4, s"int8 top-1 agrees with float top-1 on >= 4/5 queries, got $agree: $int8Top1 vs $exactTop1")
+  }
+
+  test("hammingNearDups: pigeonhole exactness and parameter validation") {
+    // hand-built 16-bit signatures, 4 bands × 4 bits: dist(1,2)=2 ⇒
+    // must be found (2 < 4 bands); dist(1,3)=8 spread over all bands
+    // with no band agreeing ⇒ correctly outside the guarantee AND
+    // above maxHamming; dist(1,4)=3 but in ONE band ⇒ 3 bands agree.
+    val sigs = Seq(
+      (1L, 0x0000L), (2L, 0x0011L), (3L, 0x3333L), (4L, 0x0007L)
+    ).toDF("id", "sig")
+    val got = Dedup.hammingNearDups(sigs, "sig", "id", nBits = 16, bands = 4, maxHamming = 3)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
+    assert(got == Set((1L, 2L, 2), (1L, 4L, 3), (2L, 4L, 3)), got.toString)
+    intercept[IllegalArgumentException] {
+      Dedup.hammingNearDups(sigs, "sig", "id", nBits = 16, bands = 5)
+    }
+    // recall-heuristic regime (maxHamming >= bands): verified pairs are
+    // still correct, but candidacy requires a band agreement — (1,3)
+    // at distance 8 with every band touched stays (correctly) missing
+    val loose = Dedup.hammingNearDups(sigs, "sig", "id", nBits = 16, bands = 4, maxHamming = 8)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
+    assert(!loose.contains((1L, 3L, 8)) && loose.contains((1L, 2L, 2)), loose.toString)
   }
 
   test("hammingTopK: exact copy ranks first at hamming 0, negation ranks far") {
@@ -768,73 +754,6 @@ class DedupSpec extends SparkSpec {
     val b = graft.operators.Similarity.covarianceMatrix(df.repartition(13), "v", 4)
       .orderBy("dim_i", "dim_j").collect().map(_.getDouble(2)).toSeq
     assert(a === b, "decimal integer moments make the result partitioning-independent")
-  }
-
-  test("jacobiEigen: hand matrices, orthonormal basis, reconstruction, deterministic signs") {
-    import graft.operators.Similarity.jacobiEigen
-    // already-diagonal: eigenpairs read off directly, sorted desc
-    val (v1, e1) = jacobiEigen(Array(Array(1.0, 0.0), Array(0.0, 2.0)))
-    assert(v1.toSeq == Seq(2.0, 1.0))
-    assert(e1(0).toSeq == Seq(0.0, 1.0) && e1(1).toSeq == Seq(1.0, 0.0))
-    // [[2,1],[1,2]] → λ = 3, 1; eigvecs (1,1)/√2 and (1,-1)/√2 — the
-    // sign convention makes the largest-|x| (first on tie) positive
-    val (v2, e2) = jacobiEigen(Array(Array(2.0, 1.0), Array(1.0, 2.0)))
-    assert(v2.zip(Seq(3.0, 1.0)).forall { case (a, b) => math.abs(a - b) < 1e-12 })
-    val r2 = 1.0 / math.sqrt(2.0)
-    assert(e2(0).zip(Seq(r2, r2)).forall { case (a, b) => math.abs(a - b) < 1e-12 })
-    assert(e2(1).zip(Seq(r2, -r2)).forall { case (a, b) => math.abs(a - b) < 1e-12 })
-    // random symmetric 8x8: V orthonormal and V^T Λ V reconstructs A
-    val rng = new scala.util.Random(7)
-    val d = 8
-    val m = Array.ofDim[Double](d, d)
-    for (i <- 0 until d; j <- i until d) { val x = rng.nextGaussian(); m(i)(j) = x; m(j)(i) = x }
-    val (vals, vecs) = jacobiEigen(m)
-    for (i <- 0 until d; j <- 0 until d) {
-      val dot = (0 until d).map(r => vecs(i)(r) * vecs(j)(r)).sum
-      assert(math.abs(dot - (if (i == j) 1.0 else 0.0)) < 1e-9, s"orthonormal ($i,$j): $dot")
-    }
-    for (r <- 0 until d; c <- 0 until d) {
-      val rec = (0 until d).map(i => vals(i) * vecs(i)(r) * vecs(i)(c)).sum
-      assert(math.abs(rec - m(r)(c)) < 1e-9, s"reconstruction ($r,$c)")
-    }
-  }
-
-  test("pcaProject: recovers a planted dominant direction; projections centered with variance = eigenvalue") {
-    import spark.implicits._
-    // 4-D corpus: mean + a·u + b·w, u ⟂ w, Var(a) >> Var(b) — the top
-    // PC must align with u and carry (almost) all the variance
-    val u = Array(0.5, 0.5, 0.5, 0.5)
-    val w = Array(0.5, -0.5, 0.5, -0.5)
-    val mu = Array(1.0, 2.0, -1.0, 0.5)
-    val rows = (0 until 400).map { i =>
-      val a = math.sin(i * 0.7) * 10.0
-      val b = math.cos(i * 1.3) * 0.5
-      (i.toLong, Array.tabulate(4)(j => (mu(j) + a * u(j) + b * w(j)).toFloat))
-    }
-    val df = rows.toDF("id", "v")
-    val (vals, vecs, mean) = graft.operators.Similarity.pcaBasis(df, "v", dim = 4, k = 2)
-    assert(mean.zip(mu).forall { case (m, e) => math.abs(m - e) < 0.5 }, mean.toSeq.toString)
-    val align = math.abs(vecs(0).zip(u).map { case (x, y) => x * y }.sum)
-    assert(align > 0.999, s"top PC aligns with the planted direction: $align")
-    assert(vals(0) > 20 * vals(1), s"dominant eigenvalue dominates: ${vals.toSeq}")
-    // projections: sample-mean ~0 (centered), sample variance ≈ λ1
-    val pcs = graft.operators.Similarity.pcaProject(df, "v", "id", dim = 4, k = 2)
-      .collect().map(_.getSeq[Double](1))
-    val p1 = pcs.map(_.head)
-    val pMean = p1.sum / p1.length
-    val pVar = p1.map(x => (x - pMean) * (x - pMean)).sum / (p1.length - 1)
-    assert(math.abs(pMean) < 1e-3, s"centered: $pMean")
-    assert(math.abs(pVar - vals(0)) / vals(0) < 1e-3, s"Var(pc1)=$pVar vs λ1=${vals(0)}")
-    // whitening: every output dimension reads unit sample variance
-    val white = graft.operators.Similarity.pcaProject(df, "v", "id", dim = 4, k = 2,
-        whiten = true)
-      .collect().map(_.getSeq[Double](1))
-    (0 until 2).foreach { j =>
-      val xs = white.map(_(j))
-      val m = xs.sum / xs.length
-      val varJ = xs.map(x => (x - m) * (x - m)).sum / (xs.length - 1)
-      assert(math.abs(varJ - 1.0) < 1e-2, s"whitened dim $j variance $varJ")
-    }
   }
 
   test("covarianceMatrix: empty and single-row input yield an EMPTY frame, never NaN rows") {
@@ -1293,23 +1212,6 @@ class DedupSpec extends SparkSpec {
     assert(work.zip(work.tail).forall { case (a, b) => a >= b },
       s"work monotone: ${work.toSeq}")
     assert(work.head > work.last, "depth must actually reduce candidate work on real data")
-  }
-
-  // ---- derivedBands -----------------------------------------------------------
-
-  test("derivedBands: S-curve midpoint picks the classic bandings at numHashes=128") {
-    import graft.operators.Dedup.derivedBands
-    // midpoints: b=4 -> 0.958, 8 -> 0.878, 16 -> 0.707, 32 -> 0.420, 64 -> 0.125
-    assert(derivedBands(128, 0.9) === 8)
-    assert(derivedBands(128, 0.7) === 16)
-    assert(derivedBands(128, 0.4) === 32)
-    assert(derivedBands(128, 0.15) === 64)
-    // b=2 midpoint (1/2)^(1/64) = 0.9892 beats b=1's exact 1.0 for 0.99
-    assert(derivedBands(128, 0.99) === 2, "near-exact threshold wants very long bands")
-    assert(derivedBands(128, 0.01) === 128, "catch-everything threshold wants 1-row bands")
-    intercept[IllegalArgumentException](derivedBands(128, 0.0))
-    intercept[IllegalArgumentException](derivedBands(128, 1.0))
-    intercept[IllegalArgumentException](derivedBands(0, 0.5))
   }
 
   // ---- minhashRecallProfile --------------------------------------------------

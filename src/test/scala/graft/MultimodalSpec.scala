@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.config.DownloadConfig
 import graft.operators.{Multimodal, Resizer}
 
-/** Multimodal column plumbing: real image decode path + stubbed
-  * audio/video kernels with real schema/fan-out.
+/** Multimodal column plumbing: the image metadata struct from a real
+  * decode.
   */
 class MultimodalSpec extends SparkSpec {
 
@@ -24,872 +21,5 @@ class MultimodalSpec extends SparkSpec {
     assert(rows(0).getInt(1) == 64 && rows(0).getInt(2) == 48)
     assert(rows(0).getString(3) == "jpg" && rows(0).isNullAt(5))
     assert(rows(1).getString(5) == "decode failed")
-  }
-
-  test("image resize over binary column via mapPartitions") {
-    val df = Seq((1L, jpg(500, 300))).toDF("id", "payload")
-    val out = Multimodal.resizeImages(df, "payload",
-      DownloadConfig(resizeMode = "border", imageSize = 128))
-    val bytes = out.select("resized").collect()(0).getAs[Array[Byte]](0)
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    assert(img.getWidth == 128 && img.getHeight == 128)
-  }
-
-  test("audio features: deterministic stub for non-WAV payloads") {
-    val df = Seq((1L, Array.fill[Byte](64000)(7))).toDF("id", "payload")
-    val r = Multimodal.withAudioFeatures(df, "payload")
-      .select("audio_features.*").collect()(0)
-    assert(r.getInt(0) == 64000)
-    assert(r.getDouble(1) == 2.0)       // 64000 bytes / 32000 Bps
-    assert(r.isNullAt(2) && r.isNullAt(3) && r.isNullAt(4), "no parsed fields for non-WAV")
-    assert(r.getAs[Boolean]("stubbed"), "stub is marked")
-  }
-
-  /** Golden WAV: 16 kHz, mono, 16-bit PCM, exactly 1.0 s (16000
-    * samples = 32000 data bytes). Byte-for-byte canonical RIFF layout.
-    */
-  private def goldenWav(rate: Int = 16000, channels: Int = 1, bits: Int = 16,
-                        nSamples: Int = 16000): Array[Byte] = {
-    val dataLen = nSamples * channels * bits / 8
-    val byteRate = rate * channels * bits / 8
-    val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1)                      // PCM
-      .putShort(channels.toShort)
-      .putInt(rate).putInt(byteRate)
-      .putShort((channels * bits / 8).toShort)
-      .putShort(bits.toShort)
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
-    var i = 0
-    while (i < nSamples) { // 440 Hz-ish sine so bytes aren't constant
-      val v = (math.sin(i * 2 * math.Pi * 440 / rate) * 16384).toShort
-      bb.putShort(v); i += 1
-    }
-    bb.array()
-  }
-
-  test("audio features: WAV header really parsed — exact duration, stubbed=false") {
-    val df = Seq((1L, goldenWav()), (2L, goldenWav(rate = 44100, channels = 2, nSamples = 22050)))
-      .toDF("id", "payload")
-    val rows = Multimodal.withAudioFeatures(df, "payload")
-      .select(col("id"), col("audio_features.*")).orderBy("id").collect()
-    val r1 = rows(0)
-    assert(r1.getDouble(2) == 1.0, "16000 samples at 16kHz = exactly 1.0s")
-    assert(r1.getInt(3) == 16000 && r1.getInt(4) == 1 && r1.getInt(5) == 16)
-    assert(!r1.getAs[Boolean]("stubbed"), "WAV path is NOT stubbed")
-    val r2 = rows(1)
-    assert(r2.getDouble(2) == 0.5, "22050 stereo samples at 44.1kHz = exactly 0.5s")
-    assert(r2.getInt(3) == 44100 && r2.getInt(4) == 2 && r2.getInt(5) == 16)
-    assert(!r2.getAs[Boolean]("stubbed"))
-  }
-
-  test("audio features: WAV PCM samples REALLY decoded — measured rms/peak/zcr/centroid/silence") {
-    // golden 440 Hz sine at half scale, 16 kHz mono 16-bit, 1.0 s:
-    // rms = 0.5/√2, peak = 0.5, zcr = 880 crossings/s, Hann-windowed
-    // spectral centroid ≈ 440.59 Hz (cross-checked against numpy.fft
-    // on the identical quantized samples), silence ratio = 0.005
-    val df = Seq((1L, goldenWav())).toDF("id", "payload")
-    val r = Multimodal.withAudioFeatures(df, "payload")
-      .select("audio_features.*").collect()(0)
-    assert(!r.getAs[Boolean]("stubbed"))
-    assert(math.abs(r.getAs[Double]("rms") - 0.35354) < 1e-3, s"rms ${r.getAs[Double]("rms")}")
-    assert(math.abs(r.getAs[Double]("peak") - 0.5) < 1e-3)
-    assert(math.abs(r.getAs[Double]("zero_cross_rate") - 880.0) < 2.0)
-    assert(math.abs(r.getAs[Double]("spectral_centroid_hz") - 440.59) < 2.0,
-      s"centroid ${r.getAs[Double]("spectral_centroid_hz")}")
-    assert(math.abs(r.getAs[Double]("silence_ratio") - 0.005) < 2e-3)
-    // a 3 kHz tone reads a ~3 kHz centroid (feature is discriminative)
-    val hiBytes = goldenWav()
-    var i = 0
-    while (i < 16000) {
-      val v = (math.sin(i * 2 * math.Pi * 3000 / 16000) * 16384).toShort
-      hiBytes(44 + 2 * i) = (v & 0xFF).toByte
-      hiBytes(45 + 2 * i) = ((v >> 8) & 0xFF).toByte
-      i += 1
-    }
-    val r2 = Multimodal.withAudioFeatures(Seq((1L, hiBytes)).toDF("id", "payload"), "payload")
-      .select("audio_features.*").collect()(0)
-    assert(math.abs(r2.getAs[Double]("spectral_centroid_hz") - 3000.0) < 10.0)
-    // silent payload: rms 0, silence 1, centroid null
-    val silent = goldenWav()
-    java.util.Arrays.fill(silent, 44, silent.length, 0.toByte)
-    val r3 = Multimodal.withAudioFeatures(Seq((1L, silent)).toDF("id", "payload"), "payload")
-      .select("audio_features.*").collect()(0)
-    assert(r3.getAs[Double]("rms") == 0.0 && r3.getAs[Double]("silence_ratio") == 1.0)
-    assert(r3.isNullAt(r3.fieldIndex("spectral_centroid_hz")), "all-zero spectrum → null centroid")
-    // compressed/lossy paths carry NO fake sample features
-    val mp3r = Multimodal.withAudioFeatures(Seq((1L, goldenMp3())).toDF("id", "payload"), "payload")
-      .select("audio_features.*").collect()(0)
-    assert(mp3r.isNullAt(mp3r.fieldIndex("rms")), "no sample decode for lossy formats")
-  }
-
-  test("audio features: stereo WAV mono-mix and 8-bit unsigned decode") {
-    // stereo: L = +0.25, R = -0.25 constants → mono mix 0 (rms 0);
-    // L = R = 0.25 → rms 0.25
-    def stereoWav(l: Short, rr: Short): Array[Byte] = {
-      val n = 1000
-      val bb = java.nio.ByteBuffer.allocate(44 + n * 4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + n * 4).put("WAVE".getBytes("US-ASCII"))
-        .put("fmt ".getBytes("US-ASCII")).putInt(16).putShort(1).putShort(2)
-        .putInt(8000).putInt(8000 * 4).putShort(4).putShort(16)
-        .put("data".getBytes("US-ASCII")).putInt(n * 4)
-      (0 until n).foreach { _ => bb.putShort(l); bb.putShort(rr) }
-      bb.array()
-    }
-    val opp = Multimodal.withAudioFeatures(
-        Seq((1L, stereoWav(8192, -8192))).toDF("id", "payload"), "payload")
-      .select("audio_features.*").collect()(0)
-    assert(opp.getAs[Double]("rms") == 0.0, "opposite-phase channels cancel in the mono mix")
-    val same = Multimodal.withAudioFeatures(
-        Seq((1L, stereoWav(8192, 8192))).toDF("id", "payload"), "payload")
-      .select("audio_features.*").collect()(0)
-    assert(math.abs(same.getAs[Double]("rms") - 0.25) < 1e-6)
-    // 8-bit WAV is UNSIGNED: constant 0x80 bytes are digital silence
-    val n8 = 1000
-    val bb = java.nio.ByteBuffer.allocate(44 + n8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + n8).put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16).putShort(1).putShort(1)
-      .putInt(8000).putInt(8000).putShort(1).putShort(8)
-      .put("data".getBytes("US-ASCII")).putInt(n8)
-    (0 until n8).foreach(_ => bb.put(0x80.toByte))
-    val r8 = Multimodal.withAudioFeatures(Seq((1L, bb.array())).toDF("id", "payload"), "payload")
-      .select("audio_features.*").collect()(0)
-    assert(r8.getAs[Double]("rms") == 0.0 && r8.getAs[Double]("silence_ratio") == 1.0)
-  }
-
-  test("PCM decode round-trip: random samples through every WAV sample format, bit-exact") {
-    val rng = new scala.util.Random(42)
-    def wav(fmt: Int, bits: Int, ch: Int, rate: Int, data: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(44 + data.length)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + data.length)
-        .put("WAVE".getBytes("US-ASCII"))
-        .put("fmt ".getBytes("US-ASCII")).putInt(16)
-        .putShort(fmt.toShort).putShort(ch.toShort).putInt(rate)
-        .putInt(rate * ch * bits / 8).putShort((ch * bits / 8).toShort).putShort(bits.toShort)
-        .put("data".getBytes("US-ASCII")).putInt(data.length).put(data)
-      bb.array()
-    }
-    // 16-bit int: decode is exactly s/32768
-    val s16 = Array.fill(500)(rng.nextInt(65536) - 32768)
-    val d16 = java.nio.ByteBuffer.allocate(1000).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    s16.foreach(v => d16.putShort(v.toShort))
-    val p16 = Multimodal.decodePcm(wav(1, 16, 1, 8000, d16.array())).get
-    assert(p16.samples.length == 500)
-    assert(p16.samples.zip(s16).forall { case (d, v) => d == v / 32768.0 }, "16-bit exact")
-    // 24-bit int incl. negative extremes: s/2^23
-    val s24 = Array.fill(300)(rng.nextInt(1 << 24) - (1 << 23))
-    val d24 = new Array[Byte](900)
-    s24.zipWithIndex.foreach { case (v, i) =>
-      d24(3 * i) = (v & 0xFF).toByte; d24(3 * i + 1) = ((v >> 8) & 0xFF).toByte
-      d24(3 * i + 2) = ((v >> 16) & 0xFF).toByte
-    }
-    val p24 = Multimodal.decodePcm(wav(1, 24, 1, 8000, d24)).get
-    assert(p24.samples.zip(s24).forall { case (d, v) => d == v / 8388608.0 }, "24-bit exact")
-    // 32-bit IEEE float: bit-exact pass-through
-    val sf = Array.fill(400)(rng.nextFloat() * 2f - 1f)
-    val df32 = java.nio.ByteBuffer.allocate(1600).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    sf.foreach(df32.putFloat)
-    val pf = Multimodal.decodePcm(wav(3, 32, 1, 8000, df32.array())).get
-    assert(pf.samples.zip(sf).forall { case (d, v) => d == v.toDouble }, "float32 exact")
-    // 64-bit IEEE float stereo: mono mix is the exact average
-    val l = Array.fill(200)(rng.nextDouble() * 2 - 1)
-    val r = Array.fill(200)(rng.nextDouble() * 2 - 1)
-    val d64 = java.nio.ByteBuffer.allocate(3200).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    (0 until 200).foreach { i => d64.putDouble(l(i)); d64.putDouble(r(i)) }
-    val pd = Multimodal.decodePcm(wav(3, 64, 2, 8000, d64.array())).get
-    assert(pd.samples.indices.forall(i => pd.samples(i) == (l(i) + r(i)) / 2), "float64 stereo mix")
-    // truncated data chunk: only whole frames decode, no exception
-    val trunc = wav(1, 16, 2, 8000, d16.array().take(999)) // 999 bytes = 249.75 frames
-    assert(Multimodal.decodePcm(trunc).get.samples.length == 249)
-    // compressed format (ADPCM fmt 2) refuses
-    assert(Multimodal.decodePcm(wav(2, 4, 1, 8000, Array.fill[Byte](100)(1))).isEmpty)
-  }
-
-  test("audio features: AIFF SSND big-endian PCM decode") {
-    // FORM/AIFF with COMM (8 kHz mono 16-bit, n frames) + SSND holding
-    // a constant +0.25 level → rms 0.25, peak 0.25, zcr 0
-    val n = 2000
-    val bb = java.nio.ByteBuffer.allocate(12 + 8 + 18 + 8 + 8 + n * 2) // BE default
-    bb.put("FORM".getBytes("US-ASCII")).putInt(4 + 8 + 18 + 8 + 8 + n * 2)
-      .put("AIFF".getBytes("US-ASCII"))
-      .put("COMM".getBytes("US-ASCII")).putInt(18)
-      .putShort(1).putInt(n).putShort(16)
-      .putShort(0x400B.toShort).putInt(0xFA000000).putInt(0) // 80-bit float 8000.0
-      .put("SSND".getBytes("US-ASCII")).putInt(8 + n * 2)
-      .putInt(0).putInt(0) // offset, blockSize
-    (0 until n).foreach(_ => bb.putShort(8192))
-    val r = Multimodal.withAudioFeatures(Seq((1L, bb.array())).toDF("id", "payload"), "payload")
-      .select("audio_features.*").collect()(0)
-    assert(!r.getAs[Boolean]("stubbed"))
-    assert(r.getAs[Int]("sample_rate") == 8000)
-    assert(math.abs(r.getAs[Double]("rms") - 0.25) < 1e-6, s"rms ${r.getAs[Double]("rms")}")
-    assert(math.abs(r.getAs[Double]("peak") - 0.25) < 1e-6)
-    assert(r.getAs[Double]("zero_cross_rate") == 0.0)
-    // a trailing chunk AFTER SSND must not be decoded as samples —
-    // full-scale junk would crater the measured rms if it leaked in
-    val junk = java.nio.ByteBuffer.allocate(8 + 64)
-    junk.put("ANNO".getBytes("US-ASCII")).putInt(64)
-    (0 until 32).foreach(_ => junk.putShort(0x7FFF))
-    val trailed = bb.array() ++ junk.array()
-    val r2 = Multimodal.withAudioFeatures(Seq((1L, trailed)).toDF("id", "payload"), "payload")
-      .select("audio_features.*").collect()(0)
-    assert(math.abs(r2.getAs[Double]("rms") - 0.25) < 1e-6,
-      s"SSND chunk bound respected: rms ${r2.getAs[Double]("rms")}")
-    assert(math.abs(r2.getAs[Double]("peak") - 0.25) < 1e-6)
-  }
-
-  /** Golden AIFF: FORM/AIFF with a COMM chunk — 44.1 kHz (the 80-bit
-    * extended-float encoding of 44100 is exp=0x400E, mantissa
-    * 0xAC44_0000_0000_0000), stereo, 16-bit, 22050 frames = 0.5 s.
-    */
-  private def goldenAiff(): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(12 + 8 + 18) // big-endian default
-    bb.put("FORM".getBytes("US-ASCII")).putInt(4 + 8 + 18)
-      .put("AIFF".getBytes("US-ASCII"))
-      .put("COMM".getBytes("US-ASCII")).putInt(18)
-      .putShort(2)                       // channels
-      .putInt(22050)                     // numSampleFrames
-      .putShort(16)                      // bits
-      .putShort(0x400E.toShort)          // 80-bit float: exponent
-      .putInt(0xAC440000)                // mantissa hi (44100 << 16)
-      .putInt(0)                         // mantissa lo
-    bb.array()
-  }
-
-  test("audio features: AIFF COMM chunk really parsed (80-bit rate decode)") {
-    val df = Seq((1L, goldenAiff())).toDF("id", "payload")
-    val r = Multimodal.withAudioFeatures(df, "payload")
-      .select("audio_features.*").collect()(0)
-    assert(r.getDouble(1) == 0.5, "22050 frames at 44.1kHz = exactly 0.5s")
-    assert(r.getInt(2) == 44100 && r.getInt(3) == 2 && r.getInt(4) == 16)
-    assert(!r.getAs[Boolean]("stubbed"), "AIFF path is NOT stubbed")
-  }
-
-  /** Golden MP3: `nFrames` MPEG-1 Layer III frames at 128 kbps,
-    * 44.1 kHz. Frame length = 144·128000/44100 = 417 bytes (int
-    * division, no padding); header FF FB 90 <mode>.
-    */
-  private def goldenMp3(nFrames: Int = 3, mono: Boolean = false,
-                        id3Len: Int = -1): Array[Byte] = {
-    val frame = new Array[Byte](417)
-    frame(0) = 0xFF.toByte; frame(1) = 0xFB.toByte // sync + V1 + LayerIII
-    frame(2) = 0x90.toByte                         // 128kbps, 44.1kHz, no pad
-    frame(3) = (if (mono) 0xC0 else 0x40).toByte   // mode: mono / joint stereo
-    val frames = Array.fill(nFrames)(frame).flatten
-    if (id3Len < 0) frames
-    else {
-      // ID3v2 header: "ID3" ver(2) flags(1) + syncsafe size + body
-      val id3 = Array[Byte]('I', 'D', '3', 3, 0, 0,
-        ((id3Len >> 21) & 0x7F).toByte, ((id3Len >> 14) & 0x7F).toByte,
-        ((id3Len >> 7) & 0x7F).toByte, (id3Len & 0x7F).toByte) ++
-        Array.fill[Byte](id3Len)(0)
-      id3 ++ frames
-    }
-  }
-
-  test("audio features: MP3 frame walk — summed frame duration, stubbed=false") {
-    val df = Seq((1L, goldenMp3()), (2L, goldenMp3(nFrames = 5, mono = true, id3Len = 64)))
-      .toDF("id", "payload")
-    val rows = Multimodal.withAudioFeatures(df, "payload")
-      .select(col("id"), col("audio_features.*")).orderBy("id").collect()
-    val st = rows(0)
-    assert(st.getDouble(2) == 3 * (1152.0 / 44100), "3 frames × 1152 samples at 44.1kHz")
-    assert(st.getInt(3) == 44100 && st.getInt(4) == 2)
-    assert(st.isNullAt(5), "lossy format: no bits_per_sample")
-    assert(!st.getAs[Boolean]("stubbed"), "MP3 path is NOT stubbed")
-    val mono = rows(1)
-    assert(mono.getDouble(2) == 5 * (1152.0 / 44100), "ID3v2 prefix skipped, 5 frames")
-    assert(mono.getInt(4) == 1, "mode 3 = mono")
-    assert(!mono.getAs[Boolean]("stubbed"))
-  }
-
-  /** Golden FLAC: fLaC magic + last-block STREAMINFO, 22.05 kHz
-    * stereo 16-bit, 44100 total samples = exactly 2.0 s.
-    */
-  private def goldenFlac(): Array[Byte] = {
-    val si = new Array[Byte](34)
-    si(10) = 0x05; si(11) = 0x62; si(12) = 0x22 // rate 22050 | (ch-1)=1<<1 | bps hi
-    si(13) = 0xF0.toByte                        // bps lo ((16-1)&0xF)<<4 | samples hi
-    si(16) = 0xAC.toByte; si(17) = 0x44         // 44100 total samples
-    Array[Byte]('f', 'L', 'a', 'C', 0x80.toByte, 0, 0, 34) ++ si
-  }
-
-  // ---- hand-built FLAC streams (encoder side lives only in the test:
-  // the decoder is the product; these fixtures follow the public
-  // bitstream spec field-by-field) ----
-
-  private def crc8t(b: Array[Byte]): Int = {
-    var crc = 0
-    b.foreach { x =>
-      crc ^= x & 0xFF
-      (0 until 8).foreach { _ =>
-        crc = if ((crc & 0x80) != 0) ((crc << 1) ^ 0x07) & 0xFF else (crc << 1) & 0xFF
-      }
-    }
-    crc
-  }
-
-  private def flacContainer(rate: Int, ch: Int, bits: Int, total: Long,
-                            frames: Array[Byte]): Array[Byte] = {
-    val w = new BitWriter
-    w.u(0, 16).u(0, 16)          // min/max block size (unused by the decoder)
-    w.u(0, 24).u(0, 24)          // min/max frame size
-    w.u(rate, 20).u(ch - 1, 3).u(bits - 1, 5)
-    w.u(0, 4).u(total.toInt, 32) // 36-bit total sample count
-    (0 until 16).foreach(_ => w.u(0, 8)) // md5
-    Array[Byte]('f', 'L', 'a', 'C', 0x80.toByte, 0, 0, 34) ++ w.bytes ++ frames
-  }
-
-  private def flacFrameHeader(blockSize: Int, chanAsg: Int): Array[Byte] = {
-    val w = new BitWriter
-    w.u(0x3FFE, 14).u(0, 1).u(0, 1)
-      .u(6, 4)       // 8-bit block-size-minus-1 follows
-      .u(0, 4)       // rate from STREAMINFO
-      .u(chanAsg, 4)
-      .u(4, 3)       // 16-bit samples
-      .u(0, 1)
-    w.u(0, 8)        // UTF-8 frame number 0
-    w.u(blockSize - 1, 8)
-    val hdr = w.bytes
-    hdr :+ crc8t(hdr).toByte
-  }
-
-  private def riceWrite(w: BitWriter, v: Long, param: Int): Unit = {
-    val u = if (v >= 0) v << 1 else ((-v) << 1) - 1
-    val q = (u >>> param).toInt
-    (0 until q).foreach(_ => w.u(0, 1))
-    w.u(1, 1)
-    if (param > 0) w.u((u & ((1L << param) - 1)).toInt, param)
-  }
-
-  private def finishSubframes(header: Array[Byte], w: BitWriter): Array[Byte] =
-    header ++ w.bytes ++ Array[Byte](0, 0) // CRC-16 consumed, not verified
-
-  test("FLAC decode: CONSTANT / VERBATIM / FIXED / LPC subframes, bit-exact samples") {
-    import graft.operators.Multimodal.decodePcm
-    // CONSTANT: 16 samples of -12345
-    val wc = new BitWriter
-    wc.u(0, 1).u(0, 6).u(0, 1).u(-12345 & 0xFFFF, 16)
-    val const = flacContainer(8000, 1, 16, 16,
-      finishSubframes(flacFrameHeader(16, 0), wc))
-    val pc = decodePcm(const).get
-    assert(pc.rate == 8000 && pc.samples.length == 16)
-    assert(pc.samples.forall(_ == -12345 / 32768.0), "constant decodes exactly")
-    // VERBATIM: known mixed-sign samples
-    val vs = Array[Int](0, 1, -1, 32767, -32768, 1000, -999, 5)
-    val wv = new BitWriter
-    wv.u(0, 1).u(1, 6).u(0, 1)
-    vs.foreach(v => wv.u(v & 0xFFFF, 16))
-    val verb = flacContainer(8000, 1, 16, 8,
-      finishSubframes(flacFrameHeader(8, 0), wv))
-    val pv = decodePcm(verb).get
-    assert(pv.samples.zip(vs).forall { case (d, v) => d == v / 32768.0 }, "verbatim exact")
-    // FIXED order 2 on a linear ramp: second difference ≡ 0 residuals
-    val ramp = Array.tabulate(16)(i => 100 + 7 * i)
-    val wf = new BitWriter
-    wf.u(0, 1).u(8 + 2, 6).u(0, 1)
-    wf.u(ramp(0) & 0xFFFF, 16).u(ramp(1) & 0xFFFF, 16) // warmup
-    wf.u(0, 2).u(0, 4).u(0, 4)                          // rice, 1 partition, param 0
-    (2 until 16).foreach(_ => riceWrite(wf, 0L, 0))
-    val fixed = flacContainer(8000, 1, 16, 16,
-      finishSubframes(flacFrameHeader(16, 0), wf))
-    val pf = decodePcm(fixed).get
-    assert(pf.samples.zip(ramp).forall { case (d, v) => d == v / 32768.0 }, "fixed-2 ramp exact")
-    // LPC order 1, coeff 1, shift 0: prediction = previous sample
-    val sig = Array[Int](100, 90, 95, 105, 80, 80, 60, 75)
-    val wl = new BitWriter
-    wl.u(0, 1).u(32, 6).u(0, 1)      // LPC order (32 & 31) + 1 = 1
-    wl.u(sig(0) & 0xFFFF, 16)        // warmup
-    wl.u(3, 4)                       // precision 4
-    wl.u(0, 5)                       // shift 0
-    wl.u(1, 4)                       // coefficient +1
-    wl.u(0, 2).u(0, 4).u(3, 4)       // rice, 1 partition, param 3
-    (1 until 8).foreach(i => riceWrite(wl, (sig(i) - sig(i - 1)).toLong, 3))
-    val lpc = flacContainer(8000, 1, 16, 8,
-      finishSubframes(flacFrameHeader(8, 0), wl))
-    val pl = decodePcm(lpc).get
-    assert(pl.samples.zip(sig).forall { case (d, v) => d == v / 32768.0 }, "lpc-1 exact")
-    // two frames concatenated: samples append across frames
-    val two = flacContainer(8000, 1, 16, 32,
-      finishSubframes(flacFrameHeader(16, 0), wc) ++
-        finishSubframes(flacFrameHeader(16, 0), wc))
-    assert(decodePcm(two).get.samples.length == 32, "multi-frame append")
-    // corrupted header CRC: no samples decode, falls back to None
-    val bad = const.clone()
-    val crcPos = bad.length - (wc.bytes.length + 2) - 1 // last frame-header byte
-    bad(crcPos) = (bad(crcPos) ^ 0x55).toByte
-    assert(decodePcm(bad).isEmpty, "bad header CRC rejected")
-  }
-
-  test("zero-cross rate: exact zeros are skipped — gated PCM does not double-count") {
-    import graft.operators.Multimodal.{PcmAudio, pcmFeatures}
-    // +, 0, +, -, 0, - : ONE true sign flip; a >0-classifier would
-    // read the positive→0→positive excursion as two crossings
-    val p = PcmAudio(8000, 1, 16, Array(0.5, 0.0, 0.5, -0.5, 0.0, -0.5))
-    val (_, _, zcr, _, _) = pcmFeatures(p)
-    assert(zcr == 1.0 * 8000 / 6, s"one crossing across zeros, got $zcr")
-    // all-zero: no crossings at all
-    assert(pcmFeatures(PcmAudio(8000, 1, 16, Array(0.0, 0.0, 0.0)))._3 == 0.0)
-  }
-
-  test("FLAC decode: reserved channel assignments and LPC precision escape are rejected") {
-    import graft.operators.Multimodal.decodePcm
-    val wc = new BitWriter
-    wc.u(0, 1).u(0, 6).u(0, 1).u(750, 16)
-    wc.u(0, 1).u(0, 6).u(0, 1).u(500, 17)
-    // channel assignment 11 (reserved) instead of 10 (mid/side)
-    val reserved = flacContainer(8000, 2, 16, 12,
-      finishSubframes(flacFrameHeader(12, 11), wc))
-    assert(decodePcm(reserved).isEmpty, "reserved channel assignment must not decode")
-    // LPC precision field 0b1111 (spec-invalid)
-    val wl = new BitWriter
-    wl.u(0, 1).u(32, 6).u(0, 1).u(100, 16)
-      .u(15, 4) // INVALID precision code
-      .u(0, 5).u(1, 4)
-      .u(0, 2).u(0, 4).u(0, 4)
-    (1 until 8).foreach(_ => riceWrite(wl, 0L, 0))
-    val badLpc = flacContainer(8000, 1, 16, 8,
-      finishSubframes(flacFrameHeader(8, 0), wl))
-    assert(decodePcm(badLpc).isEmpty, "invalid LPC precision code must not decode")
-  }
-
-  test("FLAC decode: mid/side stereo reconstruction and measured features") {
-    import graft.operators.Multimodal.decodePcm
-    // L = 1000, R = 500 constants → mid 750, side 500 (bps 17 on side)
-    val wm = new BitWriter
-    wm.u(0, 1).u(0, 6).u(0, 1).u(750, 16)  // mid channel, CONSTANT
-    wm.u(0, 1).u(0, 6).u(0, 1).u(500, 17)  // side channel, CONSTANT, 17-bit
-    val ms = flacContainer(8000, 2, 16, 12,
-      finishSubframes(flacFrameHeader(12, 10), wm))
-    val p = decodePcm(ms).get
-    // mono mix of (1000, 500) = 750
-    assert(p.samples.length == 12 && p.samples.forall(_ == 750 / 32768.0),
-      s"mid/side reconstructs L=1000 R=500: ${p.samples.take(3).toSeq}")
-    // end-to-end: withAudioFeatures measures REAL features from FLAC
-    val rows = Multimodal.withAudioFeatures(Seq((1L, ms)).toDF("id", "payload"), "payload")
-      .select("audio_features.*").collect()(0)
-    assert(!rows.getAs[Boolean]("stubbed"))
-    assert(math.abs(rows.getAs[Double]("rms") - 750 / 32768.0) < 1e-9,
-      "FLAC features are measured from decoded samples")
-    assert(rows.getAs[Double]("zero_cross_rate") == 0.0)
-  }
-
-  test("audio features: FLAC STREAMINFO — exact duration, stubbed=false") {
-    val df = Seq((1L, goldenFlac())).toDF("id", "payload")
-    val r = Multimodal.withAudioFeatures(df, "payload")
-      .select("audio_features.*").collect()(0)
-    assert(r.getDouble(1) == 2.0, "44100 samples at 22.05kHz = exactly 2.0s")
-    assert(r.getInt(2) == 22050 && r.getInt(3) == 2 && r.getInt(4) == 16)
-    assert(!r.getAs[Boolean]("stubbed"), "FLAC path is NOT stubbed")
-  }
-
-  test("MP3/FLAC parsers reject junk, single frames, truncations") {
-    assert(Multimodal.parseMp3(Array.fill[Byte](2000)(0x55)).isEmpty, "no sync")
-    assert(Multimodal.parseMp3(goldenMp3().take(417)).isEmpty,
-      "a single frame is not enough evidence (random sync false-positives)")
-    assert(Multimodal.parseMp3(goldenMp3().take(500)).isEmpty, "second frame truncated")
-    // free-bitrate (idx 0) frames are unparseable without a codec
-    val free = goldenMp3(); free(2) = 0x00
-    assert(Multimodal.parseMp3(free).isEmpty)
-    assert(Multimodal.parseFlacStreamInfo(goldenFlac().take(20)).isEmpty, "truncated")
-    assert(Multimodal.parseFlacStreamInfo("fLaX1234".getBytes).isEmpty, "bad magic")
-  }
-
-  test("WAV parse rejects truncated and compressed-format payloads") {
-    assert(Multimodal.parseWavHeader(goldenWav().take(30)).isEmpty, "truncated header")
-    val adpcm = {
-      val w = goldenWav()
-      w(20) = 2 // format tag 2 = ADPCM — not parseable without a codec
-      w
-    }
-    assert(Multimodal.parseWavHeader(adpcm).isEmpty, "compressed WAV → stub path")
-  }
-
-  test("chunk walks survive crafted near-2^31 chunk sizes (no Int overflow)") {
-    // a chunk size of 0x7FFFFFF0 must end the walk (cursor past EOF),
-    // never wrap the offset negative into an AIOOBE
-    val wav = java.nio.ByteBuffer.allocate(100).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .put("RIFF".getBytes("US-ASCII")).putInt(92).put("WAVE".getBytes("US-ASCII"))
-      .put("JUNK".getBytes("US-ASCII")).putInt(0x7FFFFFF0)
-      .array()
-    assert(Multimodal.parseWavHeader(wav).isEmpty, "WAV walk returns None, no crash")
-    val aiff = java.nio.ByteBuffer.allocate(100) // big-endian default
-      .put("FORM".getBytes("US-ASCII")).putInt(92).put("AIFF".getBytes("US-ASCII"))
-      .put("JUNK".getBytes("US-ASCII")).putInt(0x7FFFFFF0)
-      .array()
-    assert(Multimodal.parseAiffHeader(aiff).isEmpty, "AIFF walk returns None, no crash")
-  }
-
-  /** Minimal well-formed MP4: ftyp + moov(mvhd v0) with timescale
-    * 1000, duration 2500 → exactly 2.5 s.
-    */
-  private def goldenMp4(timescale: Int = 1000, duration: Int = 2500): Array[Byte] = {
-    def box(name: String, payload: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-      bb.putInt(8 + payload.length).put(name.getBytes("US-ASCII")).put(payload)
-      bb.array()
-    }
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ Array.fill[Byte](4)(0))
-    val mvhdPayload = java.nio.ByteBuffer.allocate(100)
-      .putInt(0)                 // version 0 + flags
-      .putInt(0).putInt(0)       // ctime, mtime
-      .putInt(timescale).putInt(duration)
-      .array()
-    val moov = box("moov", box("mvhd", mvhdPayload))
-    ftyp ++ moov
-  }
-
-  test("video meta: MP4 mvhd really parsed — exact duration, stubbed=false") {
-    val df = Seq((1L, goldenMp4()), (2L, Array.fill[Byte](250000)(3)))
-      .toDF("id", "payload")
-    val rows = Multimodal.withVideoMeta(df, "payload")
-      .select(col("id"), col("video_meta.*")).orderBy("id").collect()
-    val mp4 = rows(0)
-    assert(mp4.getString(2) == "mp4" && mp4.getDouble(3) == 2.5 && mp4.getInt(4) == 1000)
-    assert(!mp4.getBoolean(5), "MP4 container parse is NOT stubbed")
-    val other = rows(1)
-    assert(other.isNullAt(2) && other.getDouble(3) == 2.0, "stub estimate for non-MP4")
-    assert(other.getBoolean(5))
-  }
-
-  test("MP4 parse rejects truncated/garbage payloads") {
-    assert(Multimodal.parseMp4Duration(goldenMp4().take(20)).isEmpty)
-    assert(Multimodal.parseMp4Duration("not a video at all".getBytes).isEmpty)
-    assert(Multimodal.parseMp4Duration(goldenMp4(timescale = 0)).isEmpty, "zero timescale")
-  }
-
-  /** Golden Matroska: EBML(DocType) + Segment(Info(TimestampScale,
-    * Duration)). Duration 1500.0 ticks × 1e6 ns/tick = exactly 1.5 s.
-    */
-  private def goldenMkv(docType: String = "webm",
-                        unknownSizeSegment: Boolean = false): Array[Byte] = {
-    def el(id: Long, payload: Array[Byte]): Array[Byte] = {
-      val idBytes = BigInt(id).toByteArray.dropWhile(_ == 0)
-      idBytes ++ Array((0x80 | payload.length).toByte) ++ payload
-    }
-    val ts = java.nio.ByteBuffer.allocate(4).putInt(1000000).array()
-    val dur = java.nio.ByteBuffer.allocate(8).putDouble(1500.0).array()
-    val info = el(0x1549A966L, el(0x2AD7B1L, ts) ++ el(0x4489L, dur))
-    val header = el(0x1A45DFA3L, el(0x4282L, docType.getBytes("US-ASCII")))
-    val segId = BigInt(0x18538067L).toByteArray.dropWhile(_ == 0)
-    val segment =
-      if (unknownSizeSegment) segId ++ Array(0xFF.toByte) ++ info // all-ones size vint
-      else el(0x18538067L, info)
-    header ++ segment
-  }
-
-  test("video meta: Matroska EBML walk — duration + timescale, stubbed=false") {
-    val df = Seq((1L, goldenMkv()), (2L, goldenMkv(docType = "matroska")))
-      .toDF("id", "payload")
-    val rows = Multimodal.withVideoMeta(df, "payload")
-      .select(col("id"), col("video_meta.*")).orderBy("id").collect()
-    val webm = rows(0)
-    assert(webm.getString(2) == "webm", "DocType surfaces as container")
-    assert(webm.getDouble(3) == 1.5 && webm.getInt(4) == 1000000)
-    assert(!webm.getBoolean(5), "Matroska parse is NOT stubbed")
-    assert(rows(1).getString(2) == "matroska")
-  }
-
-  test("Matroska parse handles unknown-size Segment; rejects junk") {
-    val r = Multimodal.parseMkvDuration(goldenMkv(unknownSizeSegment = true))
-    assert(r.contains(("webm", 1.5, 1000000L)), s"streamed-mkv unknown size: $r")
-    assert(Multimodal.parseMkvDuration("EBML but not really".getBytes).isEmpty)
-    assert(Multimodal.parseMkvDuration(goldenMkv().take(12)).isEmpty, "truncated")
-  }
-
-  test("video frame sampling fans out frame rows with schema") {
-    val df = Seq((1L, Array.fill[Byte](350000)(1))).toDF("id", "payload")
-    val frames = Multimodal.sampleVideoFrames(df, "payload").collect()
-    assert(frames.length == 3, "350KB → 3 estimated frames")
-    assert(frames.map(_.getAs[Int]("frame_idx")).toSeq == Seq(0, 1, 2))
-    assert(frames.forall(_.getAs[Boolean]("stubbed")))
-  }
-
-  /** Minimal MJPEG-in-MP4: ftyp + mdat(frames…) + moov with a full
-    * 'vide' sample table (stsd "jpeg", stts 1 s/frame at timescale
-    * 1000, stsc one-chunk layout, stsz per-sample sizes, stco).
-    */
-  private def mjpegMp4(frames: Seq[Array[Byte]]): Array[Byte] = {
-    def box(name: String, payload: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-      bb.putInt(8 + payload.length).put(name.getBytes("US-ASCII")).put(payload)
-      bb.array()
-    }
-    def be32(vs: Int*): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(4 * vs.length)
-      vs.foreach(bb.putInt); bb.array()
-    }
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ Array.fill[Byte](4)(0))
-    val mdatPayloadOff = ftyp.length + 8
-    val mdat = box("mdat", frames.flatten.toArray)
-    val mvhd = box("mvhd", be32(0, 0, 0, 1000, frames.length * 1000) ++ Array.fill[Byte](80)(0))
-    val hdlr = box("hdlr", be32(0, 0) ++ "vide".getBytes("US-ASCII") ++ Array.fill[Byte](13)(0))
-    val mdhd = box("mdhd", be32(0, 0, 0, 1000, frames.length * 1000) ++ Array.fill[Byte](4)(0))
-    val stsd = box("stsd", be32(0, 1) ++ be32(16) ++ "jpeg".getBytes("US-ASCII") ++ Array.fill[Byte](8)(0))
-    val stts = box("stts", be32(0, 1, frames.length, 1000))
-    val stsc = box("stsc", be32(0, 1, 1, frames.length, 1))
-    val stsz = box("stsz", be32(0, 0, frames.length) ++ be32(frames.map(_.length): _*))
-    val stco = box("stco", be32(0, 1, mdatPayloadOff))
-    val stbl = box("stbl", stsd ++ stts ++ stsc ++ stsz ++ stco)
-    val minf = box("minf", stbl)
-    val mdia = box("mdia", mdhd ++ hdlr ++ minf)
-    val trak = box("trak", mdia)
-    val moov = box("moov", mvhd ++ trak)
-    ftyp ++ mdat ++ moov
-  }
-
-  test("MJPEG-in-MP4: frames REALLY extracted — golden dims, exact payload bytes, decoded pixels") {
-    def solidJpg(w: Int, h: Int, rgb: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-      val g = img.createGraphics()
-      g.setColor(new java.awt.Color(rgb)); g.fillRect(0, 0, w, h); g.dispose()
-      Resizer.encode(img, "jpg", 90)
-    }
-    val f0 = solidJpg(16, 8, 0xFF0000); val f1 = solidJpg(16, 8, 0x00FF00)
-    val f2 = solidJpg(16, 8, 0x0000FF)
-    val mp4 = mjpegMp4(Seq(f0, f1, f2))
-    val out = Multimodal.sampleVideoFrames(Seq((1L, mp4)).toDF("id", "payload"), "payload")
-      .orderBy("frame_idx").collect()
-    assert(out.length == 3, s"3 real frames at 1 fps / 1 s sampling, got ${out.length}")
-    assert(out.forall(!_.getAs[Boolean]("stubbed")), "real path, not the stub estimate")
-    assert(out.map(_.getAs[Double]("frame_time_sec")).toSeq == Seq(0.0, 1.0, 2.0))
-    assert(out.forall(r => r.getAs[Int]("frame_width") == 16 && r.getAs[Int]("frame_height") == 8))
-    // exact byte slice out of mdat
-    assert(out(0).getAs[Array[Byte]]("frame_payload").sameElements(f0))
-    assert(out(2).getAs[Array[Byte]]("frame_payload").sameElements(f2))
-    // decoded pixel check: frame 1 is solid green (JPEG-lossy tolerance)
-    val img1 = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(out(1).getAs[Array[Byte]]("frame_payload")))
-    val px = new java.awt.Color(img1.getRGB(8, 4))
-    assert(px.getGreen > 200 && px.getRed < 60 && px.getBlue < 60, s"green frame, got $px")
-    // coarser sampling keeps every-2nd-second frames only
-    val sparse = Multimodal.sampleVideoFrames(Seq((1L, mp4)).toDF("id", "payload"),
-        "payload", everyNthSecond = 2.0)
-      .orderBy("frame_idx").collect()
-    assert(sparse.map(_.getAs[Double]("frame_time_sec")).toSeq == Seq(0.0, 2.0))
-    // an undecodable inter-frame codec (HEVC) falls back to the stub path
-    val hev = mjpegMp4(Seq(f0)).clone()
-    val idx = hev.indexOfSlice("jpeg".getBytes("US-ASCII"),
-      hev.indexOfSlice("stsd".getBytes("US-ASCII")))
-    "hev1".getBytes("US-ASCII").copyToArray(hev, idx)
-    val stub = Multimodal.sampleVideoFrames(Seq((1L, hev)).toDF("id", "payload"), "payload")
-      .collect()
-    assert(stub.forall(_.getAs[Boolean]("stubbed")), "inter-frame codec → stub estimate")
-  }
-
-  /** MSB-first bit writer for hand-building H.264 SPS bitstreams. */
-  private class BitWriter {
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    private var cur = 0; private var nBits = 0
-    def u(v: Int, k: Int): this.type = {
-      var j = k - 1
-      while (j >= 0) {
-        cur = (cur << 1) | ((v >> j) & 1); nBits += 1
-        if (nBits == 8) { buf += cur.toByte; cur = 0; nBits = 0 }
-        j -= 1
-      }
-      this
-    }
-    def ue(v: Int): this.type = {
-      val vv = v + 1
-      val len = 32 - java.lang.Integer.numberOfLeadingZeros(vv)
-      u(0, len - 1); u(vv, len)
-    }
-    def bytes: Array[Byte] = {
-      val done = buf.toArray
-      if (nBits == 0) done else done :+ (cur << (8 - nBits)).toByte
-    }
-  }
-
-  /** Baseline-profile SPS NAL for an uncropped W×H frame. */
-  private def goldenSps(widthMbs: Int, heightMapUnits: Int,
-                        crop: Option[(Int, Int, Int, Int)] = None): Array[Byte] = {
-    val w = new BitWriter
-    w.u(0x67, 8)            // NAL header: ref_idc 3, type 7 (SPS)
-      .u(66, 8).u(0, 8).u(30, 8) // profile/constraints/level
-      .ue(0)                // seq_parameter_set_id
-      .ue(0)                // log2_max_frame_num_minus4
-      .ue(0).ue(0)          // pic_order_cnt_type 0 + log2_max_poc_lsb
-      .ue(1).u(0, 1)        // max_num_ref_frames, gaps flag
-      .ue(widthMbs - 1).ue(heightMapUnits - 1)
-      .u(1, 1).u(1, 1)      // frame_mbs_only, direct_8x8
-    crop match {
-      case Some((l, r, t, bb)) => w.u(1, 1).ue(l).ue(r).ue(t).ue(bb)
-      case None => w.u(0, 1)
-    }
-    w.u(0, 1)               // vui_parameters_present
-      .u(1, 1)              // rbsp stop bit
-    w.bytes
-  }
-
-  test("H.264 SPS parse: macroblock dims, 4:2:0 cropping, High-profile chroma section") {
-    assert(Multimodal.parseH264SpsDims(goldenSps(4, 3).drop(0)).contains((64, 48)))
-    // 1920×1080: 120×68 MBs with a 4-row (8 px at 4:2:0 CropUnitY=2)
-    // bottom crop
-    assert(Multimodal.parseH264SpsDims(goldenSps(120, 68, crop = Some((0, 0, 0, 4))))
-      .contains((1920, 1080)))
-    // High profile (100): chroma_format_idc + bit depths precede the
-    // frame-size fields — a Baseline-only parser would misread them
-    val hi = new BitWriter
-    hi.u(0x67, 8).u(100, 8).u(0, 8).u(40, 8)
-      .ue(0)                 // sps id
-      .ue(1)                 // chroma_format_idc 4:2:0
-      .ue(0).ue(0).u(0, 1)   // bit depths, bypass
-      .u(0, 1)               // no scaling matrix
-      .ue(0).ue(0).ue(0)     // frame_num, poc type 0, poc lsb
-      .ue(1).u(0, 1)
-      .ue(7).ue(5)           // 128×96
-      .u(1, 1).u(1, 1).u(0, 1).u(0, 1).u(1, 1)
-    assert(Multimodal.parseH264SpsDims(hi.bytes).contains((128, 96)))
-    // junk / truncation / non-SPS NAL types are rejected
-    assert(Multimodal.parseH264SpsDims(Array[Byte](0x41, 1, 2, 3)).isEmpty)
-    assert(Multimodal.parseH264SpsDims(goldenSps(4, 3).take(5)).isEmpty)
-  }
-
-  /** avc1-in-MP4: like [[mjpegMp4]] but with an avc1 stsd entry
-    * (full 78-byte VisualSampleEntry + avcC carrying `sps`) and an
-    * stss box marking `syncSamples` (1-based) as keyframes.
-    */
-  private def avcMp4(frames: Seq[Array[Byte]], sps: Array[Byte],
-                     syncSamples: Seq[Int]): Array[Byte] = {
-    def box(name: String, payload: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-      bb.putInt(8 + payload.length).put(name.getBytes("US-ASCII")).put(payload)
-      bb.array()
-    }
-    def be32(vs: Int*): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(4 * vs.length)
-      vs.foreach(bb.putInt); bb.array()
-    }
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ Array.fill[Byte](4)(0))
-    val mdatPayloadOff = ftyp.length + 8
-    val mdat = box("mdat", frames.flatten.toArray)
-    val mvhd = box("mvhd", be32(0, 0, 0, 1000, frames.length * 1000) ++ Array.fill[Byte](80)(0))
-    val hdlr = box("hdlr", be32(0, 0) ++ "vide".getBytes("US-ASCII") ++ Array.fill[Byte](13)(0))
-    val mdhd = box("mdhd", be32(0, 0, 0, 1000, frames.length * 1000) ++ Array.fill[Byte](4)(0))
-    // avcC: ver 1, profile/compat/level, lengthSizeMinusOne 3, 1 SPS
-    val avcc = box("avcC", Array[Byte](1, 66, 0, 30, 0xFF.toByte, 0xE1.toByte,
-      ((sps.length >> 8) & 0xFF).toByte, (sps.length & 0xFF).toByte) ++ sps)
-    // VisualSampleEntry: 6 reserved + dataref(2), then 78-8... fields:
-    // pre(2) res(2) pre(12) WIDTH(2) HEIGHT(2) hres(4) vres(4) res(4)
-    // frame_count(2) compressor(32) depth(2) pre(2), then avcC
-    val vse = Array.fill[Byte](6)(0) ++ Array[Byte](0, 1) ++
-      Array.fill[Byte](16)(0) ++
-      Array[Byte](0, 64, 0, 48) ++ // entry-level w/h fallback fields
-      be32(0x00480000, 0x00480000, 0) ++ Array[Byte](0, 1) ++
-      Array.fill[Byte](32)(0) ++ Array[Byte](0, 24, -1, -1) ++ avcc
-    val entry = box("avc1", vse)
-    val stsd = box("stsd", be32(0, 1) ++ entry)
-    val stts = box("stts", be32(0, 1, frames.length, 1000))
-    val stsc = box("stsc", be32(0, 1, 1, frames.length, 1))
-    val stsz = box("stsz", be32(0, 0, frames.length) ++ be32(frames.map(_.length): _*))
-    val stco = box("stco", be32(0, 1, mdatPayloadOff))
-    val stss = box("stss", be32(0, syncSamples.length) ++ be32(syncSamples: _*))
-    val stbl = box("stbl", stsd ++ stts ++ stsc ++ stsz ++ stco ++ stss)
-    val minf = box("minf", stbl)
-    val mdia = box("mdia", mdhd ++ hdlr ++ minf)
-    val trak = box("trak", mdia)
-    val moov = box("moov", mvhd ++ trak)
-    ftyp ++ mdat ++ moov
-  }
-
-  test("h264-in-MP4: keyframes demuxed — stss offsets, SPS dims, exact NAL payload bytes") {
-    // 4 samples at 1 fps; samples 1 and 3 (1-based) are keyframes
-    val f = (1 to 4).map(i => Array.fill[Byte](40 + i)(i.toByte))
-    val mp4 = avcMp4(f, goldenSps(4, 3), syncSamples = Seq(1, 3))
-    val out = Multimodal.sampleVideoFrames(Seq((1L, mp4)).toDF("id", "payload"), "payload")
-      .orderBy("frame_idx").collect()
-    assert(out.length == 2, s"two keyframes, got ${out.length}")
-    assert(out.forall(!_.getAs[Boolean]("stubbed")), "h264 keyframe path is real")
-    assert(out.map(_.getAs[Double]("frame_time_sec")).toSeq == Seq(0.0, 2.0),
-      "keyframe presentation times from stts, non-sync samples skipped")
-    assert(out.forall(r => r.getAs[Int]("frame_width") == 64 && r.getAs[Int]("frame_height") == 48),
-      "dimensions parsed from the SPS inside avcC")
-    assert(out(0).getAs[Array[Byte]]("frame_payload").sameElements(f(0)), "exact sample-1 bytes")
-    assert(out(1).getAs[Array[Byte]]("frame_payload").sameElements(f(2)), "exact sample-3 bytes")
-    // SPS takes precedence over the entry fields, but a track with no
-    // avcC still reports the VisualSampleEntry dims
-    val noAvcc = avcMp4(f, goldenSps(4, 3), Seq(1)).clone()
-    val ai = noAvcc.indexOfSlice("avcC".getBytes("US-ASCII"))
-    "free".getBytes("US-ASCII").copyToArray(noAvcc, ai) // neuter the avcC box
-    val out2 = Multimodal.sampleVideoFrames(Seq((1L, noAvcc)).toDF("id", "payload"), "payload")
-      .collect()
-    assert(out2.forall(r => r.getAs[Int]("frame_width") == 64 && r.getAs[Int]("frame_height") == 48),
-      "entry-level width/height fallback")
-  }
-
-  test("frame sampling: step far finer than frame spacing still fills maxFrames") {
-    // 4 frames 1 s apart sampled at 0.1 s: a fixed k < maxFrames*4 mark
-    // budget would burn all 16 marks inside the first 1.6 s and return
-    // only 3 frames; the advance-past-picked-timestamp loop reaches
-    // all 4.
-    def jpg(rgb: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(8, 8, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-      val g = img.createGraphics()
-      g.setColor(new java.awt.Color(rgb)); g.fillRect(0, 0, 8, 8); g.dispose()
-      Resizer.encode(img, "jpg", 90)
-    }
-    val mp4 = mjpegMp4(Seq(jpg(0xFF0000), jpg(0x00FF00), jpg(0x0000FF), jpg(0xFFFFFF)))
-    val out = Multimodal.sampleVideoFrames(Seq((1L, mp4)).toDF("id", "payload"),
-        "payload", everyNthSecond = 0.1, maxFrames = 4)
-      .orderBy("frame_idx").collect()
-    assert(out.length == 4, s"all 4 real frames picked, got ${out.length}")
-    assert(out.map(_.getAs[Double]("frame_time_sec")).toSeq == Seq(0.0, 1.0, 2.0, 3.0))
-    assert(out.forall(!_.getAs[Boolean]("stubbed")))
-  }
-
-  // ---- perceptual audio fingerprint (Haitsma–Kalker bits) ----
-
-  /** Non-stationary two-tone cross-fade: every frame's band energies
-    * move, so the delta signs are driven by signal, not numeric dust.
-    */
-  private def crossFade(rate: Int, n: Int, f1: Double, f2: Double): Array[Double] =
-    Array.tabulate(n) { i =>
-      val a = i.toDouble / n
-      (1 - a) * math.sin(2 * math.Pi * f1 * i / rate) +
-        a * math.sin(2 * math.Pi * f2 * i / rate)
-    }
-
-  test("audio fingerprint: exact amplitude invariance, content discrimination, determinism") {
-    import graft.operators.Multimodal.{PcmAudio, audioFingerprint}
-    val rate = 16000
-    val s = crossFade(rate, 16384, 440, 1200)
-    val (words, bits) = audioFingerprint(PcmAudio(rate, 1, 16, s)).get
-    assert(words.length >= 10, s"enough frames: ${words.length}")
-    // scaling every sample by c scales every band energy by c², so
-    // every double-difference keeps its strict sign: EXACT equality
-    val (wordsQ, bitsQ) = audioFingerprint(PcmAudio(rate, 1, 16, s.map(_ * 0.25))).get
-    assert(words.toSeq == wordsQ.toSeq && bits == bitsQ, "volume must not move one bit")
-    // determinism
-    val (words2, _) = audioFingerprint(PcmAudio(rate, 1, 16, s.clone())).get
-    assert(words.toSeq == words2.toSeq)
-    // different content (tones swapped = reversed spectral trajectory)
-    // must land far away in Hamming space
-    val (_, bitsB) = audioFingerprint(PcmAudio(rate, 1, 16, crossFade(rate, 16384, 1200, 440))).get
-    val dist = java.lang.Long.bitCount(bits ^ bitsB)
-    assert(dist >= 8, s"summary Hamming distance $dist for different content")
-  }
-
-  test("withAudioFingerprint: real WAV path vs stubbed fallback") {
-    val rate = 16000
-    val n = 16384
-    val bb = java.nio.ByteBuffer.allocate(44 + n * 2).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes).putInt(36 + n * 2).put("WAVE".getBytes)
-      .put("fmt ".getBytes).putInt(16).putShort(1).putShort(1)
-      .putInt(rate).putInt(rate * 2).putShort(2).putShort(16)
-      .put("data".getBytes).putInt(n * 2)
-    crossFade(rate, n, 440, 1200).foreach(x => bb.putShort((x * 12000).toShort))
-    val df = Seq((1L, bb.array()), (2L, "not audio".getBytes)).toDF("id", "payload")
-    val rows = Multimodal.withAudioFingerprint(df, "payload")
-      .select(col("id"), col("audio_fp.*")).orderBy("id").collect()
-    assert(!rows(0).getAs[Boolean]("stubbed"))
-    assert(rows(0).getAs[Int]("n_frames") >= 10)
-    assert(rows(0).getAs[Long]("fp_bits") != 0L)
-    assert(rows(1).getAs[Boolean]("stubbed"), "no PCM path → honest stub flag")
-    assert(rows(1).isNullAt(rows(1).fieldIndex("fp_bits")))
   }
 }

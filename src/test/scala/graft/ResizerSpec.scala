@@ -139,9 +139,7 @@ class ResizerSpec extends SparkSpec {
     for (x <- 0 until w; y <- 0 until h)
       img.setRGB(x, y, if ((x / 10 + y / 10) % 2 == 0) 0xFFFFFF else 0x000000)
     g.dispose()
-    val png = Resizer.encode(img, "png", 95)
-    val cfg = DownloadConfig(encodeFormat = "png")
-    val blurred = Blurrer.blurBytes(png, Seq(Seq(0.1, 0.1, 0.4, 0.6)), cfg)
+    val blurred = Resizer.encode(Blurrer.blurImage(img, Seq(Seq(0.1, 0.1, 0.4, 0.6))), "png", 95)
     val out = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(blurred))
     // center of box is blurred (checkerboard → gray-ish mix)
     val inBox = out.getRGB(50, 30)

@@ -11,17 +11,19 @@ class SamplingSpec extends SparkSpec {
     .toDF("id", "lang")
 
   test("deterministic: same input, same membership, across independent runs") {
-    val a = Sampling.deterministicSample(docs, "id", 0.3).select("id").collect().map(_.getLong(0)).toSet
-    val b = Sampling.deterministicSample(docs, "id", 0.3).select("id").collect().map(_.getLong(0)).toSet
+    def draw() = Sampling.stratifiedSample(docs, "lang", "id", Map.empty, defaultFrac = 0.3)
+      .select("id").collect().map(_.getLong(0)).toSet
+    val a = draw()
+    val b = draw()
     assert(a == b && a.nonEmpty)
     // rate lands near the target (hash-uniformity, not exactness)
     assert(math.abs(a.size / 2000.0 - 0.3) < 0.05, s"rate ${a.size / 2000.0}")
   }
 
   test("different salts draw independent samples over the same keys") {
-    val a = Sampling.deterministicSample(docs, "id", 0.3, salt = "s1")
+    val a = Sampling.stratifiedSample(docs, "lang", "id", Map.empty, defaultFrac = 0.3, salt = "s1")
       .select("id").collect().map(_.getLong(0)).toSet
-    val b = Sampling.deterministicSample(docs, "id", 0.3, salt = "s2")
+    val b = Sampling.stratifiedSample(docs, "lang", "id", Map.empty, defaultFrac = 0.3, salt = "s2")
       .select("id").collect().map(_.getLong(0)).toSet
     assert(a != b, "distinct salts must not reproduce the same sample")
     // overlap near frac^2 expectation, not near-identical

@@ -7,19 +7,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * session through `tools.LocalSession`, meters through `tools.Meter`
   * and selects queries by `QuerySpec` tag, and the MinHash, SimHash and
   * seed operators hash only with the oracle-checked md5-60 and id
-  * hashes, never through their own copies.
+  * hashes, never through their own copies. An operator, stream or
+  * function that nothing in `src/main` calls does not stay behind.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
-  /** (file, line) of every non-comment `src/main` line. */
+  /** (file, line) of every non-comment `src/main` line, in file order,
+    * indentation kept. */
   private lazy val codeLines: Seq[(String, String)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root")
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(root)
     try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
-      java.nio.file.Files.readAllLines(f).asScala.map(_.trim)
-        .filter(l => !l.startsWith("*") && !l.startsWith("//") && !l.startsWith("/*"))
+      java.nio.file.Files.readAllLines(f).asScala
+        .filter { l => val t = l.trim; !t.startsWith("*") && !t.startsWith("//") && !t.startsWith("/*") }
         .map(l => root.relativize(f).toString -> l)
     } finally files.close()
   }
@@ -60,5 +62,72 @@ class SourceGuardSpec extends AnyFunSuite {
       (f.startsWith("graft/plans/") || hashFamily(f)) && "(?i)xx(h|hash)64".r.findFirstIn(l).isDefined
     }
     assert(xx.isEmpty, s"xxh64 is not an oracle-checked hash: $xx")
+  }
+
+  test("every public def of an operator, streaming or function object is called from src/main") {
+    // why each stays although no src/main line outside its own body names it
+    val allowed = Map(
+      "StatsStream.start" ->
+        "the paper's per-shard stats stream (SURVEY S12, A6, A7); PipelineSpec drives it",
+      "Maintenance.compactParquet" ->
+        "the small-file compaction entry point; only its own per-leaf recursion calls it")
+    val files = codeLines.groupBy(_._1).map { case (f, ls) => f -> ls.map(_._2).toIndexedSeq }
+    def indent(l: String) = l.length - l.dropWhile(_ == ' ').length
+    val TypeDecl =
+      """\s*((?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|sealed\s+|abstract\s+|case\s+|implicit\s+)*)(object|class|trait)\s+(\w+).*""".r
+    val Def = """\s*def\s+(\w+).*""".r
+    // (file, object, name, body lines [from, until)): a def counts only
+    // two spaces inside a public `object`, so locals, class members and
+    // the members of anonymous interface implementations
+    // (`new ThreadFactory { def newThread … }`) are out by construction
+    val defs = for {
+      (f, ls) <- files.toSeq
+      if Seq("graft/operators/", "graft/streaming/", "graft/functions/").exists(f.startsWith)
+      d <- {
+        var open = List.empty[(Int, String, String, Boolean)] // (indent, kind, name, private)
+        ls.indices.flatMap { i =>
+          val l = ls(i)
+          if (l.trim.isEmpty) None
+          else {
+            val ind = indent(l)
+            open = open.dropWhile(_._1 >= ind)
+            l match {
+              case TypeDecl(mods, kind, name) =>
+                open ::= ((ind, kind, name, mods.contains("private") || mods.contains("protected")))
+                None
+              case Def(name) if open.headOption.exists(o => o._2 == "object" && o._1 == ind - 2) &&
+                  !open.exists(_._4) =>
+                val end = ls.indexWhere(m => m.trim.nonEmpty && indent(m) <= ind, i + 1)
+                Some((f, open.head._3, name, i, if (end < 0) ls.length else end))
+              case _ => None
+            }
+          }
+        }
+      }
+    } yield d
+    assert(defs.size > 100, s"the declaration scan found only ${defs.size} defs")
+    // named as Object.name anywhere, or bare in its own file or a file
+    // importing the object's members, outside its own body
+    def called(f: String, obj: String, name: String, from: Int, until: Int): Boolean = {
+      val qualified = s"\\b$obj\\.$name\\b".r
+      val bare = s"(?<![\\w.])$name\\b".r
+      val importsAll = s"\\bimport\\s.*\\b$obj\\.(_|\\{)".r
+      files.exists { case (g, ls) =>
+        val importer = g == f || ls.exists(l => l.contains("import") && importsAll.findFirstIn(l).isDefined)
+        ls.indices.exists { k =>
+          val l = ls(k)
+          l.contains(name) && !(g == f && k >= from && k < until) &&
+            (qualified.findFirstIn(l).isDefined || importer && bare.findFirstIn(l).isDefined)
+        }
+      }
+    }
+    val uncalled = defs.collect {
+      case (f, obj, name, from, until) if !called(f, obj, name, from, until) => s"$obj.$name"
+    }.distinct.sorted
+    assert(uncalled.filterNot(allowed.contains).isEmpty,
+      s"public defs no src/main code calls: delete them or allow-list them with a reason: " +
+        uncalled.filterNot(allowed.contains))
+    assert(allowed.keySet.subsetOf(uncalled.toSet),
+      s"allow-listed but now called or gone: ${allowed.keySet -- uncalled}")
   }
 }
