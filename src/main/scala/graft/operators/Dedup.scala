@@ -452,6 +452,32 @@ object Dedup {
       .orderBy("band")
   }
 
+  /** Threshold-consistent LSH band count: among the divisors `b` of
+    * `numHashes`, the one whose banding S-curve midpoint (1/b)^(1/r)
+    * with r = numHashes/b sits closest to the verify `threshold` —
+    * the classic sizing rule (the midpoint is where the collision
+    * probability 1−(1−j^r)^b rises fastest, so candidates concentrate
+    * around pairs the verify will actually keep). For numHashes = 128:
+    * threshold 0.9 → 8 bands, 0.7 → 16, 0.4 → 32, 0.15 → 64.
+    *
+    * Advisory, not a default: unlike hyperplane key depth (a measured
+    * SCALE trap, [[AutoPlanes]]), band count is a RECALL/precision
+    * dial — candidate work stays cap-bounded at any banding — so the
+    * committed operator defaults stay pinned and this feeds
+    * [[minhashRecallProfile]]'s `bandsList` (probe around the rule's
+    * pick, read the measured work/recall row, then build).
+    * Deterministic: StrictMath on exact divisor arithmetic; ties take
+    * the fewest bands.
+    */
+  def derivedBands(numHashes: Int, threshold: Double): Int = {
+    require(numHashes >= 1, s"numHashes must be positive, got $numHashes")
+    require(threshold > 0.0 && threshold < 1.0, s"threshold in (0,1), got $threshold")
+    (1 to numHashes).filter(numHashes % _ == 0).minBy { b =>
+      val r = numHashes / b
+      StrictMath.abs(StrictMath.pow(1.0 / b, 1.0 / r) - threshold)
+    }
+  }
+
   /** The recall half of the band-count decision —
     * [[minhashBandProfile]] reports what a banding COSTS; this reports
     * what it actually CATCHES, the text-side twin of
@@ -876,11 +902,87 @@ object Dedup {
     df.join(contaminated, Seq(idCol), "left_anti")
   }
 
+  /** Incremental batch dedup against a persisted fingerprint index —
+    * the "daily ingest" pattern: drop new documents whose normalized-
+    * text fingerprint already exists in the index. Returns the
+    * deduplicated batch.
+    *
+    * The survivors' fingerprints are NOT appended here: call
+    * [[commitFingerprints]] only AFTER the batch has been durably
+    * written downstream. Appending inside this call would make the
+    * operation non-idempotent — a failed downstream write that
+    * retries would find its own fingerprints already indexed, the
+    * anti-join would drop every document, and the batch would be
+    * silently lost.
+    *
+    * Scale shape: the index is a plain parquet table of fingerprints;
+    * the membership test is a hash-partitioned `left_anti` equi-join
+    * (no driver-side set, no broadcast of the corpus-sized index).
+    * Within-batch duplicates collapse first via the same one-shuffle
+    * group-by that [[exact]] uses.
+    *
+    * Durability: by default the result is pinned with
+    * `localCheckpoint` — blocks live in EXECUTOR storage only, so
+    * losing an executor between this call and the caller's durable
+    * downstream write fails the whole batch unrecoverably (the
+    * truncated lineage cannot recompute lost blocks). That is the
+    * right trade on a healthy cluster (no extra I/O round-trip);
+    * for very large batches or preemptible executors pass
+    * `stagingPath = Some(dir)` to stage the survivors through a
+    * durable parquet write instead — the returned frame then re-reads
+    * from storage and ANY task loss replays from disk. The staging
+    * dir is the caller's to clean after its downstream commit.
+    */
+  def incrementalExact(newDocs: DataFrame, textCol: String, idCol: String,
+                       indexPath: String,
+                       stagingPath: Option[String] = None): DataFrame = {
+    val spark = newDocs.sparkSession
+    val fp = newDocs.withColumn("__fp", fingerprint(col(textCol)))
+    // collapse within-batch dups: keep the min-id representative
+    val firstPerFp = fp.groupBy("__fp").agg(min(col(idCol)).as(idCol))
+      .join(fp, Seq("__fp", idCol))
+    val indexExists = {
+      val p = new org.apache.hadoop.fs.Path(indexPath)
+      // session conf, NOT a bare Configuration: spark.hadoop.* (e.g.
+      // fs.defaultFS, object-store credentials) must resolve the SAME
+      // filesystem spark.read below uses, or the existence check
+      // silently consults the wrong store and dedup never engages
+      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    }
+    val fresh =
+      if (!indexExists) firstPerFp
+      else {
+        val index = spark.read.parquet(indexPath).select(col("fingerprint").as("__fp"))
+        firstPerFp.join(index, Seq("__fp"), "left_anti")
+      }
+    // Materialized so the caller's later actions (including the
+    // commit) never re-run the anti-join against a changed index.
+    // localCheckpoint = executor-local (fast, volatile); stagingPath =
+    // durable parquet round-trip (survives executor loss) — see
+    // the Durability note above.
+    stagingPath match {
+      case Some(dir) =>
+        fresh.drop("__fp").write.mode("overwrite").parquet(dir)
+        spark.read.parquet(dir)
+      case None =>
+        org.apache.spark.sql.graftbridge.CheckpointBridge
+          .localCheckpointFreshStats(fresh).drop("__fp")
+    }
+  }
+
+  /** Record a durably-written batch's fingerprints in the index —
+    * the commit half of [[incrementalExact]]; idempotency contract:
+    * call exactly once per SUCCESSFULLY persisted batch.
+    */
+  def commitFingerprints(docs: DataFrame, textCol: String, indexPath: String): Unit =
+    docs.select(fingerprint(col(textCol)).as("fingerprint"))
+      .write.mode("append").parquet(indexPath)
+
   /** Incremental NEAR-dup dedup against a persisted MinHash-LSH index
-    * — the "daily ingest" pattern: drop new documents that
-    * near-duplicate EITHER a same-batch document (exact-Jaccard
-    * verified, keep-lowest-id) or an already-indexed one. Returns the
-    * surviving rows of `newDocs`.
+    * — the fuzzy counterpart to [[incrementalExact]] for the daily-
+    * ingest pattern: drop new documents that near-duplicate EITHER a
+    * same-batch document (exact-Jaccard verified, keep-lowest-id) or
+    * an already-indexed one. Returns the surviving rows of `newDocs`.
     *
     * Index layout: one parquet dataset, `indexPath/sigs`, with one
     * (doc_id, sig) row per indexed document; [[commitMinhash]] appends
@@ -896,27 +998,11 @@ object Dedup {
     * Scale shape: one [[MinhashKernel]] runs the within-batch step and
     * the index probe — the batch's buckets against the index's, with
     * the same `maxBucketSize` cap on index buckets every LSH path here
-    * uses; signatures meet once per candidate pair. The id column
-    * must be integral.
-    *
-    * The survivors' signatures are NOT appended here: call
-    * [[commitMinhash]] only AFTER the batch has been durably written
-    * downstream. Appending inside this call would make the operation
-    * non-idempotent — a failed downstream write that retries would
-    * find its own signatures already indexed, the probe would drop
-    * every document, and the batch would be silently lost.
-    *
-    * Durability: by default the result is pinned with
-    * `localCheckpoint` — blocks live in EXECUTOR storage only, so
-    * losing an executor between this call and the caller's durable
-    * downstream write fails the whole batch unrecoverably (the
-    * truncated lineage cannot recompute lost blocks). That is the
-    * right trade on a healthy cluster (no extra I/O round-trip);
-    * for very large batches or preemptible executors pass
-    * `stagingPath = Some(dir)` to stage the survivors through a
-    * durable parquet write instead — the returned frame then re-reads
-    * from storage and ANY task loss replays from disk. The staging
-    * dir is the caller's to clean after its downstream commit.
+    * uses; signatures meet once per candidate pair. Same
+    * commit-after-write contract as [[incrementalExact]]
+    * ([[commitMinhash]] appends survivors only AFTER the caller's
+    * durable downstream write), and the same localCheckpoint /
+    * stagingPath durability trade. The id column must be integral.
     */
   def incrementalMinhash(newDocs: DataFrame, textCol: String, idCol: String,
                          indexPath: String,
@@ -977,10 +1063,7 @@ object Dedup {
       val sigsPath = s"$indexPath/sigs"
       val indexExists = {
         val p = new org.apache.hadoop.fs.Path(sigsPath)
-        // session conf, NOT a bare Configuration: spark.hadoop.* (e.g.
-        // fs.defaultFS, object-store credentials) must resolve the SAME
-        // filesystem spark.read below uses, or the existence check
-        // silently consults the wrong store and dedup never engages
+        // session conf, not a bare Configuration — see incrementalExact
         p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
       }
       val drops =
@@ -1000,8 +1083,8 @@ object Dedup {
 
   /** Record a durably-written batch in the MinHash index — the commit
     * half of [[incrementalMinhash]]; call exactly once per
-    * SUCCESSFULLY persisted batch (the idempotency contract on
-    * [[incrementalMinhash]]). Parameters must match the query half;
+    * SUCCESSFULLY persisted batch (same idempotency contract as
+    * [[commitFingerprints]]). Parameters must match the query half;
     * `bands` is only checked here, because the probe derives band keys
     * from the stored signatures.
     *

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Table-maintenance operators — the operational side of running the
   * engine continuously at scale.
   *
-  * Incremental ingestion (e.g. [[Dedup.commitMinhash]] appends, the
+  * Incremental ingestion (e.g. [[Dedup.incrementalExact]] appends, the
   * per-shard sinks, repeated small batch writes) accumulates small
   * files; every downstream scan then pays per-file open/footer costs
   * and the scheduler pays per-split overhead. Compaction is the
@@ -146,6 +146,28 @@ object Maintenance {
       s"updates carry multiple rows for one key ${keyCols.mkString(",")} — ambiguous merge")
     updates.unionByName(base.join(updates.select(keyCols.map(col): _*),
       keyCols, "left_anti"))
+  }
+
+  /** [[upsert]] against a parquet directory, rewritten in place with
+    * the same staged rename swap as [[compactParquet]] (replacement
+    * fully written before the original moves; crash leaves either
+    * the old or the new table, never neither).
+    */
+  def upsertParquet(spark: SparkSession, dir: String, updates: org.apache.spark.sql.DataFrame,
+                    keyCols: Seq[String]): Unit = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val merged = upsert(spark.read.parquet(dir), updates, keyCols)
+    val tmp = new Path(path.getParent, "_" + path.getName + "_upsert_tmp")
+    val old = new Path(path.getParent, "_" + path.getName + "_upsert_old")
+    merged.write.mode("overwrite").parquet(tmp.toString)
+    fs.delete(old, true)
+    require(fs.rename(path, old), s"rename $path -> $old failed; original untouched")
+    if (!fs.rename(tmp, path)) {
+      fs.rename(old, path)
+      throw new IllegalStateException(s"rename $tmp -> $path failed; original restored")
+    }
+    fs.delete(old, true)
   }
 
   /** Pairwise Pearson correlation matrix over numeric columns from
@@ -401,6 +423,26 @@ object Maintenance {
       (shiftleft(shiftright(xl, i).bitwiseAND(1L), 2 * i)) +
         (shiftleft(shiftright(yl, i).bitwiseAND(1L), 2 * i + 1))
     }.reduce(_ + _)
+  }
+
+  /** Rewrite `df` into a z-order-clustered parquet layout: compute the
+    * Morton key over the two clustering columns, RANGE-partition on it
+    * (each output file owns one contiguous z-range) and sort within
+    * partitions, so every file's (x, y) bounding box is tight. At
+    * 100 TB this is the layout pass run once so that every subsequent
+    * selective scan on either column skips most files; the range
+    * exchange samples the key distribution, so skew in x or y does
+    * not skew file sizes.
+    */
+  def zOrderWrite(df: org.apache.spark.sql.DataFrame, path: String,
+                  xCol: String, yCol: String, numFiles: Int,
+                  bits: Int = 16): Unit = {
+    require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
+    df.withColumn("__z", zOrderValue(col(xCol), col(yCol), bits))
+      .repartitionByRange(numFiles, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z")
+      .write.mode("overwrite").parquet(path)
   }
 
   /** Referential-integrity audit for one child→parent relation — the

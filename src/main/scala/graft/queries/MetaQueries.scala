@@ -130,8 +130,8 @@ object MetaQueries {
          ORDER BY col_a, col_b"""
     }),
     QuerySpec("meta_zorder")((s, dir) =>
-      // Morton key over (custkey, orderkey): the key a z-order layout
-      // range-partitions on; pure codegen'd bit math.
+      // Morton key over (custkey, orderkey): the clustering key
+      // zOrderWrite range-partitions on; pure codegen'd bit math.
       t(s, dir, "orders")
         .select(col("o_orderkey"),
           graft.operators.Maintenance.zOrderValue(

@@ -254,6 +254,30 @@ class DedupSpec extends SparkSpec {
     assert(codes.forall(_.getSeq[Int](0).length == 8), "64 doubles -> 8 codes")
   }
 
+  test("incremental exact dedup: commit-after-write keeps retries safe") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString + "/index"
+    val batch1 = Seq((1L, "alpha beta"), (2L, "gamma"), (3L, "ALPHA   beta")) // 3 dups 1
+      .toDF("doc_id", "text")
+    val out1 = Dedup.incrementalExact(batch1, "text", "doc_id", dir)
+    assert(out1.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L),
+      "within-batch dup collapsed to min id")
+    // idempotency: BEFORE the commit, a retry of the same batch sees
+    // the same survivors — a failed downstream write loses nothing
+    val retry = Dedup.incrementalExact(batch1, "text", "doc_id", dir)
+    assert(retry.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L),
+      "pre-commit retry returns the full batch again")
+    Dedup.commitFingerprints(out1, "text", dir) // the batch is now 'durably written'
+    val batch2 = Seq((10L, "alpha beta"), (11L, "delta"), (12L, "gamma"))
+      .toDF("doc_id", "text")
+    val out2 = Dedup.incrementalExact(batch2, "text", "doc_id", dir)
+    assert(out2.select("doc_id").collect().map(_.getLong(0)).toSet == Set(11L),
+      "only the genuinely new doc survives batch 2")
+    Dedup.commitFingerprints(out2, "text", dir)
+    val batch3 = Seq((20L, "delta")).toDF("doc_id", "text")
+    assert(Dedup.incrementalExact(batch3, "text", "doc_id", dir).isEmpty,
+      "batch-2 survivor's committed fingerprint blocks batch 3")
+  }
+
   test("incremental minhash dedup: near-dups blocked within batch and across batches") {
     val dir = java.nio.file.Files.createTempDirectory("graft_mh_idx").toString + "/index"
     val base = "the quick brown fox jumps over the lazy dog again and again until quite done"
@@ -302,6 +326,18 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(exactKept == Set(101L),
       s"exact decontaminate drops the shared-phrase doc too, got $exactKept")
+  }
+
+  test("incremental exact dedup: durable staging variant survives re-reads") {
+    val base = java.nio.file.Files.createTempDirectory("graft_dedup_stg").toString
+    val dir = base + "/index"; val stage = base + "/staging"
+    val batch = Seq((1L, "alpha"), (2L, "beta"), (3L, "ALPHA")).toDF("doc_id", "text")
+    val out = Dedup.incrementalExact(batch, "text", "doc_id", dir, Some(stage))
+    assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    // the survivors are durably on disk (not executor-local blocks):
+    // an independent read of the staging dir sees the same rows
+    assert(spark.read.parquet(stage).count() == 2)
+    assert(out.columns.toSet == Set("doc_id", "text"), "__fp not leaked")
   }
 
   test("connected components: 100-deep chain converges via pointer doubling") {
@@ -384,28 +420,6 @@ class DedupSpec extends SparkSpec {
     }
     val agree = int8Top1.keys.count(k => int8Top1(k) == exactTop1(k))
     assert(agree >= 4, s"int8 top-1 agrees with float top-1 on >= 4/5 queries, got $agree: $int8Top1 vs $exactTop1")
-  }
-
-  test("hammingNearDups: pigeonhole exactness and parameter validation") {
-    // hand-built 16-bit signatures, 4 bands × 4 bits: dist(1,2)=2 ⇒
-    // must be found (2 < 4 bands); dist(1,3)=8 spread over all bands
-    // with no band agreeing ⇒ correctly outside the guarantee AND
-    // above maxHamming; dist(1,4)=3 but in ONE band ⇒ 3 bands agree.
-    val sigs = Seq(
-      (1L, 0x0000L), (2L, 0x0011L), (3L, 0x3333L), (4L, 0x0007L)
-    ).toDF("id", "sig")
-    val got = Dedup.hammingNearDups(sigs, "sig", "id", nBits = 16, bands = 4, maxHamming = 3)
-      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
-    assert(got == Set((1L, 2L, 2), (1L, 4L, 3), (2L, 4L, 3)), got.toString)
-    intercept[IllegalArgumentException] {
-      Dedup.hammingNearDups(sigs, "sig", "id", nBits = 16, bands = 5)
-    }
-    // recall-heuristic regime (maxHamming >= bands): verified pairs are
-    // still correct, but candidacy requires a band agreement — (1,3)
-    // at distance 8 with every band touched stays (correctly) missing
-    val loose = Dedup.hammingNearDups(sigs, "sig", "id", nBits = 16, bands = 4, maxHamming = 8)
-      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
-    assert(!loose.contains((1L, 3L, 8)) && loose.contains((1L, 2L, 2)), loose.toString)
   }
 
   test("hammingTopK: exact copy ranks first at hamming 0, negation ranks far") {
@@ -1212,6 +1226,23 @@ class DedupSpec extends SparkSpec {
     assert(work.zip(work.tail).forall { case (a, b) => a >= b },
       s"work monotone: ${work.toSeq}")
     assert(work.head > work.last, "depth must actually reduce candidate work on real data")
+  }
+
+  // ---- derivedBands -----------------------------------------------------------
+
+  test("derivedBands: S-curve midpoint picks the classic bandings at numHashes=128") {
+    import graft.operators.Dedup.derivedBands
+    // midpoints: b=4 -> 0.958, 8 -> 0.878, 16 -> 0.707, 32 -> 0.420, 64 -> 0.125
+    assert(derivedBands(128, 0.9) === 8)
+    assert(derivedBands(128, 0.7) === 16)
+    assert(derivedBands(128, 0.4) === 32)
+    assert(derivedBands(128, 0.15) === 64)
+    // b=2 midpoint (1/2)^(1/64) = 0.9892 beats b=1's exact 1.0 for 0.99
+    assert(derivedBands(128, 0.99) === 2, "near-exact threshold wants very long bands")
+    assert(derivedBands(128, 0.01) === 128, "catch-everything threshold wants 1-row bands")
+    intercept[IllegalArgumentException](derivedBands(128, 0.0))
+    intercept[IllegalArgumentException](derivedBands(128, 1.0))
+    intercept[IllegalArgumentException](derivedBands(0, 0.5))
   }
 
   // ---- minhashRecallProfile --------------------------------------------------

@@ -1,77 +1,13 @@
 package graft
 
-import java.awt.image.BufferedImage
+import graft.operators.Dedup
 
-import org.apache.spark.sql.functions._
-
-import graft.operators.{Dedup, Multimodal, Resizer}
-
-/** Perceptual image dedup: REAL ImageIO decode → 64-bit dHash →
-  * [[Dedup.hammingNearDups]]. The invariances tested are the ones the
-  * fingerprint exists for: re-encoding (png↔jpeg) and resizing the
-  * same photo must land within a few bits; unrelated images must not.
+/** [[Dedup.hammingNearDups]], the banded-Hamming near-dup join that a
+  * perceptual image hash (dHash) or any other packed-bit signature
+  * feeds: exactness below `bands` distance by pigeonhole, and the
+  * recall-bounded regime beyond it, on hand-built signatures.
   */
 class ImageDHashSpec extends SparkSpec {
-
-  /** A deterministic "photo": smooth horizontal+vertical gradients
-    * with a bright diagonal band — enough structure that all 64
-    * gradient comparisons are far from their thresholds (so codec
-    * noise cannot flip bits), unlike a flat fill (all-zero hash).
-    */
-  private def photo(w: Int, h: Int, invert: Boolean = false): BufferedImage = {
-    val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until h; x <- 0 until w) {
-      val fx = x.toDouble / w; val fy = y.toDouble / h
-      val base = (fx * 180 + fy * 50).toInt
-      val band = if (math.abs(fx - fy) < 0.15) 60 else 0
-      val v0 = math.min(base + band, 255)
-      val v = if (invert) 255 - v0 else v0
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    img
-  }
-
-  private def ham(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  test("dhash64: stable under re-encode and resize, far for different content") {
-    val base = photo(320, 240)
-    val png = Resizer.encode(base, "png", 95)
-    val jpg = Resizer.encode(base, "jpg", 85)
-    val small = Resizer.encode(photo(160, 120), "png", 95)
-    val other = Resizer.encode(photo(320, 240, invert = true), "png", 95)
-    val hPng = Multimodal.dhash64(png).get
-    val hJpg = Multimodal.dhash64(jpg).get
-    val hSmall = Multimodal.dhash64(small).get
-    val hOther = Multimodal.dhash64(other).get
-    // hash carries structure (not degenerate all-zero/all-one)
-    assert(java.lang.Long.bitCount(hPng) > 8 && java.lang.Long.bitCount(hPng) < 56)
-    assert(ham(hPng, hJpg) <= 2, s"png vs jpg drifted ${ham(hPng, hJpg)} bits")
-    assert(ham(hPng, hSmall) <= 4, s"full vs half-size drifted ${ham(hPng, hSmall)} bits")
-    // inverted gradients flip (nearly) every comparison
-    assert(ham(hPng, hOther) >= 40, s"unrelated images only ${ham(hPng, hOther)} bits apart")
-    assert(Multimodal.dhash64(null) == None)
-    assert(Multimodal.dhash64(Array[Byte](1, 2, 3)) == None)
-  }
-
-  test("imageDHash + hammingNearDups: re-encodes cluster, undecodables drop out") {
-    import spark.implicits._
-    val base = photo(320, 240)
-    val rows = Seq(
-      (1L, Resizer.encode(base, "png", 95)),
-      (2L, Resizer.encode(base, "jpg", 85)),              // near-dup of 1
-      (3L, Resizer.encode(photo(160, 120), "png", 95)),   // resized near-dup of 1
-      (4L, Resizer.encode(photo(320, 240, invert = true), "jpg", 85)), // distinct
-      (5L, Array[Byte](0, 1, 2, 3))                       // undecodable
-    ).toDF("id", "img")
-    val sigs = Multimodal.imageDHash(rows, "img")
-    assert(sigs.filter(col("dhash").isNull).select("id").as[Long].collect().toSeq == Seq(5L))
-    val pairs = Dedup.hammingNearDups(sigs, "dhash", "id", nBits = 64, bands = 8, maxHamming = 6)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L)) && pairs.contains((1L, 3L)) && pairs.contains((2L, 3L)),
-      s"expected the three re-encodes to pair up, got $pairs")
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L), s"distinct image paired: $pairs")
-    assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L), s"undecodable paired: $pairs")
-  }
 
   test("hammingNearDups: pigeonhole exactness and parameter validation") {
     import spark.implicits._

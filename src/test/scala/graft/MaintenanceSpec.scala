@@ -239,6 +239,46 @@ class MaintenanceSpec extends SparkSpec {
     assert(out((65541L, 3L)) === 27L, "out-of-range bits never leak into the key")
   }
 
+  test("zOrderWrite: every output file has a tight bounding box on BOTH columns") {
+    import spark.implicits._
+    val grid = for (x <- 0 until 32; y <- 0 until 32) yield (x.toLong, y.toLong)
+    val df = grid.toDF("x", "y")
+    val zDir = Files.createTempDirectory("zorder").toFile.getAbsolutePath
+    val yDir = Files.createTempDirectory("ysort").toFile.getAbsolutePath
+    graft.operators.Maintenance.zOrderWrite(df, zDir, "x", "y", numFiles = 8, bits = 5)
+    // contrast layout: single-column sort — y prunes, x never does
+    df.repartitionByRange(8, col("y")).sortWithinPartitions("y")
+      .write.mode("overwrite").parquet(yDir)
+    def boxes(dir: String): Seq[(Long, Long)] =
+      new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
+        val part = spark.read.parquet(f.getAbsolutePath)
+          .agg(min("x"), max("x"), min("y"), max("y")).collect()(0)
+        (part.getLong(1) - part.getLong(0), part.getLong(3) - part.getLong(2))
+      }
+    val zBoxes = boxes(zDir); val yBoxes = boxes(yDir)
+    assert(spark.read.parquet(zDir).count() === 1024, "all rows preserved")
+    // a z-range of ~128 cells spans at most a 16x8 (+ sampling slack)
+    // region; the full domain is 31 on each axis
+    assert(zBoxes.forall { case (rx, ry) => rx <= 24 && ry <= 24 },
+      s"z-order files bound BOTH columns: $zBoxes")
+    assert(yBoxes.forall(_._1 === 31L),
+      s"the single-column layout never prunes x: $yBoxes")
+  }
+
+  test("upsertParquet: in-place merge with staged swap, no staging debris") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString + "/t"
+    Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v").write.parquet(dir)
+    Maintenance.upsertParquet(spark, dir,
+      Seq((2L, 99.0), (5L, 50.0)).toDF("k", "v"), Seq("k"))
+    val back = spark.read.parquet(dir)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq.sortBy(_._1)
+    assert(back === Seq((1L, 10.0), (2L, 99.0), (5L, 50.0)))
+    val parent = new java.io.File(dir).getParentFile
+    assert(!parent.listFiles().exists(_.getName.contains("_upsert")),
+      s"staging dirs cleaned: ${parent.listFiles().map(_.getName).toSeq}")
+  }
+
   test("correlationMatrix: exact ±1 on linear columns, 0 on designed-orthogonal, null on constant") {
     import spark.implicits._
     // y = 2x (corr exactly 1), z = -x (exactly -1), w alternates ±1

@@ -70,7 +70,17 @@ class SourceGuardSpec extends AnyFunSuite {
       "StatsStream.start" ->
         "the paper's per-shard stats stream (SURVEY S12, A6, A7); PipelineSpec drives it",
       "Maintenance.compactParquet" ->
-        "the small-file compaction entry point; only its own per-leaf recursion calls it")
+        "the small-file compaction entry point; only its own per-leaf recursion calls it",
+      "Maintenance.upsertParquet" ->
+        "in-place MERGE over a parquet dir; MaintenanceSpec covers it, no flag calls it yet",
+      "Maintenance.zOrderWrite" ->
+        "the z-order layout pass over zOrderValue; MaintenanceSpec covers it, no flag calls it yet",
+      "Dedup.derivedBands" ->
+        "advisory band count for minhashRecallProfile's bandsList; DedupSpec covers it",
+      "Dedup.incrementalExact" ->
+        "exact daily-ingest dedup; DedupSpec covers it, dedup_incremental runs the MinHash twin",
+      "Dedup.commitFingerprints" ->
+        "the commit half of incrementalExact; DedupSpec covers it")
     val files = codeLines.groupBy(_._1).map { case (f, ls) => f -> ls.map(_._2).toIndexedSeq }
     def indent(l: String) = l.length - l.dropWhile(_ == ' ').length
     val TypeDecl =
