@@ -70,8 +70,6 @@ case class DownloadConfig(
 
   import DownloadConfig._
 
-  def hashColumns: Seq[String] = computeHashCol.toSeq ++ verifyHash.map(_._2)
-
   /** Throws IllegalArgumentException on invalid config (analysis-time,
     * before any job is launched) — mirror of `arguments_validator`.
     */

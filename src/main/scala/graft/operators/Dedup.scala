@@ -519,18 +519,19 @@ object Dedup {
     val rd = graft.functions.MathFunctions.roundTo _
     val base = scanParallelismFloor(df).select(col(idCol).as("id"),
       wordShingles(col(textCol), shingleSize).as("shingles"))
-    // deterministic portable sample (same chain as the k-means seeds)
-    val sample = Similarity.seedSample(base, sampleQ)
-      .select(col("query_id"), col("shingles").as("q_sh"))
-      .localCheckpoint(eager = true) // Q rows, reused by truth + every bands value
+    // deterministic portable sample (same chain as the k-means seeds);
+    // Q rows, reused by truth + every bands value
+    val sample = CheckpointBridge.localCheckpointFreshStats(
+      Similarity.seedSample(base, sampleQ).select(col("query_id"), col("shingles").as("q_sh")))
     // exact ground truth: near-dup pairs by shingle Jaccard >= threshold
-    // (the same verify arithmetic as minhashNearDups), self excluded
-    val truth = base.crossJoin(broadcast(sample))
-      .filter(col("id") =!= col("query_id"))
-      .filter(size(array_intersect(col("shingles"), col("q_sh"))).cast("double") /
-        size(array_union(col("shingles"), col("q_sh"))).cast("double") >= threshold)
-      .select(col("query_id"), col("id").as("corpus_id"))
-      .localCheckpoint(eager = true) // bounded by Q · near-dup degree
+    // (the same verify arithmetic as minhashNearDups), self excluded;
+    // bounded by Q · near-dup degree
+    val truth = CheckpointBridge.localCheckpointFreshStats(
+      base.crossJoin(broadcast(sample))
+        .filter(col("id") =!= col("query_id"))
+        .filter(size(array_intersect(col("shingles"), col("q_sh"))).cast("double") /
+          size(array_union(col("shingles"), col("q_sh"))).cast("double") >= threshold)
+        .select(col("query_id"), col("id").as("corpus_id")))
     val truthN = truth.agg(count(lit(1)).as("truth_n"))
     // Branch overlap (the lshRecallProfile r15 change): measured and
     // REVERTED here — this operator's lazy 3-branch union is already
@@ -1001,18 +1002,19 @@ object Dedup {
     * uses; signatures meet once per candidate pair. Same
     * commit-after-write contract as [[incrementalExact]]
     * ([[commitMinhash]] appends survivors only AFTER the caller's
-    * durable downstream write), and the same localCheckpoint /
-    * stagingPath durability trade. The id column must be integral.
+    * durable downstream write). The result is a local checkpoint:
+    * losing an executor before that write fails the batch (see
+    * [[incrementalExact]]'s durability note). The id column must be
+    * integral.
     */
   def incrementalMinhash(newDocs: DataFrame, textCol: String, idCol: String,
                          indexPath: String,
                          shingleSize: Int = 5, numHashes: Int = 128,
                          bands: Int = 32, threshold: Double = 0.7,
-                         seed: Long = graft.operators.Dedup.DefaultSeed, maxBucketSize: Int = 1000,
-                         stagingPath: Option[String] = None): DataFrame =
+                         seed: Long = graft.operators.Dedup.DefaultSeed,
+                         maxBucketSize: Int = 1000): DataFrame =
     incrementalMinhashImpl(newDocs, textCol, idCol, indexPath, shingleSize,
-      numHashes, bands, threshold, seed, maxBucketSize, stagingPath,
-      overlappedWork = None)
+      numHashes, bands, threshold, seed, maxBucketSize, overlappedWork = None)
 
   /** [[incrementalMinhash]] with an independent unit of driver work —
     * in the intended use, the PREVIOUS batch's [[commitMinhash]] —
@@ -1031,18 +1033,16 @@ object Dedup {
       indexPath: String,
       shingleSize: Int = 5, numHashes: Int = 128,
       bands: Int = 32, threshold: Double = 0.7,
-      seed: Long = graft.operators.Dedup.DefaultSeed, maxBucketSize: Int = 1000,
-      stagingPath: Option[String] = None)(work: () => Unit): DataFrame =
+      seed: Long = graft.operators.Dedup.DefaultSeed,
+      maxBucketSize: Int = 1000)(work: () => Unit): DataFrame =
     incrementalMinhashImpl(newDocs, textCol, idCol, indexPath, shingleSize,
-      numHashes, bands, threshold, seed, maxBucketSize, stagingPath,
-      overlappedWork = Some(work))
+      numHashes, bands, threshold, seed, maxBucketSize, overlappedWork = Some(work))
 
   private def incrementalMinhashImpl(newDocs: DataFrame, textCol: String, idCol: String,
                          indexPath: String,
                          shingleSize: Int, numHashes: Int,
                          bands: Int, threshold: Double,
                          seed: Long, maxBucketSize: Int,
-                         stagingPath: Option[String],
                          overlappedWork: Option[() => Unit]): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands " +
@@ -1070,14 +1070,8 @@ object Dedup {
         if (!indexExists) batchDrops
         else batchDrops.union(k.indexMatches(spark.read.parquet(sigsPath),
           math.ceil(threshold * numHashes).toInt))
-      val fresh = newDocs.join(k.idFrame(drops, idCol), Seq(idCol), "left_anti")
-      stagingPath match {
-        case Some(dir) =>
-          fresh.write.mode("overwrite").parquet(dir)
-          spark.read.parquet(dir)
-        case None =>
-          CheckpointBridge.localCheckpointFreshStats(fresh)
-      }
+      CheckpointBridge.localCheckpointFreshStats(
+        newDocs.join(k.idFrame(drops, idCol), Seq(idCol), "left_anti"))
     }
   }
 

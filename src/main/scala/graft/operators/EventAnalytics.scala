@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 
 /** Batch event-analytics operators over an event log
   * (user, event_type, timestamp): ordered conversion funnels and
@@ -366,42 +367,30 @@ object EventAnalytics {
     * pair rows. Lift is computed on exact longs with single IEEE
     * casts, quantized at 1e-6 — engine-portable.
     */
-  def cooccurrence(events: DataFrame, userCol: String, typeCol: String): DataFrame =
-    cooccurrenceImpl(events, userCol, typeCol, materialize = true)
-
-  /** [[cooccurrence]] without the persist/checkpoint materialization —
-    * the plan-audit seam. */
-  private[graft] def cooccurrenceImpl(events: DataFrame, userCol: String,
-      typeCol: String, materialize: Boolean): DataFrame = {
+  def cooccurrence(events: DataFrame, userCol: String, typeCol: String): DataFrame = {
     val rd = graft.functions.MathFunctions.roundTo _
     // persisted: the distinct frame feeds four branches (marginals,
     // total, both self-join sides) which column-prune it differently —
     // without the cache their exchanges stop being identical,
     // ReuseExchange misses, and the event log is re-scanned up to 4×
     // (measured). Checkpoint the ≤ |types|² result, free the cache.
-    val ut0 = events.select(col(userCol).as("u"), col(typeCol).as("et"))
+    val ut = events.select(col(userCol).as("u"), col(typeCol).as("et"))
       .distinct()
-    val ut = if (materialize) ut0.persist() else ut0
-    val marg = ut.groupBy("et").agg(count("*").as("n_users"))
-    val total = ut.agg(countDistinct("u").as("n_total"))
-    val pairs = ut.as("a")
-      .join(ut.as("b"),
-        col("a.u") === col("b.u") && col("a.et") < col("b.et"))
-      .groupBy(col("a.et").as("et_a"), col("b.et").as("et_b"))
-      .agg(count("*").as("n_both"))
-    val raw = pairs
-      .join(broadcast(marg.select(col("et").as("et_a"), col("n_users").as("n_a"))), Seq("et_a"))
-      .join(broadcast(marg.select(col("et").as("et_b"), col("n_users").as("n_b"))), Seq("et_b"))
-      .crossJoin(broadcast(total)) // one scalar row
-      .select(col("et_a"), col("et_b"), col("n_both"), col("n_a"), col("n_b"),
-        rd(col("n_both").cast("double") * col("n_total").cast("double") /
-          (col("n_a").cast("double") * col("n_b").cast("double")), 6).as("lift"))
-    if (!materialize) raw
-    else {
-      val out = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointFreshStats(raw)
-      ut.unpersist()
-      out
+    CheckpointBridge.localCheckpointOver(ut) { ut =>
+      val marg = ut.groupBy("et").agg(count("*").as("n_users"))
+      val total = ut.agg(countDistinct("u").as("n_total"))
+      val pairs = ut.as("a")
+        .join(ut.as("b"),
+          col("a.u") === col("b.u") && col("a.et") < col("b.et"))
+        .groupBy(col("a.et").as("et_a"), col("b.et").as("et_b"))
+        .agg(count("*").as("n_both"))
+      pairs
+        .join(broadcast(marg.select(col("et").as("et_a"), col("n_users").as("n_a"))), Seq("et_a"))
+        .join(broadcast(marg.select(col("et").as("et_b"), col("n_users").as("n_b"))), Seq("et_b"))
+        .crossJoin(broadcast(total)) // one scalar row
+        .select(col("et_a"), col("et_b"), col("n_both"), col("n_a"), col("n_b"),
+          rd(col("n_both").cast("double") * col("n_total").cast("double") /
+            (col("n_a").cast("double") * col("n_b").cast("double")), 6).as("lift"))
     }
   }
 
@@ -466,53 +455,41 @@ object EventAnalytics {
     * checkpointed so the cache frees before returning.
     */
   def markovSurprisal(events: DataFrame, userCol: String, typeCol: String,
-      tsUsCol: String, eventIdCol: String): DataFrame =
-    markovSurprisalImpl(events, userCol, typeCol, tsUsCol, eventIdCol,
-      materialize = true)
-
-  private[graft] def markovSurprisalImpl(events: DataFrame, userCol: String,
-      typeCol: String, tsUsCol: String, eventIdCol: String,
-      materialize: Boolean): DataFrame = {
+      tsUsCol: String, eventIdCol: String): DataFrame = {
     val rd = graft.functions.MathFunctions.roundTo _
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(tsUsCol, eventIdCol)
-    val uft0 = events
+    val uft = events
       .select(col(userCol).as("user_id"), col(tsUsCol), col(eventIdCol),
         col(typeCol).as("from_event"))
       .withColumn("to_event", lead("from_event", 1).over(w))
       .filter(col("to_event").isNotNull)
       .groupBy("user_id", "from_event", "to_event")
       .agg(count("*").as("n_uft"))
-    val uft = if (materialize) uft0.persist() else uft0
-    val matrix = uft.groupBy("from_event", "to_event").agg(sum("n_uft").as("n_ft"))
-    val fromTotals = matrix.groupBy("from_event").agg(sum("n_ft").as("n_f"))
-    // count_distinct ignores NULL types, matching SQL COUNT(DISTINCT)
-    val vocab = events.agg(count_distinct(col(typeCol)).as("v"))
-    // per-transition quantized surprisal on the tiny matrix: one ln of
-    // a ratio of exact integers, floored to 1e-6 — identical on any
-    // engine up to a boundary-straddling ulp (the entropy precedent)
-    val termed = matrix.join(fromTotals, "from_event").crossJoin(broadcast(vocab))
-      .withColumn("term_q",
-        floor(log((col("n_f") + col("v")).cast("double") /
-          (col("n_ft") + lit(1L)).cast("double")) * lit(1e6) + lit(0.5)).cast("long"))
-      .select("from_event", "to_event", "term_q")
-    val raw = uft.join(broadcast(termed), Seq("from_event", "to_event"))
-      .groupBy("user_id")
-      // decimal BEFORE the multiply (mirrors the oracle's HUGEINT cast):
-      // a long×long product can wrap past 2⁶³ for extreme per-user
-      // transition counts; widening an operand first keeps the per-row
-      // product AND the per-user total exact at 100 TB volumes
-      .agg(sum(col("n_uft")).as("n_trans"),
-        sum(col("n_uft").cast("decimal(38,0)") * col("term_q")).as("sum_q"))
-      .select(col("user_id"), col("n_trans"),
-        rd(col("sum_q").cast("double") / col("n_trans").cast("double") / lit(1e6), 6)
-          .as("surprisal"))
-    if (!materialize) raw
-    else {
-      val out = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointFreshStats(raw)
-      uft.unpersist()
-      out
+    CheckpointBridge.localCheckpointOver(uft) { uft =>
+      val matrix = uft.groupBy("from_event", "to_event").agg(sum("n_uft").as("n_ft"))
+      val fromTotals = matrix.groupBy("from_event").agg(sum("n_ft").as("n_f"))
+      // count_distinct ignores NULL types, matching SQL COUNT(DISTINCT)
+      val vocab = events.agg(count_distinct(col(typeCol)).as("v"))
+      // per-transition quantized surprisal on the tiny matrix: one ln of
+      // a ratio of exact integers, floored to 1e-6 — identical on any
+      // engine up to a boundary-straddling ulp (the entropy precedent)
+      val termed = matrix.join(fromTotals, "from_event").crossJoin(broadcast(vocab))
+        .withColumn("term_q",
+          floor(log((col("n_f") + col("v")).cast("double") /
+            (col("n_ft") + lit(1L)).cast("double")) * lit(1e6) + lit(0.5)).cast("long"))
+        .select("from_event", "to_event", "term_q")
+      uft.join(broadcast(termed), Seq("from_event", "to_event"))
+        .groupBy("user_id")
+        // decimal BEFORE the multiply (mirrors the oracle's HUGEINT cast):
+        // a long×long product can wrap past 2⁶³ for extreme per-user
+        // transition counts; widening an operand first keeps the per-row
+        // product AND the per-user total exact at 100 TB volumes
+        .agg(sum(col("n_uft")).as("n_trans"),
+          sum(col("n_uft").cast("decimal(38,0)") * col("term_q")).as("sum_q"))
+        .select(col("user_id"), col("n_trans"),
+          rd(col("sum_q").cast("double") / col("n_trans").cast("double") / lit(1e6), 6)
+            .as("surprisal"))
     }
   }
 
@@ -538,46 +515,34 @@ object EventAnalytics {
     * windows, no quantiles — mean cutoffs keep everything one pass.
     */
   def rfm(events: DataFrame, userCol: String, tsUsCol: String,
-      valueCol: String): DataFrame =
-    rfmImpl(events, userCol, tsUsCol, valueCol, materialize = true)
-
-  /** [[rfm]] without the persist/checkpoint materialization — the
-    * plan-audit seam. */
-  private[graft] def rfmImpl(events: DataFrame, userCol: String,
-      tsUsCol: String, valueCol: String, materialize: Boolean): DataFrame = {
+      valueCol: String): DataFrame = {
     val rd = graft.functions.MathFunctions.roundTo _
-    val perUser0 = events.groupBy(col(userCol).as("user_id"))
+    val perUser = events.groupBy(col(userCol).as("user_id"))
       .agg(max(col(tsUsCol)).as("last_ts"),
         count("*").as("frequency"),
         sum(col(valueCol)).as("m_raw"))
-    val perUser = if (materialize) perUser0.persist() else perUser0
-    val scal = perUser.agg(max(col("last_ts")).as("corpus_max"),
-      sum("frequency").as("tot_f"), count("*").as("n_users"))
-    val withR = perUser.crossJoin(broadcast(scal)) // one scalar row
-      .select(col("user_id"),
-        // integer `div`, not `/`: the IEEE quotient of two ~1e15
-        // micros values can land one ulp under an exact day multiple
-        // and truncate to k−1 — the oracle's integer division never does
-        expr("(corpus_max - last_ts) div 86400000000").as("recency_days"),
-        col("frequency"), col("m_raw"), col("tot_f"), col("n_users"))
-    val totR = withR.agg(sum("recency_days").as("tot_r"))
-    val raw = withR.crossJoin(broadcast(totR)) // one scalar row
-      .select(col("user_id"), col("recency_days"), col("frequency"),
-        // 4 dp like every sum-of-double oracle column here: the wider
-        // quantum absorbs partition-order FP drift
-        rd(col("m_raw"), 4).as("monetary"),
-        when(col("recency_days") * col("n_users") <= col("tot_r"),
-          when(col("frequency") * col("n_users") >= col("tot_f"), "core")
-            .otherwise("casual"))
-          .otherwise(
-            when(col("frequency") * col("n_users") >= col("tot_f"), "lapsed_heavy")
-              .otherwise("dormant")).as("segment"))
-    if (!materialize) raw
-    else {
-      val out = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointFreshStats(raw)
-      perUser.unpersist()
-      out
+    CheckpointBridge.localCheckpointOver(perUser) { perUser =>
+      val scal = perUser.agg(max(col("last_ts")).as("corpus_max"),
+        sum("frequency").as("tot_f"), count("*").as("n_users"))
+      val withR = perUser.crossJoin(broadcast(scal)) // one scalar row
+        .select(col("user_id"),
+          // integer `div`, not `/`: the IEEE quotient of two ~1e15
+          // micros values can land one ulp under an exact day multiple
+          // and truncate to k−1 — the oracle's integer division never does
+          expr("(corpus_max - last_ts) div 86400000000").as("recency_days"),
+          col("frequency"), col("m_raw"), col("tot_f"), col("n_users"))
+      val totR = withR.agg(sum("recency_days").as("tot_r"))
+      withR.crossJoin(broadcast(totR)) // one scalar row
+        .select(col("user_id"), col("recency_days"), col("frequency"),
+          // 4 dp like every sum-of-double oracle column here: the wider
+          // quantum absorbs partition-order FP drift
+          rd(col("m_raw"), 4).as("monetary"),
+          when(col("recency_days") * col("n_users") <= col("tot_r"),
+            when(col("frequency") * col("n_users") >= col("tot_f"), "core")
+              .otherwise("casual"))
+            .otherwise(
+              when(col("frequency") * col("n_users") >= col("tot_f"), "lapsed_heavy")
+                .otherwise("dormant")).as("segment"))
     }
   }
 
@@ -612,48 +577,36 @@ object EventAnalytics {
     * window).
     */
   def activeUsers(events: DataFrame, userCol: String, tsUsCol: String,
-      windowDays: Int = 7): DataFrame =
-    activeUsersImpl(events, userCol, tsUsCol, windowDays, materialize = true)
-
-  /** [[activeUsers]] without the persist/checkpoint materialization —
-    * the plan-audit seam. */
-  private[graft] def activeUsersImpl(events: DataFrame, userCol: String,
-      tsUsCol: String, windowDays: Int, materialize: Boolean): DataFrame = {
+      windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1, s"windowDays=$windowDays must be >= 1")
     val rd = graft.functions.MathFunctions.roundTo _
-    val au0 = events.select(col(userCol).as("u"),
+    val au = events.select(col(userCol).as("u"),
         expr(s"cast($tsUsCol as long) div 86400000000").as("day"))
       .distinct()
-    val au = if (materialize) au0.persist() else au0
-    val dau = au.groupBy("day").agg(count("*").as("dau"))
-    // Trailing window via a BOUNDED EXPLODE of the ≤ windowDays anchor
-    // days each (user, day) row can contribute to — r15 rewrite of the
-    // former `au ⨯ broadcast(days)` interval join, whose
-    // BroadcastNestedLoopJoin compared every slim row against every
-    // observed day (|au|·|days| struct comparisons, measured ~14 CPU-s
-    // at sf0.1 vs the explode's |au|·windowDays rows). Equivalence:
-    // the NLJ produced exactly the pairs {(row, anchor) : anchor ∈
-    // observed days, day ≤ anchor < day+windowDays}; the explode
-    // produces the superset over ALL integer anchors in
-    // [day, day+windowDays) — the extra (non-observed-day) anchors
-    // form wau groups with no dau partner and are dropped by the
-    // inner join below, so the surviving rows and their distinct-user
-    // counts are identical. Strictly better at any scale: the explode
-    // fan-out is volume-independent (the docstring's ≤ windowDays slim
-    // rows, now literally the plan) and no broadcast is built.
-    val wau = au
-      .select(col("u"), explode(sequence(col("day"),
-        col("day") + lit(windowDays.toLong - 1L))).as("anchor"))
-      .groupBy("anchor").agg(countDistinct("u").as("wau"))
-    val raw = dau.join(wau, col("day") === col("anchor"))
-      .select(col("day"), col("dau"), col("wau"),
-        rd(col("dau").cast("double") / col("wau").cast("double"), 6).as("stickiness"))
-    if (!materialize) raw
-    else {
-      val out = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointFreshStats(raw)
-      au.unpersist()
-      out
+    CheckpointBridge.localCheckpointOver(au) { au =>
+      val dau = au.groupBy("day").agg(count("*").as("dau"))
+      // Trailing window via a BOUNDED EXPLODE of the ≤ windowDays anchor
+      // days each (user, day) row can contribute to — r15 rewrite of the
+      // former `au ⨯ broadcast(days)` interval join, whose
+      // BroadcastNestedLoopJoin compared every slim row against every
+      // observed day (|au|·|days| struct comparisons, measured ~14 CPU-s
+      // at sf0.1 vs the explode's |au|·windowDays rows). Equivalence:
+      // the NLJ produced exactly the pairs {(row, anchor) : anchor ∈
+      // observed days, day ≤ anchor < day+windowDays}; the explode
+      // produces the superset over ALL integer anchors in
+      // [day, day+windowDays) — the extra (non-observed-day) anchors
+      // form wau groups with no dau partner and are dropped by the
+      // inner join below, so the surviving rows and their distinct-user
+      // counts are identical. Strictly better at any scale: the explode
+      // fan-out is volume-independent (the docstring's ≤ windowDays slim
+      // rows, now literally the plan) and no broadcast is built.
+      val wau = au
+        .select(col("u"), explode(sequence(col("day"),
+          col("day") + lit(windowDays.toLong - 1L))).as("anchor"))
+        .groupBy("anchor").agg(countDistinct("u").as("wau"))
+      dau.join(wau, col("day") === col("anchor"))
+        .select(col("day"), col("dau"), col("wau"),
+          rd(col("dau").cast("double") / col("wau").cast("double"), 6).as("stickiness"))
     }
   }
 
@@ -939,40 +892,28 @@ object EventAnalytics {
     * on any engine) and LTV is one IEEE division, 1e-6-quantized.
     */
   def cohortLtv(events: DataFrame, userCol: String, tsUsCol: String,
-      valueCol: String): DataFrame =
-    cohortLtvImpl(events, userCol, tsUsCol, valueCol, materialize = true)
-
-  /** [[cohortLtv]] without the persist/checkpoint materialization —
-    * the plan-audit seam. */
-  private[graft] def cohortLtvImpl(events: DataFrame, userCol: String,
-      tsUsCol: String, valueCol: String, materialize: Boolean): DataFrame = {
+      valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val rd = graft.functions.MathFunctions.roundTo _
     val ev = events.select(col(userCol).as("u"),
       expr(s"cast($tsUsCol as long) div 86400000000").as("day"),
       col(valueCol).cast("double").as("v"))
-    val first0 = ev.groupBy("u").agg(min("day").as("cohort"))
-    val first = if (materialize) first0.persist() else first0
-    val sizes = first.groupBy("cohort").agg(count("*").as("cohort_users"))
-    val cells = ev.join(first, Seq("u"))
-      .select(col("cohort"), (col("day") - col("cohort")).as("age"), col("u"), col("v"))
-      .groupBy("cohort", "age")
-      .agg(countDistinct("u").as("n_active_users"),
-        rd(sum("v"), 4).as("revenue"))
-    val w = Window.partitionBy("cohort").orderBy("age")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val raw = cells.join(broadcast(sizes), Seq("cohort"))
-      .select(col("cohort"), col("age"), col("cohort_users"),
-        col("n_active_users"), col("revenue"),
-        rd(sum("revenue").over(w), 4).as("cum_revenue"),
-        rd(sum("revenue").over(w) / col("cohort_users").cast("double"), 6).as("ltv"))
-      .orderBy("cohort", "age")
-    if (!materialize) raw
-    else {
-      val out = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointFreshStats(raw)
-      first.unpersist()
-      out
+    val first = ev.groupBy("u").agg(min("day").as("cohort"))
+    CheckpointBridge.localCheckpointOver(first) { first =>
+      val sizes = first.groupBy("cohort").agg(count("*").as("cohort_users"))
+      val cells = ev.join(first, Seq("u"))
+        .select(col("cohort"), (col("day") - col("cohort")).as("age"), col("u"), col("v"))
+        .groupBy("cohort", "age")
+        .agg(countDistinct("u").as("n_active_users"),
+          rd(sum("v"), 4).as("revenue"))
+      val w = Window.partitionBy("cohort").orderBy("age")
+        .rowsBetween(Window.unboundedPreceding, 0)
+      cells.join(broadcast(sizes), Seq("cohort"))
+        .select(col("cohort"), col("age"), col("cohort_users"),
+          col("n_active_users"), col("revenue"),
+          rd(sum("revenue").over(w), 4).as("cum_revenue"),
+          rd(sum("revenue").over(w) / col("cohort_users").cast("double"), 6).as("ltv"))
+        .orderBy("cohort", "age")
     }
   }
 
@@ -999,41 +940,29 @@ object EventAnalytics {
     * exact integer micros truncating division (Spark `div` ≡ DuckDB
     * `//`, the house day-bucket convention); counts are longs.
     */
-  def lifecycle(events: DataFrame, userCol: String, tsUsCol: String): DataFrame =
-    lifecycleImpl(events, userCol, tsUsCol, materialize = true)
-
-  /** [[lifecycle]] without the persist/checkpoint materialization —
-    * the plan-audit seam. */
-  private[graft] def lifecycleImpl(events: DataFrame, userCol: String,
-      tsUsCol: String, materialize: Boolean): DataFrame = {
+  def lifecycle(events: DataFrame, userCol: String, tsUsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val au = events.select(col(userCol).as("u"),
         expr(s"cast($tsUsCol as long) div 86400000000").as("day"))
       .distinct()
     val w = Window.partitionBy("u").orderBy("day")
-    val marked0 = au.select(col("u"), col("day"),
+    val marked = au.select(col("u"), col("day"),
       lag("day", 1).over(w).as("prev"),
       lead("day", 1).over(w).as("next"))
-    val marked = if (materialize) marked0.persist() else marked0
-    val classes = marked.groupBy("day").agg(
-      count(when(col("prev").isNull, 1)).as("n_new"),
-      count(when(col("day") - col("prev") === 1L, 1)).as("n_retained"),
-      count(when(col("prev").isNotNull && col("day") - col("prev") > 1L, 1))
-        .as("n_resurrected"))
-    val churn = marked
-      .filter(col("next").isNull || col("next") > col("day") + 1L)
-      .select((col("day") + 1L).as("day"))
-      .groupBy("day").agg(count("*").as("n_churned"))
-    val raw = classes.join(churn, Seq("day"), "left")
-      .select(col("day"), col("n_new"), col("n_retained"), col("n_resurrected"),
-        coalesce(col("n_churned"), lit(0L)).as("n_churned"))
-      .orderBy("day")
-    if (!materialize) raw
-    else {
-      val out = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointFreshStats(raw)
-      marked.unpersist()
-      out
+    CheckpointBridge.localCheckpointOver(marked) { marked =>
+      val classes = marked.groupBy("day").agg(
+        count(when(col("prev").isNull, 1)).as("n_new"),
+        count(when(col("day") - col("prev") === 1L, 1)).as("n_retained"),
+        count(when(col("prev").isNotNull && col("day") - col("prev") > 1L, 1))
+          .as("n_resurrected"))
+      val churn = marked
+        .filter(col("next").isNull || col("next") > col("day") + 1L)
+        .select((col("day") + 1L).as("day"))
+        .groupBy("day").agg(count("*").as("n_churned"))
+      classes.join(churn, Seq("day"), "left")
+        .select(col("day"), col("n_new"), col("n_retained"), col("n_resurrected"),
+          coalesce(col("n_churned"), lit(0L)).as("n_churned"))
+        .orderBy("day")
     }
   }
 

@@ -872,17 +872,16 @@ object Similarity {
       column(graft.plans.NearestCentroid(expression(col("v")), cents.toSeq.map(_.toSeq))))
     // deterministic portable sample + exact ground truth: the
     // lshRecallProfile chain (hash top-Q, bounded-heap exact top-k)
-    val sample = seedSample(base, sampleQ)
-      .select(col("query_id"), col("v").as("qv"))
-      .localCheckpoint(eager = true)
-    val truth = base.crossJoin(broadcast(sample))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("corpus_id"),
-        cosine(col("qv"), col("v")).as("c"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByScore.topKByScore(col("c"), col("corpus_id"), k).as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("corpus_id"))
-      .localCheckpoint(eager = true)
+    val sample = CheckpointBridge.localCheckpointFreshStats(
+      seedSample(base, sampleQ).select(col("query_id"), col("v").as("qv")))
+    val truth = CheckpointBridge.localCheckpointFreshStats(
+      base.crossJoin(broadcast(sample))
+        .filter(col("id") =!= col("query_id"))
+        .select(col("query_id"), col("id").as("corpus_id"),
+          cosine(col("qv"), col("v")).as("c"))
+        .groupBy("query_id")
+        .agg(graft.plans.TopKByScore.topKByScore(col("c"), col("corpus_id"), k).as("top"))
+        .select(col("query_id"), explode(col("top.id")).as("corpus_id")))
     val truthN = truth.agg(count(lit(1)).as("truth_n"))
     val qN = sample.agg(count(lit(1)).as("qn"))
     val cN = base.agg(count(lit(1)).as("cn"))
@@ -1322,20 +1321,20 @@ object Similarity {
     val rd = graft.functions.MathFunctions.roundTo _
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     // deterministic portable sample: the sampleQ ids with the largest
-    // portable seed-hash (same chain as the k-means / SemDeDup seeds)
-    val sample = seedSample(base, sampleQ)
-      .select(col("query_id"), col("v").as("qv"))
-      .localCheckpoint(eager = true) // Q rows, reused by every depth
+    // portable seed-hash (same chain as the k-means / SemDeDup seeds);
+    // Q rows, reused by every depth
+    val sample = CheckpointBridge.localCheckpointFreshStats(
+      seedSample(base, sampleQ).select(col("query_id"), col("v").as("qv")))
     // exact ground truth (self excluded): one corpus scan, broadcast
-    // queries, bounded-heap top-k with the knnGraph tie-break
-    val truth = base.crossJoin(broadcast(sample))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("corpus_id"),
-        cosine(col("qv"), col("v")).as("c"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopKByScore.topKByScore(col("c"), col("corpus_id"), k).as("top"))
-      .select(col("query_id"), explode(col("top.id")).as("corpus_id"))
-      .localCheckpoint(eager = true) // ≤ Q·k rows
+    // queries, bounded-heap top-k with the knnGraph tie-break; ≤ Q·k rows
+    val truth = CheckpointBridge.localCheckpointFreshStats(
+      base.crossJoin(broadcast(sample))
+        .filter(col("id") =!= col("query_id"))
+        .select(col("query_id"), col("id").as("corpus_id"),
+          cosine(col("qv"), col("v")).as("c"))
+        .groupBy("query_id")
+        .agg(graft.plans.TopKByScore.topKByScore(col("c"), col("corpus_id"), k).as("top"))
+        .select(col("query_id"), explode(col("top.id")).as("corpus_id")))
     val truthN = truth.agg(count(lit(1)).as("truth_n"))
     // Per-depth branches are independent given the checkpointed
     // sample/truth: materialize each ONE-ROW result eagerly on its own
@@ -1364,7 +1363,7 @@ object Similarity {
       // so the planner would fall back to sort-merge: broadcast it
       val hits = cand.join(broadcast(truth), Seq("query_id", "corpus_id"), "left_semi")
         .agg(count(lit(1)).as("hits"))
-      org.apache.spark.sql.graftbridge.CheckpointBridge.localCheckpointFreshStats(
+      CheckpointBridge.localCheckpointFreshStats(
         work.crossJoin(hits).crossJoin(truthN)
           .select(lit(d).as("n_planes"), col("candidate_pairs"), col("hits"),
             col("truth_n"),

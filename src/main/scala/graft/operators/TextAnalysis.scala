@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.types.LongType
 import graft.functions.TextFunctions._
 
@@ -1008,16 +1009,7 @@ object TextAnalysis {
     */
   def domainQuality(df: DataFrame, idCol: String, sourceCol: String, textCol: String,
                     minTokens: Int = 20, minDocs: Int = 3,
-                    dupFracMax: Double = 0.5, shortFracMax: Double = 0.5): DataFrame =
-    domainQualityImpl(df, idCol, sourceCol, textCol, minTokens, minDocs,
-      dupFracMax, shortFracMax, materialize = true)
-
-  /** [[domainQuality]] without the persist/checkpoint materialization —
-    * the plan-audit seam. */
-  private[graft] def domainQualityImpl(df: DataFrame, idCol: String,
-      sourceCol: String, textCol: String, minTokens: Int, minDocs: Int,
-      dupFracMax: Double, shortFracMax: Double,
-      materialize: Boolean): DataFrame = {
+                    dupFracMax: Double = 0.5, shortFracMax: Double = 0.5): DataFrame = {
     require(minDocs >= 1, s"minDocs must be >= 1, got $minDocs")
     val rd = graft.functions.MathFunctions.roundTo _
     // persisted: the slim (id, src, n_tokens, fp) frame feeds both the
@@ -1025,35 +1017,29 @@ object TextAnalysis {
     // cache each branch column-prunes its own parquet scan and the
     // full TEXT column is read + fingerprinted twice. One scan, then
     // the checkpointed doc-sized result frees the cache.
-    val doc0 = df.select(col(idCol).as("id"), col(sourceCol).as("src"),
+    val doc = df.select(col(idCol).as("id"), col(sourceCol).as("src"),
       graft.functions.TextFunctions.tokenCount(col(textCol)).as("n_tokens"),
       graft.functions.TextFunctions.fingerprint(col(textCol)).as("fp"))
-    val doc = if (materialize) doc0.persist() else doc0
-    val byFp = doc.groupBy("src", "fp").agg(
-      count("*").as("cnt"),
-      sum(when(col("n_tokens") < minTokens, 1L).otherwise(0L)).as("short_cnt"))
-    val dom = byFp.groupBy("src").agg(
-        sum("cnt").as("n_docs"),
-        count("*").as("n_distinct"),
-        sum("short_cnt").as("n_short"))
-      .select(col("src"), col("n_docs"),
-        rd((col("n_docs") - col("n_distinct")).cast("double") /
-          col("n_docs").cast("double"), 6).as("dup_frac"),
-        rd(col("n_short").cast("double") / col("n_docs").cast("double"), 6)
-          .as("short_frac"))
-      .withColumn("domain_verdict",
-        when(col("n_docs") >= minDocs &&
-            (col("dup_frac") > dupFracMax || col("short_frac") > shortFracMax),
-          lit("flag")).otherwise(lit("keep")))
-    val raw = doc.join(broadcast(dom), Seq("src"))
-      .select(col("id").as(idCol), col("src").as(sourceCol), col("n_tokens"),
-        col("n_docs"), col("dup_frac"), col("short_frac"), col("domain_verdict"))
-    if (!materialize) raw
-    else {
-      val out = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointFreshStats(raw)
-      doc.unpersist()
-      out
+    CheckpointBridge.localCheckpointOver(doc) { doc =>
+      val byFp = doc.groupBy("src", "fp").agg(
+        count("*").as("cnt"),
+        sum(when(col("n_tokens") < minTokens, 1L).otherwise(0L)).as("short_cnt"))
+      val dom = byFp.groupBy("src").agg(
+          sum("cnt").as("n_docs"),
+          count("*").as("n_distinct"),
+          sum("short_cnt").as("n_short"))
+        .select(col("src"), col("n_docs"),
+          rd((col("n_docs") - col("n_distinct")).cast("double") /
+            col("n_docs").cast("double"), 6).as("dup_frac"),
+          rd(col("n_short").cast("double") / col("n_docs").cast("double"), 6)
+            .as("short_frac"))
+        .withColumn("domain_verdict",
+          when(col("n_docs") >= minDocs &&
+              (col("dup_frac") > dupFracMax || col("short_frac") > shortFracMax),
+            lit("flag")).otherwise(lit("keep")))
+      doc.join(broadcast(dom), Seq("src"))
+        .select(col("id").as(idCol), col("src").as(sourceCol), col("n_tokens"),
+          col("n_docs"), col("dup_frac"), col("short_frac"), col("domain_verdict"))
     }
   }
 
@@ -1217,13 +1203,7 @@ object TextAnalysis {
     * full sort); vocabulary totals roll up the count table
     * map-side; the regression runs over topN rows on one partition.
     */
-  def zipfStats(df: DataFrame, textCol: String, topN: Int = 100): DataFrame =
-    zipfStatsImpl(df, textCol, topN, materialize = true)
-
-  /** [[zipfStats]] without the persist/checkpoint materialization —
-    * the plan-audit seam. */
-  private[graft] def zipfStatsImpl(df: DataFrame, textCol: String,
-      topN: Int, materialize: Boolean): DataFrame = {
+  def zipfStats(df: DataFrame, textCol: String, topN: Int = 100): DataFrame = {
     require(topN >= 2, s"topN=$topN must be >= 2 (a slope needs two points)")
     require(topN <= 10000, s"topN=$topN must be <= 10000 (exact-integer sum bound)")
     val rd = graft.functions.MathFunctions.roundTo _
@@ -1236,41 +1216,35 @@ object TextAnalysis {
     // and the top-N branches, which prune it differently — without
     // the cache ReuseExchange misses and the corpus is tokenized
     // twice (the evt_rfm re-scan class)
-    val cnt0 = occ.groupBy("__h").agg(count("*").as("__c"))
-    val cnt = if (materialize) cnt0.persist() else cnt0
-    val tot = cnt.agg(sum("__c").as("n_tokens"), count("*").as("vocab_size"),
-      max("__c").as("top1_count"))
-    // bounded-heap top-N, total order (count desc, hash asc)
-    val top = cnt.orderBy(col("__c").desc, col("__h").asc).limit(topN)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__c").desc, col("__h").asc)
-    val reg = top
-      .select(col("__c"), row_number().over(w).as("__r"))
-      .select(
-        floor(log(col("__r").cast("double")) * lit(1e6) + lit(0.5)).cast("long").as("__x"),
-        floor(log(col("__c").cast("double")) * lit(1e6) + lit(0.5)).cast("long").as("__y"))
-      .agg(count("*").as("__n"), sum("__x").as("__sx"), sum("__y").as("__sy"),
-        sum(col("__x") * col("__y")).as("__sxy"),
-        sum(col("__x") * col("__x")).as("__sxx"))
-      .select({
-        val den = col("__n") * col("__sxx") - col("__sx") * col("__sx")
-        // den = 0 ⟺ fewer than 2 regression points (degenerate corpus)
-        when(den =!= 0L,
-          (col("__n") * col("__sxy") - col("__sx") * col("__sy")).cast("double") /
-            den.cast("double")).as("__slope")
-      })
-    val raw = tot.crossJoin(reg) // two one-row frames
-      .select(coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        col("vocab_size"), col("top1_count"),
-        rd(col("top1_count").cast("double") / col("n_tokens").cast("double"), 6)
-          .as("top1_share"),
-        rd(col("__slope"), 6).as("zipf_slope"))
-    if (!materialize) raw
-    else {
-      val out = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .localCheckpointFreshStats(raw)
-      cnt.unpersist()
-      out
+    val cnt = occ.groupBy("__h").agg(count("*").as("__c"))
+    CheckpointBridge.localCheckpointOver(cnt) { cnt =>
+      val tot = cnt.agg(sum("__c").as("n_tokens"), count("*").as("vocab_size"),
+        max("__c").as("top1_count"))
+      // bounded-heap top-N, total order (count desc, hash asc)
+      val top = cnt.orderBy(col("__c").desc, col("__h").asc).limit(topN)
+      val w = org.apache.spark.sql.expressions.Window
+        .orderBy(col("__c").desc, col("__h").asc)
+      val reg = top
+        .select(col("__c"), row_number().over(w).as("__r"))
+        .select(
+          floor(log(col("__r").cast("double")) * lit(1e6) + lit(0.5)).cast("long").as("__x"),
+          floor(log(col("__c").cast("double")) * lit(1e6) + lit(0.5)).cast("long").as("__y"))
+        .agg(count("*").as("__n"), sum("__x").as("__sx"), sum("__y").as("__sy"),
+          sum(col("__x") * col("__y")).as("__sxy"),
+          sum(col("__x") * col("__x")).as("__sxx"))
+        .select({
+          val den = col("__n") * col("__sxx") - col("__sx") * col("__sx")
+          // den = 0 ⟺ fewer than 2 regression points (degenerate corpus)
+          when(den =!= 0L,
+            (col("__n") * col("__sxy") - col("__sx") * col("__sy")).cast("double") /
+              den.cast("double")).as("__slope")
+        })
+      tot.crossJoin(reg) // two one-row frames
+        .select(coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
+          col("vocab_size"), col("top1_count"),
+          rd(col("top1_count").cast("double") / col("n_tokens").cast("double"), 6)
+            .as("top1_share"),
+          rd(col("__slope"), 6).as("zipf_slope"))
     }
   }
 }

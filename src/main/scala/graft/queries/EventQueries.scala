@@ -163,7 +163,7 @@ object EventQueries {
          FROM at_c c LEFT JOIN at_j j USING (conversion_id)
          ORDER BY conversion_id"""),
     QuerySpec("evt_cooccurrence", Scale10x,
-      PlanDoc("checkpointed result (one event scan via persisted distinct frame); shape audited at the cooccurrenceImpl seam"))((s, dir) =>
+      PlanDoc("checkpointed result (one event scan via persisted distinct frame); shape audited on the checkpoint job's plan"))((s, dir) =>
       // Market-basket lift over the event log: distinct (user, type)
       // first, so the user-keyed self-join is |types|^2-bounded per
       // user regardless of event volume.
@@ -198,7 +198,7 @@ object EventQueries {
            ${roundToSql("CAST(n AS DOUBLE) / CAST(n_total AS DOUBLE)", 6)} AS share
          FROM pc CROSS JOIN pt ORDER BY n DESC, e1, e2, e3"""),
     QuerySpec("evt_rfm", Scale10x,
-      PlanDoc("checkpointed result (one event scan via persisted per-user frame); shape audited at the rfmImpl seam"))((s, dir) =>
+      PlanDoc("checkpointed result (one event scan via persisted per-user frame); shape audited on the checkpoint job's plan"))((s, dir) =>
       // RFM user-value segmentation: one per-user aggregation, mean
       // cutoffs compared as exact integers (r*n <= sum_r), monetary
       // reported but kept out of the verdict.
@@ -319,7 +319,7 @@ object EventQueries {
            ${roundToSql("CAST(sum(n_gaps) OVER (ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / CAST(sum(n_gaps) OVER () AS DOUBLE)", 6)} AS cum_share
          FROM gp_c ORDER BY bucket"""),
     QuerySpec("evt_active_users", Scale10x,
-      PlanDoc("checkpointed result (one event scan via persisted distinct (user,day) frame); shape audited at the activeUsersImpl seam"))((s, dir) =>
+      PlanDoc("checkpointed result (one event scan via persisted distinct (user,day) frame); shape audited on the checkpoint job's plan"))((s, dir) =>
       // DAU/WAU/stickiness board: events reduce once to the
       // persisted distinct (user, day) frame; the trailing window is
       // a broadcast interval join fanning <= 7 slim rows per
@@ -414,7 +414,7 @@ object EventQueries {
              ELSE 'ok' END AS verdict
          FROM bu ORDER BY user_id"""),
     QuerySpec("evt_lifecycle", Scale10x,
-      PlanDoc("checkpointed result (one user-keyed window over persisted distinct active days); shape audited at the lifecycleImpl seam"))((s, dir) =>
+      PlanDoc("checkpointed result (one user-keyed window over persisted distinct active days); shape audited on the checkpoint job's plan"))((s, dir) =>
       // Daily growth accounting (new/retained/resurrected/churned):
       // one user-keyed window over distinct active days, persisted
       // against the two-branch re-scan, day-keyed rollups.
@@ -479,7 +479,7 @@ object EventQueries {
          FROM rgm WHERE n_gaps >= 4 ORDER BY user_id"""
     }),
     QuerySpec("evt_cohort_ltv", Scale10x,
-      PlanDoc("checkpointed result (persisted per-user first day feeds the age join and cohort sizes); shape audited at the cohortLtvImpl seam"))((s, dir) =>
+      PlanDoc("checkpointed result (persisted per-user first day feeds the age join and cohort sizes); shape audited on the checkpoint job's plan"))((s, dir) =>
       // Cohort LTV curves: persisted per-user first day feeds the age
       // join and the cohort-size count; cumulative window over the
       // span-bounded (cohort, age) table only.

@@ -711,7 +711,7 @@ object TextQueries {
            ${roundToSql("CAST(n_novel AS DOUBLE) / CAST(n_grams AS DOUBLE)", 6)} AS novelty
          FROM nv_doc ORDER BY doc_id"""),
     QuerySpec("txt_domain_quality", Scale10x,
-      PlanDoc("checkpointed result (one text scan via persisted slim frame); shape audited at the domainQualityImpl seam"))((s, dir) =>
+      PlanDoc("checkpointed result (one text scan via persisted slim frame); shape audited on the checkpoint job's plan"))((s, dir) =>
       // Domain-level curation rollup (RefinedWeb/DCLM-style source
       // filter): per-source dup/short fractions via one two-level
       // aggregation, verdict broadcast back onto every doc
@@ -839,7 +839,7 @@ object TextQueries {
          WHERE g.df_count >= 5 AND r.slot < 8
          ORDER BY g.term, r.slot"""),
     QuerySpec("txt_zipf", Scale10x,
-      PlanDoc("checkpointed result (tokens shuffle as 8-byte hashes, bounded-heap top-N); shape audited at the zipfStatsImpl seam"))((s, dir) =>
+      PlanDoc("checkpointed result (tokens shuffle as 8-byte hashes, bounded-heap top-N); shape audited on the checkpoint job's plan"))((s, dir) =>
       // Corpus Zipf slope + vocabulary stats: tokens shuffle as
       // 8-byte portable hashes, top-100 via bounded heaps,
       // exact-integer regression sums.

@@ -24,7 +24,9 @@ import org.apache.spark.sql.types.StructType
   * stats, so a consumer plans from the default size estimate, which
   * also keeps the optimizer from broadcasting a data-sized frame.
   * [[localCheckpointRows]] does the same for rows an RDD kernel
-  * computed.
+  * computed, and [[localCheckpointOver]] for a result built over a
+  * frame that several branches read, cached for the checkpoint job
+  * only.
   *
   * Lives under `org.apache.spark.sql` solely to reach the
   * `private[sql]` `internalCreateDataFrame`.
@@ -35,6 +37,18 @@ object CheckpointBridge {
       .asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val classic = ck.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     classic.internalCreateDataFrame(ck.queryExecution.toRdd, ck.schema)
+  }
+
+  /** `build(shared)` checkpointed by [[localCheckpointFreshStats]],
+    * with `shared` cached for that one job and freed after it, also
+    * when the job fails. Without the cache, branches that column-prune
+    * `shared` differently stop sharing one exchange (ReuseExchange
+    * misses) and each re-runs the subtree under it.
+    */
+  def localCheckpointOver(shared: DataFrame)(build: DataFrame => DataFrame): DataFrame = {
+    val cached = shared.persist()
+    try localCheckpointFreshStats(build(cached))
+    finally cached.unpersist()
   }
 
   /** A frame over an RDD of rows, materialized the way

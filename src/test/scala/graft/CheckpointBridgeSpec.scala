@@ -35,6 +35,17 @@ class CheckpointBridgeSpec extends SparkSpec {
     assert(cur.orderBy("id").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
   }
 
+  test("localCheckpointOver frees the shared frame's cache, also when the job fails") {
+    import org.apache.spark.storage.StorageLevel
+    val shared = spark.range(100).select((col("id") % 7).as("k")).distinct()
+    val out = CheckpointBridge.localCheckpointOver(shared)(_.filter(col("k") > 0))
+    assert(shared.storageLevel == StorageLevel.NONE, "cache freed after the checkpoint job")
+    assert(out.count() == 6, "the checkpointed rows outlive the cache")
+    intercept[Exception](CheckpointBridge.localCheckpointOver(shared)(
+      _.select(assert_true(col("k") < 0))))
+    assert(shared.storageLevel == StorageLevel.NONE, "a failed job leaves no cache pinned")
+  }
+
   test("plain localCheckpoint demonstrates the squaring (sanity for the fix's premise)") {
     var cur = Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
     for (_ <- 1 to 6) {

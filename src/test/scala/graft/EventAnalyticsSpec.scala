@@ -604,9 +604,8 @@ class EventAnalyticsSpec extends SparkSpec {
     val rows = Seq(
       (1L, "a", 100L, 1L), (1L, "b", 200L, 2L), (1L, "a", 300L, 3L), (1L, "b", 400L, 4L),
       (2L, "a", 100L, 5L), (2L, "b", 200L, 6L))
-    val out = EventAnalytics.markovSurprisalImpl(
-        rows.toDF("u", "et", "ts", "eid"), "u", "et", "ts", "eid",
-        materialize = false)
+    val out = EventAnalytics.markovSurprisal(
+        rows.toDF("u", "et", "ts", "eid"), "u", "et", "ts", "eid")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(out(1L) === ((3L, 0.283918)))
     assert(out(2L) === ((1L, 0.223144)))
@@ -621,9 +620,9 @@ class EventAnalyticsSpec extends SparkSpec {
     }
     val rare = (0 until 6).map(i => (99L, if (i % 2 == 0) "c" else "d", 100L * (i + 1), 9900L + i))
     val lonely = Seq((50L, "a", 100L, 5000L))
-    val out = EventAnalytics.markovSurprisalImpl(
+    val out = EventAnalytics.markovSurprisal(
         (common ++ rare ++ lonely).toDF("u", "et", "ts", "eid"),
-        "u", "et", "ts", "eid", materialize = false)
+        "u", "et", "ts", "eid")
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(!out.contains(50L), "single-event user has no transitions")
     val maxCommon = (out - 99L).values.max

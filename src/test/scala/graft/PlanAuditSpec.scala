@@ -877,20 +877,41 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("LeftAnti"), "survivors selected with an anti join")
   }
 
-  // The four operators below checkpoint their public result (the
-  // returned plan collapses to an ExistingRDD scan), so the shape
-  // audits run on the package-private un-materialized seams over
-  // synthetic frames.
+  // The operators audited through `checkpointPlan` checkpoint their
+  // result (the returned plan collapses to an ExistingRDD scan), so
+  // their shape audits read the plan of the checkpoint job itself: the
+  // plan production runs, with the shared frame's cache in it.
 
   import org.apache.spark.sql.functions._
+
+  /** The executed plan of the one `localCheckpoint` action `run`
+    * makes — for AQE, the final plan and the initial plan. */
+  private def checkpointPlan(run: => org.apache.spark.sql.DataFrame): String = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run
+      graft.tools.Meter.drain(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"expected one localCheckpoint action, got ${plans.size}")
+    val p = plans.peek()
+    assert(p.contains("InMemoryTableScan"), s"the shared frame is read from its cache:\n$p")
+    p
+  }
 
   test("domainQuality seam: domain table broadcasts back, no window, no text in exchanges") {
     val docs = spark.range(500).select(col("id").as("doc_id"),
       concat(lit("d"), col("id") % 20).as("source"),
       concat(lit("body text number "), col("id") % 100).as("text"))
-    val p = graft.operators.TextAnalysis.domainQualityImpl(docs,
-        "doc_id", "source", "text", 20, 3, 0.5, 0.5, materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = checkpointPlan(graft.operators.TextAnalysis.domainQuality(docs,
+      "doc_id", "source", "text", 20, 3, 0.5, 0.5))
     assert(p.contains("BroadcastHashJoin"), s"domain verdicts broadcast onto the doc scan:\n$p")
     assert(p.contains("partial_"), s"(src,fp) counts map-side combined:\n$p")
     assert(!p.contains("Window"), s"no window:\n$p")
@@ -904,9 +925,7 @@ class PlanAuditSpec extends SparkSpec {
   test("cooccurrence seam: distinct before the self-join, marginals broadcast, no window") {
     val ev = spark.range(2000).select((col("id") % 300).as("u"),
       (col("id") % 6).cast("string").as("et"))
-    val p = graft.operators.EventAnalytics.cooccurrenceImpl(ev, "u", "et",
-        materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = checkpointPlan(graft.operators.EventAnalytics.cooccurrence(ev, "u", "et"))
     assert(p.contains("partial_"), s"distinct (user,type) map-side combined:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"marginals broadcast onto pair rows:\n$p")
     assert(!p.contains("Window"), s"no window:\n$p")
@@ -927,9 +946,7 @@ class PlanAuditSpec extends SparkSpec {
   test("rfm seam: one per-user aggregation, scalar cutoffs broadcast, no window") {
     val ev = spark.range(2000).select((col("id") % 300).as("u"),
       (col("id") * 1000000L).as("ts"), (col("id") % 10).cast("double").as("v"))
-    val p = graft.operators.EventAnalytics.rfmImpl(ev, "u", "ts", "v",
-        materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = checkpointPlan(graft.operators.EventAnalytics.rfm(ev, "u", "ts", "v"))
     assert(!p.contains("Window"), s"no window — mean cutoffs, not quantiles:\n$p")
     assert(p.contains("partial_"), s"per-user agg map-side combined:\n$p")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
@@ -954,9 +971,8 @@ class PlanAuditSpec extends SparkSpec {
   test("activeUsers seam: events reduce to distinct (u, day) first; window fan-out broadcasts") {
     val ev = spark.range(5000).select((col("id") % 400).as("u"),
       ((col("id") % 30) * 86400000000L + col("id")).as("ts"))
-    val p = graft.operators.EventAnalytics.activeUsersImpl(ev, "u", "ts",
-        windowDays = 7, materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = checkpointPlan(graft.operators.EventAnalytics.activeUsers(ev, "u", "ts",
+      windowDays = 7))
     assert(p.contains("partial_"), s"distinct (u,day) map-side combined:\n$p")
     // r15: the trailing-window fan-out is a BOUNDED EXPLODE of the slim
     // (u, day) frame into <= windowDays anchors — the former
@@ -1001,9 +1017,7 @@ class PlanAuditSpec extends SparkSpec {
   test("zipfStats seam: tokens shuffle as 8-byte hashes; top-N is a bounded heap, not a sort") {
     val docs = spark.range(300).select(col("id").as("doc_id"),
       concat(lit("alpha beta gamma delta token"), col("id") % 50).as("text"))
-    val p = graft.operators.TextAnalysis.zipfStatsImpl(docs, "text",
-        topN = 100, materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = checkpointPlan(graft.operators.TextAnalysis.zipfStats(docs, "text", topN = 100))
     assert(p.contains("partial_"), s"hash counts map-side combined:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       s"top-N via per-partition bounded heaps, never a global sort:\n$p")
@@ -1086,14 +1100,11 @@ class PlanAuditSpec extends SparkSpec {
   test("lifecycle seam: one user-keyed window over distinct active days, day rollups map-side") {
     val ev = spark.range(4000).select((col("id") % 300).as("u"),
       ((col("id") % 20) * 86400000000L + col("id")).as("ts"))
-    val p = graft.operators.EventAnalytics.lifecycleImpl(ev, "u", "ts",
-        materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = checkpointPlan(graft.operators.EventAnalytics.lifecycle(ev, "u", "ts"))
     assert(p.contains("partial_"), s"distinct + day counts map-side combined:\n$p")
     // every window is keyed by the user over DISTINCT active days —
-    // never over raw event history (the un-materialized seam shows the
-    // classification/churn branches each with their own copy; the
-    // public path persists the windowed frame so one copy executes)
+    // never over raw event history (the windowed frame is cached, so
+    // the classification and churn branches share one copy)
     val specs = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
     assert(specs.nonEmpty && specs.forall(_.contains("windowspecdefinition(u#")),
       s"windows keyed by user over active days:\n${specs.mkString("\n")}")
@@ -1129,9 +1140,7 @@ class PlanAuditSpec extends SparkSpec {
     val ev = spark.range(5000).select((col("id") % 400).as("u"),
       ((col("id") % 15) * 86400000000L + col("id")).as("ts"),
       (col("id") % 7).cast("double").as("v"))
-    val p = graft.operators.EventAnalytics.cohortLtvImpl(ev, "u", "ts", "v",
-        materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = checkpointPlan(graft.operators.EventAnalytics.cohortLtv(ev, "u", "ts", "v"))
     assert(p.contains("partial_"), s"first-day min map-side combined:\n$p")
     val specs = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
     assert(specs.nonEmpty && specs.forall(_.contains("windowspecdefinition(cohort#")),
@@ -1267,7 +1276,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("markovSurprisal seam: user-keyed window only, matrix joins broadcast") {
-    // audit the unmaterialized plan — the registered query is
+    // audit the checkpoint job's plan — the registered query is
     // checkpointed, so its executed plan is just a scan
     import org.apache.spark.sql.functions.{col, expr, unix_micros}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1277,9 +1286,8 @@ class PlanAuditSpec extends SparkSpec {
         raw.withColumn("ts_us", expr("ts div 1000"))
       case _ => raw.withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
     }
-    val p = graft.operators.EventAnalytics.markovSurprisalImpl(
-        events, "user_id", "event_type", "ts_us", "event_id", materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = checkpointPlan(graft.operators.EventAnalytics.markovSurprisal(
+      events, "user_id", "event_type", "ts_us", "event_id"))
     assert(p.contains("BroadcastHashJoin"), s"term matrix broadcasts onto the slim frame:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       s"no data-sized join:\n$p")

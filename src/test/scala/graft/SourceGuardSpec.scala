@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * and selects queries by `QuerySpec` tag, and the MinHash, SimHash and
   * seed operators hash only with the oracle-checked md5-60 and id
   * hashes, never through their own copies. An operator, stream or
-  * function that nothing in `src/main` calls does not stay behind.
+  * function that nothing in `src/main` calls does not stay behind. A
+  * frame is cached or checkpointed only through `CheckpointBridge`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -62,6 +63,31 @@ class SourceGuardSpec extends AnyFunSuite {
       (f.startsWith("graft/plans/") || hashFamily(f)) && "(?i)xx(h|hash)64".r.findFirstIn(l).isDefined
     }
     assert(xx.isEmpty, s"xxh64 is not an oracle-checked hash: $xx")
+  }
+
+  test("one materialization policy: frames cache and checkpoint only through CheckpointBridge") {
+    // the sites allowed per file, and why each caches or checkpoints itself
+    val allowed = Map(
+      "graft/operators/RddKernel.scala" -> (1 ->
+        "RddKernel.hold caches a kernel's RDDs until close(); kernels are RDD code"),
+      "graft/operators/Graphs.scala" -> (2 ->
+        "NodeKernel.iterate cuts its RDD lineage between rounds; kernels are RDD code"),
+      "graft/sources/UrlReader.scala" -> (1 ->
+        "the url cache: three passes read it, and Pipeline.download frees it after the write"),
+      "graft/operators/Similarity.scala" -> (1 ->
+        "kcenterSelect's driver loop runs k collects over one cached base and returns no frame"))
+    val bridge = "org/apache/spark/sql/graftbridge/CheckpointBridge.scala"
+    val sites = codeLines.filter { case (f, l) =>
+      f != bridge && """\.(localCheckpoint|persist|cache)\(""".r.findFirstIn(l).isDefined
+    }
+    val perFile = sites.groupBy(_._1).map { case (f, ls) => f -> ls.size }
+    val unexplained = sites.filterNot { case (f, _) => perFile(f) <= allowed.get(f).fold(0)(_._1) }
+    assert(unexplained.isEmpty,
+      s"materialize through CheckpointBridge (localCheckpointOver for a shared frame): $unexplained")
+    val stale = allowed.collect { case (f, (n, _)) if perFile.getOrElse(f, 0) != n => s"$f: $n" }
+    assert(stale.isEmpty, s"allow-listed sites now gone: $stale")
+    val flags = codeLines.filter { case (_, l) => """\bmaterialize\w*\s*:\s*Boolean""".r.findFirstIn(l).isDefined }
+    assert(flags.isEmpty, s"one code path per operator, not a materialize flag: $flags")
   }
 
   test("every public def of an operator, streaming or function object is called from src/main") {
