@@ -181,22 +181,25 @@ object Dedup {
     * The input frame is projected once through Catalyst
     * ([[scanParallelismFloor]], then id, [[wordShingles]] and
     * [[minhashSignature]]) and read through `queryExecution.toRdd` into
-    * a cached RDD of documents keyed by id. Everything after that is RDD
-    * code under one `HashPartitioner(spark.sql.shuffle.partitions)`, so
-    * a call plans one SQL projection instead of a chain of join and
+    * documents keyed by id, held as one block per partition
+    * ([[RddKernel.hold]]). Everything after that is RDD code under one
+    * `HashPartitioner(spark.sql.shuffle.partitions)`, and every shuffle
+    * is a block shuffle ([[RddKernel.combine]] or [[RddKernel.ship]]),
+    * so a call plans one SQL projection instead of a chain of join and
     * aggregate plans:
     *
     *  - buckets: each document's [[graft.plans.BandKeys]] rows
-    *    `((band, key), id)`, combined map-side into one member list per
-    *    bucket;
+    *    `((band, key), id)`, combined per target partition into one
+    *    member list per bucket before they leave the map side;
     *  - candidates: every distinct pair (a, b), a < b, sharing a bucket
-    *    of at most `maxBucketSize` members, combined map-side by a. A
+    *    of at most `maxBucketSize` members, combined by a the same way. A
     *    bigger bucket yields no pairs: m members cost m² pairs, and
     *    near-dups in a mega-bucket are overwhelmingly re-found by other
     *    bands. Neither shuffle carries text;
     *  - verification: two co-partitioned joins with the documents (a's
-    *    shingles travel to b's partition) give `inter`, |A| and |B| for
-    *    every candidate;
+    *    shingles travel to b's partition, once per block however many
+    *    b's there share a) give `inter`, |A| and |B| for every
+    *    candidate;
     *  - [[indexMatches]]: the same band keys, derived from a persisted
     *    signature index, probe it with the batch's buckets.
     *
@@ -229,7 +232,7 @@ object Dedup {
     }
 
     /** id → document under [[partitioner]]: the verification side. */
-    private lazy val docs: RDD[(Long, KDoc)] = hold(scanned.partitionBy(partitioner))
+    private lazy val docs: RDD[(Long, KDoc)] = hold(ship(scanned))
 
     /** ((band, key), id) for every band of every signature. */
     private def keyed(sigs: RDD[(Long, Array[Long])]): RDD[((Int, UTF8String), Long)] = {
@@ -241,12 +244,10 @@ object Dedup {
 
     /** (band, key) → member ids, for every bucket of the batch. */
     private lazy val buckets: RDD[((Int, UTF8String), Array[Long])] =
-      hold(keyed(scanned.mapValues(_.sig))
-        .combineByKey[mutable.ArrayBuilder.ofLong](
+      hold(combine(keyed(scanned.mapValues(_.sig)))(
           (id: Long) => new mutable.ArrayBuilder.ofLong().addOne(id),
           (m: mutable.ArrayBuilder.ofLong, id: Long) => m.addOne(id),
-          (m: mutable.ArrayBuilder.ofLong, o: mutable.ArrayBuilder.ofLong) => m.addAll(o.result()),
-          partitioner)
+          (m: mutable.ArrayBuilder.ofLong, o: mutable.ArrayBuilder.ofLong) => m.addAll(o.result()))
         .mapValues(_.result()))
 
     /** a → the distinct b > a that share a capped bucket with a, under
@@ -264,24 +265,22 @@ object Dedup {
     }
 
     private def distinctPairs(pairs: RDD[(Long, Long)]): RDD[(Long, Array[Long])] =
-      pairs.combineByKey[mutable.HashSet[Long]](
-          (b: Long) => mutable.HashSet(b),
+      combine(pairs)((b: Long) => mutable.HashSet(b),
           (s: mutable.HashSet[Long], b: Long) => s += b,
-          (s: mutable.HashSet[Long], o: mutable.HashSet[Long]) => s ++= o,
-          partitioner)
+          (s: mutable.HashSet[Long], o: mutable.HashSet[Long]) => s ++= o)
         .mapValues(_.toArray)
 
     /** (a, b, score) for every candidate whose `score(inter, |A|, |B|)`
       * reaches `threshold`. */
     def scored(threshold: Double)(score: (Int, Int, Int) => Double): RDD[(Long, Long, Double)] = {
-      val shipped = candidates.zipPartitions(docs) { (cand, ds) =>
+      val shipped = ship(candidates.zipPartitions(docs) { (cand, ds) =>
         val byId = groupById(ds)
         for {
           (a, bs) <- cand
           d <- byId.getOrElse(a, Nil).iterator
           b <- bs.iterator
         } yield (b, (a, d.shingles))
-      }.partitionBy(partitioner)
+      })
       shipped.zipPartitions(docs) { (in, ds) =>
         val byId = groupById(ds)
         val sets = mutable.LongMap.empty[List[java.util.HashSet[UTF8String]]]
@@ -327,7 +326,7 @@ object Dedup {
       * buckets are not capped. */
     private[graft] def indexCandidates(idx: RDD[(Long, Array[Long])]): RDD[(Long, Array[Long])] = {
       val cap = maxBucketSize
-      distinctPairs(buckets.zipPartitions(keyed(idx).partitionBy(partitioner)) { (batch, indexed) =>
+      distinctPairs(buckets.zipPartitions(ship(keyed(idx))) { (batch, indexed) =>
         val news = batch.toMap
         val olds = mutable.HashMap.empty[(Int, UTF8String), mutable.ArrayBuilder.ofLong]
         indexed.foreach { case (k, o) =>
@@ -350,15 +349,15 @@ object Dedup {
       */
     def indexMatches(index: DataFrame, minMatches: Int): RDD[Long] = {
       val idx = readIndex(index)
-      val shipped = indexCandidates(idx).zipPartitions(docs) { (c, ds) =>
+      val shipped = ship(indexCandidates(idx).zipPartitions(docs) { (c, ds) =>
         val byId = groupById(ds)
         for {
           (n, olds) <- c
           d <- byId.getOrElse(n, Nil).iterator
           o <- olds.iterator
         } yield (o, (n, d.sig))
-      }.partitionBy(partitioner)
-      shipped.zipPartitions(idx.partitionBy(partitioner)) { (in, is) =>
+      })
+      shipped.zipPartitions(ship(idx)) { (in, is) =>
         val sigOf = groupById(is)
         in.collect { case (o, (n, sig)) if sigOf.getOrElse(o, Nil).exists(agreement(sig, _) >= minMatches) => n }
       }
@@ -1051,7 +1050,8 @@ object Dedup {
     withMinhashKernel(newDocs, textCol, idCol, shingleSize, numHashes, bands, seed,
         maxBucketSize) { k =>
       // within-batch near-dups: exact-verified pairs, keep the lowest id
-      def within() = k.hold(k.scored(threshold)(jaccard).map(_._2))
+      // (dropped b, the kept a it duplicates)
+      def within() = k.hold(k.scored(threshold)(jaccard).map { case (a, b, _) => (b, a) })
       // Overlap point: materialize the within-batch drops WHILE the
       // caller's independent work — the previous batch's index commit —
       // runs on a second thread. The barrier (inParallel joins both) is
@@ -1067,8 +1067,8 @@ object Dedup {
         p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
       }
       val drops =
-        if (!indexExists) batchDrops
-        else batchDrops.union(k.indexMatches(spark.read.parquet(sigsPath),
+        if (!indexExists) batchDrops.keys
+        else batchDrops.keys.union(k.indexMatches(spark.read.parquet(sigsPath),
           math.ceil(threshold * numHashes).toInt))
       CheckpointBridge.localCheckpointFreshStats(
         newDocs.join(k.idFrame(drops, idCol), Seq(idCol), "left_anti"))

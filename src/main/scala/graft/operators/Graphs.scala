@@ -119,16 +119,19 @@ object Graphs {
     * [[Dedup.connectedComponents]] and [[triangleStats]].
     *
     * The edge frame is read ONCE, through `queryExecution.toRdd`, into
-    * adjacency RDDs cached under the [[RddKernel]] partitioner: the
-    * directed [[adjacency]] and, when an algorithm asks for it, the
-    * [[undirected]] one. Node state lives in RDDs under the same
-    * partitioner, so a round is one map-side-combined message shuffle
-    * plus narrow co-partitioned zips — no SQL plan inside the loop.
-    * Messages are keyed by an 8-byte node id and combined before they
-    * leave the map side, so nothing wider than a node's combined inbox
-    * ever shuffles; no data-sized collect, no driver-side graph.
+    * adjacency RDDs held ([[RddKernel.hold]]: one block of a node-id
+    * array and a neighbour-list array per partition) under the
+    * [[RddKernel]] partitioner: the directed [[adjacency]] and, when an
+    * algorithm asks for it, the [[undirected]] one. Node state lives in
+    * RDDs under the same partitioner, so a round is one
+    * [[RddKernel.combine]] message shuffle plus narrow co-partitioned
+    * zips — no SQL plan inside the loop. Messages are keyed by an
+    * 8-byte node id and combined per target partition before they
+    * leave the map side, which ships one block of (node ids, combined
+    * inboxes) per reduce partition; no data-sized collect, no
+    * driver-side graph.
     *
-    * Every round's state is cached (it feeds the next round's message
+    * Every round's state is held (it feeds the next round's message
     * side AND its update side, which would otherwise recompute the
     * whole round chain), and [[close]] drops the adjacencies and every
     * state once the caller has materialized its result.
@@ -161,24 +164,24 @@ object Graphs {
     private def neighbours(pairs: RDD[(Long, java.lang.Long)]): RDD[(Long, Array[Long])] =
       gather(pairs).mapValues(_.distinct)
 
-    /** key → its non-null values, combined map-side under [[partitioner]]. */
+    /** key → its non-null values, combined under [[partitioner]]. */
     def gather(pairs: RDD[(Long, java.lang.Long)]): RDD[(Long, Array[Long])] =
-      pairs.combineByKey[mutable.ArrayBuilder.ofLong](
-          (d: java.lang.Long) => append(new mutable.ArrayBuilder.ofLong, d),
-          append, (a, b) => a.addAll(b.result()), partitioner)
+      combine(pairs)((d: java.lang.Long) => append(new mutable.ArrayBuilder.ofLong, d),
+          append, (a: mutable.ArrayBuilder.ofLong, b: mutable.ArrayBuilder.ofLong) => a.addAll(b.result()))
         .mapValues(_.result())
 
     /** One round over `adj`: each node with neighbours sends
       * `send(state, degree)` (if any) to every neighbour; messages
-      * combine map-side by destination — the round's ONE shuffle — and
-      * a narrow co-partitioned zip applies `update(state, inbox)`
-      * (`None` when nothing arrived) to every node.
+      * combine by destination ([[RddKernel.combine]]) — the round's
+      * ONE shuffle — and a narrow co-partitioned zip applies
+      * `update(state, inbox)` (`None` when nothing arrived) to every
+      * node.
       */
-    def round[S, V: ClassTag, C, T](adj: RDD[(Long, Array[Long])], state: RDD[(Long, S)])(
+    def round[S, V, C: ClassTag, T](adj: RDD[(Long, Array[Long])], state: RDD[(Long, S)])(
         send: (S, Int) => Option[V])(
-        combine: V => C, add: (C, V) => C, merge: (C, C) => C)(
+        create: V => C, add: (C, V) => C, merge: (C, C) => C)(
         update: (S, Option[C]) => T): RDD[(Long, T)] = {
-      val inbox = adj.zipPartitions(state) { (nodes, st) =>
+      val inbox = combine(adj.zipPartitions(state) { (nodes, st) =>
         val byId = mutable.LongMap.from(st)
         nodes.flatMap { case (id, nbrs) =>
           if (nbrs.isEmpty) Iterator.empty
@@ -187,7 +190,7 @@ object Graphs {
             case None => Iterator.empty
           }
         }
-      }.combineByKey(combine, add, merge, partitioner)
+      })(create, add, merge)
       state.zipPartitions(inbox, preservesPartitioning = true) { (st, in) =>
         val received = mutable.LongMap.from(in)
         st.map { case (id, s) => (id, update(s, received.get(id))) }
@@ -196,14 +199,15 @@ object Graphs {
 
     /** Runs up to `iterations` rounds of `step`, lazily: a fixed-round
       * run is computed by the caller's one materializing job. Every
-      * [[CheckpointEvery]] rounds the state is local-checkpointed to
-      * bound the lineage. With a `settled(old, new)` probe the new
-      * state is local-checkpointed every round and the probe is the
+      * [[CheckpointEvery]] rounds the state's blocks are
+      * local-checkpointed ([[RddKernel.checkpoint]]) to bound the
+      * lineage. With a `settled(old, new)` probe the new state's blocks
+      * are local-checkpointed every round and the probe is the
       * round's one action (it materializes the state it reads); the
       * old state is then dropped, and the loop stops once the probe
       * returns true.
       */
-    def iterate[S](init: RDD[(Long, S)], iterations: Int,
+    def iterate[S: ClassTag](init: RDD[(Long, S)], iterations: Int,
         settled: Option[(RDD[(Long, S)], RDD[(Long, S)]) => Boolean])(
         step: RDD[(Long, S)] => RDD[(Long, S)]): RDD[(Long, S)] = {
       var state = hold(init)
@@ -215,10 +219,10 @@ object Graphs {
         val cut = it % CheckpointEvery == 0 && it < iterations
         settled match {
           case Some(probe) =>
-            next.localCheckpoint()
+            checkpoint(next)
             done = probe(state, next)
             release(state)
-          case None => if (cut) { next.localCheckpoint(); next.count() }
+          case None => if (cut) { checkpoint(next); next.count() }
         }
         state = next
       }
@@ -269,8 +273,9 @@ object Graphs {
     * Returns (id, rank_nanos: long) — callers divide by 1e9 for the
     * conventional scale.
     *
-    * Scale shape: [[NodeKernel]] — per iteration one map-side-combined
-    * long sum keyed by destination, then a narrow co-partitioned
+    * Scale shape: [[NodeKernel]] — per iteration one
+    * [[RddKernel.combine]] long sum keyed by destination (exact, so
+    * the combine order cannot move a rank), then a narrow co-partitioned
     * update; the edge frame is read once. A fixed-iteration run is ONE
     * Spark job (plus a lineage cut every [[CheckpointEvery]] rounds).
     * Overflow bound: a node's rank is ≤ the total mass ≤ N·1e9 nanos,
@@ -327,10 +332,10 @@ object Graphs {
     *
     * Scale shape: [[NodeKernel]] — per iteration every labeled node
     * sends its label along its out-edges, and the (label → count)
-    * histograms combine map-side by destination (one shuffle); the
-    * arg-max is a scan of each node's histogram, never a sort of a
-    * hub's votes. The seed table is hash-partitioned once to seed
-    * the state. A run is ONE Spark job (plus a lineage cut every
+    * histograms combine per destination in [[RddKernel.combine]] (one
+    * shuffle); the arg-max is a scan of each node's histogram, never a
+    * sort of a hub's votes. The seed table is shipped to the kernel
+    * partitioner once ([[RddKernel.ship]]) to seed the state. A run is ONE Spark job (plus a lineage cut every
     * [[CheckpointEvery]] rounds).
     */
   def labelPropagation(edges: DataFrame, seeds: DataFrame,
@@ -349,11 +354,10 @@ object Graphs {
 
   private def labelPropOn(k: NodeKernel, seeds: DataFrame, idCol: String, labelCol: String,
                           iterations: Int): DataFrame = {
-    val seedRows = seeds.select(col(idCol).cast(LongType), col(labelCol).cast(IntegerType))
+    val seedRows = k.ship(seeds.select(col(idCol).cast(LongType), col(labelCol).cast(IntegerType))
       .queryExecution.toRdd
       .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None
-        else Some((r.getLong(0), r.getInt(1).toLong)))
-      .partitionBy(k.partitioner)
+        else Some((r.getLong(0), r.getInt(1).toLong))))
     // state = (clamped seed label, current label)
     val init = k.adjacency.zipPartitions(seedRows, preservesPartitioning = true) { (adj, s) =>
       val seed = mutable.LongMap.from(s)
@@ -437,13 +441,13 @@ object Graphs {
       val asks = k.gather(labels.flatMap { case (id, (l, _)) =>
         if (l == id) None else Some((l, java.lang.Long.valueOf(id)))
       })
-      val replies = labels.zipPartitions(asks) { (st, in) =>
+      val replies = k.ship(labels.zipPartitions(asks) { (st, in) =>
         val labelOf = mutable.LongMap.from(st.map { case (id, (l, _)) => (id, l) })
         in.flatMap { case (l, ids) =>
           val ll = labelOf(l)
           if (ll < l) ids.iterator.map((_, ll)) else Iterator.empty
         }
-      }.partitionBy(k.partitioner)
+      })
       viaNbrs.zipPartitions(replies, preservesPartitioning = true) { (st, in) =>
         val jumped = mutable.LongMap.from(in)
         st.map { case (id, (l, was)) => (id, (jumped.get(id).fold(l)(math.min(l, _)), was)) }
@@ -509,11 +513,11 @@ object Graphs {
       (a: mutable.ArrayBuffer[(Int, Long)], b: mutable.ArrayBuffer[(Int, Long)]) => a ++= b)(
       (me, nbrs) => (me._1.toLong,
         nbrs.fold(Array.empty[Long])(_.filter(r => RankOrder.lt(me, r)).sorted(RankOrder).map(_._2).toArray))))
-    val wedges = oriented.flatMap { case (x, (_, out)) =>
+    val wedges = k.ship(oriented.flatMap { case (x, (_, out)) =>
       Iterator.range(0, out.length - 1)
         .map(i => (out(i), (x, java.util.Arrays.copyOfRange(out, i + 1, out.length))))
-    }.partitionBy(k.partitioner)
-    val closed = wedges.zipPartitions(oriented) { (ws, os) =>
+    })
+    val closed = k.combine(wedges.zipPartitions(oriented) { (ws, os) =>
       val outOf = mutable.LongMap.from(os.map { case (y, (_, out)) => (y, out.sorted) })
       ws.flatMap { case (y, (x, zs)) =>
         val out = outOf(y)
@@ -521,7 +525,7 @@ object Graphs {
         if (zIn.isEmpty) Iterator.empty
         else Iterator((x, zIn.length.toLong), (y, zIn.length.toLong)) ++ zIn.iterator.map((_, 1L))
       }
-    }.reduceByKey(k.partitioner, _ + _)
+    })((n: Long) => n, (_: Long) + (_: Long), (_: Long) + (_: Long))
     oriented.zipPartitions(closed, preservesPartitioning = true) { (os, cs) =>
       val n = mutable.LongMap.from(cs)
       os.collect { case (v, (d, _)) if d > 0 => (v, (d, n.getOrElse(v, 0L))) }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -243,7 +245,7 @@ object Similarity {
       (-r.getLong(1), r.getSeq[Double](2), r.getDouble(0))
     }
     val (seedId, seedVec, _) = pick(seedHash(col("id")).cast("double"), base)
-    val picks = scala.collection.mutable.ArrayBuffer[(Int, Long, Option[Double])]()
+    val picks = mutable.ArrayBuffer[(Int, Long, Option[Double])]()
     picks += ((0, seedId, None))
     var cur = base.withColumn("md",
       column(graft.plans.SquaredDistance(expression(col("qd")),
@@ -1095,11 +1097,13 @@ object Similarity {
     * the embedding-side twin of [[Dedup.MinhashKernel]]. One Catalyst
     * projection (id as long, `v` as `array<double>`, its
     * [[graft.plans.HyperplaneBuckets]]) is read through
-    * `queryExecution.toRdd`; after that, two shuffles under one
+    * `queryExecution.toRdd`; after that, two block shuffles under one
     * [[partitioner]]:
     *
     *  - [[buckets]]: each vector rides its `nTables` rows
-    *    `((table, key), (id, v))`, so a bucket's members meet in one
+    *    `((table, key), (id, v))`, uncombined ([[RddKernel.ship]]: a
+    *    vector two tables send to one partition is written once per
+    *    block), and the reduce side groups a bucket's members in one
     *    task. Vectors ride the n·nTables bucket rows, not the candidate
     *    edges, which outnumber them ~16:1 at AutoPlanes occupancy (at
     *    the 100× point a rejoin-per-edge layout shuffled 11.7 GB
@@ -1108,8 +1112,9 @@ object Similarity {
     *    its pairs with [[graft.plans.CosineSimilarity.cosine]] (the
     *    expression's own loop, so scores are the identical doubles) and
     *    sends both directed edges into a per-node [[TopK]] set,
-    *    combined map-side. A pair found by several tables carries the
-    *    identical score, so the set keeps it once.
+    *    combined per target partition before the shuffle
+    *    ([[RddKernel.combine]]). A pair found by several tables carries
+    *    the identical score, so the set keeps it once.
     *
     * A row with a null vector has no buckets; a row with a null id
     * counts toward its buckets' sizes but never pairs; equal ids never
@@ -1130,7 +1135,7 @@ object Similarity {
     /** (table, key) → the bucket's members. */
     private[graft] lazy val buckets: RDD[((Int, Long), Members)] = {
       val cap = maxBucketSize
-      base.withColumn("keys", column(graft.plans.HyperplaneBuckets(expression(col("v")), planes)))
+      ship(base.withColumn("keys", column(graft.plans.HyperplaneBuckets(expression(col("v")), planes)))
         .queryExecution.toRdd
         .flatMap { row =>
           if (row.isNullAt(1)) Iterator.empty
@@ -1140,16 +1145,18 @@ object Similarity {
             val keys = row.getArray(2).toLongArray()
             Iterator.tabulate(keys.length)(t => ((t, keys(t)), m))
           }
-        }
-        .combineByKey[Members]((m: (Long, ArrayData)) => new Members(cap).add(m),
-          (b: Members, m: (Long, ArrayData)) => b.add(m), (b: Members, o: Members) => b.addAll(o),
-          partitioner, mapSideCombine = false)
+        })
+        .mapPartitions({ rows =>
+          val byKey = mutable.HashMap.empty[(Int, Long), Members]
+          rows.foreach { case (key, m) => byKey.getOrElseUpdate(key, new Members(cap)).add(m) }
+          byKey.iterator
+        }, preservesPartitioning = true)
     }
 
     /** node id → its best `k` neighbors. */
     private[graft] lazy val topK: RDD[(Long, TopK)] = {
       val n = k
-      buckets.flatMap { case (_, b) =>
+      combine(buckets.flatMap { case (_, b) =>
         val ms = b.pairable.toArray
         ms.indices.iterator.flatMap { i =>
           val (a, va) = ms(i)
@@ -1161,9 +1168,8 @@ object Similarity {
             }
           }
         }
-      }.combineByKey[TopK]((e: (Double, Long)) => new TopK(n).add(e._1, e._2),
-        (t: TopK, e: (Double, Long)) => t.add(e._1, e._2), (t: TopK, o: TopK) => t.addAll(o),
-        partitioner)
+      })((e: (Double, Long)) => new TopK(n).add(e._1, e._2),
+        (t: TopK, e: (Double, Long)) => t.add(e._1, e._2), (t: TopK, o: TopK) => t.addAll(o))
     }
 
     /** (src_id, rank, nbr_id, cosine) rows, materialized (one job). */
@@ -1186,11 +1192,6 @@ object Similarity {
     def add(m: (Long, ArrayData)): Members = {
       n += 1
       pairable = if (n > cap) Nil else if (m._2 == null) pairable else m :: pairable
-      this
-    }
-    def addAll(o: Members): Members = {
-      n += o.n
-      pairable = if (n > cap) Nil else o.pairable ::: pairable
       this
     }
   }

@@ -52,16 +52,18 @@ object CheckpointBridge {
   }
 
   /** A frame over an RDD of rows, materialized the way
-    * [[localCheckpointFreshStats]] materializes a frame: the rows are
-    * local-checkpointed by ONE job, and the returned frame scans the
-    * checkpointed blocks with fresh stats — for results computed by
-    * an RDD kernel rather than a SQL plan.
+    * [[localCheckpointFreshStats]] materializes a frame: ONE job
+    * local-checkpoints each partition's rows as one array, and the
+    * returned frame scans the checkpointed arrays with fresh stats —
+    * for results computed by an RDD kernel rather than a SQL plan.
+    * The rows must be distinct objects (no reused row buffer).
     */
   def localCheckpointRows(spark: SparkSession, rows: RDD[InternalRow],
                           schema: StructType): DataFrame = {
-    rows.localCheckpoint()
-    rows.count()
+    val parts = rows.mapPartitions(it => Iterator.single(it.toArray))
+    parts.localCheckpoint()
+    parts.count()
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rows, schema)
+      .internalCreateDataFrame(parts.mapPartitions(_.flatMap(_.iterator)), schema)
   }
 }

@@ -21,10 +21,9 @@ class GraphKernelSpec extends SparkSpec {
   /** An eager local checkpoint whose `chg` count rides along: the
     * reference loop's materialization of each round. */
   private def checkpointCountingChanged(df: DataFrame): (DataFrame, Long) = {
-    val idx = df.schema.fieldIndex("chg")
     val rows = df.queryExecution.toRdd.map(_.copy())
     val out = CheckpointBridge.localCheckpointRows(spark, rows, df.schema)
-    (out, rows.filter(r => !r.isNullAt(idx) && r.getBoolean(idx)).count())
+    (out, out.filter(col("chg")).count())
   }
 
   /** The Catalyst min-label propagation with pointer doubling that

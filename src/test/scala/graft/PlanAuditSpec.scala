@@ -106,6 +106,40 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  // ---- the kernels' block shuffles (RddKernel.combine / ship) ------------
+  // A kernel shuffle writes (target partition, block) records; these
+  // read them back per map partition.
+
+  /** (map partition, reduce partition, block) of every record the
+    * shuffle `d` writes. */
+  private def blocks(d: org.apache.spark.ShuffleDependency[_, _, _]) =
+    d.rdd.mapPartitionsWithIndex { (m, recs) =>
+      recs.map { case (p: Int, b: graft.operators.RddKernel.Block[_, _]) => (m, p, b) }
+    }.collect().toSeq
+
+  /** The (key, value) entries of the blocks `d` writes. */
+  private def entries(d: org.apache.spark.ShuffleDependency[_, _, _]): Seq[(Any, Any)] =
+    blocks(d).flatMap(_._3.iterator)
+
+  /** `d` is an `RddKernel.combine` shuffle that combined map-side: no
+    * Spark aggregator, at most one block per (map, reduce) pair, one
+    * entry per key in a block, every key in its block's partition. */
+  private def combined(d: org.apache.spark.ShuffleDependency[_, _, _]): Boolean = {
+    val bs = blocks(d)
+    d.rdd.name == graft.operators.RddKernel.CombineBlocks && d.aggregator.isEmpty &&
+      bs.map { case (m, p, _) => (m, p) }.distinct.size == bs.size &&
+      bs.forall { case (_, p, b) =>
+        b.keys.distinct.length == b.size && b.keys.forall(d.partitioner.getPartition(_) == p)
+      }
+  }
+
+  /** The shuffles `rdd` reaches through narrow dependencies only. */
+  private def nearestShuffles(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.ShuffleDependency[_, _, _]] =
+    rdd.dependencies.flatMap {
+      case d: org.apache.spark.ShuffleDependency[_, _, _] => Seq(d)
+      case d => nearestShuffles(d.rdd)
+    }
+
   // ---- the MinHash-LSH kernel (Dedup.MinhashKernel) ----------------------
   // Candidates and verification are RDD code, not SQL plans, so these
   // audit the kernel's lineage and the stages a query runs.
@@ -118,28 +152,36 @@ class PlanAuditSpec extends SparkSpec {
       case d: org.apache.spark.ShuffleDependency[_, _, _] if d.partitioner == k.partitioner => d
     }
 
-  /** A shuffle record is slim when it is ((band, key), id) or (id, id);
-    * a band key is signature digits joined by "_". */
-  private def slim(rec: Any): Boolean = rec match {
-    case ((_: Int, k: org.apache.spark.unsafe.types.UTF8String), _: Long) =>
-      k.toString.matches("-?[0-9]+(_-?[0-9]+)*")
-    case (_: Long, _: Long) => true
-    case _ => false
+  /** A block entry is slim when its key is a (band, key) bucket or an
+    * id and its value is an id or ids (a combined id list or set); a
+    * band key is signature digits joined by "_". */
+  private def slim(entry: (Any, Any)): Boolean = {
+    val slimKey = entry._1 match {
+      case (_: Int, k: org.apache.spark.unsafe.types.UTF8String) => k.toString.matches("-?[0-9]+(_-?[0-9]+)*")
+      case _: Long => true
+      case _ => false
+    }
+    slimKey && (entry._2 match {
+      case _: Long | _: scala.collection.mutable.ArrayBuilder.ofLong => true
+      case s: scala.collection.mutable.HashSet[_] => s.forall(_.isInstanceOf[Long])
+      case _ => false
+    })
   }
 
   /** Checks that every kernel shuffle before `candidates` carries only
-    * slim records, and that the bucket shuffle is map-side combined. */
+    * slim block entries, and that the bucket shuffle is combined
+    * map-side. */
   private def auditCandidates(k: graft.operators.Dedup.MinhashKernel,
                               candidates: org.apache.spark.rdd.RDD[_]): Unit = {
     val shuffles = kernelShuffles(k, candidates)
     assert(shuffles.nonEmpty, candidates.toDebugString)
     shuffles.foreach { d =>
-      val recs = d.rdd.take(50).toSeq
-      assert(recs.nonEmpty && recs.forall(slim), s"text-free shuffle records, got ${recs.take(3)}")
+      val es = entries(d).take(50)
+      assert(es.nonEmpty && es.forall(slim), s"text-free shuffle blocks, got ${es.take(3)}")
     }
-    assert(shuffles.exists(d => d.mapSideCombine &&
-      d.rdd.take(1).forall { case ((_: Int, _), _) => true; case _ => false }),
-      "the (band, key) bucket shuffle is map-side combined")
+    assert(shuffles.exists(d => combined(d) &&
+      entries(d).take(1).forall { case ((_: Int, _), _) => true; case _ => false }),
+      "the (band, key) bucket shuffle is combined map-side")
   }
 
   /** Names of the RDDs in every stage `body` runs. */
@@ -368,23 +410,27 @@ class PlanAuditSpec extends SparkSpec {
       val shuffles = lineage(k.topK).flatMap(_.dependencies).collect {
         case d: org.apache.spark.ShuffleDependency[_, _, _] => d
       }
-      val Seq(edges, buckets) = Seq(k.topK, k.buckets)
-        .map(_.dependencies.head.asInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]])
+      val Seq(edges, buckets) = Seq(k.topK, k.buckets).map(r => nearestShuffles(r).head)
       assert(shuffles == Seq(edges, buckets) && shuffles.forall(_.partitioner == k.partitioner),
         k.topK.toDebugString)
-      // bucket rows carry one (table, key) and one vector, never the
-      // row's whole bucket array
-      val rows = buckets.rdd.take(50).toSeq
+      // bucket blocks carry one (table, key) and one vector per entry,
+      // never the row's whole bucket array
+      val rows = entries(buckets).take(50)
       assert(rows.nonEmpty && rows.forall {
         case ((_: Int, _: Long), (_: Long, v: org.apache.spark.sql.catalyst.util.ArrayData)) =>
           v.numElements() == 64
         case _ => false
-      }, s"((table, key), (id, vector)) bucket rows, got ${rows.take(3)}")
-      val es = edges.rdd.take(50).toSeq
-      assert(es.nonEmpty && es.forall { case (_: Long, (_: Double, _: Long)) => true; case _ => false },
-        s"(node, (score, nbr)) edges, got ${es.take(3)}")
-      assert(edges.mapSideCombine, "the per-node top-k combines map-side")
-      assert(!buckets.mapSideCombine, "bucket members are not buffered map-side")
+      }, s"((table, key), (id, vector)) bucket entries, got ${rows.take(3)}")
+      // top-k blocks carry a node's (score, nbr) set of at most k
+      val es = entries(edges).take(50)
+      assert(es.nonEmpty && es.forall {
+        case (_: Long, t: graft.operators.Similarity.TopK) => t.n >= 1 && t.n <= 10
+        case _ => false
+      }, s"(node, (score, nbr) set) edges, got ${es.take(3)}")
+      assert(combined(edges), "the per-node top-k combines map-side")
+      assert(!buckets.mapSideCombine && buckets.aggregator.isEmpty &&
+        buckets.rdd.name == graft.operators.RddKernel.ShipBlocks,
+        "bucket members are not buffered map-side")
       // no SQL plan between the input projection and the result
       val sql = lineage(k.topK, buckets.rdd).map(_.getClass.getName)
         .filter(_.startsWith("org.apache.spark.sql"))
@@ -583,8 +629,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   /** Rounds `step` `n` times from `init` and checks the loop lineage:
-    * exactly one map-side-combined shuffle per round, under the
-    * kernel's partitioner, and no SQL plan inside the loop. */
+    * exactly one shuffle per round, combined map-side ([[combined]]),
+    * under the kernel's partitioner, and no SQL plan inside the loop. */
   private def auditRounds[S](k: graft.operators.Graphs.NodeKernel,
       init: org.apache.spark.rdd.RDD[(Long, S)], n: Int)(
       step: org.apache.spark.rdd.RDD[(Long, S)] => org.apache.spark.rdd.RDD[(Long, S)]): Unit = {
@@ -594,7 +640,7 @@ class PlanAuditSpec extends SparkSpec {
       case d: org.apache.spark.ShuffleDependency[_, _, _] => d
     }
     assert(shuffles.size == n, s"one shuffle per round: ${loop.map(_.toDebugString).head}")
-    assert(shuffles.forall(_.mapSideCombine), "messages combine map-side")
+    assert(shuffles.forall(combined), "messages combine map-side")
     assert(shuffles.forall(_.partitioner == k.partitioner), "one partitioner for all rounds")
     val sql = loop.map(_.getClass.getName).filter(_.startsWith("org.apache.spark.sql"))
     assert(sql.isEmpty, s"no SQL plan inside the loop: $sql")
@@ -635,6 +681,40 @@ class PlanAuditSpec extends SparkSpec {
     } finally k.close()
   }
 
+  test("kernel shuffles carry blocks: no Spark aggregator under a kernel partitioner") {
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    val mk = new graft.operators.Dedup.MinhashKernel(docs, "text", "doc_id", shingleSize = 3,
+      numHashes = 128, bands = 32, seed = graft.operators.Dedup.DefaultSeed, maxBucketSize = 1000)
+    val kk = new graft.operators.Similarity.KnnKernel(emb, "embedding", "vec_id", dim = 64,
+      k = 10, nPlanes = 8, nTables = 8, seed = graft.operators.Dedup.DefaultSeed,
+      maxBucketSize = 1000)
+    val nk = new graft.operators.Graphs.NodeKernel(ringEdges, "src", "dst")
+    try {
+      import graft.operators.Graphs
+      val labels = nk.undirected.mapPartitions(_.map { case (id, _) => (id, (id, id + 1)) },
+        preservesPartitioning = true)
+      val runs = Seq[(org.apache.spark.Partitioner, org.apache.spark.rdd.RDD[_])](
+        mk.partitioner -> mk.scored(0.5)((i, a, b) => i.toDouble / (a + b - i)),
+        kk.partitioner -> kk.topK,
+        nk.partitioner -> Graphs.rankStep(nk)(nk.adjacency.mapValues(_ => 1000000000L)),
+        nk.partitioner -> Graphs.labelStep(nk)(nk.adjacency.mapValues(_ => (1L, 1L))),
+        nk.partitioner -> Graphs.componentStep(nk, jump = true)(labels),
+        nk.partitioner -> Graphs.triangleCounts(nk))
+      val shuffles = runs.flatMap { case (p, rdd) =>
+        lineage(rdd).flatMap(_.dependencies).collect {
+          case d: org.apache.spark.ShuffleDependency[_, _, _] if d.partitioner == p => d
+        }
+      }.distinct
+      assert(shuffles.size >= 12, s"${shuffles.size} kernel shuffles")
+      val aggregated = shuffles.filter(d => d.aggregator.isDefined || d.mapSideCombine)
+      assert(aggregated.isEmpty, s"Spark aggregators under a kernel partitioner: ${aggregated.map(_.rdd)}")
+      val writers = shuffles.map(_.rdd.name).toSet
+      assert(writers == Set(graft.operators.RddKernel.CombineBlocks, graft.operators.RddKernel.ShipBlocks),
+        s"every kernel shuffle is written by RddKernel.combine or ship: $writers")
+    } finally { mk.close(); kk.close(); nk.close() }
+  }
+
   /** Jobs started while `body` runs (the tools' meter). */
   private def jobsOf(body: => Unit): Long = graft.tools.Meter.using(spark) { m =>
     val j0 = m.totals().jobs
@@ -668,7 +748,7 @@ class PlanAuditSpec extends SparkSpec {
       }
       // a min message per round; a request and a reply per jump
       assert(shuffles.size == 7, s"${last.toDebugString}")
-      assert(shuffles.count(_.mapSideCombine) == 5, "min messages and requests combine map-side")
+      assert(shuffles.count(combined) == 5, "min messages and requests combine map-side")
       assert(shuffles.forall(_.partitioner == k.partitioner), "one partitioner for all rounds")
       val sql = loop.map(_.getClass.getName).filter(_.startsWith("org.apache.spark.sql"))
       assert(sql.isEmpty, s"no SQL plan inside the loop: $sql")
@@ -1043,10 +1123,10 @@ class PlanAuditSpec extends SparkSpec {
       assert(shuffles.forall(_.partitioner == k.partitioner), "one partitioner")
       val sql = loop.map(_.getClass.getName).filter(_.startsWith("org.apache.spark.sql"))
       assert(sql.isEmpty, s"no SQL plan inside the rounds: $sql")
-      val countShuffle = counts.dependencies.map(_.rdd).flatMap(_.dependencies).collect {
-        case d: org.apache.spark.ShuffleDependency[_, _, _] => d
-      }
-      assert(countShuffle.size == 1 && countShuffle.head.mapSideCombine,
+      // the final zip's parents: the held orientation and the counts
+      val Seq(_, closed) = counts.dependencies.map(_.rdd)
+      val countShuffle = nearestShuffles(closed)
+      assert(countShuffle.size == 1 && combined(countShuffle.head),
         "per-node counts combine map-side")
       assert(counts.partitioner.contains(k.partitioner), "counts stay co-partitioned")
     } finally k.close()

@@ -68,10 +68,9 @@ class SourceGuardSpec extends AnyFunSuite {
   test("one materialization policy: frames cache and checkpoint only through CheckpointBridge") {
     // the sites allowed per file, and why each caches or checkpoints itself
     val allowed = Map(
-      "graft/operators/RddKernel.scala" -> (1 ->
-        "RddKernel.hold caches a kernel's RDDs until close(); kernels are RDD code"),
-      "graft/operators/Graphs.scala" -> (2 ->
-        "NodeKernel.iterate cuts its RDD lineage between rounds; kernels are RDD code"),
+      "graft/operators/RddKernel.scala" -> (2 ->
+        ("RddKernel.hold caches a kernel's blocks until close(), and RddKernel.checkpoint cuts " +
+          "an iterative kernel's RDD lineage; kernels are RDD code")),
       "graft/sources/UrlReader.scala" -> (1 ->
         "the url cache: three passes read it, and Pipeline.download frees it after the write"),
       "graft/operators/Similarity.scala" -> (1 ->
@@ -88,6 +87,34 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(stale.isEmpty, s"allow-listed sites now gone: $stale")
     val flags = codeLines.filter { case (_, l) => """\bmaterialize\w*\s*:\s*Boolean""".r.findFirstIn(l).isDefined }
     assert(flags.isEmpty, s"one code path per operator, not a materialize flag: $flags")
+  }
+
+  test("kernels cache and aggregate only through RddKernel's blocks") {
+    val kernelFiles = codeLines.collect { case (f, l) if l.contains("extends RddKernel") => f }.toSet
+    assert(kernelFiles == Set("graft/operators/Dedup.scala", "graft/operators/Similarity.scala",
+      "graft/operators/Graphs.scala"), s"the three kernels: $kernelFiles")
+    val aggregations = codeLines.filter { case (f, l) =>
+      kernelFiles(f) && """\.(combineByKey|reduceByKey|aggregateByKey|groupByKey)\b""".r.findFirstIn(l).isDefined
+    }
+    assert(aggregations.isEmpty, s"aggregate with RddKernel.combine (one block per map/reduce pair): $aggregations")
+    // every kernel class body, from its `extends RddKernel` line to its closing brace
+    val bodies = for {
+      f <- kernelFiles.toSeq
+      ls = codeLines.filter(_._1 == f).map(_._2).toIndexedSeq
+      i <- ls.indices if ls(i).contains("extends RddKernel")
+      l <- {
+        var depth = 0
+        var j = i
+        do {
+          depth += ls(j).count(_ == '{') - ls(j).count(_ == '}')
+          j += 1
+        } while (j < ls.size && (depth > 0 || !ls.slice(i, j).exists(_.contains('{'))))
+        ls.slice(i, j)
+      }
+    } yield f -> l
+    assert(bodies.exists(_._2.contains("def ")), s"kernel bodies found: ${bodies.size} lines")
+    val caches = bodies.filter { case (_, l) => """\.(persist|cache|localCheckpoint)\(""".r.findFirstIn(l).isDefined }
+    assert(caches.isEmpty, s"cache with RddKernel.hold and cut lineage with RddKernel.checkpoint: $caches")
   }
 
   test("every public def of an operator, streaming or function object is called from src/main") {
