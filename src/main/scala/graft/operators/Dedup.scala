@@ -82,14 +82,16 @@ object Dedup {
     // where `.rdd` builds the scan RDD without launching any job and
     // the probed count really is the scan's. A shuffle-bearing input is
     // already redistributed by its own exchange, so the floor had
-    // nothing to add there anyway.
+    // nothing to add there anyway. The probe reads the frame's own
+    // `queryExecution.toRdd`: `df.rdd` would plan a second query with a
+    // Row deserializer on top and compile it, for the same count.
     import org.apache.spark.sql.catalyst.plans.logical._
     val wide = df.queryExecution.optimizedPlan.collectFirst {
       case p if !(p.isInstanceOf[Project] || p.isInstanceOf[Filter] ||
         p.isInstanceOf[Generate] || p.isInstanceOf[Union] ||
         p.isInstanceOf[LeafNode]) => p
     }.isDefined
-    if (!wide && df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (!wide && df.queryExecution.toRdd.getNumPartitions < target) df.repartition(target) else df
   }
 
   /** Exact dedup: group by normalized-text fingerprint; keep the
@@ -201,7 +203,10 @@ object Dedup {
     *    b's there share a) give `inter`, |A| and |B| for every
     *    candidate;
     *  - [[indexMatches]]: the same band keys, derived from a persisted
-    *    signature index, probe it with the batch's buckets.
+    *    signature index, probe it with the batch's buckets;
+    *  - [[survivors]]: the input's rows meet the dropped ids under the
+    *    same partitioner, so [[incrementalMinhash]]'s result needs no
+    *    Catalyst anti-join.
     *
     * Ids are read as longs (any integral id column) and written back in
     * the id column's own type. Rows with a null id or a null text can
@@ -363,12 +368,30 @@ object Dedup {
       }
     }
 
-    /** `rows` of kernel ids as a one-column `name` frame in the id
-      * column's type, materialized (one job). */
-    def idFrame(rows: RDD[Long], name: String): DataFrame = {
-      val out = idOut
-      CheckpointBridge.localCheckpointRows(spark, rows.map(id => InternalRow(out(id))),
-        StructType(Seq(idField.copy(name = name))))
+    /** The input frame's rows whose id is not in `drops`, with the
+      * columns of `df.join(ids, Seq(idCol), "left_anti")` (the id
+      * column first), materialized (one job). Every row travels to
+      * its id's partition and meets the dropped ids there; rows with a
+      * null id, or a null text the kernel never scanned, are kept. */
+    def survivors(drops: RDD[Long]): DataFrame = {
+      import org.apache.spark.sql.graftbridge.ColumnBridge.column
+      val resolver = spark.sessionState.conf.resolver
+      val (key, rest) = df.queryExecution.analyzed.output.partition(a => resolver(a.name, idCol))
+      require(key.size == 1, s"$idCol must name exactly one column of the input")
+      val input = df.select((key ++ rest).map(column): _*)
+      val id: InternalRow => java.lang.Long = idField.dataType match {
+        case ByteType => r => if (r.isNullAt(0)) null else r.getByte(0).toLong
+        case ShortType => r => if (r.isNullAt(0)) null else r.getShort(0).toLong
+        case IntegerType => r => if (r.isNullAt(0)) null else r.getInt(0).toLong
+        case _ => r => if (r.isNullAt(0)) null else r.getLong(0)
+      }
+      val rows = ship(input.queryExecution.toRdd.map(r => (id(r), r.copy())))
+      val kept = rows.zipPartitions(ship(drops.map(d => (java.lang.Long.valueOf(d), ())))) { (rs, ds) =>
+        val gone = mutable.LongMap.empty[Unit]
+        ds.foreach { case (d, _) => gone(d) = () }
+        rs.collect { case (k, r) if k == null || !gone.contains(k) => r }
+      }
+      CheckpointBridge.localCheckpointRows(spark, kept, input.schema)
     }
   }
 
@@ -1001,7 +1024,9 @@ object Dedup {
     * uses; signatures meet once per candidate pair. Same
     * commit-after-write contract as [[incrementalExact]]
     * ([[commitMinhash]] appends survivors only AFTER the caller's
-    * durable downstream write). The result is a local checkpoint:
+    * durable downstream write). The result is a local checkpoint
+    * with the columns of a `left_anti` join on the id column (the id
+    * first), partitioned by id ([[MinhashKernel.survivors]]):
     * losing an executor before that write fails the batch (see
     * [[incrementalExact]]'s durability note). The id column must be
     * integral.
@@ -1070,8 +1095,7 @@ object Dedup {
         if (!indexExists) batchDrops.keys
         else batchDrops.keys.union(k.indexMatches(spark.read.parquet(sigsPath),
           math.ceil(threshold * numHashes).toInt))
-      CheckpointBridge.localCheckpointFreshStats(
-        newDocs.join(k.idFrame(drops, idCol), Seq(idCol), "left_anti"))
+      k.survivors(drops)
     }
   }
 

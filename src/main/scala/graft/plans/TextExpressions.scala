@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -109,16 +109,22 @@ case class WordShinglesExpr(child: Expression, n: Int)
 /** MinHash signature: for each (a_k, b_k), min over shingles of
   * (a_k · (h(s) mod P) + b_k) mod P, with h = [[TextExprs.md5Hash60]].
   * One pass over the `array<string>` shingle array computes all K
-  * signature rows.
+  * signature rows. For the Mersenne prime 2^31 − 1 with coefficients
+  * in [0, P] every operand is non-negative and below 2^62, so the
+  * reductions fold bits ([[MinHashSignatureExpr.mod31]]) instead of
+  * dividing; any other prime or coefficient takes `floorMod`.
   */
 case class MinHashSignatureExpr(child: Expression, coeffs: Seq[(Long, Long)], prime: Long)
     extends UnaryExpression with CodegenFallback {
+  import MinHashSignatureExpr._
   override def prettyName: String = "minhash_signature"
   override def checkInputDataTypes(): TypeCheckResult = TextExprs.stringArray(prettyName, child)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   private val as: Array[Long] = coeffs.map(_._1).toArray
   private val bs: Array[Long] = coeffs.map(_._2).toArray
+  private val mersenne: Boolean =
+    prime == P31 && (as ++ bs).forall(c => c >= 0 && c <= P31)
 
   override def nullSafeEval(input: Any): Any = {
     val shingles = input.asInstanceOf[ArrayData]
@@ -127,20 +133,44 @@ case class MinHashSignatureExpr(child: Expression, coeffs: Seq[(Long, Long)], pr
     val n = shingles.numElements()
     var i = 0
     while (i < n) {
-      val red = java.lang.Math.floorMod(TextExprs.md5Hash60(shingles.getUTF8String(i)), prime)
+      val h = TextExprs.md5Hash60(shingles.getUTF8String(i))
       var j = 0
-      while (j < k) {
-        val v = java.lang.Math.floorMod(as(j) * red + bs(j), prime)
-        if (v < mins(j)) mins(j) = v
-        j += 1
+      if (mersenne) {
+        val red = mod31(h)
+        while (j < k) {
+          val v = mod31(as(j) * red + bs(j))
+          if (v < mins(j)) mins(j) = v
+          j += 1
+        }
+      } else {
+        val red = java.lang.Math.floorMod(h, prime)
+        while (j < k) {
+          val v = java.lang.Math.floorMod(as(j) * red + bs(j), prime)
+          if (v < mins(j)) mins(j) = v
+          j += 1
+        }
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object MinHashSignatureExpr {
+  /** The Mersenne prime 2^31 − 1. */
+  val P31: Long = 0x7FFFFFFFL
+
+  /** `x mod P31` for 0 <= x < 2^63: 2^31 ≡ 1 (mod P31), so adding the
+    * bits above 31 to the bits below keeps the residue; two folds
+    * leave at most P31 + 3, and one subtraction finishes. */
+  def mod31(x: Long): Long = {
+    val y = (x & P31) + (x >>> 31)
+    val z = (y & P31) + (y >>> 31)
+    if (z >= P31) z - P31 else z
+  }
 }
 
 /** LSH band keys of a MinHash signature: band j covers signature rows

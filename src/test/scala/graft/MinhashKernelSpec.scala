@@ -113,4 +113,51 @@ class MinhashKernelSpec extends SparkSpec {
       Dedup.minhashNearDups(docs, "text", "doc_id", shingleSize = 3))
     assert(e.getMessage.contains("'doc_id' must be an integral type, got string"), e.getMessage)
   }
+
+  test("minhash signature: the Mersenne fold equals floorMod, and other moduli keep floorMod") {
+    import graft.plans.{MinHashSignatureExpr, TextExprs}
+    import MinHashSignatureExpr.{P31, mod31}
+    val rng = new scala.util.Random(5)
+    val edges = Seq(0L, 1L, P31 - 1, P31, P31 + 1, 2 * P31, 2 * P31 + 2, 1L << 31, (1L << 32) - 1,
+      P31 * P31 + P31, (1L << 62) - 1, Long.MaxValue)
+    (edges ++ Seq.fill(10000)(rng.nextLong() >>> 1)).foreach { x =>
+      assert(mod31(x) == java.lang.Math.floorMod(x, P31), s"mod31($x)")
+    }
+    // a signature through the fold, through floorMod for an
+    // out-of-range coefficient, and for another prime, against the
+    // defining formula
+    val words = Seq("the quick brown", "quick brown fox", "brown fox jumps", "", "a")
+    val shingles = org.apache.spark.sql.catalyst.expressions.Literal.create(words,
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))
+    val hashes = words.map(w => TextExprs.md5Hash60(org.apache.spark.unsafe.types.UTF8String.fromString(w)))
+    def reference(coeffs: Seq[(Long, Long)], p: Long): Seq[Long] = coeffs.map { case (a, b) =>
+      hashes.map(h => java.lang.Math.floorMod(a * java.lang.Math.floorMod(h, p) + b, p)).min
+    }
+    val inRange = Dedup.minhashCoeffs(64) ++ Seq((P31, P31), (1L, 0L))
+    for ((coeffs, p) <- Seq((inRange, P31), (inRange :+ ((-3L, 7L)), P31), (inRange, 1000003L))) {
+      val got = MinHashSignatureExpr(shingles, coeffs, p).eval().asInstanceOf[
+        org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
+      assert(got == reference(coeffs, p), s"prime $p, ${coeffs.size} coefficients")
+    }
+  }
+
+  test("incremental minhash: survivors are the left_anti join's rows and columns") {
+    import spark.implicits._
+    withIndexDir { idx =>
+      // the id column not first, an int id, a null id, a null text and
+      // a repeated id; doc 2 near-duplicates doc 1 and is dropped
+      val b = Seq[(String, Option[Int], Double)]((fox, Some(1), 0.5), (fox + " today", Some(2), 1.5),
+          ("an unrelated note about parquet files and spark jobs", Some(3), 2.5),
+          ("a recipe for bread", None, 3.5), (null, Some(4), 4.5), (fox + " again", Some(2), 5.5),
+          ("short", Some(5), 6.5))
+        .toDF("text", "doc_id", "score")
+      val got = Dedup.incrementalMinhash(b, "text", "DOC_ID", idx, shingleSize = 3, threshold = 0.5)
+      val ref = b.join(Seq(2).toDF("doc_id"), Seq("doc_id"), "left_anti")
+      assert(got.schema == ref.schema)
+      assert(got.columns.toSeq == Seq("doc_id", "text", "score"))
+      def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(sorted(got) == sorted(ref))
+      assert(got.count() == 5, "both rows of id 2 dropped; the null-id and null-text rows kept")
+    }
+  }
 }
