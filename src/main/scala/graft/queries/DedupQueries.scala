@@ -424,7 +424,7 @@ object DedupQueries {
     QuerySpec("dedup_simhash", Scale10x, Golden)((s, dir) =>
       Dedup.simhashNearDups(t(s, dir, "documents"), "text", "doc_id", maxHamming = 8)
         .orderBy("id_a", "id_b"))(simhashOracleSql),
-    QuerySpec("dedup_embed_lsh", Scale10x,
+    QuerySpec("dedup_embed_lsh", Scale10x, Golden,
       PlanDoc("capped hyperplane buckets, vectors rejoin per candidate"))((s, dir) =>
       Dedup.embeddingNearDups(t(s, dir, "embeddings"), "embedding", "vec_id",
           dim = 64, threshold = 0.4, nPlanes = 8, nTables = 8)
@@ -487,7 +487,7 @@ object DedupQueries {
          FROM c2)
          SELECT canonical_url, count(*) AS n_urls, min(doc_id) AS first_doc
          FROM c3 GROUP BY canonical_url ORDER BY canonical_url"""),
-    QuerySpec("dedup_hamming_pairs", Scale10x,
+    QuerySpec("dedup_hamming_pairs", Scale10x, Golden,
       PlanDoc("8-byte signatures banded into slim (id,band,key) rows; capped buckets; bit_count verify"))((s, dir) => {
       // Signature-agnostic banded-Hamming near-dup (the core behind
       // perceptual image dedup): 48 packed sign bits per embedding as
@@ -501,7 +501,7 @@ object DedupQueries {
       Dedup.hammingNearDups(sigs, "sig", "id", nBits = 48, bands = 6, maxHamming = 11)
         .orderBy("id_a", "id_b")
     })(dedupHammingOracleSql),
-    QuerySpec("dedup_winnowing", Scale10x)((s, dir) => {
+    QuerySpec("dedup_winnowing", Scale10x, Golden)((s, dir) => {
       // MOSS matching: pairs sharing >= 2 winnowing fingerprints,
       // capped-bucket equi-join over slim (doc, hash) rows.
       TextAnalysis.winnowingPairs(t(s, dir, "documents"), "doc_id", "text",

@@ -673,7 +673,7 @@ object EmbQueries {
         .select(col("id").as("vec_id"), col("label"))
         .orderBy("vec_id")
     })(labelPropOracleSql),
-    QuerySpec("emb_bucket_profile", Scale10x)((s, dir) =>
+    QuerySpec("emb_bucket_profile", Scale10x, Golden)((s, dir) =>
       // LSH key-depth advisor: per-table bucket occupancy + the exact
       // candidate-pair work the bucketed build will pay — the one-scan
       // check that catches quadratic density creep (the 30x-curve
@@ -695,7 +695,7 @@ object EmbQueries {
       graft.operators.Similarity.ivfProbeProfile(t(s, dir, "embeddings"),
         "embedding", "vec_id", dim = 64))(
       ivfProfileOracleSql(Seq(1, 2, 4, 8), 16, 10, 8)),
-    QuerySpec("emb_recall_profile", Scale10x)((s, dir) =>
+    QuerySpec("emb_recall_profile", Scale10x, Golden)((s, dir) =>
       // The recall half of the key-depth decision emb_bucket_profile
       // opened: per candidate depth, the exact capped candidate work
       // AND the sampled recall@10 it buys (8 portable-hash queries vs
@@ -714,7 +714,7 @@ object EmbQueries {
           "embedding", "vec_id", "label", dim = 64, k = 10,
           nPlanes = 8, nTables = 8)
         .orderBy("vec_id"))(embGraphSuiteOracleSql),
-    QuerySpec("emb_decontaminate")((s, dir) => {
+    QuerySpec("emb_decontaminate", Golden)((s, dir) => {
       // Embedding-space eval decontamination: every 20th vector
       // plays the benchmark; survivors keep cosine < 0.35 to ALL of
       // them (within hyperplane-LSH recall). Cross-corpus buckets
