@@ -39,9 +39,10 @@ import scala.util.Random
   *
   * Scale design: every candidate-generation step groups or joins on a
   * bucket key (hash-partitionable at any cluster size); oversized
-  * buckets (degenerate shingles / all-zero vectors) are capped via
-  * `maxBucketSize` so one hot key cannot produce a quadratic task —
-  * dropped buckets only cost recall on pairs other bands still catch.
+  * buckets are capped via `maxBucketSize` under the one capped-bucket
+  * contract ([[cappedBuckets]], [[bucketPairs]]), which the relational
+  * LSH and posting-list operators here, in [[Similarity]] and in
+  * [[TextAnalysis]] all share.
   */
 object Dedup {
 
@@ -92,6 +93,68 @@ object Dedup {
         p.isInstanceOf[LeafNode]) => p
     }.isDefined
     if (!wide && df.queryExecution.toRdd.getNumPartitions < target) df.repartition(target) else df
+  }
+
+  /** THE CAPPED-BUCKET CONTRACT of every LSH and posting-list dedup
+    * operator: the rows of `keyed` that share their `keys` values form
+    * a bucket, and a bucket of more than `cap` rows yields no pairs.
+    * One hot key (a boilerplate shingle, a degenerate band, an
+    * all-zero vector) would otherwise become an m²-pair task; a
+    * dropped bucket only costs recall on pairs that another band or
+    * table still catches. A pair is emitted with `id_a < id_b`.
+    *
+    * `bucketSizes` is the one bucket-size count (`bucket_n`), one
+    * map-side-combined aggregate over the slim keyed rows;
+    * [[cappedBuckets]], [[bucketPairs]], [[bucketProfile]] and
+    * [[pairWork]] are the only readers of it.
+    */
+  private[graft] def bucketSizes(keyed: DataFrame, keys: Seq[String]): DataFrame =
+    keyed.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bucket_n"))
+
+  /** The rows of `keyed` whose bucket holds at most `cap` rows. */
+  private[graft] def cappedBuckets(keyed: DataFrame, keys: Seq[String], cap: Int): DataFrame =
+    keyed.join(bucketSizes(keyed, keys).filter(col("bucket_n") <= cap)
+      .select(keys.map(col): _*), keys)
+
+  /** The self-join of [[cappedBuckets]] on `keys`, one row per shared
+    * bucket of a pair with `id_a < id_b`. `keyed` holds an `id` column;
+    * every other non-key column `c` comes out as `c_a` and `c_b`. The
+    * caller dedups the pairs, counts their shared buckets, or neither
+    * (when a row sits in one bucket only).
+    */
+  private[graft] def bucketPairs(keyed: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+    val sized = cappedBuckets(keyed, keys, cap)
+    def side(s: String): DataFrame = sized.select(keys.map(col) ++
+      keyed.columns.filterNot(keys.contains).map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), keys).filter(col("id_a") < col("id_b"))
+  }
+
+  /** The candidate-pair work m·(m−1)/2 of a bucket of `m` rows, 0 over
+    * the cap. m·(m−1) is even and never negative, so the right shift
+    * is the exact halving; m ≤ cap keeps the product under 2⁶³.
+    */
+  private[graft] def pairWork(m: Column, cap: Int): Column =
+    when(m <= cap.toLong, shiftright(m * (m - 1L), 1)).otherwise(0L)
+
+  /** The occupancy rollup of `keyed`'s buckets per value of `keys.head`
+    * (a band or a table): (n_buckets, `total` rows, max_occupancy,
+    * avg_occupancy, n_over_cap, candidate_pairs), where
+    * candidate_pairs is Σ [[pairWork]], the work the capped join pays.
+    * Counts are exact longs (over-cap buckets add no work, so the sum
+    * stays far under 2⁶³ at any corpus size); avg_occupancy is one
+    * IEEE division, 1e-6-quantized.
+    */
+  private[graft] def bucketProfile(keyed: DataFrame, keys: Seq[String], cap: Int,
+                                   total: String): DataFrame = {
+    val m = col("bucket_n")
+    bucketSizes(keyed, keys).groupBy(keys.head)
+      .agg(count(lit(1)).as("n_buckets"),
+        sum(m).as(total),
+        max(m).as("max_occupancy"),
+        graft.functions.MathFunctions.roundTo(
+          sum(m).cast(DoubleType) / count(lit(1)).cast(DoubleType), 6).as("avg_occupancy"),
+        sum(when(m > cap.toLong, 1L).otherwise(0L)).as("n_over_cap"),
+        sum(pairWork(m, cap)).as("candidate_pairs"))
   }
 
   /** Exact dedup: group by normalized-text fingerprint; keep the
@@ -427,9 +490,9 @@ object Dedup {
   private val containment = (inter: Int, a: Int, b: Int) => inter.toDouble / math.min(a, b).toDouble
 
   /** MinHash band-bucket occupancy profile — the text-side twin of
-    * [[Similarity.lshBucketProfile]]: per band, the bucket count,
-    * max/avg occupancy, buckets over the cap, and the EXACT
-    * candidate-pair work Σ m·(m−1)/2 under the cap that
+    * [[Similarity.lshBucketProfile]]: per band, the [[bucketProfile]]
+    * rollup — bucket count, max/avg occupancy, buckets over the cap,
+    * and the EXACT candidate-pair work Σ m·(m−1)/2 under the cap that
     * [[minhashNearDups]]' candidate join will pay. Run it before a
     * corpus-scale dedup to see which bands carry hot buckets
     * (degenerate shingles, boilerplate) and how much the cap is
@@ -440,8 +503,7 @@ object Dedup {
     * the profile tells you which.
     *
     * Determinism/portability: identical signature/band chain as the
-    * build (same seed, same hash); counts/max/pairs exact longs; avg
-    * one quantized IEEE division.
+    * build (same seed, same hash).
     *
     * Scale shape: one corpus scan into slim (id, band, key) rows, one
     * map-side-combined (band, key) count, one tiny per-band rollup;
@@ -454,24 +516,14 @@ object Dedup {
       maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes=$numHashes must be divisible by bands=$bands")
-    val rd = graft.functions.MathFunctions.roundTo _
     val r = numHashes / bands
     val base = df.select(col(idCol).as("id"),
       wordShingles(col(textCol), shingleSize).as("shingles"))
     val sigs = base.withColumn("sig", minhashSignature(col("shingles"), numHashes, seed))
-    val counts = sigs
+    val keyed = sigs
       .select(col("id"), explode(bandKeys(col("sig"), bands, r)).as("bk"))
       .select(col("id"), col("bk.band"), col("bk.key"))
-      .groupBy("band", "key").agg(count("*").as("m"))
-    counts.groupBy("band")
-      .agg(count("*").as("n_buckets"),
-        sum("m").as("n_docs"),
-        max("m").as("max_occupancy"),
-        rd(sum("m").cast("double") / count("*").cast("double"), 6).as("avg_occupancy"),
-        sum(when(col("m") > maxBucketSize.toLong, 1L).otherwise(0L)).as("n_over_cap"),
-        sum(when(col("m") <= maxBucketSize.toLong,
-          expr("m * (m - 1) div 2")).otherwise(0L)).as("candidate_pairs"))
-      .orderBy("band")
+    bucketProfile(keyed, Seq("band", "key"), maxBucketSize, "n_docs").orderBy("band")
   }
 
   /** Threshold-consistent LSH band count: among the divisors `b` of
@@ -570,16 +622,13 @@ object Dedup {
         .withColumn("sig", minhashSignature(col("shingles"), numHashes, seed))
         .select(col("id"), explode(bandKeys(col("sig"), b, r)).as("bk"))
         .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      val counts = buckets.groupBy("band", "key").agg(count(lit(1)).as("m"))
-      val work = counts.agg(coalesce(sum(when(col("m") <= maxBucketSize.toLong,
-          expr("m * (m - 1) div 2")).otherwise(0L)), lit(0L)).as("candidate_pairs"))
+      val work = bucketSizes(buckets, Seq("band", "key"))
+        .agg(coalesce(sum(pairWork(col("bucket_n"), maxBucketSize)), lit(0L)).as("candidate_pairs"))
       val qb = sample
         .withColumn("sig", minhashSignature(col("q_sh"), numHashes, seed))
         .select(col("query_id"), explode(bandKeys(col("sig"), b, r)).as("bk"))
         .select(col("query_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      val cand = buckets
-        .join(counts.filter(col("m") <= maxBucketSize.toLong).select("band", "key"),
-          Seq("band", "key"))
+      val cand = cappedBuckets(buckets, Seq("band", "key"), maxBucketSize)
         .join(broadcast(qb), Seq("band", "key"))
         .filter(col("id") =!= col("query_id"))
         .select(col("query_id"), col("id").as("corpus_id")).distinct()
@@ -682,14 +731,8 @@ object Dedup {
       .select(col("id"), col("len"),
         explode(bandKeys(col("sig"), bands, r)).as("bk"))
       .select(col("id"), col("len"), col("bk.band"), col("bk.key"))
-    val counts = buckets.groupBy("band", "key").agg(count("*").as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucketSize)
-    val sized = buckets.join(counts, Seq("band", "key"))
-    val a = sized.select(col("band"), col("key"), col("id").as("id_a"), col("len").as("len_a"))
-    val b = sized.select(col("band"), col("key"), col("id").as("id_b"), col("len").as("len_b"))
-    val cand = a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b") &&
-        abs(col("len_a") - col("len_b")) <= lit(maxDist.toLong))
+    val cand = bucketPairs(buckets, Seq("band", "key"), maxBucketSize)
+      .filter(abs(col("len_a") - col("len_b")) <= lit(maxDist.toLong))
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     val txtA = base.select(col("id").as("id_a"), col("txt").as("txt_a"))
     val txtB = base.select(col("id").as("id_b"), col("txt").as("txt_b"))
@@ -708,36 +751,16 @@ object Dedup {
     column(graft.plans.SimHash64Expr(expression(tokens(text)), nBits))
   }
 
-  /** SimHash near-dups: band the fingerprint into `chunks` equal bit
-    * slices (pigeonhole: Hamming ≤ chunks-1 ⇒ at least one chunk
-    * equal), bucket-join on chunks, verify with `bit_count(xor)`.
-    * The fingerprint is [[simhashPortable]] over 4 × 15-bit chunks.
+  /** SimHash near-dups: [[hammingNearDups]] over the 60-bit
+    * [[simhashPortable]] fingerprint in 4 × 15-bit chunks (pigeonhole:
+    * Hamming ≤ 3 ⇒ at least one chunk equal), verified with
+    * `bit_count(xor)`.
     */
   def simhashNearDups(
       df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
-    val chunks = 4
-    val chunkBits = 15
-    val chunkMask = (1L << chunkBits) - 1
-    val withSig = df.select(col(idCol).as("id"),
-      simhashPortable(col(textCol), chunks * chunkBits).as("sig"))
-    val keyed = withSig.select(col("id"), col("sig"),
-      explode(array((0 until chunks).map { j =>
-        struct(lit(j).as("band"),
-          shiftrightunsigned(col("sig"), j * chunkBits).bitwiseAND(lit(chunkMask)).as("key"))
-      }: _*)).as("bk"))
-      .select(col("id"), col("sig"), col("bk.band"), col("bk.key"))
-    val counts = keyed.groupBy("band", "key").agg(count("*").as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucketSize)
-    val sized = keyed.join(counts, Seq("band", "key"))
-    val a = sized.select(col("band"), col("key"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = sized.select(col("band"), col("key"), col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("band", "key")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .dropDuplicates("id_a", "id_b")
-      .filter(col("hamming") <= maxHamming)
-  }
+      maxHamming: Int = 3, maxBucketSize: Int = 10000): DataFrame =
+    hammingNearDups(df.withColumn("__sig", simhashPortable(col(textCol), 60)),
+      "__sig", idCol, nBits = 60, bands = 4, maxHamming, maxBucketSize)
 
   /** Driver-side scale fence for the EXACT all-pairs oracle paths.
     *
@@ -880,9 +903,10 @@ object Dedup {
     * band buckets, never corpus-vs-corpus.
     *
     * Scale shape: both sides shuffle only slim (id, band, key) rows;
-    * the bucket cap applies to the CORPUS side (a boilerplate bucket
-    * is the skew bomb — the benchmark side is bounded by the eval
-    * suite's size, and AQE broadcasts it when it is small);
+    * the bucket cap ([[cappedBuckets]]) applies to the CORPUS side (a
+    * boilerplate bucket is the skew bomb — the benchmark side is
+    * bounded by the eval suite's size, and AQE broadcasts it when it
+    * is small);
     * candidates verify with exact Jaccard via two slim shingle joins.
     * Recall follows the standard LSH curve: P[candidate] =
     * 1-(1-j^r)^b — near-certain at j ≥ 0.5 with the 128/32 defaults.
@@ -910,10 +934,7 @@ object Dedup {
     val bench = prep(benchmark)
     val cb = toBuckets(corpus, "doc_id")
     val bb = toBuckets(bench, "bench_id")
-    val counts = cb.groupBy("band", "key").agg(count("*").as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucketSize)
-    val cbSized = cb.join(counts, Seq("band", "key"))
-    val cand = cbSized.join(bb, Seq("band", "key"))
+    val cand = cappedBuckets(cb, Seq("band", "key"), maxBucketSize).join(bb, Seq("band", "key"))
       .select("doc_id", "bench_id").dropDuplicates("doc_id", "bench_id")
     val shC = corpus.select(col("id").as("doc_id"), col("shingles").as("sh_a"))
     val shB = bench.select(col("id").as("bench_id"), col("shingles").as("sh_b"))
@@ -1216,16 +1237,9 @@ object Dedup {
     // multiply shuffle bytes nTables×. Vectors rejoin later, once per
     // candidate id, not per bucket row.
     val buckets = keyed.select(col("id"), posexplode(col("buckets")).as(Seq("table", "key")))
-    // Cap degenerate buckets: duplicate or near-zero vectors all hash
-    // to one sign pattern, and a size-m bucket yields m² candidate
-    // pairs — a skew bomb at scale. Dropped mega-buckets only cost
-    // recall on pairs the other tables still catch.
-    val counts = buckets.groupBy("table", "key").agg(count("*").as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucketSize)
-    val sized = buckets.join(counts, Seq("table", "key"))
-    val a = sized.select(col("table"), col("key"), col("id").as("id_a"))
-    val b = sized.select(col("table"), col("key"), col("id").as("id_b"))
-    val cand = a.join(b, Seq("table", "key")).filter(col("id_a") < col("id_b"))
+    // Duplicate or near-zero vectors all hash to one sign pattern:
+    // the bucket cap keeps that skew bomb out of the candidate join.
+    val cand = bucketPairs(buckets, Seq("table", "key"), maxBucketSize)
       .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     val vA = base.select(col("id").as("id_a"), col("v").as("v_a"))
     val vB = base.select(col("id").as("id_b"), col("v").as("v_b"))
@@ -1248,9 +1262,9 @@ object Dedup {
     * benchmark buckets, never corpus-vs-corpus. Only slim
     * (id, table, key) rows ride the explode+shuffle; vectors rejoin
     * once per surviving candidate pair for the exact-cosine verify.
-    * The bucket cap applies to the CORPUS side (the benchmark is
-    * bounded by the eval suite's size; a degenerate corpus bucket is
-    * the m·|bench| candidate bomb). Recall follows the LSH curve over
+    * The bucket cap ([[cappedBuckets]]) applies to the CORPUS side
+    * (the benchmark is bounded by the eval suite's size; a degenerate
+    * corpus bucket is the m·|bench| candidate bomb). Recall follows the LSH curve over
     * the table count; a missed pair costs recall, never correctness
     * of surviving rows. Returns `corpus` survivors unchanged.
     */
@@ -1272,10 +1286,7 @@ object Dedup {
       .select(col(idName), posexplode(col("buckets")).as(Seq("table", "key")))
     val cb = toBuckets(corpus, "cid")
     val bb = toBuckets(benchmark, "bid")
-    val ok = cb.groupBy("table", "key").agg(count("*").as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucketSize)
-      .select("table", "key")
-    val cand = cb.join(ok, Seq("table", "key")).join(bb, Seq("table", "key"))
+    val cand = cappedBuckets(cb, Seq("table", "key"), maxBucketSize).join(bb, Seq("table", "key"))
       .select("cid", "bid").dropDuplicates("cid", "bid")
     val vC = corpus.select(col(idCol).as("cid"), col(vecCol).cast("array<double>").as("v_c"))
     val vB = benchmark.select(col(idCol).as("bid"), col(vecCol).cast("array<double>").as("v_b"))
@@ -1300,10 +1311,10 @@ object Dedup {
     * (bounded-heap seeded, no corpus shuffle); assignment is a NARROW
     * map with the centroid matrix as a plan literal; the within-cell
     * self-join shuffles only (id, cell_id) and is capped by
-    * `maxCellSize` — the same skew-bomb guard as every LSH path here
-    * (an over-full cell at 100 TB means nCells is too small; the cap
-    * degrades recall, never blows up a task). Vectors rejoin once per
-    * candidate pair, not per cell row. With `lloydIters = 0` the
+    * `maxCellSize` — the [[bucketPairs]] contract of every LSH path
+    * here (an over-full cell at 100 TB means nCells is too small; the
+    * cap degrades recall, never blows up a task). Vectors rejoin once
+    * per candidate pair, not per cell row. With `lloydIters = 0` the
     * whole pipeline is bit-replicable by the DuckDB oracle (same
     * contract as the deterministic IVF top-k).
     */
@@ -1324,17 +1335,11 @@ object Dedup {
       nCells, lloydIters)
     val assigned = base.withColumn("cell_id",
       column(graft.plans.NearestCentroid(expression(col("v")), cents.toSeq.map(_.toSeq))))
-    val slim = assigned.select("id", "cell_id")
-    val counts = slim.groupBy("cell_id").agg(count("*").as("cell_n"))
-      .filter(col("cell_n") <= maxCellSize)
-    val sized = slim.join(counts, Seq("cell_id"))
-    val a = sized.select(col("cell_id"), col("id").as("id_a"))
-    val b = sized.select(col("cell_id"), col("id").as("id_b"))
     // no dropDuplicates here, unlike the multi-table LSH paths: each
     // id lives in exactly ONE cell, so the single-key self-join cannot
     // emit a pair twice — deduping would only add a shuffle over the
     // largest intermediate in the pipeline
-    val cand = a.join(b, Seq("cell_id")).filter(col("id_a") < col("id_b"))
+    val cand = bucketPairs(assigned.select("id", "cell_id"), Seq("cell_id"), maxCellSize)
       .select("id_a", "id_b")
     val vA = base.select(col("id").as("id_a"), col("v").as("v_a"))
     val vB = base.select(col("id").as("id_b"), col("v").as("v_b"))
@@ -1369,9 +1374,9 @@ object Dedup {
     * from the distance d and chunk layout) — the standard operating
     * point when the duplicate radius exceeds the band count and an
     * exact guarantee would need degenerate chunk widths. Buckets over
-    * `maxBucketSize` are dropped (skew cap — a million identical
-    * images must not become a 10^12-pair task), candidates verify
-    * with `bit_count(xor)`, and only (id, band, key) rows ever
+    * `maxBucketSize` are dropped ([[bucketPairs]] — a million
+    * identical images must not become a 10^12-pair task), candidates
+    * verify with `bit_count(xor)`, and only (id, band, key) rows ever
     * shuffle.
     */
   def hammingNearDups(
@@ -1393,12 +1398,7 @@ object Dedup {
           shiftrightunsigned(col("sig"), j * chunkBits).bitwiseAND(lit(chunkMask)).as("key"))
       }: _*)).as("bk"))
       .select(col("id"), col("sig"), col("bk.band"), col("bk.key"))
-    val counts = keyed.groupBy("band", "key").agg(count("*").as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucketSize)
-    val sized = keyed.join(counts, Seq("band", "key"))
-    val a = sized.select(col("band"), col("key"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = sized.select(col("band"), col("key"), col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("band", "key")).filter(col("id_a") < col("id_b"))
+    bucketPairs(keyed, Seq("band", "key"), maxBucketSize)
       .select(col("id_a"), col("id_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .dropDuplicates("id_a", "id_b")
@@ -1578,7 +1578,11 @@ object Dedup {
         ordered.rdd.zipWithIndex().map { case (r, i) =>
           org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) },
         schema)
-      val bkt = expr(s"rnk div $w")
+      val bkt = {
+        import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+        column(org.apache.spark.sql.catalyst.expressions.IntegralDivide(
+          expression(col("rnk")), expression(lit(w.toLong))))
+      }
       val aSide = ranked.select(col("id").as("id_x"), col("rnk").as("rnk_x"),
         col("shingles").as("sh_x"),
         explode(array(bkt, bkt + lit(1L))).as("bucket"))

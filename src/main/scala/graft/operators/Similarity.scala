@@ -995,7 +995,8 @@ object Similarity {
     val q = sig(queries, "query_id", "qs")
     val scored = c.crossJoin(broadcast(q))
       .select(col("query_id"), col("corpus_id"),
-        (lit(nBits.toDouble) - expr("CAST(bit_count(qs ^ cs) AS DOUBLE)")).as("score"))
+        (lit(nBits.toDouble) - bit_count(col("qs").bitwiseXOR(col("cs"))).cast(DoubleType))
+          .as("score"))
     scored.groupBy("query_id")
       .agg(graft.plans.TopKByScore.topKByScore(col("score"), col("corpus_id"), k).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("r", "t")))
@@ -1234,7 +1235,8 @@ object Similarity {
     * advisor for every hyperplane-bucketed operator ([[knnGraph]],
     * [[graft.operators.Dedup.embeddingNearDups]], decontamination):
     * run it BEFORE a big build to see whether the candidate stage
-    * will be linear or density-quadratic. Returns one row per table:
+    * will be linear or density-quadratic. Returns one row per table,
+    * the [[Dedup.bucketProfile]] rollup:
     * (table, n_buckets, n_vectors, max_occupancy, avg_occupancy,
     * n_over_cap, candidate_pairs) where candidate_pairs =
     * Σ m·(m−1)/2 over buckets with m ≤ `maxBucketSize` — exactly the
@@ -1247,11 +1249,7 @@ object Similarity {
     * difference between nPlanes 8 and 12 on the same corpus.
     *
     * Determinism/portability: bucket keys are the same plan-literal
-    * sign bits as the build; counts/max/pairs are exact longs
-    * (per-bucket pairs ≤ cap²/2 and over-cap buckets are excluded, so
-    * the per-table sum stays far under 2⁶³ at any corpus size);
-    * avg_occupancy is one IEEE division of exact longs,
-    * 1e-6-quantized.
+    * sign bits as the build.
     *
     * Scale shape: ONE corpus scan into slim (id, table, key) rows,
     * one map-side-combined (table, key) count, then a rollup of the
@@ -1261,24 +1259,14 @@ object Similarity {
       nPlanes: Int = Dedup.AutoPlanes, nTables: Int = 8,
       seed: Long = graft.operators.Dedup.DefaultSeed,
       maxBucketSize: Int = 1000): DataFrame = {
-    val rd = graft.functions.MathFunctions.roundTo _
     val base = df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     // auto profiles the depth a default-parameter build would derive
     val depth = Dedup.resolvePlanes(nPlanes, base, minPlanes = 8)
     val planes = (0 until nTables).map(t => Dedup.randomPlanes(depth, dim, seed + t))
     val keyed = base.withColumn("buckets",
       column(graft.plans.HyperplaneBuckets(expression(col("v")), planes)))
-    val counts = keyed
       .select(col("id"), posexplode(col("buckets")).as(Seq("table", "key")))
-      .groupBy("table", "key").agg(count("*").as("m"))
-    counts.groupBy("table")
-      .agg(count("*").as("n_buckets"),
-        sum("m").as("n_vectors"),
-        max("m").as("max_occupancy"),
-        rd(sum("m").cast("double") / count("*").cast("double"), 6).as("avg_occupancy"),
-        sum(when(col("m") > maxBucketSize.toLong, 1L).otherwise(0L)).as("n_over_cap"),
-        sum(when(col("m") <= maxBucketSize.toLong,
-          expr("m * (m - 1) div 2")).otherwise(0L)).as("candidate_pairs"))
+    Dedup.bucketProfile(keyed, Seq("table", "key"), maxBucketSize, "n_vectors")
       .withColumnRenamed("table", "tbl") // "table" is reserved in SQL oracles
       .orderBy("tbl")
   }
@@ -1348,15 +1336,13 @@ object Similarity {
       val buckets = base.withColumn("buckets",
           column(graft.plans.HyperplaneBuckets(expression(col("v")), planes)))
         .select(col("id"), posexplode(col("buckets")).as(Seq("table", "key")))
-      val counts = buckets.groupBy("table", "key").agg(count(lit(1)).as("m"))
-      val work = counts.agg(coalesce(sum(when(col("m") <= maxBucketSize.toLong,
-          expr("m * (m - 1) div 2")).otherwise(0L)), lit(0L)).as("candidate_pairs"))
+      val work = Dedup.bucketSizes(buckets, Seq("table", "key"))
+        .agg(coalesce(sum(Dedup.pairWork(col("bucket_n"), maxBucketSize)), lit(0L))
+          .as("candidate_pairs"))
       val qb = sample.withColumn("buckets",
           column(graft.plans.HyperplaneBuckets(expression(col("qv")), planes)))
         .select(col("query_id"), posexplode(col("buckets")).as(Seq("table", "key")))
-      val cand = buckets
-        .join(counts.filter(col("m") <= maxBucketSize.toLong).select("table", "key"),
-          Seq("table", "key"))
+      val cand = Dedup.cappedBuckets(buckets, Seq("table", "key"), maxBucketSize)
         .join(broadcast(qb), Seq("table", "key"))
         .filter(col("id") =!= col("query_id"))
         .select(col("query_id"), col("id").as("corpus_id")).distinct()
@@ -1423,7 +1409,7 @@ object Similarity {
       .select(col("id").as("query_id"), col("q").as("qa"), col("scale").as("sa"))
     val scored = c.crossJoin(broadcast(q))
       .select(col("query_id"), col("corpus_id"),
-        (expr("CAST(aggregate(zip_with(qa, qb, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE)")
+        (aggregate(zip_with(col("qa"), col("qb"), _ * _), lit(0L), _ + _).cast(DoubleType)
           * col("sa") * col("sb")).as("score"))
     scored.groupBy("query_id")
       .agg(graft.plans.TopKByScore.topKByScore(col("score"), col("corpus_id"), k).as("top"))

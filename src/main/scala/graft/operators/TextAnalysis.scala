@@ -487,12 +487,12 @@ object TextAnalysis {
     * copies still pair, where [[chunkDedup]]'s aligned chunks would
     * not. Returns (id_a, id_b, n_shared) with id_a < id_b.
     *
-    * Scale shape: the standard capped-bucket dedup join — one slim
-    * (doc, hash) explode of the ~2/(w+1)-density fingerprints, a
-    * fingerprint whose posting list exceeds `maxBucketSize` docs is
-    * dropped whole (boilerplate skew cap, same contract as the LSH
-    * family), and the pair count is a map-side-combined aggregate
-    * over the capped equi-join. Raw text never crosses a shuffle.
+    * Scale shape: the capped-bucket pair join of the LSH family
+    * ([[Dedup.bucketPairs]]) over one slim (doc, hash) explode of the
+    * ~2/(w+1)-density fingerprints — a fingerprint whose posting list
+    * exceeds `maxBucketSize` docs is dropped whole (boilerplate skew
+    * cap) — and the pair count is a map-side-combined aggregate over
+    * it. Raw text never crosses a shuffle.
     */
   def winnowingPairs(df: DataFrame, idCol: String, textCol: String,
                      gramSize: Int = 5, w: Int = 4, minShared: Int = 2,
@@ -503,15 +503,10 @@ object TextAnalysis {
     // scan-parallelism floor: the per-doc winnowing digest (md5 of
     // every gram) is the dominant CPU and the single-row-group
     // testdata scan runs it on one task — see Dedup.scanParallelismFloor
-    val fp = Dedup.scanParallelismFloor(df).select(col(idCol).as("__id"),
+    val fp = Dedup.scanParallelismFloor(df).select(col(idCol).as("id"),
       explode(array_distinct(selHashes)).as("__h"))
-    val cold = fp.groupBy("__h").agg(count("*").as("__c"))
-      .filter(col("__c") <= maxBucketSize).select("__h")
-    val slim = fp.join(cold, Seq("__h"))
-    slim.as("a").join(slim.as("b"),
-        col("a.__h") === col("b.__h") && col("a.__id") < col("b.__id"))
-      .groupBy(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .agg(count("*").as("n_shared"))
+    Dedup.bucketPairs(fp, Seq("__h"), maxBucketSize)
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
 

@@ -117,6 +117,36 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(caches.isEmpty, s"cache with RddKernel.hold and cut lineage with RddKernel.checkpoint: $caches")
   }
 
+  test("one capped-bucket contract: no hand-written bucket count compared with a cap in graft/operators") {
+    val helpers = Set("bucketSizes", "cappedBuckets", "bucketPairs", "pairWork", "bucketProfile")
+    val Def = """\s*(?:private\[\w+\]\s+)?def\s+(\w+).*""".r
+    def indent(l: String) = l.length - l.dropWhile(_ == ' ').length
+    val files = codeLines.filter(_._1.startsWith("graft/operators/"))
+      .groupBy(_._1).map { case (f, ls) => f -> ls.map(_._2).toIndexedSeq }
+    // the helper's own bodies in Dedup, found by indentation
+    val dedup = files("graft/operators/Dedup.scala")
+    val helperLines = dedup.indices.flatMap { i =>
+      dedup(i) match {
+        case Def(name) if helpers(name) =>
+          val end = dedup.indexWhere(m => m.trim.nonEmpty && indent(m) <= indent(dedup(i)), i + 1)
+          i until (if (end < 0) dedup.length else end)
+        case _ => Nil
+      }
+    }.toSet
+    assert(helpers.forall(h => helperLines.exists(dedup(_).contains(s"def $h("))),
+      s"helper bodies found: ${helperLines.toSeq.sorted.map(dedup)}")
+    val Count = """groupBy\(.*\.agg\(count\(.*?\.as\("(\w+)"\)""".r
+    val handWritten = for {
+      (f, ls) <- files.toSeq
+      alias <- ls.flatMap(l => Count.findAllMatchIn(l).map(_.group(1))).distinct
+      compared = ("col\\(\"" + alias + "\"\\)\\s*(<=|>=|<|>)\\s*(?:lit\\()?(\\w+)").r
+      i <- ls.indices if !(f == "graft/operators/Dedup.scala" && helperLines(i))
+      m <- compared.findAllMatchIn(ls(i)) if "(?i)cap|max".r.findFirstIn(m.group(2)).isDefined
+    } yield s"$f: ${ls(i).trim}"
+    assert(handWritten.isEmpty,
+      s"cap buckets with Dedup.cappedBuckets / bucketPairs / bucketProfile / pairWork: $handWritten")
+  }
+
   test("every public def of an operator, streaming or function object is called from src/main") {
     // why each stays although no src/main line outside its own body names it
     val allowed = Map(
